@@ -1432,10 +1432,9 @@ object StreamQueries {
     * scale). Both merges are IDEMPOTENT algebras (HLL union is
     * register max, distinct-union is set union), so the maintained
     * state telescopes under any batching AND absorbs at-least-once
-    * replay without a batchId guard — the second maintainer in the
-    * [[graft.streaming.Streams.BitmapMaintainer]] no-guard family,
-    * spec-proven the same way (same batch re-applied under a new batch
-    * id). Oracle = X69's never-batched SQL: exact columns are
+    * replay even under a fresh batch id, like
+    * [[graft.streaming.Streams.BitmapMaintainer]] — spec-proven the same
+    * way (same batch re-applied under a new batch id). Oracle = X69's never-batched SQL: exact columns are
     * batching-invariant by the set algebra, and the sketch contributes
     * only its pinned inclusion–exclusion band (a unioned Datasketches
     * blob need not be BIT-equal to the one-shot blob — its registers
@@ -2262,7 +2261,7 @@ object StreamQueries {
     * batch with RETRACTION when a right crosses the fan cap (the
     * quadratic-hub discipline made streaming — see the X209 header in
     * streaming/Streams.scala for the telescoping argument and the
-    * no-guard idempotence proof). Fold: the family's standard
+    * replay idempotence proof). Fold: the family's standard
     * event_id % 4 micro-batches of zipf bipartite edges — the fold is
     * batch-split-INDEPENDENT (final state = the capped one-shot over
     * the distinct edge union), so the oracle is the never-batched
@@ -2636,11 +2635,11 @@ object StreamQueries {
     * over the MAINTAINED map. OR is associative, commutative and
     * IDEMPOTENT, so the maintained map telescopes to the one-shot map
     * regardless of batching — the oracle is X98's never-batched SQL
-    * unchanged. The founding no-guard maintainer: its state survives
-    * at-least-once REPLAY without a batchId guard (spec-proven; X194's
-    * HLL set-algebra maintainer shares the property); every
-    * counter-based sibling (CMS, MG, CUPED, counts) must keep the
-    * guard because addition is not idempotent.
+    * unchanged. Its state survives at-least-once REPLAY even under a
+    * fresh batch id, where no replay guard can help (spec-proven;
+    * X194's HLL set-algebra maintainer shares the property); the
+    * counter-based siblings (CMS, MG, CUPED, counts) rely on the guard
+    * because addition is not idempotent.
     */
   private def streamBitmapDistinct(s: SparkSession, dir: String): DataFrame = {
     val ev = events(s, dir)

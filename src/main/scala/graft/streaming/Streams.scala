@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.util.Det
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming transforms (SURVEY §2.10 — extension; the reference is
   * DataSet-only and has NO streaming). Each transform is a plain
@@ -416,6 +417,69 @@ object Streams {
   }
 
   // ---------------------------------------------------------------------
+  // The maintainer base: every stateful foreachBatch fold below (T10,
+  // SCD2, T11, X170–X209) is a `Maintainer[S]` that supplies only its
+  // empty state, a `step` and its readers.
+  // ---------------------------------------------------------------------
+
+  /** One streaming maintainer: a fold `step(state, batch) => state` over
+    * an immutable snapshot `S` (a DataFrame, or a case class when the
+    * state has several parts). The base owns the rest of the contract,
+    * once for all maintainers:
+    *
+    *  - Writer lock: [[applyBatch]] is the only synchronized section.
+    *  - Replay guard: foreachBatch is at-least-once after a failure, so
+    *    a batch whose `batchId` is at or below the last applied epoch is
+    *    skipped. `batchId = -1` (the default) bypasses the guard for
+    *    direct driver use where no epoch exists (specs, batch twins).
+    *    The guard is the correctness line for the additive folds (a
+    *    replayed epoch would double-count), and harmless for the
+    *    idempotent ones (CC, bitmap, type overlap, butterfly): skipping
+    *    a replay of an idempotent fold gives the state applying it would.
+    *  - Atomic commit: `step` materializes every part of the next
+    *    snapshot (its pins are Spark jobs, which can throw) and returns
+    *    it; only then is the snapshot published and the epoch recorded.
+    *    A step that throws leaves both unchanged, so the epoch's retry
+    *    applies the batch exactly once.
+    *  - Readers: [[state]] is one volatile read of a whole snapshot, so a
+    *    readout that calls it once sees a whole batch or none of it
+    *    without taking the lock. A step never mutates the snapshot it is
+    *    given, because a reader may still hold it.
+    *
+    * Known limitation: the snapshot and the last applied epoch live in
+    * driver memory. A restarted driver resumes the query from its
+    * checkpointed offsets with an empty maintainer, so its readout omits
+    * every batch before the restart. A durable snapshot committed with
+    * its batch id is the planned fix.
+    */
+  abstract class Maintainer[S](empty: S) {
+    @volatile private var st: S = empty
+    private var lastApplied: Long = -1L
+
+    /** The next snapshot after `batch`, every frame already pinned. */
+    protected def step(st: S, batch: DataFrame): S
+
+    /** The published snapshot; a readout reads it once. */
+    protected def state: S = st
+
+    final def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
+      synchronized {
+        if (batchId < 0 || batchId > lastApplied) {
+          st = step(st, batch)
+          if (batchId >= 0) lastApplied = batchId
+        }
+      }
+  }
+
+  /** Wire a stream to a maintainer: each micro-batch is applied under
+    * its epoch id, the replay guard's key.
+    */
+  def maintain(source: DataFrame, m: Maintainer[_]): DataStreamWriter[Row] =
+    source.writeStream.foreachBatch {
+      (batch: DataFrame, batchId: Long) => m.applyBatch(batch, batchId)
+    }
+
+  // ---------------------------------------------------------------------
   // T10 — streaming MERGE/upsert maintenance (VERDICT r10 gap #2): the
   // lakehouse CDC composition where a STREAM maintains a keyed base table
   // via per-micro-batch MERGE (the foreachBatch + MERGE INTO deployment
@@ -548,41 +612,19 @@ object Streams {
       .orderBy(col("user_id"))
 
   /** T10 stream side: the maintained table, advanced by one MERGE per
-    * micro-batch from inside foreachBatch. `current` is the live base
-    * table a reader would query between batches.
+    * micro-batch. `current` is the live base table a reader would query
+    * between batches. CDC folds are NOT idempotent (re-applying a batch
+    * double-counts its adds): the base's replay guard is load-bearing.
     */
-  final class MergeMaintainer(s: org.apache.spark.sql.SparkSession) {
-    @volatile private var state: DataFrame = mergeEmptyState(s)
-    private var lastApplied: Long = -1L
-    /** MERGE one micro-batch. CDC folds are NOT idempotent (re-applying a
-      * batch double-counts its adds), and foreachBatch is at-least-once
-      * after a failure — the standard guard is to key on the epoch's
-      * batchId and skip replays. `batchId = -1` (the default) bypasses the
-      * guard for direct driver use where no epoch exists (specs, batch
-      * twins).
-      */
-    def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-        if (batchId >= 0 && batchId <= lastApplied) return
-        state = mergeApply(state, mergeSummary(batch)).localCheckpoint()
-        if (batchId >= 0) lastApplied = batchId
-        ()
-      }
+  final class MergeMaintainer(s: SparkSession)
+      extends Maintainer[DataFrame](mergeEmptyState(s)) {
+    protected def step(st: DataFrame, batch: DataFrame): DataFrame =
+      mergeApply(st, mergeSummary(batch)).localCheckpoint()
     def current: DataFrame = state.filter(col("present"))
       .select(col("user_id"), col("cur_cents"), col("last_reset_op"),
         col("n_adds_applied"))
       .orderBy(col("user_id"))
   }
-
-  /** T10 — wire a CDC event stream to a [[MergeMaintainer]] via
-    * foreachBatch (the lakehouse MERGE INTO deployment shape).
-    */
-  def mergeMaintainStream(events: DataFrame, m: MergeMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => m.applyBatch(batch, batchId)
-    }
 
   /** The X127 SCD2 fold over one events frame (the batch-twin core of
     * `events_scd2_history`, also applied PER BATCH by
@@ -636,19 +678,11 @@ object Streams {
     * the carry is exactly the missing prefix because resets discard it
     * anyway). Same per-key in-order delivery contract as T10;
     * StreamingSpec proves history == the one-shot batch fold after
-    * EVERY micro-batch.
+    * EVERY micro-batch. A replayed batch would duplicate versions.
     */
-  final class Scd2Maintainer(s: org.apache.spark.sql.SparkSession) {
-    @volatile private var hist: DataFrame = scd2Empty(s)
-    private var lastApplied: Long = -1L
-    /** Append one micro-batch to the history. Same at-least-once replay
-      * guard as [[MergeMaintainer.applyBatch]] — a re-delivered batch
-      * would otherwise duplicate SCD2 versions. `batchId = -1` bypasses
-      * (direct driver use, no epoch).
-      */
-    def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-      if (batchId >= 0 && batchId <= lastApplied) return
+  final class Scd2Maintainer(s: SparkSession)
+      extends Maintainer[DataFrame](scd2Empty(s)) {
+    protected def step(hist: DataFrame, batch: DataFrame): DataFrame = {
       val b = scd2Batch(batch)
       val carry = hist.filter(col("is_current"))
         .select(col("user_id"), col("vcur").as("carry_v"),
@@ -675,28 +709,12 @@ object Streams {
             col("bfrom")).otherwise(col("valid_to_us"))
             .as("valid_to_us"),
           (col("is_current") && col("bfrom").isNull).as("is_current"))
-      hist = closed.unionByName(adjusted).localCheckpoint()
-      // Marked applied only AFTER the fold materialized (localCheckpoint
-      // runs a Spark job that can throw). If it were set before and the
-      // fold failed, Structured Streaming's retry of the SAME epoch would
-      // hit the replay guard and skip it — permanently dropping the batch
-      // from the history, the exact at-least-once path the guard exists
-      // for. Same ordering as [[MergeMaintainer.applyBatch]].
-      if (batchId >= 0) lastApplied = batchId
-      ()
+      closed.unionByName(adjusted).localCheckpoint()
     }
     /** The live history table (total order for comparison). */
     def current: DataFrame =
-      hist.orderBy(col("user_id"), col("version"))
+      state.orderBy(col("user_id"), col("version"))
   }
-
-  /** Wire a CDC event stream to a [[Scd2Maintainer]] via foreachBatch. */
-  def scd2MaintainStream(events: DataFrame, m: Scd2Maintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => m.applyBatch(batch, batchId)
-    }
 
   // ── T11: streaming incremental connected components ────────────────
   /** Per-batch fixpoint bound for [[ccFold]] — the sim measured ≤ 7
@@ -793,38 +811,40 @@ object Streams {
     (pinned(oldNext.unionByName(newRows)), stable)
   }
 
-  /** T11 stream side: the maintained per-vertex component-label table,
-    * advanced by [[ccFold]] per micro-batch of edges from inside
-    * foreachBatch. Unlike the CDC maintainers there is NO delivery-order
-    * contract: edge batches commute (connectivity is order-free), which
-    * StreamingSpec exercises by replaying a permuted batch order.
+  /** [[CcMaintainer]]'s snapshot: the (id, label) table and whether
+    * every batch fold so far converged within [[CcFoldRounds]].
     */
-  final class CcMaintainer(s: org.apache.spark.sql.SparkSession) {
-    @volatile private var state: DataFrame = ccEmptyState(s)
-    @volatile private var conv: Boolean = true
-    /** No batchId replay guard needed here, unlike the CDC maintainers:
-      * the CC fold is IDEMPOTENT (re-applying a batch re-unions edges
-      * already absorbed into the label stars — min-label propagation is a
-      * no-op on them), so at-least-once redelivery cannot corrupt state.
-      */
-    def applyBatch(edges: DataFrame): Unit = synchronized {
-      val (next, ok) = ccFold(state, edges)
-      state = next; conv &&= ok
-      ()
+  final case class CcState(labels: DataFrame, converged: Boolean)
+
+  /** T11 stream side: the maintained per-vertex component-label table,
+    * advanced by [[ccFold]] per micro-batch of edges. Unlike the CDC
+    * maintainers there is NO delivery-order contract: edge batches
+    * commute (connectivity is order-free), which StreamingSpec exercises
+    * by replaying a permuted batch order. The fold is also idempotent
+    * (a re-applied batch's edges are already inside the label stars).
+    */
+  final class CcMaintainer(s: SparkSession)
+      extends Maintainer[CcState](CcState(ccEmptyState(s), true)) {
+    protected def step(st: CcState, edges: DataFrame): CcState = {
+      val (next, ok) = ccFold(st.labels, edges)
+      CcState(next, st.converged && ok)
     }
-    def converged: Boolean = conv
-    def current: DataFrame = state.orderBy(col("id"))
+    def converged: Boolean = state.converged
+    def current: DataFrame = state.labels.orderBy(col("id"))
   }
 
-  /** Wire an edge stream to a [[CcMaintainer]] via foreachBatch. */
-  def ccMaintainStream(edges: DataFrame, m: CcMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    edges.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) => m.applyBatch(batch)
-    }
-
   // ── X170: streaming MinHash/LSH near-duplicate maintenance ─────────
+
+  /** [[LshDedupMaintainer]]'s snapshot: the kept corpus's (doc_id, hs)
+    * shingle sets, every seen doc's verdict, and the max doc_id seen
+    * (kept or dropped). `maxSeenId` makes the id-monotonicity contract
+    * loud: the state probe's verifiedDupEdges(cross = true) assumes
+    * every batch doc_id strictly exceeds all prior ids, and a source
+    * redelivering out-of-order or reused ids would otherwise silently
+    * point dup_of at a larger or equal id.
+    */
+  final case class LshState(keptHs: DataFrame, verdicts: DataFrame,
+    maxSeenId: Long)
 
   /** X170 stream side (judge r12 item #3 — the production ingestion
     * shape): maintains the KEPT-corpus shingle-set + banded-signature
@@ -849,120 +869,97 @@ object Streams {
     * near-identical cluster holds exactly its surviving representative).
     * `StreamingSpec` proves `current` == the registered batch twin
     * ([[graft.queries.DedupQueries.streamDedupMinhashOf]]) over the
-    * prefix after EVERY micro-batch. Replay guard ordering follows
-    * [[MergeMaintainer.applyBatch]] (state first, lastApplied after —
-    * the ADVICE r12 lesson): keep-first is NOT idempotent under
-    * re-delivery of a half-applied epoch.
+    * prefix after EVERY micro-batch. Keep-first is NOT idempotent: a
+    * replayed epoch would drop every doc of its batch onto itself.
     */
-  final class LshDedupMaintainer(s: org.apache.spark.sql.SparkSession) {
+  final class LshDedupMaintainer(s: SparkSession)
+      extends Maintainer[LshState](LshState(
+        // where(false) plans as an empty relation, so the first batch's
+        // state probe is pruned at planning. Against a range(0) side,
+        // adaptive execution learns the side is empty only at run time,
+        // and how many of the probe's stages it has submitted by then
+        // depends on timing: the batch's job count would vary by run.
+        s.range(0).select(col("id").as("doc_id"),
+          array().cast("array<bigint>").as("hs")).where(lit(false)),
+        s.range(0).select(col("id").as("doc_id"), lit(true).as("kept"),
+          lit(null).cast("long").as("dup_of"), lit(true).as("converged")),
+        Long.MinValue)) {
     import graft.queries.DedupQueries
-    private def emptyHs: DataFrame =
-      s.range(0).select(col("id").as("doc_id"),
-        array().cast("array<bigint>").as("hs"))
-    private def emptyVerdicts: DataFrame =
-      s.range(0).select(col("id").as("doc_id"), lit(true).as("kept"),
-        lit(null).cast("long").as("dup_of"), lit(true).as("converged"))
-    @volatile private var keptHs: DataFrame = emptyHs
-    @volatile private var verdicts: DataFrame = emptyVerdicts
-    private var lastApplied: Long = -1L
-    // Max doc_id over EVERY doc seen so far (kept or dropped) — the
-    // cheap scalar that makes the id-monotonicity contract loud
-    // (ADVICE r13): the state probe's verifiedDupEdges(cross = true)
-    // assumes every batch doc_id strictly exceeds all prior ids; a
-    // source redelivering out-of-order or reused ids would silently
-    // point dup_of at a larger/equal id. Advanced only AFTER the state
-    // frames (same failure-ordering rule as lastApplied).
-    private var maxSeenId: Long = Long.MinValue
 
-    def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-        if (batchId >= 0 && batchId <= lastApplied) return
-        val bounds = batch.agg(
-          min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-          .first()
-        val batchMax =
-          if (bounds.isNullAt(1)) maxSeenId
-          else {
-            require(bounds.getLong(0) > maxSeenId,
-              s"LshDedupMaintainer id-monotonicity violated: batch " +
-                s"min doc_id ${bounds.getLong(0)} <= max seen id " +
-                s"$maxSeenId (out-of-order or reused ids break " +
-                "keep-first semantics)")
-            bounds.getLong(1)
-          }
-        val bhs = DedupQueries.shingleSetsOf(batch).localCheckpoint()
-        val ids = batch.select(col("doc_id"))
-        // (2) state probe: kept state partners drop batch docs outright
-        val stateHits = DedupQueries
-          .verifiedDupEdges(s, keptHs, bhs, cross = true)
-          .groupBy(col("big").as("doc_id"))
-          .agg(min(col("small")).as("state_dup"))
-          .localCheckpoint()
-        // (3) within-batch greedy-by-id frontier over verified edges,
-        // seeded with the state-dropped docs
-        val be = DedupQueries.verifiedDupEdges(s, bhs, bhs, cross = false)
-          .localCheckpoint()
-        import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
-        val (bIds, nDocs, _) = pinnedSum(
-          bhs.select(col("doc_id").as("v")), lit(0L))
-        var keptF = bIds.limit(0)
-        var droppedF = stateHits.select(col("doc_id").as("v"))
-          .localCheckpoint()
-        var converged = nDocs == 0L
-        var r = 0
-        while (!converged && r < DedupQueries.sdmCloseRounds) {
-          r += 1
-          val dNext = ve2(be, keptF)
-            .unionByName(stateHits.select(col("doc_id").as("v")))
-            .distinct()
-          val kNext = bIds
-            .join(stateHits.select(col("doc_id").as("v")), Seq("v"),
-              "left_anti")
-            .join(be.join(droppedF.withColumnRenamed("v", "small"),
-                Seq("small"), "left_anti")
-              .select(col("big").as("v")), Seq("v"), "left_anti")
-          // checkpoint + count fused, one job per frame (round 14)
-          val (k2, nK, _) = pinnedSum(kNext, lit(0L))
-          val (d2, nD, _) = pinnedSum(dNext, lit(0L))
-          keptF = k2
-          droppedF = d2
-          converged = nK + nD == nDocs
+    protected def step(st: LshState, batch: DataFrame): LshState = {
+      val bounds = batch.agg(
+        min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
+        .first()
+      val batchMax =
+        if (bounds.isNullAt(1)) st.maxSeenId
+        else {
+          require(bounds.getLong(0) > st.maxSeenId,
+            s"LshDedupMaintainer id-monotonicity violated: batch " +
+              s"min doc_id ${bounds.getLong(0)} <= max seen id " +
+              s"${st.maxSeenId} (out-of-order or reused ids break " +
+              "keep-first semantics)")
+          bounds.getLong(1)
         }
-        val batchDup = be
-          .join(keptF.withColumnRenamed("v", "small"), Seq("small"),
-            "left_semi")
-          .groupBy(col("big").as("doc_id"))
-          .agg(min(col("small")).as("batch_dup"))
-        val newVerdicts = ids
-          .join(bIds.select(col("v").as("doc_id"))
-            .withColumn("shingled", lit(true)), Seq("doc_id"), "left")
-          .join(keptF.select(col("v").as("doc_id"))
-            .withColumn("k", lit(true)), Seq("doc_id"), "left")
-          .join(stateHits, Seq("doc_id"), "left")
-          .join(batchDup, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            (col("shingled").isNull || coalesce(col("k"), lit(false)))
-              .as("kept"),
-            least(col("state_dup"), col("batch_dup")).as("dup_of"),
-            lit(converged).as("converged"))
-        val keptNew = bhs.join(keptF.select(col("v").as("doc_id")),
-          Seq("doc_id"), "left_semi")
-        // Materialize BOTH next frames before assigning EITHER: the two
-        // state frames must advance atomically w.r.t. failure — if the
-        // second checkpoint threw after the first assignment, the
-        // epoch's retry (lastApplied still unset) would union the same
-        // batch into the already-advanced frame, duplicating rows
-        // (the Scd2Maintainer ordering lesson, ADVICE r12, applied to a
-        // TWO-frame maintainer). lastApplied still goes last.
-        val nextKept = keptHs.unionByName(keptNew).localCheckpoint()
-        val nextVerdicts = verdicts.unionByName(newVerdicts)
-          .localCheckpoint()
-        keptHs = nextKept
-        verdicts = nextVerdicts
-        maxSeenId = batchMax
-        if (batchId >= 0) lastApplied = batchId
-        ()
+      val bhs = DedupQueries.shingleSetsOf(batch).localCheckpoint()
+      val ids = batch.select(col("doc_id"))
+      // (2) state probe: kept state partners drop batch docs outright
+      val stateHits = DedupQueries
+        .verifiedDupEdges(s, st.keptHs, bhs, cross = true)
+        .groupBy(col("big").as("doc_id"))
+        .agg(min(col("small")).as("state_dup"))
+        .localCheckpoint()
+      // (3) within-batch greedy-by-id frontier over verified edges,
+      // seeded with the state-dropped docs
+      val be = DedupQueries.verifiedDupEdges(s, bhs, bhs, cross = false)
+        .localCheckpoint()
+      import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
+      val (bIds, nDocs, _) = pinnedSum(
+        bhs.select(col("doc_id").as("v")), lit(0L))
+      var keptF = bIds.limit(0)
+      var droppedF = stateHits.select(col("doc_id").as("v"))
+        .localCheckpoint()
+      var converged = nDocs == 0L
+      var r = 0
+      while (!converged && r < DedupQueries.sdmCloseRounds) {
+        r += 1
+        val dNext = ve2(be, keptF)
+          .unionByName(stateHits.select(col("doc_id").as("v")))
+          .distinct()
+        val kNext = bIds
+          .join(stateHits.select(col("doc_id").as("v")), Seq("v"),
+            "left_anti")
+          .join(be.join(droppedF.withColumnRenamed("v", "small"),
+              Seq("small"), "left_anti")
+            .select(col("big").as("v")), Seq("v"), "left_anti")
+        // checkpoint + count fused, one job per frame (round 14)
+        val (k2, nK, _) = pinnedSum(kNext, lit(0L))
+        val (d2, nD, _) = pinnedSum(dNext, lit(0L))
+        keptF = k2
+        droppedF = d2
+        converged = nK + nD == nDocs
       }
+      val batchDup = be
+        .join(keptF.withColumnRenamed("v", "small"), Seq("small"),
+          "left_semi")
+        .groupBy(col("big").as("doc_id"))
+        .agg(min(col("small")).as("batch_dup"))
+      val newVerdicts = ids
+        .join(bIds.select(col("v").as("doc_id"))
+          .withColumn("shingled", lit(true)), Seq("doc_id"), "left")
+        .join(keptF.select(col("v").as("doc_id"))
+          .withColumn("k", lit(true)), Seq("doc_id"), "left")
+        .join(stateHits, Seq("doc_id"), "left")
+        .join(batchDup, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          (col("shingled").isNull || coalesce(col("k"), lit(false)))
+            .as("kept"),
+          least(col("state_dup"), col("batch_dup")).as("dup_of"),
+          lit(converged).as("converged"))
+      val keptNew = bhs.join(keptF.select(col("v").as("doc_id")),
+        Seq("doc_id"), "left_semi")
+      LshState(st.keptHs.unionByName(keptNew).localCheckpoint(),
+        st.verdicts.unionByName(newVerdicts).localCheckpoint(), batchMax)
+    }
 
     /** Dropped wave: batch docs with a kept smaller batch partner. */
     private def ve2(be: DataFrame, keptF: DataFrame): DataFrame = be
@@ -973,20 +970,10 @@ object Streams {
     /** Verdicts for every doc seen so far (total order for comparison
       * against the batch twin over the same prefix).
       */
-    def current: DataFrame = verdicts.orderBy(col("doc_id"))
+    def current: DataFrame = state.verdicts.orderBy(col("doc_id"))
     /** The maintained kept-corpus (doc_id, hs) state — size probe. */
-    def keptState: DataFrame = keptHs
+    def keptState: DataFrame = state.keptHs
   }
-
-  /** Wire a document stream to an [[LshDedupMaintainer]] via
-    * foreachBatch.
-    */
-  def lshDedupMaintainStream(docs: DataFrame, m: LshDedupMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => m.applyBatch(batch, batchId)
-    }
 
   // ── X175: streaming IVF index maintenance ───────────────────────────
 
@@ -1011,47 +998,31 @@ object Streams {
     * `StreamingSpec` proves maintained counts == the one-shot
     * per-label counts AND balance == [[graft.queries.SimQueries
     * .embIvfBalanceOf]] over the prefix after EVERY micro-batch, plus
-    * the at-least-once replay guard ([[MergeMaintainer]] ordering:
-    * state first, lastApplied after).
+    * the at-least-once replay guard and that the append hook sees every
+    * batch exactly once.
     */
-  final class IvfMaintainer(s: org.apache.spark.sql.SparkSession,
-      appendList: DataFrame => Unit = _ => ()) {
-    private def emptyCounts: DataFrame =
-      s.range(0).select(col("id").as("label"), col("id").as("n_vecs"))
-    @volatile private var counts: DataFrame = emptyCounts
-    private var lastApplied: Long = -1L
-
-    def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-        if (batchId >= 0 && batchId <= lastApplied) return
-        appendList(batch.repartition(col("label")))
-        val b = batch.groupBy(col("label"))
-          .agg(count(lit(1)).as("n_vecs"))
-        val next = counts.unionByName(b)
-          .groupBy(col("label"))
-          .agg(sum(col("n_vecs")).as("n_vecs"))
-          .localCheckpoint()
-        counts = next
-        if (batchId >= 0) lastApplied = batchId
-        ()
-      }
+  final class IvfMaintainer(s: SparkSession,
+      appendList: DataFrame => Unit = _ => ())
+      extends Maintainer[DataFrame](
+        s.range(0).select(col("id").as("label"), col("id").as("n_vecs"))) {
+    protected def step(counts: DataFrame, batch: DataFrame): DataFrame = {
+      appendList(batch.repartition(col("label")))
+      val b = batch.groupBy(col("label"))
+        .agg(count(lit(1)).as("n_vecs"))
+      counts.unionByName(b)
+        .groupBy(col("label"))
+        .agg(sum(col("n_vecs")).as("n_vecs"))
+        .localCheckpoint()
+    }
 
     /** The maintained exact per-list counts (≤ K rows, total order). */
-    def current: DataFrame = counts.orderBy(col("label"))
+    def current: DataFrame = state.orderBy(col("label"))
     /** The live balance audit over the maintained counts — X172's
       * exact output shape, computed through the shared formula.
       */
     def balance: DataFrame =
-      graft.queries.SimQueries.balanceFromCounts(counts)
+      graft.queries.SimQueries.balanceFromCounts(state)
   }
-
-  /** Wire a vector stream to an [[IvfMaintainer]] via foreachBatch. */
-  def ivfMaintainStream(vecs: DataFrame, m: IvfMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => m.applyBatch(batch, batchId)
-    }
 
   // ── X176: streaming distinct-count maintenance ──────────────────────
 
@@ -1061,8 +1032,7 @@ object Streams {
     * — ≤ 64·|types| rows FOREVER, because registers merge by per-bucket
     * max (associative + commutative + IDEMPOTENT: re-observed users and
     * at-least-once replays are algebraically no-ops, a strictly stronger
-    * property than the count-merge maintainers have; the batchId guard
-    * is kept anyway as the house at-least-once discipline). Per batch:
+    * property than the count-merge maintainers have). Per batch:
     * one map-side-combinable register agg over the batch + a tiny
     * ≤ 2·64·|types|-row max-merge — never a corpus rescan, which is the
     * only shape that keeps a distinct-count dashboard fresh per
@@ -1077,44 +1047,26 @@ object Streams {
     * real MemoryStream, the replay guard, and register idempotence
     * under re-observed users.
     */
-  final class HllMaintainer(s: org.apache.spark.sql.SparkSession) {
-    private def emptyRegs: DataFrame =
-      s.range(0).select(col("id").cast("string").as("event_type"),
-        col("id").as("bucket"), col("id").as("register"))
-    @volatile private var regs: DataFrame = emptyRegs
-    private var lastApplied: Long = -1L
-
-    def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-        if (batchId >= 0 && batchId <= lastApplied) return
-        val b = graft.queries.StreamQueries.hllRegistersOf(batch)
-        val next = regs.unionByName(b)
-          .groupBy(col("event_type"), col("bucket"))
-          .agg(max(col("register")).as("register"))
-          .localCheckpoint()
-        regs = next
-        if (batchId >= 0) lastApplied = batchId
-        ()
-      }
+  final class HllMaintainer(s: SparkSession)
+      extends Maintainer[DataFrame](
+        s.range(0).select(col("id").cast("string").as("event_type"),
+          col("id").as("bucket"), col("id").as("register"))) {
+    protected def step(regs: DataFrame, batch: DataFrame): DataFrame =
+      regs.unionByName(graft.queries.StreamQueries.hllRegistersOf(batch))
+        .groupBy(col("event_type"), col("bucket"))
+        .agg(max(col("register")).as("register"))
+        .localCheckpoint()
 
     /** The maintained sparse registers (≤ 64·|types| rows, total order). */
     def current: DataFrame =
-      regs.orderBy(col("event_type"), col("bucket"))
+      state.orderBy(col("event_type"), col("bucket"))
     /** The live dense-register + estimator view over the maintained
       * state — X176's output shape minus the exact-count anchor column,
       * computed through the shared formula.
       */
     def estimate: DataFrame =
-      graft.queries.StreamQueries.hllEstimateFromRegisters(regs)
+      graft.queries.StreamQueries.hllEstimateFromRegisters(state)
   }
-
-  /** Wire an event stream to an [[HllMaintainer]] via foreachBatch. */
-  def hllMaintainStream(events: DataFrame, m: HllMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => m.applyBatch(batch, batchId)
-    }
 
   // ── X178: streaming exact-grid quantile maintenance ─────────────────
 
@@ -1135,43 +1087,32 @@ object Streams {
     * AND quantiles == one-shot quantiles after EVERY micro-batch, plus
     * the at-least-once replay guard.
     */
-  final class ValueHistMaintainer(s: org.apache.spark.sql.SparkSession) {
-    private def emptyHist: DataFrame =
-      s.range(0).select(col("id").cast("string").as("event_type"),
-        col("id").as("cents"), col("id").as("cnt"))
-    @volatile private var hist: DataFrame = emptyHist
-    private var lastApplied: Long = -1L
-
-    def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-        if (batchId >= 0 && batchId <= lastApplied) return
-        val b = graft.queries.StreamQueries.valueHistOf(batch)
-        val next = hist.unionByName(b)
-          .groupBy(col("event_type"), col("cents"))
-          .agg(sum(col("cnt")).as("cnt"))
-          .localCheckpoint()
-        hist = next
-        if (batchId >= 0) lastApplied = batchId
-        ()
-      }
+  final class ValueHistMaintainer(s: SparkSession)
+      extends Maintainer[DataFrame](
+        s.range(0).select(col("id").cast("string").as("event_type"),
+          col("id").as("cents"), col("id").as("cnt"))) {
+    protected def step(hist: DataFrame, batch: DataFrame): DataFrame =
+      hist.unionByName(graft.queries.StreamQueries.valueHistOf(batch))
+        .groupBy(col("event_type"), col("cents"))
+        .agg(sum(col("cnt")).as("cnt"))
+        .localCheckpoint()
 
     /** The maintained histogram (value-domain-bounded, total order). */
     def current: DataFrame =
-      hist.orderBy(col("event_type"), col("cents"))
+      state.orderBy(col("event_type"), col("cents"))
     /** The live exact p50/p90/p99 over the maintained histogram. */
     def quantiles: DataFrame =
-      graft.queries.StreamQueries.quantilesFromHist(hist)
+      graft.queries.StreamQueries.quantilesFromHist(state)
   }
 
-  /** Wire an event stream to a [[ValueHistMaintainer]] via foreachBatch. */
-  def valueHistMaintainStream(events: DataFrame, m: ValueHistMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => m.applyBatch(batch, batchId)
-    }
-
   // ── X181: streaming count–min frequency maintenance ─────────────────
+
+  /** [[CmsMaintainer]]'s snapshot: the exact per-user anchor counts, the
+    * maintained count–min grid (None before the first non-null batch
+    * sketch) and the total event count.
+    */
+  final case class CmsState(counts: DataFrame,
+    sketch: Option[org.apache.spark.util.sketch.CountMinSketch], total: Long)
 
   /** X181 stream side: a foreachBatch maintainer for the X68 frequency
     * audit — the last sketch rung without an ingestion maintainer
@@ -1199,70 +1140,53 @@ object Streams {
     * `StreamingSpec` proves maintained verdict == one-shot verdict
     * after EVERY micro-batch over a real MemoryStream, plus the
     * at-least-once replay guard (counts and grid cells are NOT
-    * idempotent — the guard is the correctness line, the
-    * MergeMaintainer ordering lesson).
+    * idempotent), plus that a published sketch is never mutated.
     */
-  final class CmsMaintainer(s: org.apache.spark.sql.SparkSession) {
-    private def emptyCounts: DataFrame =
-      s.range(0).select(col("id").as("user_id"), col("id").as("cnt"))
-    @volatile private var counts: DataFrame = emptyCounts
-    private var sketch: Option[org.apache.spark.util.sketch.CountMinSketch] =
-      None
-    private var total: Long = 0L
-    private var lastApplied: Long = -1L
-
-    def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-        if (batchId >= 0 && batchId <= lastApplied) return
-        val ev = batch.select(col("user_id"))
-        val (blob, n) = graft.queries.StreamQueries.cmsOf(ev)
-        blob.foreach { b =>
-          val sk = org.apache.spark.util.sketch.CountMinSketch.readFrom(
-            new java.io.ByteArrayInputStream(b))
-          sketch match {
-            case Some(acc) => acc.mergeInPlace(sk)
-            case None      => sketch = Some(sk)
-          }
-        }
-        if (n > 0) {
-          val bc = ev.groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
-          counts = counts.unionByName(bc)
+  final class CmsMaintainer(s: SparkSession)
+      extends Maintainer[CmsState](CmsState(
+        s.range(0).select(col("id").as("user_id"), col("id").as("cnt")),
+        None, 0L)) {
+    protected def step(st: CmsState, batch: DataFrame): CmsState = {
+      val ev = batch.select(col("user_id"))
+      val (blob, n) = graft.queries.StreamQueries.cmsOf(ev)
+      // The published grid merges INTO the fresh batch sketch, never the
+      // other way round: a verdict may still be probing the published one.
+      val sketch = blob.map { b =>
+        val sk = org.apache.spark.util.sketch.CountMinSketch.readFrom(
+          new java.io.ByteArrayInputStream(b))
+        st.sketch.foreach(sk.mergeInPlace)
+        sk
+      }.orElse(st.sketch)
+      if (n == 0) st.copy(sketch = sketch)
+      else {
+        val bc = ev.groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
+        CmsState(st.counts.unionByName(bc)
             .groupBy(col("user_id")).agg(sum(col("cnt")).as("cnt"))
-            .localCheckpoint()
-          total += n
-        }
-        if (batchId >= 0) lastApplied = batchId
-        ()
+            .localCheckpoint(),
+          sketch, st.total + n)
       }
-
-    /** The maintained exact anchor counts (|touched users|, total order).
-      * Synchronized (advice r15): the readout spans THREE state fields
-      * (`counts`, `sketch`, `total`) and only `counts` is volatile — an
-      * unsynchronized read concurrent with applyBatch could pair a merged
-      * grid with a stale total and transiently break the eps contract in
-      * a live readout. Snapshotting under the same monitor as applyBatch
-      * makes every verdict see a whole batch or none of it.
-      */
-    def current: DataFrame = synchronized {
-      counts.orderBy(col("user_id"))
     }
+
+    /** The maintained exact anchor counts (|touched users|, total order). */
+    def current: DataFrame = state.counts.orderBy(col("user_id"))
     /** The live X68 frequency audit over the maintained grid + anchor. */
     def verdict: DataFrame = {
-      val (cSnap, skSnap, tSnap) = synchronized { (counts, sketch, total) }
+      val st = state
       graft.queries.StreamQueries.heavyHittersVerdict(s,
-        graft.queries.StreamQueries.topkFromCounts(cSnap), skSnap, tSnap)
+        graft.queries.StreamQueries.topkFromCounts(st.counts), st.sketch,
+        st.total)
     }
+    /** The published snapshot, for specs. */
+    private[graft] def snapshot: CmsState = state
   }
 
-  /** Wire an event stream to a [[CmsMaintainer]] via foreachBatch. */
-  def cmsMaintainStream(events: DataFrame, m: CmsMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => m.applyBatch(batch, batchId)
-    }
-
   // ── X191: bounded-state streaming heavy hitters (Misra–Gries) ────────
+
+  /** [[MgMaintainer]]'s snapshot: the ≤ k counters, the error ledger
+    * (Σ of every subtracted d) and the total event count.
+    */
+  final case class MgState(summary: Map[Long, Long], decTotal: Long,
+    total: Long)
 
   /** X191 stream side: the BOUNDED-STATE heavy-hitters maintainer —
     * Misra–Gries summaries with the Agarwal–Cormode–Huang–Phillips–
@@ -1290,8 +1214,8 @@ object Streams {
     * tie-break ambiguity can change it), which is what lets a DuckDB
     * twin replay the identical 4-batch fold CTE-for-CTE.
     *
-    * NOT idempotent (counters add), so the at-least-once batchId guard
-    * is the correctness line. Unlike the telescoping maintainers, an
+    * NOT idempotent (counters add), so the base's replay guard is the
+    * correctness line. Unlike the telescoping maintainers, an
     * MG summary depends on the batch BOUNDARIES (that is inherent to
     * the algorithm, not a defect — the error contract is what's
     * batch-invariant); the registered key therefore fixes the same
@@ -1299,73 +1223,66 @@ object Streams {
     * `StreamingSpec` proves streaming == direct-fold state equality
     * after every micro-batch plus the ledger contracts at every step.
     */
-  final class MgMaintainer(s: org.apache.spark.sql.SparkSession,
-      private[graft] val k: Int) {
-    private var summary: Map[Long, Long] = Map.empty
-    private var decTotal: Long = 0L
-    private var total: Long = 0L
-    private var lastApplied: Long = -1L
-
-    def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-        if (batchId >= 0 && batchId <= lastApplied) return
-        val cnts = batch.select(col("user_id"))
-          .groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
-        // ONE driver action per batch (judge r16 item #7, measured
-        // before adoption — see DESIGN.md round-17): the TakeOrdered
-        // top-(k+1) and the batch total ride one tagged ≤ k+2-row
-        // union collect instead of two separate jobs. The union's two
-        // branches each still reduce `cnts` (same work as the two
-        // separate jobs did); what the fuse removes is one
-        // job-submission round-trip per micro-batch — the lever that
-        // matters at 100k-batch scale. Client-side re-sort because a
-        // union does not preserve the limit branch's row order.
-        val fused = cnts.orderBy(col("cnt").desc, col("user_id"))
-          .limit(k + 1)
-          .select(lit(0).as("tag"), col("user_id"), col("cnt"))
-          .unionByName(cnts.agg(sum(col("cnt")).as("cnt"))
-            .select(lit(1).as("tag"), lit(-1L).as("user_id"),
-              coalesce(col("cnt"), lit(0L)).as("cnt")))
-          .collect()
-        val nB = fused.collectFirst {
-          case r if r.getInt(0) == 1 => r.getLong(2)
-        }.getOrElse(0L)
-        if (nB > 0) {
-          val top = fused.iterator.filter(_.getInt(0) == 0)
-            .map(r => (r.getLong(1), r.getLong(2))).toArray
-            .sortBy { case (u, c) => (-c, u) }
-          val dB = if (top.length > k) top(k)._2 else 0L
-          val batchSummary = top.take(k).collect {
-            case (u, c) if c - dB > 0 => u -> (c - dB)
-          }.toMap
-          decTotal += dB
-          summary = mergePrune(summary, batchSummary)
-          total += nB
-        }
-        if (batchId >= 0) lastApplied = batchId
-        ()
-      }
-
-    /** PODS-2012 merge: counter sums, then one prune if > k survive.
-      * Caller holds the monitor (mutates the decTotal ledger).
-      */
-    private def mergePrune(a: Map[Long, Long],
-        b: Map[Long, Long]): Map[Long, Long] = {
-      val combined = (a.keySet ++ b.keySet).iterator
-        .map(u => u -> (a.getOrElse(u, 0L) + b.getOrElse(u, 0L))).toMap
-      if (combined.size <= k) combined
+  final class MgMaintainer(s: SparkSession, private[graft] val k: Int)
+      extends Maintainer[MgState](MgState(Map.empty, 0L, 0L)) {
+    protected def step(st: MgState, batch: DataFrame): MgState = {
+      val cnts = batch.select(col("user_id"))
+        .groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
+      // ONE driver action per batch (judge r16 item #7, measured
+      // before adoption — see DESIGN.md round-17): the TakeOrdered
+      // top-(k+1) and the batch total ride one tagged ≤ k+2-row
+      // union collect instead of two separate jobs. The union's two
+      // branches each still reduce `cnts` (same work as the two
+      // separate jobs did); what the fuse removes is one
+      // job-submission round-trip per micro-batch — the lever that
+      // matters at 100k-batch scale. Client-side re-sort because a
+      // union does not preserve the limit branch's row order.
+      val fused = cnts.orderBy(col("cnt").desc, col("user_id"))
+        .limit(k + 1)
+        .select(lit(0).as("tag"), col("user_id"), col("cnt"))
+        .unionByName(cnts.agg(sum(col("cnt")).as("cnt"))
+          .select(lit(1).as("tag"), lit(-1L).as("user_id"),
+            coalesce(col("cnt"), lit(0L)).as("cnt")))
+        .collect()
+      val nB = fused.collectFirst {
+        case r if r.getInt(0) == 1 => r.getLong(2)
+      }.getOrElse(0L)
+      if (nB == 0) st
       else {
-        val d = combined.values.toSeq.sortBy(x => -x).apply(k)
-        decTotal += d
-        combined.collect { case (u, c) if c - d > 0 => u -> (c - d) }
+        val top = fused.iterator.filter(_.getInt(0) == 0)
+          .map(r => (r.getLong(1), r.getLong(2))).toArray
+          .sortBy { case (u, c) => (-c, u) }
+        val dB = if (top.length > k) top(k)._2 else 0L
+        val batchSummary = top.take(k).collect {
+          case (u, c) if c - dB > 0 => u -> (c - dB)
+        }.toMap
+        val (merged, dM) = mergePrune(st.summary, batchSummary)
+        MgState(merged, st.decTotal + dB + dM, st.total + nB)
       }
     }
 
-    /** Synchronized state snapshot for specs and the verdict view:
+    /** PODS-2012 merge: counter sums, then one prune if > k survive.
+      * Returns the merged summary and the ledger increment (the d
+      * subtracted by the prune, 0 without one).
+      */
+    private def mergePrune(a: Map[Long, Long],
+        b: Map[Long, Long]): (Map[Long, Long], Long) = {
+      val combined = (a.keySet ++ b.keySet).iterator
+        .map(u => u -> (a.getOrElse(u, 0L) + b.getOrElse(u, 0L))).toMap
+      if (combined.size <= k) (combined, 0L)
+      else {
+        val d = combined.values.toSeq.sortBy(x => -x).apply(k)
+        (combined.collect { case (u, c) if c - d > 0 => u -> (c - d) }, d)
+      }
+    }
+
+    /** The published state for specs and the verdict view:
       * (summary, decTotal, total).
       */
-    private[graft] def snapshot: (Map[Long, Long], Long, Long) =
-      synchronized { (summary, decTotal, total) }
+    private[graft] def snapshot: (Map[Long, Long], Long, Long) = {
+      val st = state
+      (st.summary, st.decTotal, st.total)
+    }
 
     /** The live X191 audit: the maintained O(k) summary joined against
       * exact counts recomputed from `users` — the exact side is the
@@ -1379,13 +1296,6 @@ object Streams {
     }
   }
 
-  /** Wire an event stream to a [[MgMaintainer]] via foreachBatch. */
-  def mgMaintainStream(events: DataFrame, m: MgMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => m.applyBatch(batch, batchId)
-    }
 
   // ── X192: streaming exact-distinct bitmap maintenance ────────────────
 
@@ -1397,56 +1307,38 @@ object Streams {
     * associative, commutative and IDEMPOTENT, which buys this
     * maintainer two properties no counter-based sibling has:
     * the maintained map telescopes to the one-shot map under ANY
-    * batching, and at-least-once REPLAY is a no-op BY ALGEBRA — so
-    * `applyBatch` deliberately carries no batchId guard (the param is
-    * accepted for wiring uniformity and ignored, documented here and
-    * spec-proven by applying the same batch twice). The founding member
-    * of the no-guard family ([[TypeOverlapMaintainer]] joined in X194:
-    * HLL union + distinct union are idempotent too). The CMS/MG/CUPED/
-    * count maintainers MUST keep their guards: addition is not
-    * idempotent and a replayed epoch there double-counts.
+    * batching, and at-least-once REPLAY is a no-op BY ALGEBRA even
+    * under a fresh batch id, where the base's guard cannot help
+    * (spec-proven by applying the same batch under two ids).
     *
     * The `verdict(ev)` view emits X98's exact output (bitmap count vs
     * the `count(DISTINCT)` anchor recomputed from `ev` — audit input,
     * not state) through the ONE shared
     * [[graft.queries.StreamQueries.bitmapVerdictFromBuckets]] formula.
     */
-  final class BitmapMaintainer(s: org.apache.spark.sql.SparkSession) {
-    private def emptyBuckets: DataFrame =
-      s.range(0).select(col("id").cast("string").as("event_type"),
-        col("id").as("bk"), col("id").as("m"))
-    @volatile private var buckets: DataFrame = emptyBuckets
-
-    def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-        // no lastApplied check — see scaladoc: OR absorbs replays
-        val b = graft.queries.StreamQueries.bitmapBucketsOf(batch)
-        buckets = buckets.unionByName(b)
-          .groupBy(col("event_type"), col("bk"))
-          .agg(expr("bit_or(m)").as("m"))
-          .localCheckpoint()
-        ()
-      }
+  final class BitmapMaintainer(s: SparkSession)
+      extends Maintainer[DataFrame](
+        s.range(0).select(col("id").cast("string").as("event_type"),
+          col("id").as("bk"), col("id").as("m"))) {
+    protected def step(buckets: DataFrame, batch: DataFrame): DataFrame =
+      buckets.unionByName(graft.queries.StreamQueries.bitmapBucketsOf(batch))
+        .groupBy(col("event_type"), col("bk"))
+        .agg(expr("bit_or(m)").as("m"))
+        .localCheckpoint()
 
     /** The maintained bucket map (domain-bounded, total order). */
-    def current: DataFrame = synchronized {
-      buckets.orderBy(col("event_type"), col("bk"))
-    }
+    def current: DataFrame = state.orderBy(col("event_type"), col("bk"))
     /** The live X98 audit over the maintained map + exact anchor. */
-    def verdict(ev: DataFrame): DataFrame = synchronized {
-      graft.queries.StreamQueries.bitmapVerdictFromBuckets(buckets, ev)
-    }
+    def verdict(ev: DataFrame): DataFrame =
+      graft.queries.StreamQueries.bitmapVerdictFromBuckets(state, ev)
   }
 
-  /** Wire an event stream to a [[BitmapMaintainer]] via foreachBatch. */
-  def bitmapMaintainStream(events: DataFrame, m: BitmapMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => m.applyBatch(batch, batchId)
-    }
-
   // ── X194: streaming pairwise audience overlap (HLL set algebra) ──────
+
+  /** [[TypeOverlapMaintainer]]'s snapshot: one HLL blob per event type
+    * and the exact distinct (event_type, user_id) anchor.
+    */
+  final case class TypeOverlapState(sketches: DataFrame, du: DataFrame)
 
   /** X194 stream side: a foreachBatch maintainer for X69's pairwise
     * distinct-user overlap — the SET-ALGEBRA rung made ingestion-shaped.
@@ -1460,55 +1352,39 @@ object Streams {
     * reads the estimates alone).
     *
     * Both merges are IDEMPOTENT (HLL union = register max, distinct
-    * union = set union), so this maintainer joins
-    * [[BitmapMaintainer]]'s no-guard family: applyBatch accepts and
-    * ignores batchId, replays are absorbed by algebra (spec-proven by
+    * union = set union), so, like [[BitmapMaintainer]], replays are
+    * absorbed by algebra even under a fresh batch id (spec-proven by
     * re-applying a batch under a new id). The `verdict` view emits
     * X69's exact output through the ONE shared
     * [[graft.queries.StreamQueries.typeOverlapVerdict]] formula.
     */
-  final class TypeOverlapMaintainer(s: org.apache.spark.sql.SparkSession) {
-    private def emptySk: DataFrame =
-      s.range(0).select(col("id").cast("string").as("event_type"),
-        col("id").cast("string").cast("binary").as("sk"))
-    private def emptyDu: DataFrame =
-      s.range(0).select(col("id").cast("string").as("event_type"),
-        col("id").as("user_id"))
-    private var sketches: DataFrame = emptySk
-    private var du: DataFrame = emptyDu
-
-    def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-        // no lastApplied check — idempotent algebra absorbs replays
-        val ev = batch.select(col("event_type"), col("user_id"))
-        val bsk = graft.queries.StreamQueries.typeSketchesOf(ev)
-        sketches = sketches.unionByName(bsk)
-          .groupBy(col("event_type"))
-          .agg(expr("hll_union_agg(sk)").as("sk"))
-          .localCheckpoint()
-        du = du.unionByName(ev.distinct()).distinct().localCheckpoint()
-        ()
-      }
+  final class TypeOverlapMaintainer(s: SparkSession)
+      extends Maintainer[TypeOverlapState](TypeOverlapState(
+        s.range(0).select(col("id").cast("string").as("event_type"),
+          col("id").cast("string").cast("binary").as("sk")),
+        s.range(0).select(col("id").cast("string").as("event_type"),
+          col("id").as("user_id")))) {
+    protected def step(st: TypeOverlapState,
+        batch: DataFrame): TypeOverlapState = {
+      val ev = batch.select(col("event_type"), col("user_id"))
+      val sketches = st.sketches
+        .unionByName(graft.queries.StreamQueries.typeSketchesOf(ev))
+        .groupBy(col("event_type"))
+        .agg(expr("hll_union_agg(sk)").as("sk"))
+        .localCheckpoint()
+      TypeOverlapState(sketches,
+        st.du.unionByName(ev.distinct()).distinct().localCheckpoint())
+    }
 
     /** The maintained exact anchor pairs (total order). */
-    def current: DataFrame = synchronized {
-      du.orderBy(col("event_type"), col("user_id"))
-    }
+    def current: DataFrame =
+      state.du.orderBy(col("event_type"), col("user_id"))
     /** The live X69 audit over the maintained sketches + anchor. */
-    def verdict: DataFrame = synchronized {
-      graft.queries.StreamQueries.typeOverlapVerdict(sketches, du)
+    def verdict: DataFrame = {
+      val st = state
+      graft.queries.StreamQueries.typeOverlapVerdict(st.sketches, st.du)
     }
   }
-
-  /** Wire an event stream to a [[TypeOverlapMaintainer]] via
-    * foreachBatch.
-    */
-  def typeOverlapMaintainStream(events: DataFrame, m: TypeOverlapMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => m.applyBatch(batch, batchId)
-    }
 
   // ── X180: streaming k-anonymity release audit ───────────────────────
 
@@ -1533,44 +1409,27 @@ object Streams {
     * after EVERY micro-batch, the replay guard, and the k-drop
     * behavior on a fresh-cell batch.
     */
-  final class KAnonymityMaintainer(s: org.apache.spark.sql.SparkSession) {
-    private def emptyClasses: DataFrame =
-      s.range(0).select(col("id").as("nation"), col("id").as("bal_bucket"),
-        col("id").as("n_rows"),
-        array().cast("array<string>").as("segments"))
-    @volatile private var classes: DataFrame = emptyClasses
-    private var lastApplied: Long = -1L
-
-    def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-        if (batchId >= 0 && batchId <= lastApplied) return
-        val b = graft.queries.FeatureQueries.privacyClassesOf(batch)
-        val next = classes.unionByName(b)
-          .groupBy(col("nation"), col("bal_bucket"))
-          .agg(sum(col("n_rows")).as("n_rows"),
-            array_sort(array_distinct(
-              flatten(collect_list(col("segments"))))).as("segments"))
-          .localCheckpoint()
-        classes = next
-        if (batchId >= 0) lastApplied = batchId
-        ()
-      }
+  final class KAnonymityMaintainer(s: SparkSession)
+      extends Maintainer[DataFrame](
+        s.range(0).select(col("id").as("nation"), col("id").as("bal_bucket"),
+          col("id").as("n_rows"),
+          array().cast("array<string>").as("segments"))) {
+    protected def step(classes: DataFrame, batch: DataFrame): DataFrame =
+      classes.unionByName(
+          graft.queries.FeatureQueries.privacyClassesOf(batch))
+        .groupBy(col("nation"), col("bal_bucket"))
+        .agg(sum(col("n_rows")).as("n_rows"),
+          array_sort(array_distinct(
+            flatten(collect_list(col("segments"))))).as("segments"))
+        .localCheckpoint()
 
     /** The maintained class state (QI-domain-bounded, total order). */
     def current: DataFrame =
-      classes.orderBy(col("nation"), col("bal_bucket"))
+      state.orderBy(col("nation"), col("bal_bucket"))
     /** The live X179 audit over the maintained classes. */
     def verdict: DataFrame =
-      graft.queries.FeatureQueries.privacyVerdictFromClasses(classes)
+      graft.queries.FeatureQueries.privacyVerdictFromClasses(state)
   }
-
-  /** Wire a row stream to a [[KAnonymityMaintainer]] via foreachBatch. */
-  def kAnonymityMaintainStream(rows: DataFrame, m: KAnonymityMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    rows.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => m.applyBatch(batch, batchId)
-    }
 
   // ── X186: streaming t-closeness release audit ────────────────────────
 
@@ -1588,48 +1447,23 @@ object Streams {
     * the ONE shared [[graft.queries.FeatureQueries.tClosenessFromCells]]
     * formula.
     */
-  final class TClosenessMaintainer(s: org.apache.spark.sql.SparkSession) {
-    private def emptyCells: DataFrame =
-      s.range(0).select(col("id").as("nation"), col("id").as("bal_bucket"),
-        col("id").cast("string").as("segment"), col("id").as("cnt"))
-    @volatile private var cells: DataFrame = emptyCells
-    private var lastApplied: Long = -1L
+  final class TClosenessMaintainer(s: SparkSession)
+      extends Maintainer[DataFrame](
+        s.range(0).select(col("id").as("nation"), col("id").as("bal_bucket"),
+          col("id").cast("string").as("segment"), col("id").as("cnt"))) {
+    protected def step(cells: DataFrame, batch: DataFrame): DataFrame =
+      cells.unionByName(graft.queries.FeatureQueries.privacyCellsOf(batch))
+        .groupBy(col("nation"), col("bal_bucket"), col("segment"))
+        .agg(sum(col("cnt")).as("cnt"))
+        .localCheckpoint()
 
-    def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-        if (batchId >= 0 && batchId <= lastApplied) return
-        val b = graft.queries.FeatureQueries.privacyCellsOf(batch)
-        val next = cells.unionByName(b)
-          .groupBy(col("nation"), col("bal_bucket"), col("segment"))
-          .agg(sum(col("cnt")).as("cnt"))
-          .localCheckpoint()
-        cells = next
-        if (batchId >= 0) lastApplied = batchId
-        ()
-      }
-
-    /** The maintained cell grid (domain-bounded, total order). State here
-      * is a single volatile frame (one read is atomic), but the readouts
-      * still synchronize (advice r15) so every maintainer in the family
-      * has the same contract: a verdict never interleaves with a
-      * mid-applyBatch monitor section.
-      */
-    def current: DataFrame = synchronized {
-      cells.orderBy(col("nation"), col("bal_bucket"), col("segment"))
-    }
+    /** The maintained cell grid (domain-bounded, total order). */
+    def current: DataFrame =
+      state.orderBy(col("nation"), col("bal_bucket"), col("segment"))
     /** The live X185 audit over the maintained cells. */
-    def verdict: DataFrame = synchronized {
-      graft.queries.FeatureQueries.tClosenessFromCells(cells)
-    }
+    def verdict: DataFrame =
+      graft.queries.FeatureQueries.tClosenessFromCells(state)
   }
-
-  /** Wire a row stream to a [[TClosenessMaintainer]] via foreachBatch. */
-  def tClosenessMaintainStream(rows: DataFrame, m: TClosenessMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    rows.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => m.applyBatch(batch, batchId)
-    }
 
   // ── X189: streaming CUPED experiment monitoring ──────────────────────
 
@@ -1651,37 +1485,22 @@ object Streams {
     * that could drift. The `verdict` view emits X187's exact 1-row
     * readout through the ONE shared cupedVerdictFromUsers formula.
     */
-  final class CupedMaintainer(s: org.apache.spark.sql.SparkSession,
-      anchorUs: Long) {
-    private def emptyUsers: DataFrame =
-      s.range(0).select(col("id").as("user_id"), col("id").as("x"),
-        col("id").as("y"))
-    @volatile private var users: DataFrame = emptyUsers
-    private var lastApplied: Long = -1L
+  final class CupedMaintainer(s: SparkSession, anchorUs: Long)
+      extends Maintainer[DataFrame](
+        s.range(0).select(col("id").as("user_id"), col("id").as("x"),
+          col("id").as("y"))) {
+    protected def step(users: DataFrame, batch: DataFrame): DataFrame =
+      users.unionByName(
+          graft.queries.StreamQueries.cupedUsersOf(batch, Some(anchorUs)))
+        .groupBy(col("user_id"))
+        .agg(sum(col("x")).as("x"), sum(col("y")).as("y"))
+        .localCheckpoint()
 
-    def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-        if (batchId >= 0 && batchId <= lastApplied) return
-        val b = graft.queries.StreamQueries
-          .cupedUsersOf(batch, Some(anchorUs))
-        val next = users.unionByName(b)
-          .groupBy(col("user_id"))
-          .agg(sum(col("x")).as("x"), sum(col("y")).as("y"))
-          .localCheckpoint()
-        users = next
-        if (batchId >= 0) lastApplied = batchId
-        ()
-      }
-
-    /** The maintained per-user sufficient state (total order). Single
-      * volatile frame, but synchronized anyway — same family contract as
-      * [[TClosenessMaintainer]] (advice r15).
-      */
-    def current: DataFrame = synchronized { users.orderBy(col("user_id")) }
+    /** The maintained per-user sufficient state (total order). */
+    def current: DataFrame = state.orderBy(col("user_id"))
     /** The live X187 readout over the maintained state. */
-    def verdict: DataFrame = synchronized {
-      graft.queries.StreamQueries.cupedVerdictFromUsers(users)
-    }
+    def verdict: DataFrame =
+      graft.queries.StreamQueries.cupedVerdictFromUsers(state)
     /** The live X199 difference-in-differences readout over the SAME
       * maintained per-user (x, y) panel (round 17, judge r16 missing
       * item #2): DiD and CUPED share their unit-of-analysis state, so
@@ -1690,18 +1509,9 @@ object Streams {
       * Arm assignment is recomputed from the stable user-id hash in
       * the verdict, exactly like [[verdict]].
       */
-    def didVerdict: DataFrame = synchronized {
-      graft.queries.StreamQueries.didVerdictFromUsers(users)
-    }
+    def didVerdict: DataFrame =
+      graft.queries.StreamQueries.didVerdictFromUsers(state)
   }
-
-  /** Wire an event stream to a [[CupedMaintainer]] via foreachBatch. */
-  def cupedMaintainStream(events: DataFrame, m: CupedMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => m.applyBatch(batch, batchId)
-    }
 
   // ---------------------------------------------------------------------
   // X206 — streaming AS-OF enrichment (judge r16 next-round item #6):
@@ -1717,15 +1527,11 @@ object Streams {
   // while the state register still max-merges the late click for every
   // FUTURE purchase.
   //
-  // Replay guard rationale (the judge's ask, explicit): the STATE merge
-  // alone is an idempotent register-max (re-merging a batch's clicks
-  // changes nothing — the bitmap/type-overlap class), but the ENRICHED
-  // OUTPUT is an append, and appends are NOT idempotent across epochs —
-  // re-applying a batch double-emits its purchases. foreachBatch is
-  // at-least-once after failure, so the epoch guard is the correctness
-  // line for the output side even though the state side would survive
-  // without it (the asymmetry is spec-demonstrated: guarded replay is a
-  // no-op, guard-bypassed replay doubles the append).
+  // Replay: the register merge alone is an idempotent register-max, but
+  // the ENRICHED OUTPUT is an append, and re-applying a batch
+  // double-emits its purchases — the base's replay guard is the
+  // correctness line for the output side (spec-demonstrated: guarded
+  // replay is a no-op, guard-bypassed replay doubles the append).
   //
   // Scale: state is one small row per user (the T9 bound, evictable by
   // retention in a deployment). Per batch: one left-semi join seeds only
@@ -1737,105 +1543,103 @@ object Streams {
   // The enriched append is |batch purchases| rows.
   // ---------------------------------------------------------------------
 
+  /** [[AsofMaintainer]]'s snapshot: the per-user latest-click
+    * register, the accumulated enriched purchases and the number of
+    * batches applied (the next batch's `batch_idx`).
+    */
+  final case class AsofState(register: DataFrame, enriched: DataFrame,
+    nApplied: Long)
+
   /** X206 state + output: `latestClicks` is the per-user register,
     * `current` the accumulated enriched purchases (purchase_id,
     * user_id, click_id, gap_us, batch_idx — NULL click for purchases
-    * with no prior click, exactly the X24 left-as-of contract).
+    * with no prior click, exactly the X24 left-as-of contract). A batch
+    * carries columns event_id, user_id, tus (epoch µs), event_type; a
+    * stream of raw events selects `unix_micros(ts) AS tus` before
+    * [[maintain]].
     */
-  final class AsofMaintainer(s: org.apache.spark.sql.SparkSession) {
-    @volatile private var state: DataFrame = s.range(0)
-      .select(col("id").as("user_id"), col("id").as("click_tus"),
-        col("id").as("click_id"))
-    @volatile private var enrichedAcc: DataFrame = s.range(0)
-      .select(col("id").as("purchase_id"), col("id").as("user_id"),
-        col("id").as("click_id"), col("id").as("gap_us"),
-        col("id").as("batch_idx"))
-    private var lastApplied: Long = -1L
-    private var nApplied: Long = 0L
+  final class AsofMaintainer(s: SparkSession)
+      extends Maintainer[AsofState](AsofState(
+        s.range(0).select(col("id").as("user_id"), col("id").as("click_tus"),
+          col("id").as("click_id")),
+        s.range(0).select(col("id").as("purchase_id"),
+          col("id").as("user_id"), col("id").as("click_id"),
+          col("id").as("gap_us"), col("id").as("batch_idx")),
+        0L)) {
+    protected def step(st: AsofState, batch: DataFrame): AsofState = {
+      val ev = batch.select(col("event_id"), col("user_id"),
+        col("tus"), col("event_type"))
+      val clicks = ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("tus"), col("event_id"))
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("tus"), col("event_id"))
+      // seed only the batch's active users' registers into the window
+      val seed = st.register.join(ev.select(col("user_id")).distinct(),
+        Seq("user_id"), "left_semi")
+      val u = seed.select(col("user_id"),
+          col("click_tus").as("tus"), lit(0).as("side"),
+          col("click_id").as("event_id"))
+        .unionByName(clicks.select(col("user_id"), col("tus"),
+          lit(0).as("side"), col("event_id")))
+        .unionByName(purchases.select(col("user_id"), col("tus"),
+          lit(1).as("side"), col("event_id")))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("user_id"))
+        .orderBy(col("tus"), col("side"), col("event_id"))
+        .rowsBetween(org.apache.spark.sql.expressions.Window
+          .unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.currentRow)
+      val enrichedB = u
+        .withColumn("c_id", last(when(col("side") === 0,
+          col("event_id")), ignoreNulls = true).over(w))
+        .withColumn("c_tus", last(when(col("side") === 0, col("tus")),
+          ignoreNulls = true).over(w))
+        .filter(col("side") === 1)
+        .select(col("event_id").as("purchase_id"), col("user_id"),
+          col("c_id").as("click_id"),
+          (col("tus") - col("c_tus")).as("gap_us"),
+          lit(st.nApplied).as("batch_idx"))
+      // keyed MERGE of the register: only changed keys produce rows
+      val bmax = clicks.groupBy(col("user_id"))
+        .agg(max(struct(col("tus"), col("event_id"))).as("m"))
+        .select(col("user_id"), col("m.tus").as("b_tus"),
+          col("m.event_id").as("b_id"))
+      val newState = st.register.join(bmax, Seq("user_id"), "full_outer")
+        .select(col("user_id"),
+          when(col("b_tus").isNotNull && (col("click_tus").isNull ||
+              struct(col("b_tus"), col("b_id")) >
+                struct(col("click_tus"), col("click_id"))),
+            col("b_tus")).otherwise(col("click_tus")).as("click_tus"),
+          when(col("b_tus").isNotNull && (col("click_tus").isNull ||
+              struct(col("b_tus"), col("b_id")) >
+                struct(col("click_tus"), col("click_id"))),
+            col("b_id")).otherwise(col("click_id")).as("click_id"))
+      // ONE pin per batch instead of two (driver actions are the loop
+      // wall — the MG fused-collect lesson): the enriched append and
+      // the register update materialize as one tagged union, then
+      // split by tag into scan-only views of the pinned RDD. The
+      // append accumulator stays a LAZY union of per-batch pinned
+      // pieces (the r18 SCC label-accumulator lesson) instead of
+      // re-checkpointing all prior rows every batch.
+      val nulL = lit(null).cast("long")
+      val fused = org.apache.spark.sql.graftbridge.SqlBridge.pinned(
+        enrichedB.select(lit(0).as("tag"), col("purchase_id"),
+            col("user_id"), col("click_id"), col("gap_us"),
+            col("batch_idx"), nulL.as("click_tus"))
+          .unionByName(newState.select(lit(1).as("tag"),
+            nulL.as("purchase_id"), col("user_id"), col("click_id"),
+            nulL.as("gap_us"), nulL.as("batch_idx"), col("click_tus"))))
+      AsofState(
+        fused.filter(col("tag") === 1)
+          .select(col("user_id"), col("click_tus"), col("click_id")),
+        st.enriched.unionByName(fused.filter(col("tag") === 0)
+          .select(col("purchase_id"), col("user_id"), col("click_id"),
+            col("gap_us"), col("batch_idx"))),
+        st.nApplied + 1)
+    }
 
-    /** Enrich one micro-batch (columns event_id, user_id, tus,
-      * event_type) and advance the register. See the X206 header for
-      * the guard rationale; `batchId = -1` bypasses it for direct
-      * driver use (specs, batch twins) like the family convention.
-      */
-    def applyBatch(batch: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-        if (batchId >= 0 && batchId <= lastApplied) return
-        val ev = batch.select(col("event_id"), col("user_id"),
-          col("tus"), col("event_type"))
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("tus"), col("event_id"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("tus"), col("event_id"))
-        // seed only the batch's active users' registers into the window
-        val seed = state.join(ev.select(col("user_id")).distinct(),
-          Seq("user_id"), "left_semi")
-        val u = seed.select(col("user_id"),
-            col("click_tus").as("tus"), lit(0).as("side"),
-            col("click_id").as("event_id"))
-          .unionByName(clicks.select(col("user_id"), col("tus"),
-            lit(0).as("side"), col("event_id")))
-          .unionByName(purchases.select(col("user_id"), col("tus"),
-            lit(1).as("side"), col("event_id")))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("user_id"))
-          .orderBy(col("tus"), col("side"), col("event_id"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)
-        val enrichedB = u
-          .withColumn("c_id", last(when(col("side") === 0,
-            col("event_id")), ignoreNulls = true).over(w))
-          .withColumn("c_tus", last(when(col("side") === 0, col("tus")),
-            ignoreNulls = true).over(w))
-          .filter(col("side") === 1)
-          .select(col("event_id").as("purchase_id"), col("user_id"),
-            col("c_id").as("click_id"),
-            (col("tus") - col("c_tus")).as("gap_us"),
-            lit(nApplied).as("batch_idx"))
-        // keyed MERGE of the register: only changed keys produce rows
-        val bmax = clicks.groupBy(col("user_id"))
-          .agg(max(struct(col("tus"), col("event_id"))).as("m"))
-          .select(col("user_id"), col("m.tus").as("b_tus"),
-            col("m.event_id").as("b_id"))
-        val newState = state.join(bmax, Seq("user_id"), "full_outer")
-          .select(col("user_id"),
-            when(col("b_tus").isNotNull && (col("click_tus").isNull ||
-                struct(col("b_tus"), col("b_id")) >
-                  struct(col("click_tus"), col("click_id"))),
-              col("b_tus")).otherwise(col("click_tus")).as("click_tus"),
-            when(col("b_tus").isNotNull && (col("click_tus").isNull ||
-                struct(col("b_tus"), col("b_id")) >
-                  struct(col("click_tus"), col("click_id"))),
-              col("b_id")).otherwise(col("click_id")).as("click_id"))
-        // ONE pin per batch instead of two (driver actions are the loop
-        // wall — the MG fused-collect lesson): the enriched append and
-        // the register update materialize as one tagged union, then
-        // split by tag into scan-only views of the pinned RDD. The
-        // append accumulator stays a LAZY union of per-batch pinned
-        // pieces (the r18 SCC label-accumulator lesson) instead of
-        // re-checkpointing all prior rows every batch.
-        val nulL = lit(null).cast("long")
-        val fused = org.apache.spark.sql.graftbridge.SqlBridge.pinned(
-          enrichedB.select(lit(0).as("tag"), col("purchase_id"),
-              col("user_id"), col("click_id"), col("gap_us"),
-              col("batch_idx"), nulL.as("click_tus"))
-            .unionByName(newState.select(lit(1).as("tag"),
-              nulL.as("purchase_id"), col("user_id"), col("click_id"),
-              nulL.as("gap_us"), nulL.as("batch_idx"), col("click_tus"))))
-        enrichedAcc = enrichedAcc.unionByName(
-          fused.filter(col("tag") === 0)
-            .select(col("purchase_id"), col("user_id"), col("click_id"),
-              col("gap_us"), col("batch_idx")))
-        state = fused.filter(col("tag") === 1)
-          .select(col("user_id"), col("click_tus"), col("click_id"))
-        nApplied += 1
-        if (batchId >= 0) lastApplied = batchId
-        ()
-      }
-
-    def current: DataFrame = enrichedAcc.orderBy(col("purchase_id"))
-    def latestClicks: DataFrame = state.orderBy(col("user_id"))
+    def current: DataFrame = state.enriched.orderBy(col("purchase_id"))
+    def latestClicks: DataFrame = state.register.orderBy(col("user_id"))
   }
 
   // ---------------------------------------------------------------------
@@ -1857,15 +1661,14 @@ object Streams {
   // batch split, which is exactly why the oracle can be the
   // never-batched capped SQL.
   //
-  // Replay guard: deliberately NONE (the CC/bitmap class, proven in
-  // the spec by replaying a batch): although increments and
+  // Replay: idempotent (the CC/bitmap class, proven in the spec by
+  // replaying batches with the guard bypassed): although increments and
   // retractions are sums, every delta is driven EXCLUSIVELY by edges
   // that survive the anti-join against the maintained edge set — a
   // replayed batch contributes zero new edges, zero fan movement,
   // zero class-A/B rights, and therefore zero pair delta. The
   // distinct-edge-set anchor is what buys counter-shaped state
-  // idempotence here; any maintainer whose deltas are NOT gated on a
-  // set-membership anti-join must keep its guard (the MG/CDC lesson).
+  // idempotence here.
   //
   // Scale: state is |E| edges + |R| fans + |capped pairs| weights (the
   // X202 pair-frame bound); per batch one anti-join, two keyed
@@ -1873,86 +1676,92 @@ object Streams {
   // pair-delta merge. The readout is a 1-row aggregate.
   // ---------------------------------------------------------------------
 
-  /** X209 state + readout. `fanCap` mirrors the batch family's
+  /** [[ButterflyMaintainer]]'s snapshot: the distinct (u, v) edge set,
+    * per-right fans and the fan-capped left-pair wedge weights.
+    */
+  final case class ButterflyState(edges: DataFrame, fans: DataFrame,
+    pairs: DataFrame)
+
+  /** X209 state + readout; a batch is (u, v) bipartite edge
+    * observations. `fanCap` mirrors the batch family's
     * [[graft.queries.UserGraphQueries.TipFanCap]] discipline.
     */
-  final class ButterflyMaintainer(s: org.apache.spark.sql.SparkSession,
-      private[graft] val fanCap: Long) {
-    @volatile private var edges: DataFrame = s.range(0)
-      .select(col("id").as("u"), col("id").as("v"))
-    @volatile private var fans: DataFrame = s.range(0)
-      .select(col("id").as("v"), col("id").as("fan"))
-    @volatile private var pairs: DataFrame = s.range(0)
-      .select(col("id").as("x"), col("id").as("y"), col("id").as("w"))
-
-    /** Fold one micro-batch of (u, v) bipartite edge observations. */
-    def applyBatch(batch: DataFrame): Unit =
-      synchronized {
-        val newE = batch.select(col("u"), col("v")).distinct()
-          .join(edges, Seq("u", "v"), "left_anti").localCheckpoint()
-        val adds = newE.groupBy(col("v")).agg(count(lit(1)).as("nadd"))
-        val fanNow = fans.join(adds, Seq("v"), "full_outer")
-          .select(col("v"),
-            coalesce(col("fan"), lit(0L)).as("fan_old"),
-            (coalesce(col("fan"), lit(0L)) +
-              coalesce(col("nadd"), lit(0L))).as("fan_new"))
-          .localCheckpoint()
-        // class A rights: wedges from old-adjacency × new + new × new
-        val aRights = fanNow
-          .filter(col("fan_new") <= fanCap && col("fan_old") < col("fan_new"))
-          .select(col("v"))
-        val newA = newE.join(aRights, Seq("v"), "left_semi")
-        val oldAdjA = edges.join(aRights, Seq("v"), "left_semi")
-        val wOldNew = oldAdjA.as("l").join(newA.as("r"),
-            col("l.v") === col("r.v"))
-          .select(least(col("l.u"), col("r.u")).as("x"),
-            greatest(col("l.u"), col("r.u")).as("y"))
-        val wNewNew = newA.as("l").join(newA.as("r"),
-            col("l.v") === col("r.v") && col("l.u") < col("r.u"))
-          .select(col("l.u").as("x"), col("r.u").as("y"))
-        val inc = wOldNew.unionByName(wNewNew)
-          .groupBy(col("x"), col("y")).agg(count(lit(1)).as("d"))
-        // class B rights: cap crossed — retract the old adjacency's pairs
-        val bRights = fanNow
-          .filter(col("fan_old") <= fanCap && col("fan_new") > fanCap)
-          .select(col("v"))
-        val oldAdjB = edges.join(bRights, Seq("v"), "left_semi")
-        val dec = oldAdjB.as("l").join(oldAdjB.as("r"),
-            col("l.v") === col("r.v") && col("l.u") < col("r.u"))
-          .groupBy(col("l.u").as("x"), col("r.u").as("y"))
-          .agg((-count(lit(1))).as("d"))
-        val delta = inc.unionByName(dec)
-          .groupBy(col("x"), col("y")).agg(sum(col("d")).as("d"))
-        val pairsNext = pairs.join(delta, Seq("x", "y"), "full_outer")
-          .select(col("x"), col("y"),
-            (coalesce(col("w"), lit(0L)) + coalesce(col("d"), lit(0L)))
-              .as("w"))
-          .filter(col("w") > 0)
-        // Per-batch state pins fused 5 → 3 (driver actions are the loop
-        // wall): `fans` is a pure projection of the already-pinned
-        // fanNow (no checkpoint of its own), and the pair-weight update
-        // + edge-set append — both functions of frames pinned earlier
-        // this batch — materialize as ONE tagged union, split back into
-        // scan-only views. State stays bounded-lineage per batch.
-        val nulL = lit(null).cast("long")
-        val fused = org.apache.spark.sql.graftbridge.SqlBridge.pinned(
-          pairsNext.select(lit(0).as("tag"), col("x").as("a"),
-              col("y").as("b"), col("w"))
-            .unionByName(edges.unionByName(newE).select(lit(1).as("tag"),
-              col("u").as("a"), col("v").as("b"), nulL.as("w"))))
-        pairs = fused.filter(col("tag") === 0)
-          .select(col("a").as("x"), col("b").as("y"), col("w"))
-        edges = fused.filter(col("tag") === 1)
-          .select(col("a").as("u"), col("b").as("v"))
-        fans = fanNow.select(col("v"), col("fan_new").as("fan"))
-        ()
-      }
+  final class ButterflyMaintainer(s: SparkSession,
+      private[graft] val fanCap: Long)
+      extends Maintainer[ButterflyState](ButterflyState(
+        s.range(0).select(col("id").as("u"), col("id").as("v")),
+        s.range(0).select(col("id").as("v"), col("id").as("fan")),
+        s.range(0).select(col("id").as("x"), col("id").as("y"),
+          col("id").as("w")))) {
+    protected def step(st: ButterflyState,
+        batch: DataFrame): ButterflyState = {
+      val ButterflyState(edges, fans, pairs) = st
+      val newE = batch.select(col("u"), col("v")).distinct()
+        .join(edges, Seq("u", "v"), "left_anti").localCheckpoint()
+      val adds = newE.groupBy(col("v")).agg(count(lit(1)).as("nadd"))
+      val fanNow = fans.join(adds, Seq("v"), "full_outer")
+        .select(col("v"),
+          coalesce(col("fan"), lit(0L)).as("fan_old"),
+          (coalesce(col("fan"), lit(0L)) +
+            coalesce(col("nadd"), lit(0L))).as("fan_new"))
+        .localCheckpoint()
+      // class A rights: wedges from old-adjacency × new + new × new
+      val aRights = fanNow
+        .filter(col("fan_new") <= fanCap && col("fan_old") < col("fan_new"))
+        .select(col("v"))
+      val newA = newE.join(aRights, Seq("v"), "left_semi")
+      val oldAdjA = edges.join(aRights, Seq("v"), "left_semi")
+      val wOldNew = oldAdjA.as("l").join(newA.as("r"),
+          col("l.v") === col("r.v"))
+        .select(least(col("l.u"), col("r.u")).as("x"),
+          greatest(col("l.u"), col("r.u")).as("y"))
+      val wNewNew = newA.as("l").join(newA.as("r"),
+          col("l.v") === col("r.v") && col("l.u") < col("r.u"))
+        .select(col("l.u").as("x"), col("r.u").as("y"))
+      val inc = wOldNew.unionByName(wNewNew)
+        .groupBy(col("x"), col("y")).agg(count(lit(1)).as("d"))
+      // class B rights: cap crossed — retract the old adjacency's pairs
+      val bRights = fanNow
+        .filter(col("fan_old") <= fanCap && col("fan_new") > fanCap)
+        .select(col("v"))
+      val oldAdjB = edges.join(bRights, Seq("v"), "left_semi")
+      val dec = oldAdjB.as("l").join(oldAdjB.as("r"),
+          col("l.v") === col("r.v") && col("l.u") < col("r.u"))
+        .groupBy(col("l.u").as("x"), col("r.u").as("y"))
+        .agg((-count(lit(1))).as("d"))
+      val delta = inc.unionByName(dec)
+        .groupBy(col("x"), col("y")).agg(sum(col("d")).as("d"))
+      val pairsNext = pairs.join(delta, Seq("x", "y"), "full_outer")
+        .select(col("x"), col("y"),
+          (coalesce(col("w"), lit(0L)) + coalesce(col("d"), lit(0L)))
+            .as("w"))
+        .filter(col("w") > 0)
+      // Per-batch state pins fused 5 → 3 (driver actions are the loop
+      // wall): `fans` is a pure projection of the already-pinned
+      // fanNow (no checkpoint of its own), and the pair-weight update
+      // + edge-set append — both functions of frames pinned earlier
+      // this batch — materialize as ONE tagged union, split back into
+      // scan-only views. State stays bounded-lineage per batch.
+      val nulL = lit(null).cast("long")
+      val fused = org.apache.spark.sql.graftbridge.SqlBridge.pinned(
+        pairsNext.select(lit(0).as("tag"), col("x").as("a"),
+            col("y").as("b"), col("w"))
+          .unionByName(edges.unionByName(newE).select(lit(1).as("tag"),
+            col("u").as("a"), col("v").as("b"), nulL.as("w"))))
+      ButterflyState(
+        fused.filter(col("tag") === 1)
+          .select(col("a").as("u"), col("b").as("v")),
+        fanNow.select(col("v"), col("fan_new").as("fan")),
+        fused.filter(col("tag") === 0)
+          .select(col("a").as("x"), col("b").as("y"), col("w")))
+    }
 
     /** The 1-row live verdict: edge/right/cap census, wedge total over
       * ≤-cap rights, pair count (w ≥ 2 — butterfly-closing pairs), and
       * the exact butterfly total Σ C(w, 2).
       */
-    def verdict: DataFrame = synchronized {
+    def verdict: DataFrame = {
+      val ButterflyState(edges, fans, pairs) = state
       val census = edges.groupBy().agg(count(lit(1)).as("n_edges"))
       val fanAgg = fans.groupBy().agg(
         count(lit(1)).as("n_rights"),
@@ -1972,26 +1781,4 @@ object Streams {
           coalesce(col("butterflies"), lit(0L)).as("butterflies"))
     }
   }
-
-  /** X209 — wire a bipartite edge stream to a [[ButterflyMaintainer]]
-    * via foreachBatch.
-    */
-  def butterflyMaintainStream(edges: DataFrame, m: ButterflyMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    edges.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) => m.applyBatch(batch)
-    }
-
-  /** X206 — wire an event stream to an [[AsofMaintainer]] via
-    * foreachBatch, normalizing ts to epoch micros at the boundary.
-    */
-  def asofMaintainStream(events: DataFrame, m: AsofMaintainer):
-      org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => m.applyBatch(
-        batch.select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("tus"), col("event_type")), batchId)
-    }
 }

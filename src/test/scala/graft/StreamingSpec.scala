@@ -363,7 +363,7 @@ class StreamingSpec extends GraftSuite {
       Ev(10, t("02:30"), 5, "x", 0.50))
     val mem = MemoryStream[Ev]
     val m = new Streams.MergeMaintainer(spark)
-    val q = Streams.mergeMaintainStream(mem.toDF(), m).start()
+    val q = Streams.maintain(mem.toDF(), m).start()
     def snap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
       .toSeq
@@ -426,7 +426,7 @@ class StreamingSpec extends GraftSuite {
       Ev(10, t("02:30"), 5, "x", 0.50))
     val mem = MemoryStream[Ev]
     val m = new Streams.Scd2Maintainer(spark)
-    val q = Streams.scd2MaintainStream(mem.toDF(), m).start()
+    val q = Streams.maintain(mem.toDF(), m).start()
     def snap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
         if (r.isNullAt(3)) None else Some(r.getLong(3)),
@@ -503,7 +503,7 @@ class StreamingSpec extends GraftSuite {
     }
     val mem = MemoryStream[(Long, Long)]
     val m = new Streams.CcMaintainer(spark)
-    val q = Streams.ccMaintainStream(
+    val q = Streams.maintain(
       mem.toDF().toDF("u", "v"), m).start()
     try {
       var seen = Seq.empty[(Long, Long)]
@@ -558,7 +558,7 @@ class StreamingSpec extends GraftSuite {
     }
     val mem = MemoryStream[(Long, String)]
     val m = new Streams.LshDedupMaintainer(spark)
-    val q = Streams.lshDedupMaintainStream(
+    val q = Streams.maintain(
       mem.toDF().toDF("doc_id", "text"), m).start()
     try {
       var seen = Seq.empty[(Long, String)]
@@ -621,7 +621,7 @@ class StreamingSpec extends GraftSuite {
     val m = new Streams.IvfMaintainer(spark,
       appendList = b => appended ++= b.collect().map(_.getLong(0)))
     val mem = MemoryStream[(Long, Array[Float], Int)]
-    val q = Streams.ivfMaintainStream(
+    val q = Streams.maintain(
       mem.toDF().toDF("vec_id", "embedding", "label"), m).start()
     try {
       var seen = Seq.empty[(Long, Array[Float], Int)]
@@ -746,7 +746,7 @@ class StreamingSpec extends GraftSuite {
     }
     val m = new Streams.HllMaintainer(spark)
     val mem = MemoryStream[(Long, Long, String)]
-    val q = Streams.hllMaintainStream(
+    val q = Streams.maintain(
       mem.toDF().toDF("event_id", "user_id", "event_type"), m).start()
     try {
       var seen = Seq.empty[(Long, Long, String)]
@@ -802,7 +802,7 @@ class StreamingSpec extends GraftSuite {
     }
     val m = new Streams.ValueHistMaintainer(spark)
     val mem = MemoryStream[(Long, Double, String)]
-    val q = Streams.valueHistMaintainStream(
+    val q = Streams.maintain(
       mem.toDF().toDF("event_id", "value", "event_type"), m).start()
     try {
       var seen = Seq.empty[(Long, Double, String)]
@@ -854,7 +854,7 @@ class StreamingSpec extends GraftSuite {
         prefix.toDF("event_id", "user_id")))
     val m = new Streams.CmsMaintainer(spark)
     val mem = MemoryStream[(Long, Long)]
-    val q = Streams.cmsMaintainStream(
+    val q = Streams.maintain(
       mem.toDF().toDF("event_id", "user_id"), m).start()
     try {
       var seen = Seq.empty[(Long, Long)]
@@ -902,7 +902,7 @@ class StreamingSpec extends GraftSuite {
       StreamQueries.eventsBitmapDistinctOf(frame(prefix)))
     val m = new Streams.BitmapMaintainer(spark)
     val mem = MemoryStream[(Long, Long, String)]
-    val q = Streams.bitmapMaintainStream(
+    val q = Streams.maintain(
       mem.toDF().toDF("event_id", "user_id", "event_type"), m).start()
     try {
       var seen = Seq.empty[(Long, Long, String)]
@@ -944,7 +944,7 @@ class StreamingSpec extends GraftSuite {
       StreamQueries.eventsTypeOverlapOf(spark, frame(prefix)))
     val m = new Streams.TypeOverlapMaintainer(spark)
     val mem = MemoryStream[(Long, Long, String)]
-    val q = Streams.typeOverlapMaintainStream(
+    val q = Streams.maintain(
       mem.toDF().toDF("event_id", "user_id", "event_type"), m).start()
     try {
       var seen = Seq.empty[(Long, Long, String)]
@@ -1014,7 +1014,7 @@ class StreamingSpec extends GraftSuite {
     val m = new Streams.MgMaintainer(spark, k)
     val direct = new Streams.MgMaintainer(spark, k)
     val mem = MemoryStream[(Long, Long)]
-    val q = Streams.mgMaintainStream(
+    val q = Streams.maintain(
       mem.toDF().toDF("event_id", "user_id"), m).start()
     try {
       var seen = Seq.empty[(Long, Long)]
@@ -1076,7 +1076,7 @@ class StreamingSpec extends GraftSuite {
         snapV(FeatureQueries.privacyKAnonymityOf(cust(p))))
     val m = new Streams.KAnonymityMaintainer(spark)
     val mem = MemoryStream[(Long, Int, Double, String)]
-    val q = Streams.kAnonymityMaintainStream(mem.toDF()
+    val q = Streams.maintain(mem.toDF()
       .toDF("c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment"), m)
       .start()
     try {
@@ -1124,7 +1124,7 @@ class StreamingSpec extends GraftSuite {
     val streamed = graft.sources.Tables.normalizeEventsTs(
       spark.readStream.schema(rawSchema).parquet(dir.toString))
     val m = new Streams.HllMaintainer(spark)
-    val q = Streams.hllMaintainStream(streamed, m).start()
+    val q = Streams.maintain(streamed, m).start()
     try {
       q.processAllAvailable()
       val got = m.current.collect()
@@ -1196,7 +1196,7 @@ class StreamingSpec extends GraftSuite {
         snapV(FeatureQueries.tClosenessOf(cust(p))))
     val m = new Streams.TClosenessMaintainer(spark)
     val mem = MemoryStream[(Long, Int, Double, String)]
-    val q = Streams.tClosenessMaintainStream(mem.toDF()
+    val q = Streams.maintain(mem.toDF()
       .toDF("c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment"), m)
       .start()
     try {
@@ -1282,7 +1282,7 @@ class StreamingSpec extends GraftSuite {
     }
     val m = new Streams.CupedMaintainer(spark, anchorUs)
     val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val q = Streams.cupedMaintainStream(mem.toDF()
+    val q = Streams.maintain(mem.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value"), m)
       .start()
     try {
@@ -1351,8 +1351,10 @@ class StreamingSpec extends GraftSuite {
     val ordered = evs.sortBy(e => (e._2, e._1))
     val m = new Streams.AsofMaintainer(spark)
     val mem = MemoryStream[(Long, Timestamp, Long, String)]
-    val q = Streams.asofMaintainStream(mem.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type"), m).start()
+    val q = Streams.maintain(mem.toDF()
+      .toDF("event_id", "ts", "user_id", "event_type")
+      .select(col("event_id"), col("user_id"),
+        unix_micros(col("ts")).as("tus"), col("event_type")), m).start()
     try {
       var seen = Seq.empty[(Long, Long, Long, String)]
       for (b <- ordered.grouped(3)) {
@@ -1460,7 +1462,7 @@ class StreamingSpec extends GraftSuite {
     // and the MemoryStream wiring drives the same maintainer
     val m2 = new Streams.ButterflyMaintainer(spark, 3L)
     val mem = MemoryStream[(Long, Long)]
-    val q = Streams.butterflyMaintainStream(
+    val q = Streams.maintain(
       mem.toDF().toDF("u", "v"), m2).start()
     try {
       var sofar = Seq.empty[(Long, Long)]
@@ -1471,5 +1473,94 @@ class StreamingSpec extends GraftSuite {
         assert(snap(m2) === oneShot(sofar))
       }
     } finally q.stop()
+  }
+
+  test("Maintainer base: a step that throws publishes nothing and does " +
+    "not record its epoch; the retry applies the batch exactly once") {
+    import spark.implicits._
+    final class Flaky extends Streams.Maintainer[Long](0L) {
+      var calls = 0
+      protected def step(st: Long,
+          batch: org.apache.spark.sql.DataFrame): Long = {
+        calls += 1
+        if (calls == 1) throw new IllegalStateException("pin failed")
+        st + batch.count()
+      }
+      def value: Long = state
+    }
+    val m = new Flaky
+    val b = Seq(1L, 2L, 3L).toDF("x")
+    intercept[IllegalStateException](m.applyBatch(b, 0L))
+    assert(m.value === 0L)
+    m.applyBatch(b, 0L) // the failed epoch's retry is not a replay
+    assert(m.value === 3L)
+    m.applyBatch(b, 0L) // a true replay is skipped
+    assert((m.value, m.calls) === ((3L, 2)))
+  }
+
+  test("Maintainer base: every maintainer takes the replay guard — a " +
+    "replayed epoch runs no Spark job and the readout equals one " +
+    "application of each batch") {
+    import spark.implicits._
+    type Df = org.apache.spark.sql.DataFrame
+    val e1 = Seq((1L, 10L), (2L, 10L), (1L, 11L)).toDF("u", "v")
+    val e2 = Seq((2L, 11L), (3L, 12L), (3L, 10L)).toDF("u", "v")
+    val v1 = Seq((1L, 5L, "view"), (2L, 70L, "click"))
+      .toDF("event_id", "user_id", "event_type")
+    val v2 = Seq((3L, 5L, "click"), (4L, 9L, "view"))
+      .toDF("event_id", "user_id", "event_type")
+    // the formerly unguarded maintainers: (name, a fresh instance's
+    // applyBatch and readout, batch 1, batch 2)
+    val table: Seq[(String, () => ((Df, Long) => Unit, () => Df), Df,
+        Df)] = Seq(
+      ("cc", () => {
+        val m = new Streams.CcMaintainer(spark)
+        (m.applyBatch _, () => m.current)
+      }, e1, e2),
+      ("butterfly", () => {
+        val m = new Streams.ButterflyMaintainer(spark, 2L)
+        (m.applyBatch _, () => m.verdict)
+      }, e1, e2),
+      ("bitmap", () => {
+        val m = new Streams.BitmapMaintainer(spark)
+        (m.applyBatch _, () => m.current)
+      }, v1, v2),
+      ("type overlap", () => {
+        val m = new Streams.TypeOverlapMaintainer(spark)
+        (m.applyBatch _, () => m.verdict)
+      }, v1, v2))
+    def rows(df: Df) = df.collect().map(_.toSeq).toSeq
+    val sc = spark.sparkContext
+    for ((name, make, b1, b2) <- table) {
+      val (applyOnce, readOnce) = make()
+      applyOnce(b1, -1L); applyOnce(b2, -1L)
+      val (apply, read) = make()
+      apply(b1, 0L)
+      sc.setJobGroup(s"replay-$name", name)
+      try apply(b1, 0L) finally sc.clearJobGroup()
+      assert(sc.statusTracker.getJobIdsForGroup(s"replay-$name").isEmpty,
+        s"$name: the replayed epoch ran its step")
+      apply(b2, 1L)
+      assert(rows(read()) === rows(readOnce()), name)
+    }
+  }
+
+  test("stream_heavy_hitters: a published CMS snapshot is never mutated " +
+    "by a later batch") {
+    import spark.implicits._
+    val evs = (1L to 80L).map(i => (i, i * i % 13))
+    val r = new Streams.CmsMaintainer(spark)
+    r.applyBatch(evs.take(40).toDF("event_id", "user_id"), 0L)
+    val old = r.snapshot
+    def estimates(st: Streams.CmsState) =
+      (0L until 13L).map(u => st.sketch.get.estimateCount(u))
+    val before = estimates(old)
+    r.applyBatch(evs.drop(40).toDF("event_id", "user_id"), 1L)
+    assert(estimates(old) === before)
+    assert(old.total === 40L && old.sketch.get.totalCount() === 40L)
+    // the new snapshot's grid holds both batches
+    val now = r.snapshot
+    assert(now.total === 80L && now.sketch.get.totalCount() === 80L)
+    assert(estimates(now).zip(before).forall { case (a, b) => a >= b })
   }
 }
