@@ -544,7 +544,7 @@ object DedupQueries {
   private[graft] def streamDedupMinhashOf(s: SparkSession, docs: DataFrame,
       hs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinned
+    import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
     // distinct shingle SETS (jaccard is set-based; band minima are
     // duplicate-neutral so one distinct serves both stages)
     val hset = hs.select(col("doc_id"), array_distinct(col("hs")).as("hs"))
@@ -561,9 +561,9 @@ object DedupQueries {
       .persist()
     val ve = verifiedDupEdges(s, repsHs, repsHs, cross = false)
       .localCheckpoint()
-    val repsIds = withRep.filter(col("doc_id") === col("rep"))
-      .select(col("doc_id").as("v")).localCheckpoint()
-    val nReps = repsIds.count()
+    val (repsIds, nReps, _) = pinnedSum(withRep
+      .filter(col("doc_id") === col("rep")).select(col("doc_id").as("v")),
+      lit(0L))
     var keptF = repsIds.limit(0)
     var droppedF = repsIds.limit(0)
     var converged = nReps == 0L
@@ -582,8 +582,10 @@ object DedupQueries {
             "left_anti")
           .select(col("big").as("v")),
         Seq("v"), "left_anti")
-      keptF = pinned(kNext); droppedF = pinned(dNext)
-      converged = keptF.count() + droppedF.count() == nReps
+      val (k2, nK, _) = pinnedSum(kNext, lit(0L))
+      val (d2, nD, _) = pinnedSum(dNext, lit(0L))
+      keptF = k2; droppedF = d2
+      converged = nK + nD == nReps
     }
     val dupOf = ve
       .join(keptF.withColumnRenamed("v", "small"), Seq("small"),

@@ -3,7 +3,7 @@ package graft.queries
 import graft.EdgeDirection
 import graft.algorithms.GraphAlgorithms
 import graft.sources.{GUser, IdEncoder}
-import graft.util.Det
+import graft.util.{Det, Fixpoint}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1491,13 +1491,11 @@ object UserGraphQueries {
         Seq("dst"))
       .groupBy(col("ca").as("a"), col("cb").as("b"))
       .agg(count(lit(1)).as("w")))
-    val cdeg = pinned(cw.groupBy(col("a").as("c")).agg(sum(col("w"))
-      .as("d")))
-    var lab = cdeg.select(col("c").as("id"), col("c").as("lab"), col("d"))
-    var r = 0
-    var done = false
-    while (!done && r < LvMergeRounds) {
-      r += 1
+    val (cdeg, nComm, _) = pinnedSum(cw.groupBy(col("a").as("c"))
+      .agg(sum(col("w")).as("d")), lit(0L))
+    val lab0 = cdeg.select(col("c").as("id"), col("c").as("lab"), col("d"))
+    Fixpoint(lab0, nComm, 0L, col("merged"), LvMergeRounds,
+        Fixpoint.Zero) { (lab, _) =>
       // tot rides the label frame as a window sum (see
       // louvainMoveRounds): the two cw joins deliver (la, ta) and
       // (lb, tb) together — no per-round tot aggregation or joins.
@@ -1523,23 +1521,15 @@ object UserGraphQueries {
           col("x.pick") === col("y.c") && col("y.pick") === col("x.c") &&
             col("x.c") < col("y.c"))
         .select(col("x.c").as("into"), col("y.c").as("from"))
-      // ONE job per round (round 15 — the leiden-loop fold applied
-      // back): the next label frame pins WITH the merged-row count as
-      // its fused probe. Every mutual merge relabels at least the
-      // absorbed community's own supernode (from ≠ into by the x.c <
-      // y.c pick), so merged-sum == 0 IS the drain test — the previous
-      // pin-mutual-then-pin-labels form cost two driver actions per
-      // round, and at 11 rounds (sf0.1) actions are the wall clock.
-      val (st2, _, nMerged) = pinnedSum(lab
+      // Every mutual merge relabels at least the absorbed community's
+      // own supernode (from ≠ into by the x.c < y.c pick), so a zero
+      // merged-sum IS the drain test.
+      lab
         .join(mutual.select(col("from").as("lab"), col("into")),
           Seq("lab"), "left")
         .select(col("id"), coalesce(col("into"), col("lab")).as("lab"),
-          col("d"), col("into").isNotNull.cast("long").as("merged")),
-        col("merged"))
-      if (nMerged == 0L) done = true
-      else lab = st2.select(col("id"), col("lab"), col("d"))
-    }
-    lab.select(col("id"), col("lab"))
+          col("d"), col("into").isNotNull.cast("long").as("merged"))
+    }.frame.select(col("id"), col("lab"))
   }
 
   // Pass-1 labels + final super-node labels, shared by the three Louvain
@@ -1839,10 +1829,9 @@ object UserGraphQueries {
     * disconnected.
     *
     * Scale: intra-edge filter is two broadcast-label joins over |E|;
-    * each CC round is one keyed join + a map-side-combinable min, with
-    * the round-14 one-job pin+probe fusion (comp-sum is monotone
-    * nonincreasing — unchanged sum IS the fixpoint test, fused into the
-    * checkpoint's stats job). At 100 TB the per-round frame is |V|-sized
+    * each CC round is one keyed join + a map-side-combinable min
+    * (comp-sum is monotone nonincreasing, so an unchanged sum IS the
+    * fixpoint test). At 100 TB the per-round frame is |V|-sized
     * and the loop depth is community-diameter-bounded, not
     * graph-diameter-bounded — the reason refinement stays cheap at
     * scale while a full-graph CC would not.
@@ -1875,10 +1864,8 @@ object UserGraphQueries {
         Seq("dst"))
       .filter(col("ls") === col("ld"))
       .select(col("src"), col("dst")))
-    var (c, _, prevSum) = pinnedSum(
+    val (c0, n0, s0) = pinnedSum(
       labs.select(col("id"), col("id").as("comp")), col("comp"))
-    var converged = false
-    var r = 0
     // Delta propagation (round-16 trim): only vertices whose comp
     // DROPPED last round need to push their label this round — a
     // neighbor u outside that frontier already pushed its (unchanged)
@@ -1889,27 +1876,21 @@ object UserGraphQueries {
     // frames, so the frontier filter runs inside each round's one fused
     // job — no extra driver action.
     var prev: DataFrame = null
-    while (!converged && r < LeidenCcCap) {
-      r += 1
+    val cc = Fixpoint(c0, n0, s0, col("comp"), LeidenCcCap) { (c, _) =>
       val pushers =
         if (prev == null) c
         else c.join(prev.select(col("id"), col("comp").as("pc")),
             Seq("id"))
           .filter(col("comp") < col("pc"))
           .select(col("id"), col("comp"))
-      val (nxt, _, sm) = pinnedSum(
-        c.unionByName(intra
-            .join(pushers.select(col("id").as("src"), col("comp")),
-              Seq("src"))
-            .select(col("dst").as("id"), col("comp")))
-          .groupBy(col("id")).agg(min(col("comp")).as("comp")),
-        col("comp"))
-      if (sm == prevSum) converged = true
       prev = c
-      c = nxt
-      prevSum = sm
+      c.unionByName(intra
+          .join(pushers.select(col("id").as("src"), col("comp")),
+            Seq("src"))
+          .select(col("dst").as("id"), col("comp")))
+        .groupBy(col("id")).agg(min(col("comp")).as("comp"))
     }
-    require(converged,
+    require(cc.converged,
       s"leiden refinement CC did not converge in $LeidenCcCap rounds")
     // ADVICE r14: attribute a depth-assumption violation at the SOURCE.
     // The oracle unrolls exactly LeidenCcIters min-label rounds; the
@@ -1918,11 +1899,11 @@ object UserGraphQueries {
     // productive rounds, the engine would silently pass while the
     // oracle twin under-iterates — surfacing only as an unattributed
     // gate hash mismatch. Fail loudly here instead.
-    require(r - 1 <= LeidenCcIters,
-      s"leiden refinement CC fixpoint depth ${r - 1} exceeds the oracle " +
-        s"unroll depth $LeidenCcIters — raise LeidenCcIters to keep the " +
-        "oracle twin exact")
-    c
+    require(cc.rounds - 1 <= LeidenCcIters,
+      s"leiden refinement CC fixpoint depth ${cc.rounds - 1} exceeds the " +
+        s"oracle unroll depth $LeidenCcIters — raise LeidenCcIters to " +
+        "keep the oracle twin exact")
+    cc.frame
   }
 
   /** Testable seam: explicit (id, lab) assignment + UNDIRECTED edge
@@ -2205,7 +2186,6 @@ object UserGraphQueries {
     */
   private def leidenDrain(cw: DataFrame, pd: DataFrame, lab0: DataFrame,
       twoM: Long, unroll: Int, what: String): (DataFrame, Int) = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
     // r18 FUSED round shape (guide §2.4): the label frame carries the
     // part degree d, and one two-level aggregation replaces the former
     // tot/kpd/best join chains (6 joins + 3 aggregation exchanges per
@@ -2221,11 +2201,9 @@ object UserGraphQueries {
     // kpd rows at all — exactly the rows the old inner-join pipeline
     // never produced. The final label update still left-joins, so every
     // part keeps its label either way.
-    var lab = lab0.join(pd.select(col("p").as("id"), col("d")), Seq("id"))
-    var r = 0
-    var done = false
-    while (!done && r < LeidenMvCap) {
-      r += 1
+    val start = lab0.join(pd.select(col("p").as("id"), col("d")), Seq("id"))
+    val mv = Fixpoint(start, Fixpoint.Unprobed, 0L, col("moved"),
+        LeidenMvCap, Fixpoint.Zero) { (lab, _) =>
       // tot rides the label frame as a window sum (see
       // louvainMoveRounds): no per-round tot aggregation or joins.
       val labt = lab.withColumn("tot",
@@ -2268,32 +2246,25 @@ object UserGraphQueries {
         .groupBy(col("id"), col("dlab")).agg(count(lit(1)).as("nw"))
         .filter(col("nw") === 2)
         .select(col("id"), col("dlab"))
-      // ONE job per round: the next label frame pins WITH the mover
-      // count as its fused probe (an applied move always changes its
-      // part's label — dlab ≠ clab by construction — so moved-sum == 0
-      // IS the drain test). The pin-applied-then-pin-labels form costs
-      // two driver actions per round, and at 13+1 rounds the action
-      // count is the wall clock (the r12 coloring lesson, applied here
-      // at landing time rather than by judge flag).
-      val (st2, _, nMoves) = pinnedSum(lab
+      // an applied move always changes its part's label — dlab ≠ clab
+      // by construction — so a zero moved-sum IS the drain test
+      lab
         .join(applied, Seq("id"), "left")
         .select(col("id"), coalesce(col("dlab"), col("lab")).as("lab"),
-          col("d"), col("dlab").isNotNull.cast("long").as("moved")),
-        col("moved"))
-      if (nMoves == 0L) done = true
-      else lab = st2.select(col("id"), col("lab"), col("d"))
+          col("d"), col("dlab").isNotNull.cast("long").as("moved"))
     }
-    require(done,
+    require(mv.converged,
       s"leiden $what aggregate-move loop did not drain in " +
         s"$LeidenMvCap rounds")
     // same source-attributed depth guard as the refine CC (ADVICE r14):
     // the oracle unrolls exactly `unroll` rounds for this level; the
     // engine drains at r = (productive rounds) + 1.
+    val r = mv.rounds
     require(r - 1 <= unroll,
       s"leiden $what aggregate-move drain depth ${r - 1} exceeds the " +
         s"oracle unroll depth $unroll — raise it to keep the oracle " +
         "twin exact")
-    (lab.select(col("id"), col("lab")), r - 1)
+    (mv.frame.select(col("id"), col("lab")), r - 1)
   }
 
   // ONE Leiden level as CTE text, parameterized by name prefix: refine
@@ -2774,26 +2745,19 @@ object UserGraphQueries {
     val und = simple.select(col("a"), col("b"))
       .unionByName(simple.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint()
-    var (alive, nAlive, _) = pinnedSum(
+    val (alive0, n0, _) = pinnedSum(
       und.select(col("a").as("v")).distinct(), lit(0L))
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < KcRounds) {
-      // checkpoint + count fused into one job per round (round 14)
-      val (next, nNext, _) = pinnedSum(und
-        .join(alive.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
-        .join(alive.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
-        .groupBy(col("a")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= KcK).select(col("a").as("v")), lit(0L))
-      changed = nNext != nAlive
-      alive = next; nAlive = nNext; rounds += 1
-    }
-    und
+    def induced(alive: DataFrame) = und
       .join(alive.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
       .join(alive.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
-      .groupBy(col("a")).agg(count(lit(1)).as("core_degree"))
+      .groupBy(col("a"))
+    val peel = Fixpoint(alive0, n0, n0, lit(1L), KcRounds) { (alive, _) =>
+      induced(alive).agg(count(lit(1)).as("d"))
+        .filter(col("d") >= KcK).select(col("a").as("v"))
+    }
+    induced(peel.frame).agg(count(lit(1)).as("core_degree"))
       .select(col("a").as("v"), col("core_degree"),
-        lit(!changed).as("converged"))
+        lit(peel.converged).as("converged"))
       .orderBy(col("v"))
   }
 
@@ -2900,20 +2864,12 @@ object UserGraphQueries {
         .groupBy(col("u").as("v"))
         .agg(max(least(col("rn"), col("nh"))).as("h"))
     }
-    // checkpoint + monotone-sum probe fused into one job per 2-round
-    // batch (round 14 — SqlBridge.pinnedSum)
-    var (h, _, hSum) = pinnedSum(und.groupBy(col("u").as("v"))
+    val (h0, n0, s0) = pinnedSum(und.groupBy(col("u").as("v"))
       .agg(count(lit(1)).as("h")), "h")
-    var rounds = 0
-    var converged = hSum == 0L // empty graph: already drained
-    while (!converged && rounds < CorenessRounds) {
-      rounds += 2
-      val (next, _, s2) = pinnedSum(hRound(hRound(h)), "h")
-      converged = s2 == hSum
-      h = next; hSum = s2
-    }
-    h.select(col("v"), col("h").as("coreness"),
-        lit(converged).as("converged"))
+    val fix = Fixpoint(h0, n0, s0, col("h"), CorenessRounds,
+      perStep = 2)((h, _) => hRound(hRound(h)))
+    fix.frame.select(col("v"), col("h").as("coreness"),
+        lit(fix.converged).as("converged"))
       .orderBy(col("v"))
   }
 
@@ -2999,9 +2955,8 @@ object UserGraphQueries {
     * pair weights, so after ONE wedge projection the whole multi-level
     * peel runs on the (x, y, bf) pair frame: per round one double
     * semi-join against the alive set + one combinable regroup + a ≥ k
-    * filter, fused with the count probe into one driver job
-    * ([[graft:queries]] SqlBridge.pinnedSum; alive is monotone
-    * shrinking, so count-unchanged ⟺ fixpoint). Levels run
+    * filter (alive is monotone shrinking, so count-unchanged ⟺
+    * fixpoint). Levels run
     * incrementally ((k+1)-tip ⊆ k-tip). `converged` is the loud cap
     * guard — the oracle pins TRUE.
     *
@@ -3037,27 +2992,21 @@ object UserGraphQueries {
       .filter(col("w") >= 2)
       .select(col("x"), col("y"), expr("w * (w - 1) div 2").as("bf")))
     val verts = e.select(col("u").as("vid")).distinct()
-    var (alive, nAlive, _) = pinnedSum(verts, lit(0L))
-    val verts0 = alive // pinned full left-vertex universe for the output
-    var conv = true
-    val survivors = TipLadder.map { k =>
-      var changed = true
-      var rounds = 0
-      while (changed && rounds < TipRounds) {
+    val (verts0, n0, _) = pinnedSum(verts, lit(0L))
+    val levels = TipLadder.scanLeft(
+        Fixpoint.Result(verts0, n0, n0, 0, converged = true)) { (l, k) =>
+      Fixpoint(l.frame, l.rows, l.rows, lit(1L), TipRounds) { (alive, _) =>
         val pAlive = pairs
           .join(alive.withColumnRenamed("vid", "x"), Seq("x"), "left_semi")
           .join(alive.withColumnRenamed("vid", "y"), Seq("y"), "left_semi")
-        val (next, nNext, _) = pinnedSum(
-          pAlive.select(col("x").as("vid"), col("bf"))
-            .unionByName(pAlive.select(col("y").as("vid"), col("bf")))
-            .groupBy(col("vid")).agg(sum(col("bf")).as("b"))
-            .filter(col("b") >= k).select(col("vid")), lit(0L))
-        changed = nNext != nAlive
-        alive = next; nAlive = nNext; rounds += 1
+        pAlive.select(col("x").as("vid"), col("bf"))
+          .unionByName(pAlive.select(col("y").as("vid"), col("bf")))
+          .groupBy(col("vid")).agg(sum(col("bf")).as("b"))
+          .filter(col("b") >= k).select(col("vid"))
       }
-      conv &&= !changed
-      k -> alive
-    }
+    }.tail
+    val conv = levels.forall(_.converged)
+    val survivors = TipLadder.zip(levels.map(_.frame))
     val out0 = verts0.select(col("vid").as("v"), lit(0L).as("tipness"))
     survivors.foldLeft(out0) { case (acc, (k, a)) =>
       acc.join(a.select(col("vid").as("v"), lit(true).as("_in")),
@@ -3166,9 +3115,8 @@ object UserGraphQueries {
     * Per round: one |alive| self-join on the right key → pair weights
     * (w ≥ 2 — weight-1 pairs close no butterfly and contribute 0),
     * one wedge×pair keyed join + combinable (x, v) regroup, a ≥ k
-    * filter, all fused with the count probe into ONE driver job
-    * (SqlBridge.pinnedSum; alive is monotone shrinking so
-    * count-unchanged ⟺ fixpoint). Levels run incrementally
+    * filter (alive is monotone shrinking, so count-unchanged ⟺
+    * fixpoint). Levels run incrementally
     * ((k+1)-wing ⊆ k-wing).
     *
     * Scale: the truss-shaped budget — the per-round wedge join is
@@ -3192,40 +3140,34 @@ object UserGraphQueries {
     val (e0, nAll, _) = pinnedSum(
       e.join(fanOk, Seq("v"), "left_semi").select(col("u"), col("v")),
       lit(0L))
-    var alive = e0
-    var nAlive = nAll
-    var conv = true
-    val survivors = WingLadder.zip(WingRounds).map { case (k, cap) =>
-      var changed = true
-      var rounds = 0
-      while (changed && rounds < cap) {
-        val pairs = alive.as("l")
-          .join(alive.as("r"),
-            col("l.v") === col("r.v") && col("l.u") < col("r.u"))
-          .groupBy(col("l.u").as("x"), col("r.u").as("y"))
-          .agg(count(lit(1)).as("w"))
-          .filter(col("w") >= 2)
-        val wedges = alive.as("l")
-          .join(alive.as("r"),
-            col("l.v") === col("r.v") && col("l.u") =!= col("r.u"))
-          .select(col("l.u").as("x"), col("r.u").as("y"),
-            col("l.v").as("vv"))
-        val sup = wedges
-          .withColumn("px", least(col("x"), col("y")))
-          .withColumn("py", greatest(col("x"), col("y")))
-          .join(pairs.withColumnRenamed("x", "px")
-            .withColumnRenamed("y", "py"), Seq("px", "py"))
-          .groupBy(col("x"), col("vv"))
-          .agg(sum(col("w") - 1).as("b"))
-        val (next, nNext, _) = pinnedSum(
+    val levels = WingLadder.zip(WingRounds).scanLeft(
+        Fixpoint.Result(e0, nAll, nAll, 0, converged = true)) {
+      case (l, (k, cap)) =>
+        Fixpoint(l.frame, l.rows, l.rows, lit(1L), cap) { (alive, _) =>
+          val pairs = alive.as("l")
+            .join(alive.as("r"),
+              col("l.v") === col("r.v") && col("l.u") < col("r.u"))
+            .groupBy(col("l.u").as("x"), col("r.u").as("y"))
+            .agg(count(lit(1)).as("w"))
+            .filter(col("w") >= 2)
+          val wedges = alive.as("l")
+            .join(alive.as("r"),
+              col("l.v") === col("r.v") && col("l.u") =!= col("r.u"))
+            .select(col("l.u").as("x"), col("r.u").as("y"),
+              col("l.v").as("vv"))
+          val sup = wedges
+            .withColumn("px", least(col("x"), col("y")))
+            .withColumn("py", greatest(col("x"), col("y")))
+            .join(pairs.withColumnRenamed("x", "px")
+              .withColumnRenamed("y", "py"), Seq("px", "py"))
+            .groupBy(col("x"), col("vv"))
+            .agg(sum(col("w") - 1).as("b"))
           sup.filter(col("b") >= k)
-            .select(col("x").as("u"), col("vv").as("v")), lit(0L))
-        changed = nNext != nAlive
-        alive = next; nAlive = nNext; rounds += 1
-      }
-      conv &&= !changed
-      k -> alive
-    }
+            .select(col("x").as("u"), col("vv").as("v"))
+        }
+    }.tail
+    val conv = levels.forall(_.converged)
+    val survivors = WingLadder.zip(levels.map(_.frame))
     val out0 = e0.select(col("u"), col("v"), lit(0L).as("wingness"))
     survivors.foldLeft(out0) { case (acc, (k, a)) =>
       acc.join(a.select(col("u"), col("v"), lit(true).as("_in")),
@@ -3367,27 +3309,16 @@ object UserGraphQueries {
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("sup"))
     }
 
-    var alive = e0
-    var nAlive = nAll
-    var allConverged = true
-    val levelSizes = scala.collection.mutable.ArrayBuffer[Long]()
-    for (k <- 3 to TrussCap) {
-      var changed = true
-      var rounds = 0
-      while (changed && rounds < TrussRounds) {
-        val sup = supports(alive)
-        // checkpoint + count fused into one job per round (round 14)
-        val (next, nNext, _) = org.apache.spark.sql.graftbridge.SqlBridge
-          .pinnedSum(alive.join(sup, Seq("a", "b"), "left")
-            .filter(coalesce(col("sup"), lit(0L)) >= k - 2)
-            .select(col("a"), col("b")), lit(0L))
-        changed = nNext != nAlive
-        alive = next; nAlive = nNext; rounds += 1
+    val levels = (3 to TrussCap).scanLeft(
+        Fixpoint.Result(e0, nAll, nAll, 0, converged = true)) { (l, k) =>
+      Fixpoint(l.frame, l.rows, l.rows, lit(1L), TrussRounds) { (alive, _) =>
+        alive.join(supports(alive), Seq("a", "b"), "left")
+          .filter(coalesce(col("sup"), lit(0L)) >= k - 2)
+          .select(col("a"), col("b"))
       }
-      if (changed) allConverged = false
-      levelSizes += nAlive
-    }
-    val n3 = levelSizes(0); val n4 = levelSizes(1)
+    }.tail
+    val allConverged = levels.forall(_.converged)
+    val n3 = levels(0).rows; val n4 = levels(1).rows
     Seq((2L, nAll - n3), (3L, n3 - n4), (4L, n4))
       .toDF("trussness", "n_edges")
       .withColumn("converged", lit(allConverged))
@@ -3498,8 +3429,7 @@ object UserGraphQueries {
     * heavy tails) builds the pinned 3-rows-per-triangle incidence
     * frame; each round is two keyed joins against the ≤\|tri\|-row h
     * frame + one bounded window (partition = edge, ≤ support rows) +
-    * one combinable max, fused with the convergence probe into ONE
-    * Spark job (SqlBridge.pinnedSum). Edges outside all triangles
+    * one combinable max. Edges outside all triangles
     * never enter the loop and report trussness 2 via the final left
     * join.
     */
@@ -3545,29 +3475,23 @@ object UserGraphQueries {
           pk(col("p"), col("u")).as("f"),
           pk(col("p"), col("w")).as("g")))).as("t"))
       .select(col("t.e").as("e"), col("t.f").as("f"), col("t.g").as("g")))
-    var (h, _, cur) = pinnedSum(
+    val (h0, n0, s0) = pinnedSum(
       inc.groupBy(col("e")).agg(count(lit(1)).as("h")), "h")
-    var rounds = 0
-    var converged = cur == 0L // triangle-free: nothing iterates
-    while (!converged && rounds < TrussnessRounds) {
-      rounds += 1
-      val vals = inc
+    val w = Window.partitionBy(col("e")).orderBy(col("nh").desc)
+    val fix = Fixpoint(h0, n0, s0, col("h"), TrussnessRounds) { (h, _) =>
+      inc
         .join(h.select(col("e").as("f"), col("h").as("hf")), Seq("f"))
         .join(h.select(col("e").as("g"), col("h").as("hg")), Seq("g"))
         .select(col("e"), least(col("hf"), col("hg")).as("nh"))
-      val w = Window.partitionBy(col("e")).orderBy(col("nh").desc)
-      val (next, _, s2) = pinnedSum(vals
         .withColumn("rn", row_number().over(w).cast("long"))
         .groupBy(col("e"))
-        .agg(max(least(col("rn"), col("nh"))).as("h")), "h")
-      converged = s2 == cur
-      h = next; cur = s2
+        .agg(max(least(col("rn"), col("nh"))).as("h"))
     }
-    can.join(h.select(col("e"), col("h")),
+    can.join(fix.frame.select(col("e"), col("h")),
         col("e") === col("a") * TrussPack + col("b"), "left")
       .select(col("a"), col("b"),
         (coalesce(col("h"), lit(0L)) + 2L).as("trussness"),
-        lit(converged).as("converged"))
+        lit(fix.converged).as("converged"))
       .orderBy(col("a"), col("b"))
   }
 
@@ -3798,27 +3722,19 @@ object UserGraphQueries {
         lit(false).as("converged"))
     val pivot = verts.agg(min(col("id"))).first().getLong(0)
 
-    // frontier BFS to fixpoint over `adj` (src, dst); returns (set, converged)
-    def reach(adj: DataFrame): (DataFrame, Boolean) = {
-      var seen = verts.sparkSession.createDataFrame(
+    // frontier BFS to fixpoint over `adj` (src, dst)
+    def reach(adj: DataFrame): Fixpoint.Result = {
+      val seen0 = verts.sparkSession.createDataFrame(
         java.util.Arrays.asList(org.apache.spark.sql.Row(pivot)),
         new org.apache.spark.sql.types.StructType()
           .add("id", org.apache.spark.sql.types.LongType, false))
-      seen = seen.localCheckpoint()
-      var n = 1L
-      var changed = true
-      var rounds = 0
-      while (changed && rounds < SccRounds) {
-        // checkpoint + count fused into one job per round (round 14)
-        val (next, nNext, _) = org.apache.spark.sql.graftbridge.SqlBridge
-          .pinnedSum(seen.unionByName(
-            adj.join(seen.withColumnRenamed("id", "src"), Seq("src"))
-              .select(col("dst").as("id")))
-            .distinct(), lit(0L))
-        changed = nNext != n
-        seen = next; n = nNext; rounds += 1
+        .localCheckpoint()
+      Fixpoint(seen0, 1L, 1L, lit(1L), SccRounds) { (seen, _) =>
+        seen.unionByName(
+          adj.join(seen.withColumnRenamed("id", "src"), Seq("src"))
+            .select(col("dst").as("id")))
+          .distinct()
       }
-      (seen, !changed)
     }
     // The forward and backward fixpoints are INDEPENDENT sequential
     // loops over the same pinned edge frame — submit both from driver
@@ -3833,11 +3749,11 @@ object UserGraphQueries {
       reach(e.select(col("u").as("src"), col("v").as("dst"))))
     val fBwd = Future(
       reach(e.select(col("v").as("src"), col("u").as("dst"))))
-    val (f, fOk) = Await.result(fFwd, Duration.Inf)
-    val (b, bOk) = Await.result(fBwd, Duration.Inf)
+    val f = Await.result(fFwd, Duration.Inf)
+    val b = Await.result(fBwd, Duration.Inf)
     val cls = verts
-      .join(f.select(col("id"), lit(1).as("in_f")), Seq("id"), "left")
-      .join(b.select(col("id"), lit(1).as("in_b")), Seq("id"), "left")
+      .join(f.frame.select(col("id"), lit(1).as("in_f")), Seq("id"), "left")
+      .join(b.frame.select(col("id"), lit(1).as("in_b")), Seq("id"), "left")
       .select(
         when(col("in_f") === 1 && col("in_b") === 1, "scc")
           .when(col("in_f") === 1, "fwd_only")
@@ -3845,7 +3761,7 @@ object UserGraphQueries {
           .otherwise("rest").as("cls"))
     cls.groupBy(col("cls")).agg(count(lit(1)).as("n_vertices"))
       .select(col("cls"), col("n_vertices"), lit(pivot).as("pivot"),
-        lit(fOk && bOk).as("converged"))
+        lit(f.converged && b.converged).as("converged"))
       .orderBy(col("cls"))
   }
 
@@ -4008,15 +3924,8 @@ object UserGraphQueries {
           col("u") === col("iid"), "left_semi")
         .join(e.select(col("u").as("oid")),
           col("v") === col("oid"), "left_semi")
-      var stable = false
-      var t = 0
-      while (!stable && t < SccTrimRounds && nActive > 0) {
-        // checkpoint + count fused into one job per 2-step batch
-        // (round 14 — SqlBridge.pinnedSum)
-        val (next, n, _) = pinnedSum(trimStep(trimStep(active)), lit(0L))
-        stable = n == nActive
-        active = next; nActive = n; t += 2
-      }
+      active = Fixpoint(active, nActive, nActive, lit(1L), SccTrimRounds,
+        perStep = 2)((e, _) => trimStep(trimStep(e))).frame
       val (coreVerts, nCore, _) = pinnedSum(
         active.select(col("u").as("id"))
           .unionByName(active.select(col("v").as("id"))).distinct(),
@@ -4027,20 +3936,19 @@ object UserGraphQueries {
       if (nCore == 0L) {
         complete = true
       } else {
-        // (2) color: synchronous min-propagation with pointer doubling
-        var (color, _, cSum) = pinnedSum(
+        // (2) color: synchronous min-propagation with pointer doubling;
+        // the integer color sum is strictly monotone until the fixpoint
+        val (color0, _, cSum) = pinnedSum(
           coreVerts.select(col("id"), col("id").as("color")), "color")
-        var c = 0
-        stable = false
-        while (!stable && c < SccColorRounds) {
-          // r18 fused round (guide §2.4): the edge hop, the pointer
-          // jump, and the previous colors union into ONE min
-          // aggregation — same least() values, two left joins fewer
-          // per round. The jump join is inner: every color value is an
-          // active vertex id (min over core ids), so the old left join
-          // never produced a null dc; hop targets v are core vertices,
-          // so the union's id set is exactly the color frame's.
-          val (next, _, nSum) = pinnedSum(color
+        // Fused round: the edge hop, the pointer jump, and the previous
+        // colors union into ONE min aggregation — same least() values, two
+        // left joins fewer per round. The jump join is inner: every color
+        // value is an active vertex id (min over core ids), so the old left
+        // join never produced a null dc; hop targets v are core vertices,
+        // so the union's id set is exactly the color frame's.
+        val color = Fixpoint(color0, nCore, cSum, col("color"),
+            SccColorRounds) { (color, _) =>
+          color
             .unionByName(active
               .join(color.select(col("id").as("u"),
                 col("color").as("cu")), Seq("u"))
@@ -4049,11 +3957,8 @@ object UserGraphQueries {
               .join(color.select(col("id").as("did"),
                 col("color").as("dc")), Seq("did"))
               .select(col("id"), col("dc").as("color")))
-            .groupBy(col("id")).agg(min(col("color")).as("color")),
-            "color")
-          stable = nSum == cSum // integer min-prop: sum is strictly
-          color = next; cSum = nSum; c += 1 // monotone until fixpoint
-        }
+            .groupBy(col("id")).agg(min(col("color")).as("color"))
+        }.frame
         // (3) flag: backward reach-to-root on same-color edges
         val sce = active
           .join(color.select(col("id").as("u"), col("color").as("ucol")),
@@ -4066,17 +3971,12 @@ object UserGraphQueries {
             sce.join(fl.select(col("id").as("v")), Seq("v"))
               .select(col("u").as("id")))
           .distinct()
-        var (flagged, nf, _) = pinnedSum(
+        val (roots, nRoots, _) = pinnedSum(
           color.filter(col("id") === col("color")).select(col("id")),
           lit(0L))
-        var f = 0
-        stable = false
-        while (!stable && f < SccFlagRounds) { // 2 steps per count, as trim
-          val (next, n, _) = pinnedSum(flagStep(flagStep(flagged)),
-            lit(0L))
-          stable = n == nf
-          flagged = next; nf = n; f += 2
-        }
+        val flagged = Fixpoint(roots, nRoots, nRoots, lit(1L),
+          SccFlagRounds, perStep = 2)((fl, _) => flagStep(flagStep(fl)))
+          .frame
         addLabels(color.join(flagged, Seq("id"), "left_semi")
           .select(col("id"), col("color").as("scc_id")))
         val (rv2, nRem, _) = pinnedSum(
@@ -4434,29 +4334,24 @@ object UserGraphQueries {
         col("n_members"), lit(true).as("converged"))
     val dag = condense(dedges, labels)
       .select(col("src_scc"), col("dst_scc")).localCheckpoint()
-    var layer = sizes.select(col("scc_id"), lit(0L).as("layer"))
+    val layer0 = sizes.select(col("scc_id"), lit(0L).as("layer"))
       .localCheckpoint()
-    var lSum = 0L
-    var converged = false
-    var r = 0
-    while (!converged && r < TopoRounds) {
+    // monotone non-decreasing integer layers, all 0 at the start
+    val fix = Fixpoint(layer0, Fixpoint.Unprobed, 0L, col("layer"),
+        TopoRounds) { (layer, _) =>
       val cand = dag
         .join(layer.select(col("scc_id").as("src_scc"),
           col("layer").as("pl")), Seq("src_scc"))
         .groupBy(col("dst_scc").as("scc_id"))
         .agg((max(col("pl")) + 1L).as("cl"))
-      // checkpoint + monotone-sum probe fused (round 14 — one job)
-      val (next, _, nSum) = org.apache.spark.sql.graftbridge.SqlBridge
-        .pinnedSum(layer.join(cand, Seq("scc_id"), "left")
-          .select(col("scc_id"),
-            greatest(col("layer"), coalesce(col("cl"), col("layer")))
-              .as("layer")), "layer")
-      converged = nSum == lSum // monotone non-decreasing integer layers
-      layer = next; lSum = nSum; r += 1
+      layer.join(cand, Seq("scc_id"), "left")
+        .select(col("scc_id"),
+          greatest(col("layer"), coalesce(col("cl"), col("layer")))
+            .as("layer"))
     }
-    layer.join(sizes, Seq("scc_id"))
+    fix.frame.join(sizes, Seq("scc_id"))
       .select(col("scc_id"), col("layer"), col("n_members"),
-        lit(converged).as("converged"))
+        lit(fix.converged).as("converged"))
       .orderBy(col("scc_id"))
   }
 
@@ -4588,11 +4483,13 @@ object UserGraphQueries {
     val pivot = te.select(col("u").as("id"))
       .unionByName(te.select(col("v").as("id")))
       .agg(min(col("id"))).first().getLong(0)
-    var arr = te.sparkSession.range(1)
+    val arr0 = te.sparkSession.range(1)
       .select(lit(pivot).as("id"), lit(0L).as("a"))
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < TgRounds) {
+    // a row changed iff it has no incumbent (new id) or improved (min <
+    // incumbent — the min can never exceed it)
+    val fix = Fixpoint(arr0, 1L, 0L,
+        when(col("inc").isNull || col("inc") =!= col("a"), 1L)
+          .otherwise(0L), TgRounds, Fixpoint.Zero) { (arr, _) =>
       val relax = te
         .join(arr.select(col("id").as("u"), col("a").as("au")), Seq("u"))
         .filter(col("t") >= col("au"))
@@ -4602,23 +4499,14 @@ object UserGraphQueries {
           lit(null).cast("long").as("inc"))
       // The incumbent arrival rides the SAME min aggregation (arr has one
       // row per id, so min(inc) recovers it exactly; relax rows carry
-      // null, which min skips), and the convergence probe fuses into the
-      // pin: a row changed iff it has no incumbent (new id) or improved
-      // (min < incumbent — the min can never exceed it) — exactly the old
-      // (id, a) anti-join-nonEmpty, one Spark job per round instead of two.
-      val merged = arr.select(col("id"), col("a"), col("a").as("inc"))
+      // null, which min skips).
+      arr.select(col("id"), col("a"), col("a").as("inc"))
         .unionByName(relax)
         .groupBy(col("id"))
         .agg(min(col("a")).as("a"), min(col("inc")).as("inc"))
-      val (next, _, nChanged) =
-        org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum(merged,
-          when(col("inc").isNull || col("inc") =!= col("a"), 1L)
-            .otherwise(0L))
-      changed = nChanged > 0
-      arr = next.select(col("id"), col("a")); rounds += 1
     }
-    arr.select(col("id"), col("a").as("arr_us"),
-      lit(!changed).as("converged"))
+    fix.frame.select(col("id"), col("a").as("arr_us"),
+      lit(fix.converged).as("converged"))
       .orderBy(col("id"))
   }
 
@@ -4735,7 +4623,6 @@ object UserGraphQueries {
     var rounds = 0
     var more = true
     while (more && rounds < MstRounds) {
-      // checkpoint + emptiness probe fused (round 14 — one job)
       val (cross, nCross, _) = pinnedSum(e
         .join(comp.select(col("v").as("a"), col("c").as("ca")), Seq("a"))
         .join(comp.select(col("v").as("b"), col("c").as("cb")), Seq("b"))
@@ -4760,27 +4647,21 @@ object UserGraphQueries {
         // compound it to a 2^(rounds·jumps)-digit BigInteger and the
         // driver stalls multiplying it (measured: minutes at sf1) —
         // pinned restarts the estimate chain from the real row count.
-        var par = pr.as("x").join(pr.as("y"), col("x.par") === col("y.c"))
+        val (par0, nPar, _) = pinnedSum(pr.as("x")
+          .join(pr.as("y"), col("x.par") === col("y.c"))
           .select(col("x.c").as("c"),
             when(col("y.par") === col("x.c") && col("x.c") < col("x.par"),
-              col("x.c")).otherwise(col("x.par")).as("par"))
-          .transform(pinned)
-        var jumping = true
-        var j = 0
-        while (jumping && j < MstJumps) {
-          // pin + changed-probe fused into ONE job (r17): the self-join
-          // always matches (par values are picking components) and keys
-          // are preserved, so "some pointer moved" — the old anti-join
-          // head(1) probe, a second action per jump — is exactly
-          // sum(y.par != x.par) over the same join.
-          val (nx, _, nMoved) = pinnedSum(par.as("x")
+              col("x.c")).otherwise(col("x.par")).as("par")), lit(0L))
+        // the self-join always matches (par values are picking
+        // components) and keys are preserved, so "some pointer moved" is
+        // exactly sum(y.par != x.par) over the same join
+        val par = Fixpoint(par0, nPar, 0L, col("moved"), MstJumps,
+            Fixpoint.Zero) { (par, _) =>
+          par.as("x")
             .join(par.as("y"), col("x.par") === col("y.c"))
             .select(col("x.c").as("c"), col("y.par").as("par"),
-              (col("y.par") =!= col("x.par")).cast("long").as("moved")),
-            col("moved"))
-          jumping = nMoved > 0L
-          par = nx.select(col("c"), col("par")); j += 1
-        }
+              (col("y.par") =!= col("x.par")).cast("long").as("moved"))
+        }.frame.select(col("c"), col("par"))
         comp = pinned(comp.join(par, Seq("c"), "left")
           .select(col("v"), coalesce(col("par"), col("c")).as("c")))
         rounds += 1
@@ -4911,13 +4792,12 @@ object UserGraphQueries {
       lit(0L).as("round"), lit(true).as("converged"))
     if (und.head(1).isEmpty) return empty
     // (v, p) actives; priorities carried so rounds never rehash.
-    var active = pinned(und.select(col("u").as("v")).distinct()
-      .select(col("v"), prio(col("v")).as("p")))
-    var mis = active.limit(0).select(col("v"), lit(0L).as("round"))
-    var rounds = 0
-    var drained = false
-    while (!drained && rounds < MisRounds) {
-      rounds += 1
+    val (active0, n0, _) = pinnedSum(und.select(col("u").as("v"))
+      .distinct().select(col("v"), prio(col("v")).as("p")), lit(0L))
+    var mis = active0.limit(0).select(col("v"), lit(0L).as("round"))
+    // drained when no active vertex is left
+    val fix = Fixpoint(active0, n0, n0, lit(1L), MisRounds,
+        Fixpoint.Zero) { (active, round) =>
       val nbmin = und
         .join(active.select(col("v").as("u")), Seq("u"), "left_semi")
         .join(active.select(col("v"), col("p").as("pv")), Seq("v"))
@@ -4927,17 +4807,13 @@ object UserGraphQueries {
         .filter(col("mn").isNull || col("p") < col("mn"))
         .select(col("v")))
       mis = pinned(mis.unionByName(
-        sel.select(col("v"), lit(rounds.toLong).as("round"))))
+        sel.select(col("v"), lit(round.toLong).as("round"))))
       val drop = sel.unionByName(
         und.join(sel, Seq("v"), "left_semi").select(col("u").as("v")))
-      // pin + drained probe fused (round 14 — one job)
-      val (a2, nActive, _) = pinnedSum(
-        active.join(drop, Seq("v"), "left_anti"), lit(0L))
-      active = a2
-      drained = nActive == 0L
+      active.join(drop, Seq("v"), "left_anti")
     }
     mis.select(col("v").as("id"), col("round"),
-      lit(drained).as("converged")).orderBy(col("id"))
+      lit(fix.converged).as("converged")).orderBy(col("id"))
   }
 
   private val graphMisSql = {
@@ -5087,7 +4963,7 @@ object UserGraphQueries {
     // at every SF (tools/sim_color.py — the invariants are
     // priority-generic, the numbers are not). Tests inject explicit
     // priorities through `prio`.
-    var st = pinned(prio match {
+    val st = pinned(prio match {
       case Some(p) =>
         und.select(col("u").as("v")).distinct()
           .select(col("v"), p(col("v")).as("p"),
@@ -5115,8 +4991,6 @@ object UserGraphQueries {
           lit(null).cast("long").as("color"))
     })
     val nVerts = st.count()
-    var rounds = 0
-    var drained = nVerts == 0L
     // One synchronous JP round: color every active vertex whose priority
     // is the strict min among active neighbors with the mex of its
     // colored neighbors' colors. Pure plan function — batched TWO per
@@ -5151,29 +5025,20 @@ object UserGraphQueries {
                 (acc, x) => when(x === acc, acc + 1).otherwise(acc))))
             .as("color"))
     }
-    while (!drained && rounds < ColorRounds) {
-      // Probe `drained` only every SECOND round (judge r12 item #4,
-      // adjudicated by A/B): coloring is monotone — colors only ever
-      // ADDED — so the drain test is exact wherever probed, and an
-      // extra round on an already-drained frame is a no-op (act is
-      // empty). The judge's full trim-style batch (TWO rounds stacked
-      // UNpinned per checkpoint) was MEASURED AND REFUTED on the quiet
-      // box: 18.7 s wall / 14.0 s CPU → 61.5 s / 40.0 s at sf0.1 — the
-      // JP round body references its input ~4× (act twice, colored
-      // once, final join once), so the un-checkpointed round-1 subplan
-      // re-executes ~4× inside round 2's plan. Per-round pins stay;
-      // only the probe is skipped, and (round 14) the remaining drain
-      // probe is FUSED into the second pin's stats job via
-      // SqlBridge.pinnedSum — 2 driver actions per 2 rounds (from the
-      // naive 4 via r12's 3).
-      rounds += 2
-      st = pinned(jpRound(st))
-      val (st2, _, nUncolored) = pinnedSum(jpRound(st),
-        when(col("color").isNull, 1L).otherwise(0L))
-      st = st2
-      drained = nUncolored == 0L
-    }
-    val colored = st.filter(col("color").isNotNull)
+    // Probe `drained` only every SECOND round (decided by A/B): coloring is
+    // monotone — colors only ever ADDED — so the drain test is exact
+    // wherever probed, and an extra round on an already-drained frame is a
+    // no-op (act is empty). A full trim-style batch (TWO rounds stacked
+    // UNpinned per checkpoint) was MEASURED AND REFUTED: 18.7 s wall /
+    // 14.0 s CPU → 61.5 s / 40.0 s at sf0.1 — the JP round body references
+    // its input ~4× (act twice, colored once, final join once), so the
+    // un-checkpointed round-1 subplan re-executes ~4× inside round 2's
+    // plan. So the first round of each step keeps its own pin, and the
+    // drain probe rides the second round's pin.
+    val fix = Fixpoint(st, nVerts, nVerts,
+        when(col("color").isNull, 1L).otherwise(0L), ColorRounds,
+        Fixpoint.Zero, perStep = 2)((st, _) => jpRound(pinned(jpRound(st))))
+    val colored = fix.frame.filter(col("color").isNotNull)
       .select(col("v"), col("color"))
     val deg = und.groupBy(col("u").as("v")).agg(count(lit(1)).as("d"))
     val conflicts = can
@@ -5192,7 +5057,7 @@ object UserGraphQueries {
       .crossJoin(boundOk)
       .select(lit(nVerts).as("n_vertices"), lit(nEdges).as("n_edges"),
         col("n_colored"), col("n_conflicts"), col("n_color0"),
-        lit(drained).as("converged"), col("degree_bound_ok"))
+        lit(fix.converged).as("converged"), col("degree_bound_ok"))
   }
 
   private val graphColoringSql = {
@@ -5372,7 +5237,8 @@ object UserGraphQueries {
     */
   private[graft] def matchingOf(wedges: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
-    var live = pinned(wedges.select(col("a"), col("b"), col("p")))
+    val (live0, nLive0, _) =
+      pinnedSum(wedges.select(col("a"), col("b"), col("p")), lit(0L))
     def unpacked(src: DataFrame, conv: Boolean) = src.select(
       expr(s"(p div $MstPackE) % $MstPackE").as("a"),
       expr(s"p % $MstPackE").as("b"),
@@ -5382,13 +5248,12 @@ object UserGraphQueries {
     // that round's pinned sel frame, read once at the end) — the
     // per-round `matched = pinned(matched union sel)` form cost one
     // extra driver action per round (r17 action-count trim).
-    val matchedEmpty = live.limit(0)
+    val matchedEmpty = live0.limit(0)
       .select(col("p"), lit(0L).as("round"))
     val matchedParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var rounds = 0
-    var drained = live.head(1).isEmpty
-    while (!drained && rounds < MatchRounds) {
-      rounds += 1
+    // drained when no live edge is left
+    val fix = Fixpoint(live0, nLive0, nLive0, lit(1L), MatchRounds,
+        Fixpoint.Zero) { (live, round) =>
       val byV = live.select(col("a").as("v"), col("p"))
         .unionByName(live.select(col("b").as("v"), col("p")))
         .groupBy(col("v")).agg(max(col("p")).as("mp"))
@@ -5398,21 +5263,18 @@ object UserGraphQueries {
         .filter(col("p") === col("ma") && col("p") === col("mb"))
         .select(col("a"), col("b"), col("p")))
       matchedParts +=
-        sel.select(col("p"), lit(rounds.toLong).as("round"))
+        sel.select(col("p"), lit(round.toLong).as("round"))
       val mv = sel.select(col("a").as("v"))
         .unionByName(sel.select(col("b").as("v")))
-      // pin + drained probe fused (round 14 — one job)
-      val (l2, nLive, _) = pinnedSum(live
+      live
         .join(mv.select(col("v").as("a")), Seq("a"), "left_anti")
         .join(mv.select(col("v").as("b")), Seq("b"), "left_anti")
-        .select(col("a"), col("b"), col("p")), lit(0L))
-      live = l2
-      drained = nLive == 0L
+        .select(col("a"), col("b"), col("p"))
     }
     val matched =
       if (matchedParts.isEmpty) matchedEmpty
       else matchedParts.reduce(_ unionByName _)
-    unpacked(matched, conv = drained).orderBy(col("a"), col("b"))
+    unpacked(matched, conv = fix.converged).orderBy(col("a"), col("b"))
   }
 
   private val graphMatchingSql = {

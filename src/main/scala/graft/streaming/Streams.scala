@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.util.Det
+import graft.util.{Det, Fixpoint}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -746,12 +746,10 @@ object Streams {
     * at sf0.1 with the per-round frame shrinking from \|V\| to the
     * touched-label set — \|ce\| = 2.6k/1.4k for the post-contraction
     * batches vs 34k und rows before, and a replayed batch is a 0-round
-    * no-op). The label sum is the monotone convergence
-    * probe, fused with the checkpoint into ONE Spark job per round
-    * (SqlBridge.pinnedSum — driver actions are the wall clock of
-    * high-round loops); checkpoints go through the measured-stats pin
-    * (the X130 stats-compounding lesson — this loop feeds state back
-    * through self-joins every batch). Returns (state, converged).
+    * no-op). The label sum is the monotone [[Fixpoint]] probe;
+    * checkpoints go through the measured-stats pin (the X130
+    * stats-compounding lesson — this loop feeds state back through
+    * self-joins every batch). Returns (state, converged).
     */
   def ccFold(state: DataFrame, edges: DataFrame):
       (DataFrame, Boolean) = {
@@ -773,20 +771,19 @@ object Streams {
         .unionByName(ce.select(col("b").as("u"), col("a").as("v"))),
       lit(0L))
     if (nUnd == 0L) return (state, true)
-    var (lab, _, cur) = pinnedSum(
+    val (lab0, n0, s0) = pinnedSum(
       und.select(col("u").as("id")).distinct()
         .select(col("id"), col("id").as("label")), "label")
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < CcFoldRounds) {
-      // r18 fused round (guide §2.4, the SCC color-loop shape): the
-      // neighbor min, the pointer jump, and the previous labels union
-      // into ONE min aggregation — same least() values, two left joins
-      // fewer per round. The jump join is inner: every label value is a
-      // contracted-graph vertex id (min over existing ids), so the old
-      // left join never produced a null ld; hop targets are und
-      // endpoints, so the union's id set is exactly the label frame's.
-      val (next, _, s) = pinnedSum(lab
+    // Fused round (the SCC color-loop shape): the neighbor min, the pointer
+    // jump, and the previous labels union into ONE min aggregation — same
+    // least() values, two left joins fewer per round. The jump join is
+    // inner: every label value is a contracted-graph vertex id (min over
+    // existing ids), so the old left join never produced a null ld; hop
+    // targets are und endpoints, so the union's id set is exactly the label
+    // frame's.
+    val fix = Fixpoint(lab0, n0, s0, col("label"), CcFoldRounds) {
+        (lab, _) =>
+      lab
         .unionByName(und
           .join(lab.select(col("id").as("u"), col("label").as("lu")),
             Seq("u"))
@@ -795,20 +792,18 @@ object Streams {
           .join(lab.select(col("id").as("did"), col("label").as("ld")),
             Seq("did"))
           .select(col("id"), col("ld").as("label")))
-        .groupBy(col("id")).agg(min(col("label")).as("label")), "label")
-      stable = s == cur
-      lab = next; cur = s; rounds += 1
+        .groupBy(col("id")).agg(min(col("label")).as("label"))
     }
     // compose: relabel carried state through the touched-label map,
     // append the contracted-graph vertices that are NEW ids
-    val touched = lab.select(col("id").as("t"), col("label").as("nl"))
+    val touched = fix.frame.select(col("id").as("t"), col("label").as("nl"))
     val oldNext = state.select(col("id"), col("label"))
       .join(touched, col("label") === col("t"), "left")
       .select(col("id"), coalesce(col("nl"), col("label")).as("label"))
     val newRows = touched
       .join(lm.select(col("id").as("t")), Seq("t"), "left_anti")
       .select(col("t").as("id"), col("nl").as("label"))
-    (pinned(oldNext.unionByName(newRows)), stable)
+    (pinned(oldNext.unionByName(newRows)), fix.converged)
   }
 
   /** [[CcMaintainer]]'s snapshot: the (id, label) table and whether
@@ -931,7 +926,6 @@ object Streams {
           .join(be.join(droppedF.withColumnRenamed("v", "small"),
               Seq("small"), "left_anti")
             .select(col("big").as("v")), Seq("v"), "left_anti")
-        // checkpoint + count fused, one job per frame (round 14)
         val (k2, nK, _) = pinnedSum(kNext, lit(0L))
         val (d2, nD, _) = pinnedSum(dNext, lit(0L))
         keptF = k2

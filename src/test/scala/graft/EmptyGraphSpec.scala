@@ -1,6 +1,7 @@
 package graft
 
 import graft.algorithms.GraphAlgorithms
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -56,15 +57,39 @@ class EmptyGraphSpec extends GraftSuite {
 
   test("round-13 iteratives are total on an empty edge frame") {
     import spark.implicits._
-    import graft.queries.UserGraphQueries
+    import graft.queries.{DedupQueries, UserGraphQueries => U}
+    import graft.streaming.Streams
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(UserGraphQueries.corenessOf(empty).count() === 0)
-    assert(UserGraphQueries.partitionOf(empty).count() === 0)
-    assert(UserGraphQueries.trussnessOf(empty).count() === 0)
+    val noDir = Seq.empty[(Long, Long)].toDF("u", "v")
+    val noT = Seq.empty[(Long, Long, Long)].toDF("u", "v", "t")
+    val noW = Seq.empty[(Long, Long, Long)].toDF("a", "b", "p")
     val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val hs = graft.queries.DedupQueries.shingleSetsOf(docs)
-    assert(graft.queries.DedupQueries
-      .streamDedupMinhashOf(spark, docs, hs).count() === 0)
+    val hs = DedupQueries.shingleSetsOf(docs)
+    // (seam, its output on empty input, rows): every pinned fixpoint
+    // seam, run from the start rule alone; truss decompose reports its
+    // three trussness classes and coloring its one summary row
+    val table = Seq[(String, () => DataFrame, Long)](
+      ("coreness", () => U.corenessOf(empty), 0L),
+      ("partition", () => U.partitionOf(empty), 0L),
+      ("trussness", () => U.trussnessOf(empty), 0L),
+      ("stream_dedup_minhash",
+        () => DedupQueries.streamDedupMinhashOf(spark, docs, hs), 0L),
+      ("kcore", () => U.kcorePeelOf(empty), 0L),
+      ("tip", () => U.tipDecomposeOf(noDir), 0L),
+      ("wing", () => U.wingDecomposeOf(noDir), 0L),
+      ("truss decompose", () => U.trussDecomposeOf(empty), 3L),
+      ("scc pivot", () => U.sccPivotOf(noDir), 0L),
+      ("scc labels", () => U.sccLabelRawOf(noDir)._1, 0L),
+      ("topo layers", () => U.topoLayersOf(noDir), 0L),
+      ("temporal reach", () => U.temporalReachOf(noT), 0L),
+      ("mst", () => U.mstBoruvkaOf(noW), 0L),
+      ("mis", () => U.misOf(empty), 0L),
+      ("coloring", () => U.coloringOf(empty), 1L),
+      ("matching", () => U.matchingOf(noW), 0L),
+      ("cc fold", () => Streams.ccFold(Streams.ccEmptyState(spark),
+        noDir)._1, 0L))
+    for ((name, out, n) <- table)
+      assert(out().count() === n, name)
   }
 
   test("round-14 seams are total on empty inputs") {

@@ -2,7 +2,6 @@ package graft
 
 import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
-import scala.util.matching.Regex
 
 /** Source lint for the streaming maintainer base: the foreachBatch wire,
   * the replay guard and the writer lock each exist once, in
@@ -10,43 +9,9 @@ import scala.util.matching.Regex
   * extends the base — so none of them is hand-rolled again.
   */
 class StreamsLintSpec extends AnyFunSuite {
-  private val root = new File("src/main/scala")
+  import SourceLint.{code, root, scalaFiles, span}
+
   private val streams = new File(root, "graft/streaming/Streams.scala")
-
-  private def scalaFiles(d: File): Seq[File] =
-    Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-      if (f.isDirectory) scalaFiles(f)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    }
-
-  /** The file's source with comments blanked out; string and char
-    * literals are kept, and so are line breaks (line numbers hold).
-    */
-  private def code(f: File): String = {
-    val src = {
-      val s = scala.io.Source.fromFile(f, "UTF-8")
-      try s.mkString finally s.close()
-    }
-    val token =
-      """(?s)'(?:\\.|[^'\\])'|""\"(.*?)""\"|"(?:\\.|[^"\\\n])*"|/\*.*?\*/|//[^\n]*""".r
-    token.replaceAllIn(src, m => Regex.quoteReplacement(
-      if (m.matched.startsWith("/")) m.matched.replaceAll("[^\n]", " ")
-      else m.matched))
-  }
-
-  /** 0-based line range of the definition at `at`: from its first line
-    * to the brace that closes the first `{` after it.
-    */
-  private def span(src: String, at: Int): Range = {
-    var i = src.indexOf('{', at)
-    var depth = 0
-    do {
-      if (src(i) == '{') depth += 1 else if (src(i) == '}') depth -= 1
-      i += 1
-    } while (depth > 0)
-    def line(p: Int) = src.substring(0, p).count(_ == '\n')
-    line(at) to line(i - 1)
-  }
 
   private val streamsCode = code(streams)
   private def spanOf(decl: String): Range = {
