@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.functions.TextFns
 import graft.sources.Tables
-import graft.util.Det
+import graft.util.{Det, Fixpoint}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -454,7 +454,7 @@ object DedupQueries {
     * drop wave); the oracle unrolls [[SdmCloseRounds]] (extras no-op)
     * and the engine early-stops with the loud `converged` flag.
     */
-  private val SdmCloseRounds = 6
+  private[graft] val SdmCloseRounds = 6
 
   /** X170 — stream_dedup_minhash: the STREAMING-INGESTION near-dup fold
     * (judge r12 item #3), registered as its BATCH TWIN over the whole
@@ -537,14 +537,44 @@ object DedupQueries {
       .select(col("small"), col("big"))
   }
 
-  /** Closure-round cap, exposed for the maintainer. */
-  private[graft] def sdmCloseRounds: Int = SdmCloseRounds
+  /** The keep-first closure over `edges` (small, big) among `ids` (v),
+    * shared by the batch twin and the streaming maintainer: an id is
+    * kept once every smaller partner is dropped, and dropped once some
+    * smaller partner is kept or when it is in `preDropped` (v). The
+    * state is one status frame, one row (v, st) per id with st "open",
+    * "kept" or "dropped", probed by its open count: each round
+    * recomputes both waves from the previous status in one pin, and the
+    * waves never overlap (kept ∩ dropped = ∅ by induction from the
+    * seed). Both waves only grow, so `preDropped` enters through the
+    * seed alone. Converged: every id decided within [[SdmCloseRounds]]
+    * rounds.
+    */
+  private[graft] def keepFirstOf(ids: DataFrame, edges: DataFrame,
+      preDropped: DataFrame): Fixpoint.Result = {
+    import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
+    val nOpen = (col("st") === "open").cast("long")
+    val (seed, n, s0) = pinnedSum(ids
+      .join(preDropped.select(col("v"), lit("dropped").as("pre")), Seq("v"),
+        "left")
+      .select(col("v"), coalesce(col("pre"), lit("open")).as("st")), nOpen)
+    Fixpoint(seed, n, s0, nOpen, SdmCloseRounds, Fixpoint.Zero) { (st, _) =>
+      val nbs = edges
+        .join(st.select(col("v").as("small"), col("st").as("s")),
+          Seq("small"))
+        .groupBy(col("big").as("v"))
+        .agg(max(col("s") === "kept").as("kept_nb"),
+          max(col("s") =!= "dropped").as("live_nb"))
+      st.join(nbs, Seq("v"), "left").select(col("v"),
+        when(col("st") === "dropped" || col("kept_nb"), "dropped")
+          .when(!coalesce(col("live_nb"), lit(false)), "kept")
+          .otherwise("open").as("st"))
+    }
+  }
 
   /** Testable seam: explicit documents + (doc_id, hs) frames. */
   private[graft] def streamDedupMinhashOf(s: SparkSession, docs: DataFrame,
       hs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
     // distinct shingle SETS (jaccard is set-based; band minima are
     // duplicate-neutral so one distinct serves both stages)
     val hset = hs.select(col("doc_id"), array_distinct(col("hs")).as("hs"))
@@ -555,48 +585,21 @@ object DedupQueries {
         min(col("doc_id")).over(Window.partitionBy(col("text"))))
       .select(col("doc_id"), col("rep"))
       .localCheckpoint()
+    val reps = withRep.filter(col("doc_id") === col("rep"))
+      .select(col("doc_id").as("v"))
     val repsHs = hset
-      .join(withRep.filter(col("doc_id") === col("rep"))
-        .select(col("doc_id")), Seq("doc_id"), "left_semi")
+      .join(reps.select(col("v").as("doc_id")), Seq("doc_id"), "left_semi")
       .persist()
     val ve = verifiedDupEdges(s, repsHs, repsHs, cross = false)
       .localCheckpoint()
-    val (repsIds, nReps, _) = pinnedSum(withRep
-      .filter(col("doc_id") === col("rep")).select(col("doc_id").as("v")),
-      lit(0L))
-    var keptF = repsIds.limit(0)
-    var droppedF = repsIds.limit(0)
-    var converged = nReps == 0L
-    var r = 0
-    while (!converged && r < SdmCloseRounds) {
-      r += 1
-      // simultaneous frontier from the PREVIOUS round's frames — both
-      // waves monotone-grow, recomputed-from-scratch exactly like the
-      // oracle's sk/sd CTE chain
-      val dNext = ve
-        .join(keptF.withColumnRenamed("v", "small"), Seq("small"),
-          "left_semi")
-        .select(col("big").as("v")).distinct()
-      val kNext = repsIds.join(
-        ve.join(droppedF.withColumnRenamed("v", "small"), Seq("small"),
-            "left_anti")
-          .select(col("big").as("v")),
-        Seq("v"), "left_anti")
-      val (k2, nK, _) = pinnedSum(kNext, lit(0L))
-      val (d2, nD, _) = pinnedSum(dNext, lit(0L))
-      keptF = k2; droppedF = d2
-      converged = nK + nD == nReps
-    }
+    val fix = keepFirstOf(reps, ve, reps.where(lit(false)))
     val dupOf = ve
-      .join(keptF.withColumnRenamed("v", "small"), Seq("small"),
-        "left_semi")
+      .join(fix.frame.filter(col("st") === "kept")
+        .select(col("v").as("small")), Seq("small"), "left_semi")
       .groupBy(col("big").as("rep")).agg(min(col("small")).as("dup_of_rep"))
-    val repState = repsIds.select(col("v").as("rep"))
-      .join(keptF.select(col("v").as("rep"), lit(true).as("rep_kept")),
-        Seq("rep"), "left")
+    val repState = fix.frame
+      .select(col("v").as("rep"), (col("st") === "kept").as("rep_kept"))
       .join(dupOf, Seq("rep"), "left")
-      .select(col("rep"), coalesce(col("rep_kept"), lit(false))
-        .as("rep_kept"), col("dup_of_rep"))
     val shingledOut = withRep.join(repState, Seq("rep"))
       .select(col("doc_id"),
         (col("doc_id") === col("rep") && col("rep_kept")).as("k"),
@@ -606,7 +609,7 @@ object DedupQueries {
     docs.select(col("doc_id"))
       .join(shingledOut, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("k"), lit(true)).as("kept"),
-        col("dup_of"), lit(converged).as("converged"))
+        col("dup_of"), lit(fix.converged).as("converged"))
       .orderBy(col("doc_id"))
   }
 

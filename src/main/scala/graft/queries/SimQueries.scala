@@ -3,7 +3,6 @@ package graft.queries
 import graft.functions.{MediaCodec, TextFns, VectorFns}
 import graft.sources.Tables
 import graft.util.Det
-import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2613,7 +2612,6 @@ object SimQueries {
     val sizes = e.groupBy(col("label").as("c_label"))
       .agg(count(lit(1)).as("lsz"))
     val scan = pr.join(broadcast(sizes), Seq("c_label"))
-    val nq = lit(NQueries.toLong)
     val nv = e.count()
     val sess = e.sparkSession
     import sess.implicits._

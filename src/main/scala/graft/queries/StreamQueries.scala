@@ -5,7 +5,6 @@ import graft.sources.Tables
 import graft.streaming.Streams
 import graft.util.Det
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** T1–T5 batch twins of the streaming transforms (same DataFrame code runs

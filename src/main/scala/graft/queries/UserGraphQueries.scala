@@ -7,6 +7,7 @@ import graft.util.{Det, Fixpoint}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
 
 /** G_user keys (SURVEY §2 preamble's second test graph): the iterative
   * algorithms re-run on a CYCLIC, SELF-LOOP-BEARING graph — convergence
@@ -284,7 +285,7 @@ object UserGraphQueries {
     // the capped frame's cost for 0 extra information (measured r17:
     // 65 s of task time at sf0.1/local[32] collapsing to one window
     // pass; values unchanged, the pin is plan-only).
-    triangleCensusOf(org.apache.spark.sql.graftbridge.SqlBridge.pinned(
+    triangleCensusOf(pinned(
       censusTopKEdges(GUser(s, dir).edges)))
 
   /** Partners kept per vertex side in the census' sparsified input —
@@ -1307,7 +1308,6 @@ object UserGraphQueries {
     * general-gain rounds, returning the final per-vertex (id, lab).
     */
   private[graft] def louvainMoveLoopOf(uedges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
     val (e, twoM, _) = pinnedSum(uedges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")), lit(0L))
     louvainMoveRounds(e, twoM)
@@ -1469,7 +1469,6 @@ object UserGraphQueries {
     */
   private[graft] def louvainMergeLoopOf(uedges: DataFrame,
       lab1: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
     val (e, twoM, _) = pinnedSum(uedges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")), lit(0L))
     louvainMergeRounds(e, twoM, lab1)
@@ -1483,7 +1482,6 @@ object UserGraphQueries {
     */
   private[graft] def louvainMergeRounds(e: DataFrame, twoM: Long,
       lab1: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
     val cw = pinned(e
       .join(lab1.select(col("id").as("src"), col("lab").as("ca")),
         Seq("src"))
@@ -1548,7 +1546,6 @@ object UserGraphQueries {
   private[graft] def pinnedUndirected(s: SparkSession,
       dir: String): (DataFrame, Long) =
     ueCache(s, dir) {
-      import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
       val ue = GUser(s, dir).undirected.edges
       val (e, twoM, _) = pinnedSum(ue.select(col("src"), col("dst"))
         .filter(col("src") =!= col("dst")), lit(0L))
@@ -1558,7 +1555,6 @@ object UserGraphQueries {
   private[graft] def louvFrames(s: SparkSession,
       dir: String): (DataFrame, DataFrame) =
     louvCache(s, dir) {
-      import org.apache.spark.sql.graftbridge.SqlBridge.pinned
       val (e, twoM) = pinnedUndirected(s, dir)
       val lab1 = pinned(louvainMoveRounds(e, twoM))
       val mg = louvainMergeRounds(e, twoM, lab1) // pinned per round inside
@@ -1629,7 +1625,6 @@ object UserGraphQueries {
     */
   private[graft] def qnumPassesOf(uedges: DataFrame,
       passes: Seq[(Int, DataFrame)]): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
     val (e, twoM, _) = pinnedSum(uedges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")), lit(0L))
     val deg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
@@ -1855,7 +1850,6 @@ object UserGraphQueries {
     */
   private[graft] def intraCcOf(uedges: DataFrame,
       labs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
     val intra = pinned(uedges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
       .join(labs.select(col("id").as("src"), col("lab").as("ls")),
@@ -1911,7 +1905,6 @@ object UserGraphQueries {
     */
   private[graft] def leidenRefineOf(uedges: DataFrame,
       labs0: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinned
     val labs = pinned(labs0.select(col("id"), col("lab")))
     val c = intraCcOf(uedges, labs)
     val parts = c.join(labs, Seq("id"))
@@ -2119,7 +2112,6 @@ object UserGraphQueries {
     */
   private[graft] def leidenFramesOf(uedges: DataFrame,
       lab1: DataFrame): Seq[(DataFrame, DataFrame)] = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
     val (e, twoM, _) = pinnedSum(uedges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")), lit(0L))
     leidenFrames(e, twoM, lab1)
@@ -2131,7 +2123,6 @@ object UserGraphQueries {
     */
   private[graft] def leidenFrames(e: DataFrame, twoM: Long,
       lab1: DataFrame): Seq[(DataFrame, DataFrame)] = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinned
     val labs = pinned(lab1.select(col("id"), col("lab")))
 
     // One Leiden level over the CURRENT vertex labels: refine →
@@ -2741,7 +2732,6 @@ object UserGraphQueries {
     * list — the seam the hand-built-graph goldens drive.
     */
   private[graft] def kcorePeelOf(simple: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
     val und = simple.select(col("a"), col("b"))
       .unionByName(simple.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint()
@@ -2850,7 +2840,6 @@ object UserGraphQueries {
     */
   private[graft] def corenessOf(simple: DataFrame,
       hintBroadcast: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
     val can = simple.select(col("a"), col("b"))
     val und = pinned(can.select(col("a").as("u"), col("b").as("v"))
       .unionByName(can.select(col("b").as("u"), col("a").as("v"))))
@@ -2976,7 +2965,6 @@ object UserGraphQueries {
     */
   private[graft] def tipDecomposeOf(dedges: DataFrame,
       fanCap: Long = TipFanCap): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
     val e = dedges.select(col("u"), col("v"))
     val fanOk = e.groupBy(col("v")).agg(count(lit(1)).as("fan"))
       .filter(col("fan") <= fanCap).select(col("v"))
@@ -3133,7 +3121,6 @@ object UserGraphQueries {
     */
   private[graft] def wingDecomposeOf(dedges: DataFrame,
       fanCap: Long = TipFanCap): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
     val e = dedges.select(col("u"), col("v"))
     val fanOk = e.groupBy(col("v")).agg(count(lit(1)).as("fan"))
       .filter(col("fan") <= fanCap).select(col("v"))
@@ -3365,7 +3352,7 @@ object UserGraphQueries {
          |   AND sp.sup >= ${k - 2})""".stripMargin
     val names = for (k <- 3 to TrussCap; r <- 1 to TrussRounds)
       yield (k, r, s"tr_${k}_$r")
-    val chain = names.zipWithIndex.map { case ((k, r, cur), i) =>
+    val chain = names.zipWithIndex.map { case ((k, _, cur), i) =>
       val prev = if (i == 0) "kcs" else names(i - 1)._3
       round(prev, cur, k)
     }.mkString(",\n")
@@ -3441,7 +3428,6 @@ object UserGraphQueries {
     * below 2²⁰ for the packed edge key).
     */
   private[graft] def trussnessOf(simple: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
     val can = pinned(simple.select(col("a"), col("b")))
     val und = can.unionByName(
       can.select(col("b").as("a"), col("a").as("b")))
@@ -3711,13 +3697,12 @@ object UserGraphQueries {
     */
   private[graft] def sccPivotOf(dedges: DataFrame): DataFrame = {
     val e = dedges.select(col("u"), col("v")).localCheckpoint()
-    val verts = e.select(col("u").as("id"))
-      .unionByName(e.select(col("v").as("id"))).distinct()
-      .localCheckpoint()
+    val (verts, nV, _) = pinnedSum(e.select(col("u").as("id"))
+      .unionByName(e.select(col("v").as("id"))).distinct(), lit(1L))
     // Empty-graph guard (ADVICE r10): no vertices → typed empty output
     // instead of an NPE extracting the pivot.
-    if (verts.head(1).isEmpty)
-      return verts.limit(0).select(lit("").as("cls"),
+    if (nV == 0L)
+      return verts.select(lit("").as("cls"),
         lit(0L).as("n_vertices"), lit(0L).as("pivot"),
         lit(false).as("converged"))
     val pivot = verts.agg(min(col("id"))).first().getLong(0)
@@ -3884,121 +3869,111 @@ object UserGraphQueries {
     */
   private[graft] def sccLabelRawOf(dedges: DataFrame):
       (DataFrame, Boolean) = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
-    val e0 = dedges.select(col("u"), col("v")).localCheckpoint()
-    val allVerts = e0.select(col("u").as("id"))
-      .unionByName(e0.select(col("v").as("id"))).distinct()
-      .localCheckpoint()
-    if (allVerts.head(1).isEmpty)
-      return (allVerts.limit(0).select(col("id"), lit(0L).as("scc_id")),
-        true)
+    val (e0, nE, _) = pinnedSum(dedges.select(col("u"), col("v")), lit(1L))
+    val (allVerts, nV, _) = pinnedSum(e0.select(col("u").as("id"))
+      .unionByName(e0.select(col("v").as("id"))).distinct(), lit(1L))
 
     // r18 trim (the mst/match lazy-accumulator lesson): nothing reads
-    // `labels` mid-loop and every unioned part is lazy over PINNED
-    // frames (coreVerts/color/flagged/remVerts), so the accumulator
-    // stays lazy and pins ONCE at the end — the per-addLabels eager
-    // checkpoint cost one driver action per peel phase.
-    var labels: DataFrame = null // (id, scc_id)
-    def addLabels(f: DataFrame): Unit = {
-      labels = if (labels == null) f else labels.unionByName(f)
-      ()
-    }
-
-    var remVerts = allVerts
+    // the (id, scc_id) label parts mid-loop and every part is lazy over
+    // PINNED frames (coreVerts/color/flagged/remVerts), so they pin
+    // ONCE at the end — the per-part eager checkpoint cost one driver
+    // action per peel phase.
+    val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // (1) trim: keep edge (u,v) iff u has an in-edge and v has an
+    // out-edge in the active set. TWO trim steps per checkpoint+count
+    // (monotone shrinking, so "unchanged over a 2-step batch" is still
+    // exactly the fixpoint test) — halves the driver rounds on deep
+    // trim tails (depth 9 at sf0.1).
+    // no .distinct() on the semijoin build sides: left_semi dedups by
+    // construction, and the raw projection of a checkpointed frame has
+    // a known (small) size, so it broadcasts instead of shuffling
+    def trimStep(e: DataFrame): DataFrame = e
+      .join(e.select(col("v").as("iid")),
+        col("u") === col("iid"), "left_semi")
+      .join(e.select(col("u").as("oid")),
+        col("v") === col("oid"), "left_semi")
+    // the active edges, lazy between peels: a peel pins them first
     var active = e0
-    var nActive = active.count()
-    var complete = false
-    var peel = 0
-    while (!complete && peel < SccPeels) {
-      peel += 1
-      // (1) trim to fixpoint: keep edge (u,v) iff u has an in-edge and
-      // v has an out-edge in the active set. TWO trim steps per
-      // checkpoint+count (monotone shrinking, so "unchanged over a
-      // 2-step batch" is still exactly the fixpoint test) — halves the
-      // driver rounds on deep trim tails (depth 9 at sf0.1).
-      // no .distinct() on the semijoin build sides: left_semi dedups by
-      // construction, and the raw projection of a checkpointed frame has
-      // a known (small) size, so it broadcasts instead of shuffling
-      def trimStep(e: DataFrame): DataFrame = e
-        .join(e.select(col("v").as("iid")),
-          col("u") === col("iid"), "left_semi")
-        .join(e.select(col("u").as("oid")),
-          col("v") === col("oid"), "left_semi")
-      active = Fixpoint(active, nActive, nActive, lit(1L), SccTrimRounds,
-        perStep = 2)((e, _) => trimStep(trimStep(e))).frame
-      val (coreVerts, nCore, _) = pinnedSum(
-        active.select(col("u").as("id"))
-          .unionByName(active.select(col("v").as("id"))).distinct(),
-        lit(0L))
-      addLabels(remVerts.join(coreVerts, Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("scc_id")))
-      remVerts = coreVerts
-      if (nCore == 0L) {
-        complete = true
-      } else {
-        // (2) color: synchronous min-propagation with pointer doubling;
-        // the integer color sum is strictly monotone until the fixpoint
-        val (color0, _, cSum) = pinnedSum(
-          coreVerts.select(col("id"), col("id").as("color")), "color")
-        // Fused round: the edge hop, the pointer jump, and the previous
-        // colors union into ONE min aggregation — same least() values, two
-        // left joins fewer per round. The jump join is inner: every color
-        // value is an active vertex id (min over core ids), so the old left
-        // join never produced a null dc; hop targets v are core vertices,
-        // so the union's id set is exactly the color frame's.
-        val color = Fixpoint(color0, nCore, cSum, col("color"),
-            SccColorRounds) { (color, _) =>
-          color
-            .unionByName(active
-              .join(color.select(col("id").as("u"),
-                col("color").as("cu")), Seq("u"))
-              .select(col("v").as("id"), col("cu").as("color")))
-            .unionByName(color.select(col("id"), col("color").as("did"))
-              .join(color.select(col("id").as("did"),
-                col("color").as("dc")), Seq("did"))
-              .select(col("id"), col("dc").as("color")))
-            .groupBy(col("id")).agg(min(col("color")).as("color"))
-        }.frame
-        // (3) flag: backward reach-to-root on same-color edges
-        val sce = active
-          .join(color.select(col("id").as("u"), col("color").as("ucol")),
-            Seq("u"))
-          .join(color.select(col("id").as("v"), col("color").as("vcol")),
-            Seq("v"))
-          .filter(col("ucol") === col("vcol"))
-          .select(col("u"), col("v")).localCheckpoint()
-        def flagStep(fl: DataFrame): DataFrame = fl.unionByName(
-            sce.join(fl.select(col("id").as("v")), Seq("v"))
-              .select(col("u").as("id")))
-          .distinct()
-        val (roots, nRoots, _) = pinnedSum(
-          color.filter(col("id") === col("color")).select(col("id")),
+    var nActive = nE
+    // one peel per round over the unresolved vertices; done when none
+    // is left
+    val fix = Fixpoint(allVerts, nV, nV, lit(1L), SccPeels, Fixpoint.Zero) {
+      (remVerts, peel) =>
+        if (peel > 1) {
+          val (a, n, _) = pinnedSum(active, lit(1L))
+          active = a
+          nActive = n
+        }
+        active = Fixpoint(active, nActive, nActive, lit(1L), SccTrimRounds,
+          perStep = 2)((e, _) => trimStep(trimStep(e))).frame
+        val (coreVerts, nCore, _) = pinnedSum(
+          active.select(col("u").as("id"))
+            .unionByName(active.select(col("v").as("id"))).distinct(),
           lit(0L))
-        val flagged = Fixpoint(roots, nRoots, nRoots, lit(1L),
-          SccFlagRounds, perStep = 2)((fl, _) => flagStep(flagStep(fl)))
-          .frame
-        addLabels(color.join(flagged, Seq("id"), "left_semi")
-          .select(col("id"), col("color").as("scc_id")))
-        val (rv2, nRem, _) = pinnedSum(
-          remVerts.join(flagged, Seq("id"), "left_anti"), lit(0L))
-        remVerts = rv2
-        complete = nRem == 0L
-        if (!complete) {
-          val (a2, nA, _) = pinnedSum(active
+        parts += remVerts.join(coreVerts, Seq("id"), "left_anti")
+          .select(col("id"), col("id").as("scc_id"))
+        if (nCore == 0L) coreVerts
+        else {
+          // (2) color: synchronous min-propagation with pointer
+          // doubling; the integer color sum is strictly monotone until
+          // the fixpoint
+          val (color0, _, cSum) = pinnedSum(
+            coreVerts.select(col("id"), col("id").as("color")), "color")
+          // Fused round: the edge hop, the pointer jump, and the previous
+          // colors union into ONE min aggregation — same least() values,
+          // two left joins fewer per round. The jump join is inner: every
+          // color value is an active vertex id (min over core ids), so the
+          // old left join never produced a null dc; hop targets v are core
+          // vertices, so the union's id set is exactly the color frame's.
+          val color = Fixpoint(color0, nCore, cSum, col("color"),
+              SccColorRounds) { (color, _) =>
+            color
+              .unionByName(active
+                .join(color.select(col("id").as("u"),
+                  col("color").as("cu")), Seq("u"))
+                .select(col("v").as("id"), col("cu").as("color")))
+              .unionByName(color.select(col("id"), col("color").as("did"))
+                .join(color.select(col("id").as("did"),
+                  col("color").as("dc")), Seq("did"))
+                .select(col("id"), col("dc").as("color")))
+              .groupBy(col("id")).agg(min(col("color")).as("color"))
+          }.frame
+          // (3) flag: backward reach-to-root on same-color edges
+          val sce = active
+            .join(color.select(col("id").as("u"), col("color").as("ucol")),
+              Seq("u"))
+            .join(color.select(col("id").as("v"), col("color").as("vcol")),
+              Seq("v"))
+            .filter(col("ucol") === col("vcol"))
+            .select(col("u"), col("v")).localCheckpoint()
+          def flagStep(fl: DataFrame): DataFrame = fl.unionByName(
+              sce.join(fl.select(col("id").as("v")), Seq("v"))
+                .select(col("u").as("id")))
+            .distinct()
+          val (roots, nRoots, _) = pinnedSum(
+            color.filter(col("id") === col("color")).select(col("id")),
+            lit(0L))
+          val flagged = Fixpoint(roots, nRoots, nRoots, lit(1L),
+            SccFlagRounds, perStep = 2)((fl, _) => flagStep(flagStep(fl)))
+            .frame
+          parts += color.join(flagged, Seq("id"), "left_semi")
+            .select(col("id"), col("color").as("scc_id"))
+          active = active
             .join(flagged.select(col("id").as("u")), Seq("u"), "left_anti")
             .join(flagged.select(col("id").as("v")), Seq("v"), "left_anti")
-            .select(col("u"), col("v")), lit(0L))
-          active = a2
-          nActive = nA
+            .select(col("u"), col("v"))
+          coreVerts.join(flagged, Seq("id"), "left_anti")
         }
-      }
     }
-    if (!complete) // bounded-peels honesty: never silently mislabel
-      addLabels(remVerts.select(col("id"),
-        lit(null).cast("long").as("scc_id")))
+    if (!fix.converged) // bounded-peels honesty: never silently mislabel
+      parts += fix.frame.select(col("id"),
+        lit(null).cast("long").as("scc_id"))
     // One pin for the whole accumulator: the memoized frame is read by
     // several keys (labels + sizes in sccLabelsOf, the condensation).
-    (org.apache.spark.sql.graftbridge.SqlBridge.pinned(labels), complete)
+    val labels =
+      if (parts.isEmpty) allVerts.select(col("id"), lit(0L).as("scc_id"))
+      else pinned(parts.reduce(_ unionByName _))
+    (labels, fix.converged)
   }
 
   // The (labels, complete) pair is shared by graph_scc_labels and
@@ -4304,14 +4279,18 @@ object UserGraphQueries {
     * otherwise 1 + max over predecessors. A monotone integer max-prop
     * fixpoint (the X122 argument: Spark iterates with convergence
     * sums bounded by [[TopoRounds]], the oracle unrolls the same —
-    * measured sync depths 5/7/7/2 at sf0.001/0.01/1/10, pinned 12);
-    * `converged` pinned TRUE doubles as an acyclicity audit — a cycle
-    * (= wrong labels) can never reach the fixpoint.
+    * measured depths (max layer) 5/7/17 at sf0.001/0.01/0.1 and 7/2 at
+    * sf1/10; the loop stops one round past the depth, when the layers
+    * are unchanged, so sf0.1 converges on round 18 and the cap is 2×
+    * that). `converged` is computed on both sides — the oracle's is
+    * "no layer differs between its last two rounds", the driver's
+    * unchanged rule at the cap — and doubles as an acyclicity audit: a
+    * cycle (= wrong labels) can never reach the fixpoint.
     *
     * Rides the `_build:scclab` memo + the memoized edge frame; per
     * round one keyed |DAG| join + a combinable max — |SCC|-bounded.
     */
-  private val TopoRounds = 12
+  private val TopoRounds = 36
 
   private def graphTopoLayers(s: SparkSession, dir: String): DataFrame = {
     val (labels, _) = sccLabFrame(s, dir)
@@ -4325,20 +4304,14 @@ object UserGraphQueries {
 
   private def topoLayersFrom(dedges: DataFrame,
       labels: DataFrame): DataFrame = {
-    val sizes = labels.groupBy(col("scc_id"))
-      .agg(count(lit(1)).as("n_members")).localCheckpoint()
-    // Empty-graph guard (the r10 sccPivot NPE class): no SCCs → typed
-    // empty output instead of getLong on a NULL convergence sum.
-    if (sizes.head(1).isEmpty)
-      return sizes.limit(0).select(col("scc_id"), lit(0L).as("layer"),
-        col("n_members"), lit(true).as("converged"))
+    val (sizes, nScc, _) = pinnedSum(labels.groupBy(col("scc_id"))
+      .agg(count(lit(1)).as("n_members")), lit(1L))
     val dag = condense(dedges, labels)
       .select(col("src_scc"), col("dst_scc")).localCheckpoint()
-    val layer0 = sizes.select(col("scc_id"), lit(0L).as("layer"))
-      .localCheckpoint()
-    // monotone non-decreasing integer layers, all 0 at the start
-    val fix = Fixpoint(layer0, Fixpoint.Unprobed, 0L, col("layer"),
-        TopoRounds) { (layer, _) =>
+    // monotone non-decreasing integer layers, all 0 at the start (one
+    // row per pinned `sizes` row); no SCC → no round
+    val fix = Fixpoint(sizes.select(col("scc_id"), lit(0L).as("layer")),
+        nScc, 0L, col("layer"), TopoRounds) { (layer, _) =>
       val cand = dag
         .join(layer.select(col("scc_id").as("src_scc"),
           col("layer").as("pl")), Seq("src_scc"))
@@ -4377,7 +4350,10 @@ object UserGraphQueries {
        |  SELECT scc_id, CAST(0 AS BIGINT) AS layer
        |  FROM (SELECT DISTINCT scc_id FROM slab)),
        |$rounds
-       |SELECT t.scc_id, t.layer, s.n_members, TRUE AS converged
+       |SELECT t.scc_id, t.layer, s.n_members,
+       |  NOT EXISTS (SELECT 1 FROM tp${TopoRounds - 1} a
+       |    JOIN tp$TopoRounds b ON a.scc_id = b.scc_id
+       |    WHERE a.layer <> b.layer) AS converged
        |FROM tp$TopoRounds t
        |JOIN (SELECT scc_id, COUNT(*) AS n_members FROM slab
        |      GROUP BY scc_id) s ON s.scc_id = t.scc_id
@@ -4395,11 +4371,6 @@ object UserGraphQueries {
   // iteration surface ([GH] Graph.java#runVertexCentricIteration) is
   // exactly the loop shape these fixpoints compile to.
   private val TgRounds = 20
-  /** Pinned "can depart any time" sentinel for the departure pivot row:
-    * 2100-01-01T00:00:00Z in epoch µs — beyond any fixture timestamp,
-    * identical literal in both engines.
-    */
-  private val TgDepSentinel = 4102444800000000L
 
   /** The timestamped directed Zipf contact list — the
     * [[zipfDirectedEdgesOf]] sibling that KEEPS per-event times:
@@ -4475,10 +4446,11 @@ object UserGraphQueries {
     * contact frame.
     */
   private[graft] def temporalReachOf(tedges: DataFrame): DataFrame = {
-    val te = tedges.select(col("u"), col("v"), col("t")).localCheckpoint()
+    val (te, nTe, _) = pinnedSum(
+      tedges.select(col("u"), col("v"), col("t")), lit(1L))
     // Empty-graph guard (the r10 sccPivot NPE class).
-    if (te.head(1).isEmpty)
-      return te.limit(0).select(col("u").as("id"),
+    if (nTe == 0L)
+      return te.select(col("u").as("id"),
         col("t").as("arr_us"), lit(true).as("converged"))
     val pivot = te.select(col("u").as("id"))
       .unionByName(te.select(col("v").as("id")))
@@ -4601,76 +4573,70 @@ object UserGraphQueries {
     * anywhere: weights, packs, and labels are exact BIGINTs.
     */
   private[graft] def mstBoruvkaOf(wedges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
     val e = pinned(wedges.select(col("a"), col("b"), col("p")))
-    def unpacked(src: DataFrame, conv: Boolean) = src.select(
-      expr(s"(p div $MstPackE) % $MstPackE").as("a"),
-      expr(s"p % $MstPackE").as("b"),
-      expr(s"p div $MstPackW").as("w"),
-      lit(conv).as("converged"))
-    // Empty-graph guard (the r10 sccPivot NPE class).
-    if (e.head(1).isEmpty) return unpacked(e.limit(0), conv = true)
     var comp = e.select(col("a").as("v"))
       .unionByName(e.select(col("b").as("v")))
       .distinct().select(col("v"), col("v").as("c")).transform(pinned)
+    // the edges between two components under the labels (v, c)
+    def crossOf(labels: DataFrame) = e
+      .join(labels.select(col("v").as("a"), col("c").as("ca")), Seq("a"))
+      .join(labels.select(col("v").as("b"), col("c").as("cb")), Seq("b"))
+      .filter(col("ca") =!= col("cb"))
+      .select(col("p"), col("ca"), col("cb"))
     // Per-round picks accumulate LAZILY (each is a parts-sized agg over
     // that round's pinned cross frame, referenced once at the end) —
     // the per-round `msf = pinned(msf union picks)` form cost one extra
     // driver action per round for a frame nothing reads until the end
     // (r17 action-count trim; actions are this loop's wall clock).
     val msfParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val msfEmpty = e.limit(0).select(col("p"))
-    var rounds = 0
-    var more = true
-    while (more && rounds < MstRounds) {
-      val (cross, nCross, _) = pinnedSum(e
-        .join(comp.select(col("v").as("a"), col("c").as("ca")), Seq("a"))
-        .join(comp.select(col("v").as("b"), col("c").as("cb")), Seq("b"))
-        .filter(col("ca") =!= col("cb"))
-        .select(col("p"), col("ca"), col("cb")), lit(0L))
-      if (nCross == 0L) more = false
-      else {
-        val picks = cross.select(col("ca").as("c"), col("p"))
-          .unionByName(cross.select(col("cb").as("c"), col("p")))
-          .groupBy(col("c")).agg(min(col("p")).as("p"))
-        msfParts += picks.select(col("p")).distinct()
-        // Hook pointers: comp → the picked edge's other component.
-        val pr = picks.join(cross, Seq("p"))
-          .select(col("c"), when(col("ca") === col("c"), col("cb"))
-            .otherwise(col("ca")).as("par"))
-        // Break the pseudo-forest 2-cycles at the min-id root, then
-        // pointer-double to the roots (joins always match: par values
-        // are themselves picking components). The loop is EARLY-STOPPED
-        // and every checkpoint goes through [[SqlBridge.pinned]]: plain
-        // localCheckpoint carries the SYMBOLIC sizeInBytes product
-        // through, so self-joins that feed back into the next round
-        // compound it to a 2^(rounds·jumps)-digit BigInteger and the
-        // driver stalls multiplying it (measured: minutes at sf1) —
-        // pinned restarts the estimate chain from the real row count.
-        val (par0, nPar, _) = pinnedSum(pr.as("x")
-          .join(pr.as("y"), col("x.par") === col("y.c"))
-          .select(col("x.c").as("c"),
-            when(col("y.par") === col("x.c") && col("x.c") < col("x.par"),
-              col("x.c")).otherwise(col("x.par")).as("par")), lit(0L))
-        // the self-join always matches (par values are picking
-        // components) and keys are preserved, so "some pointer moved" is
-        // exactly sum(y.par != x.par) over the same join
-        val par = Fixpoint(par0, nPar, 0L, col("moved"), MstJumps,
-            Fixpoint.Zero) { (par, _) =>
-          par.as("x")
-            .join(par.as("y"), col("x.par") === col("y.c"))
-            .select(col("x.c").as("c"), col("y.par").as("par"),
-              (col("y.par") =!= col("x.par")).cast("long").as("moved"))
-        }.frame.select(col("c"), col("par"))
-        comp = pinned(comp.join(par, Seq("c"), "left")
-          .select(col("v"), coalesce(col("par"), col("c")).as("c")))
-        rounds += 1
-      }
+    val (cross0, nCross0, _) = pinnedSum(crossOf(comp), lit(1L))
+    // one contraction per round; done when no cross edge is left (an
+    // empty graph starts done)
+    val fix = Fixpoint(cross0, nCross0, nCross0, lit(1L), MstRounds,
+        Fixpoint.Zero) { (cross, _) =>
+      val picks = cross.select(col("ca").as("c"), col("p"))
+        .unionByName(cross.select(col("cb").as("c"), col("p")))
+        .groupBy(col("c")).agg(min(col("p")).as("p"))
+      msfParts += picks.select(col("p")).distinct()
+      // Hook pointers: comp → the picked edge's other component.
+      val pr = picks.join(cross, Seq("p"))
+        .select(col("c"), when(col("ca") === col("c"), col("cb"))
+          .otherwise(col("ca")).as("par"))
+      // Break the pseudo-forest 2-cycles at the min-id root, then
+      // pointer-double to the roots (joins always match: par values
+      // are themselves picking components). The loop is EARLY-STOPPED
+      // and every checkpoint goes through [[SqlBridge.pinned]]: plain
+      // localCheckpoint carries the SYMBOLIC sizeInBytes product
+      // through, so self-joins that feed back into the next round
+      // compound it to a 2^(rounds·jumps)-digit BigInteger and the
+      // driver stalls multiplying it (measured: minutes at sf1) —
+      // pinned restarts the estimate chain from the real row count.
+      val (par0, nPar, _) = pinnedSum(pr.as("x")
+        .join(pr.as("y"), col("x.par") === col("y.c"))
+        .select(col("x.c").as("c"),
+          when(col("y.par") === col("x.c") && col("x.c") < col("x.par"),
+            col("x.c")).otherwise(col("x.par")).as("par")), lit(0L))
+      // the self-join always matches (par values are picking
+      // components) and keys are preserved, so "some pointer moved" is
+      // exactly sum(y.par != x.par) over the same join
+      val par = Fixpoint(par0, nPar, 0L, col("moved"), MstJumps,
+          Fixpoint.Zero) { (par, _) =>
+        par.as("x")
+          .join(par.as("y"), col("x.par") === col("y.c"))
+          .select(col("x.c").as("c"), col("y.par").as("par"),
+            (col("y.par") =!= col("x.par")).cast("long").as("moved"))
+      }.frame.select(col("c"), col("par"))
+      comp = pinned(comp.join(par, Seq("c"), "left")
+        .select(col("v"), coalesce(col("par"), col("c")).as("c")))
+      crossOf(comp)
     }
     val msf =
-      if (msfParts.isEmpty) msfEmpty
+      if (msfParts.isEmpty) e.limit(0).select(col("p"))
       else msfParts.reduce(_ unionByName _)
-    unpacked(msf, conv = !more).orderBy(col("a"), col("b"))
+    msf.select(expr(s"(p div $MstPackE) % $MstPackE").as("a"),
+        expr(s"p % $MstPackE").as("b"), expr(s"p div $MstPackW").as("w"),
+        lit(fix.converged).as("converged"))
+      .orderBy(col("a"), col("b"))
   }
 
   /** Shared Borůvka oracle CTE chain (ends at `msel`, the packed MSF
@@ -4784,13 +4750,9 @@ object UserGraphQueries {
     */
   private[graft] def misOf(canEdges: DataFrame,
       prio: Column => Column = misPriority): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
     val can = canEdges.select(col("a"), col("b"))
     val und = pinned(can.select(col("a").as("u"), col("b").as("v"))
       .unionByName(can.select(col("b").as("u"), col("a").as("v"))))
-    val empty = und.limit(0).select(col("u").as("id"),
-      lit(0L).as("round"), lit(true).as("converged"))
-    if (und.head(1).isEmpty) return empty
     // (v, p) actives; priorities carried so rounds never rehash.
     val (active0, n0, _) = pinnedSum(und.select(col("u").as("v"))
       .distinct().select(col("v"), prio(col("v")).as("p")), lit(0L))
@@ -4945,11 +4907,13 @@ object UserGraphQueries {
     */
   private[graft] def coloringOf(canEdges: DataFrame,
       prio: Option[Column => Column] = None): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
     val can = canEdges.select(col("a"), col("b"))
-    val und = pinned(can.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(can.select(col("b").as("u"), col("a").as("v"))))
-    val nEdges = can.count()
+    // each edge is two rows of `und`
+    val (und, nUnd, _) = pinnedSum(
+      can.select(col("a").as("u"), col("b").as("v"))
+        .unionByName(can.select(col("b").as("u"), col("a").as("v"))),
+      lit(1L))
+    val nEdges = nUnd / 2L
     // ONE state frame (v, p, color: null = uncolored) — two driver
     // actions per round (pin + drained probe) instead of the naive
     // four (newly/colored/active pins + probe); at 27 rounds (sf0.1)
@@ -4963,7 +4927,7 @@ object UserGraphQueries {
     // at every SF (tools/sim_color.py — the invariants are
     // priority-generic, the numbers are not). Tests inject explicit
     // priorities through `prio`.
-    val st = pinned(prio match {
+    val (st, nVerts, _) = pinnedSum(prio match {
       case Some(p) =>
         und.select(col("u").as("v")).distinct()
           .select(col("v"), p(col("v")).as("p"),
@@ -4989,8 +4953,7 @@ object UserGraphQueries {
           ((lit(65535L) - col("d")) * lit(ColorDegScale) +
             colPriority(col("v"))).as("p"),
           lit(null).cast("long").as("color"))
-    })
-    val nVerts = st.count()
+    }, lit(1L))
     // One synchronous JP round: color every active vertex whose priority
     // is the strict min among active neighbors with the mex of its
     // colored neighbors' colors. Pure plan function — batched TWO per
@@ -5236,7 +5199,6 @@ object UserGraphQueries {
     * SqlBridge.pinned. Zero FP.
     */
   private[graft] def matchingOf(wedges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
     val (live0, nLive0, _) =
       pinnedSum(wedges.select(col("a"), col("b"), col("p")), lit(0L))
     def unpacked(src: DataFrame, conv: Boolean) = src.select(
@@ -5435,7 +5397,6 @@ object UserGraphQueries {
     */
   private def refineRounds(und: DataFrame, wv: DataFrame,
       assign0: DataFrame, cap: Long, rounds: Int): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinned
     // r18 FUSED round (guide §2.4, the louvainMoveRounds shape): the
     // assignment carries the vertex weight, and ONE und ⋈ assign join +
     // a two-level aggregation computes conn(q), conn(own), and the
@@ -5492,7 +5453,6 @@ object UserGraphQueries {
   }
 
   private def partitionFrom(canIn: DataFrame, m1: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinned
     val can = canIn
     val verts = can.select(col("a").as("v"))
       .unionByName(can.select(col("b").as("v"))).distinct()
@@ -5879,32 +5839,28 @@ object UserGraphQueries {
     * density is published on the same integer grid the argmax used.
     */
   private[graft] def densestOf(canEdges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
-    var live = pinned(canEdges.select(col("a"), col("b")))
+    val (live0, ne0, _) = pinnedSum(canEdges.select(col("a"), col("b")),
+      lit(1L))
     def undDeg(e: DataFrame) = e.select(col("a").as("v"))
       .unionByName(e.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
-    val empty = live.limit(0).select(col("a").as("id"),
-      lit(0L).as("deg_in"), lit(0L).as("nv"), lit(0L).as("ne"),
-      lit(0L).as("density_e9"), lit(true).as("converged"))
-    if (live.head(1).isEmpty) return empty
+    if (ne0 == 0L)
+      return live0.select(col("a").as("id"), lit(0L).as("deg_in"),
+        lit(0L).as("nv"), lit(0L).as("ne"), lit(0L).as("density_e9"),
+        lit(true).as("converged"))
+    // every round's (round, nv, ne, live) state; the degree pin gives nv
+    // as its rows and ne as half its degree sum (each edge adds two)
     var states = List.empty[(Int, Long, Long, DataFrame)]
-    var r = 0
-    var drained = false
-    var ne = live.count()
-    while (!drained && r < DsRounds) {
-      // per round TWO fused jobs (round 14): deg pin+count, and the
-      // peeled live pin+count (the next round's ne and the drain test)
-      val (deg, nv, _) = pinnedSum(undDeg(live), lit(0L))
-      states ::= ((r, nv, ne, live))
-      val keep = deg.filter(col("d") * nv > 2L * ne).select(col("v"))
-      val (l2, ne2, _) = pinnedSum(live
-        .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("v").as("b")), Seq("b"), "left_semi"),
-        lit(0L))
-      live = l2; ne = ne2
-      drained = ne == 0L
-      r += 1
+    // drained when no live edge is left
+    val fix = Fixpoint(live0, ne0, ne0, lit(1L), DsRounds, Fixpoint.Zero) {
+      (live, round) =>
+        val (deg, nv, dSum) = pinnedSum(undDeg(live), col("d"))
+        val ne = dSum / 2L
+        states ::= ((round - 1, nv, ne, live))
+        val keep = deg.filter(col("d") * nv > 2L * ne).select(col("v"))
+        live
+          .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
+          .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
     }
     val best = states.minBy { case (s, nv, ne, _) =>
       (-(ne * DsScale / nv), s) // max quantized density, then min round
@@ -5914,7 +5870,7 @@ object UserGraphQueries {
       .select(col("v").as("id"), col("d").as("deg_in"),
         lit(bnv).as("nv"), lit(bne).as("ne"),
         lit(bne * DsScale / bnv).as("density_e9"),
-        lit(drained).as("converged"))
+        lit(fix.converged).as("converged"))
       .orderBy(col("id"))
   }
 
@@ -6009,14 +5965,14 @@ object UserGraphQueries {
       msf: DataFrame): DataFrame = {
     val s = wedges.sparkSession
     import s.implicits._
-    val e = wedges.select(col("a"), col("b"), col("w")).localCheckpoint()
-    val empty = Seq.empty[(Long, Long, Long, Long, Long)]
-      .toDF("decile", "w_threshold", "n_edges_leq", "n_msf_leq",
-        "n_components")
-    if (e.head(1).isEmpty) return empty
+    val (e, nE, _) = pinnedSum(
+      wedges.select(col("a"), col("b"), col("w")), lit(1L))
+    if (nE == 0L)
+      return Seq.empty[(Long, Long, Long, Long, Long)]
+        .toDF("decile", "w_threshold", "n_edges_leq", "n_msf_leq",
+          "n_components")
     val nV = e.select(col("a").as("v"))
       .unionByName(e.select(col("b").as("v"))).distinct().count()
-    val nE = e.count()
     // nearest-rank deciles of the weight distribution, distributed
     val ranks = (1 to 10).map(d => (d.toLong * nE + 9L) / 10L).toSet
     val ths = e.select(col("w")).orderBy(col("w")).rdd

@@ -38,7 +38,6 @@ object Streams {
   final val WindowTopK = 3
 
   def windowTopk(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val agg = events
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
@@ -907,59 +906,28 @@ object Streams {
       // seeded with the state-dropped docs
       val be = DedupQueries.verifiedDupEdges(s, bhs, bhs, cross = false)
         .localCheckpoint()
-      import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
-      val (bIds, nDocs, _) = pinnedSum(
-        bhs.select(col("doc_id").as("v")), lit(0L))
-      var keptF = bIds.limit(0)
-      var droppedF = stateHits.select(col("doc_id").as("v"))
-        .localCheckpoint()
-      var converged = nDocs == 0L
-      var r = 0
-      while (!converged && r < DedupQueries.sdmCloseRounds) {
-        r += 1
-        val dNext = ve2(be, keptF)
-          .unionByName(stateHits.select(col("doc_id").as("v")))
-          .distinct()
-        val kNext = bIds
-          .join(stateHits.select(col("doc_id").as("v")), Seq("v"),
-            "left_anti")
-          .join(be.join(droppedF.withColumnRenamed("v", "small"),
-              Seq("small"), "left_anti")
-            .select(col("big").as("v")), Seq("v"), "left_anti")
-        val (k2, nK, _) = pinnedSum(kNext, lit(0L))
-        val (d2, nD, _) = pinnedSum(dNext, lit(0L))
-        keptF = k2
-        droppedF = d2
-        converged = nK + nD == nDocs
-      }
+      val fix = DedupQueries.keepFirstOf(bhs.select(col("doc_id").as("v")),
+        be, stateHits.select(col("doc_id").as("v")))
+      val kept = fix.frame.filter(col("st") === "kept")
+        .select(col("v").as("doc_id"))
       val batchDup = be
-        .join(keptF.withColumnRenamed("v", "small"), Seq("small"),
+        .join(kept.select(col("doc_id").as("small")), Seq("small"),
           "left_semi")
         .groupBy(col("big").as("doc_id"))
         .agg(min(col("small")).as("batch_dup"))
+      // an unshingled doc has no status row and is kept
       val newVerdicts = ids
-        .join(bIds.select(col("v").as("doc_id"))
-          .withColumn("shingled", lit(true)), Seq("doc_id"), "left")
-        .join(keptF.select(col("v").as("doc_id"))
-          .withColumn("k", lit(true)), Seq("doc_id"), "left")
+        .join(fix.frame.select(col("v").as("doc_id"),
+          (col("st") === "kept").as("k")), Seq("doc_id"), "left")
         .join(stateHits, Seq("doc_id"), "left")
         .join(batchDup, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          (col("shingled").isNull || coalesce(col("k"), lit(false)))
-            .as("kept"),
+        .select(col("doc_id"), coalesce(col("k"), lit(true)).as("kept"),
           least(col("state_dup"), col("batch_dup")).as("dup_of"),
-          lit(converged).as("converged"))
-      val keptNew = bhs.join(keptF.select(col("v").as("doc_id")),
-        Seq("doc_id"), "left_semi")
+          lit(fix.converged).as("converged"))
+      val keptNew = bhs.join(kept, Seq("doc_id"), "left_semi")
       LshState(st.keptHs.unionByName(keptNew).localCheckpoint(),
         st.verdicts.unionByName(newVerdicts).localCheckpoint(), batchMax)
     }
-
-    /** Dropped wave: batch docs with a kept smaller batch partner. */
-    private def ve2(be: DataFrame, keptF: DataFrame): DataFrame = be
-      .join(keptF.withColumnRenamed("v", "small"), Seq("small"),
-        "left_semi")
-      .select(col("big").as("v")).distinct()
 
     /** Verdicts for every doc seen so far (total order for comparison
       * against the batch twin over the same prefix).

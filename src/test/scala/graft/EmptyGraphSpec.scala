@@ -63,6 +63,7 @@ class EmptyGraphSpec extends GraftSuite {
     val noDir = Seq.empty[(Long, Long)].toDF("u", "v")
     val noT = Seq.empty[(Long, Long, Long)].toDF("u", "v", "t")
     val noW = Seq.empty[(Long, Long, Long)].toDF("a", "b", "p")
+    val noWt = Seq.empty[(Long, Long, Long)].toDF("a", "b", "w")
     val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val hs = DedupQueries.shingleSetsOf(docs)
     // (seam, its output on empty input, rows): every pinned fixpoint
@@ -86,6 +87,13 @@ class EmptyGraphSpec extends GraftSuite {
       ("mis", () => U.misOf(empty), 0L),
       ("coloring", () => U.coloringOf(empty), 1L),
       ("matching", () => U.matchingOf(noW), 0L),
+      ("densest", () => U.densestOf(empty), 0L),
+      ("percolation", () => U.percolationOf(noWt, noWt), 0L),
+      ("lsh dedup empty batch", () => {
+        val m = new Streams.LshDedupMaintainer(spark)
+        m.applyBatch(docs)
+        m.current
+      }, 0L),
       ("cc fold", () => Streams.ccFold(Streams.ccEmptyState(spark),
         noDir)._1, 0L))
     for ((name, out, n) <- table)

@@ -5,25 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lint for the one convergence loop: a `while` that tests a round
   * cap, or that pins with `pinnedSum` in its body, exists in src/main only
-  * inside `graft.util.Fixpoint` and in the loops named below, so no pinned
-  * fixpoint is hand-rolled again.
+  * inside `graft.util.Fixpoint`, so no pinned fixpoint is hand-rolled again.
   */
 class FixpointLintSpec extends AnyFunSuite {
   import SourceLint.{code, root, scalaFiles, span}
-
-  /** The loops left hand-rolled, by file and the cap their `while` tests.
-    * Their round is not one pinned frame, or it advances two frames.
-    */
-  private val handRolled = Set(
-    // SCC peel: trim, color and flag fixpoints plus three pins per peel
-    "UserGraphQueries.scala" -> "SccPeels",
-    // Borůvka: the cross pin, the picks and a pointer-jump fixpoint
-    "UserGraphQueries.scala" -> "MstRounds",
-    // densest subgraph: two pins per round, and every round's state kept
-    "UserGraphQueries.scala" -> "DsRounds",
-    // the kept/dropped dedup closure and its streaming twin: two frames
-    "DedupQueries.scala" -> "SdmCloseRounds",
-    "Streams.scala" -> "sdmCloseRounds")
 
   private val capWord = """\b\w*(?:Rounds|Cap|Peels|Jumps)\b""".r
 
@@ -50,20 +35,14 @@ class FixpointLintSpec extends AnyFunSuite {
     Loop(f.getName, line, capWord.findFirstIn(src.substring(m.end, i)), body)
   }
 
-  test("a while tests a round cap only in Fixpoint and the named loops") {
-    val capped = loops.filter(_.cap.nonEmpty)
-    val stray = capped.filterNot(l => handRolled(l.file -> l.cap.get))
+  test("a while tests a round cap only in Fixpoint") {
+    val stray = loops.filter(_.cap.nonEmpty)
     assert(stray.isEmpty, "hand-rolled convergence loops (use Fixpoint): " +
       stray.map(l => s"${l.file}:${l.line} (${l.cap.get})"))
-    val found = capped.map(l => l.file -> l.cap.get)
-    for (h <- handRolled)
-      assert(found.count(_ == h) === 1, s"named loop $h not found once")
   }
 
-  test("pinnedSum runs inside a while body only in the named loops") {
-    val stray = loops.filter(l =>
-      l.body.exists(_.contains("pinnedSum")) &&
-        !l.cap.exists(c => handRolled(l.file -> c)))
+  test("pinnedSum runs inside no while body") {
+    val stray = loops.filter(_.body.exists(_.contains("pinnedSum")))
     assert(stray.isEmpty, "pinnedSum in a hand-rolled loop body: " +
       stray.map(l => s"${l.file}:${l.line}"))
   }
@@ -71,16 +50,18 @@ class FixpointLintSpec extends AnyFunSuite {
   test("every migrated fixpoint calls Fixpoint") {
     val ugq = new File(root, "graft/queries/UserGraphQueries.scala")
     val streams = new File(root, "graft/streaming/Streams.scala")
+    val dq = new File(root, "graft/queries/DedupQueries.scala")
     val sites = Seq(
       ugq -> "def louvainMergeRounds(" -> 1, ugq -> "def intraCcOf(" -> 1,
       ugq -> "def leidenDrain(" -> 1, ugq -> "def kcorePeelOf(" -> 1,
       ugq -> "def corenessOf(" -> 1, ugq -> "def tipDecomposeOf(" -> 1,
       ugq -> "def wingDecomposeOf(" -> 1, ugq -> "def trussDecomposeOf(" -> 1,
       ugq -> "def trussnessOf(" -> 1, ugq -> "def sccPivotOf(" -> 1,
-      ugq -> "def sccLabelRawOf(" -> 3, ugq -> "def topoLayersFrom(" -> 1,
-      ugq -> "def temporalReachOf(" -> 1, ugq -> "def mstBoruvkaOf(" -> 1,
+      ugq -> "def sccLabelRawOf(" -> 4, ugq -> "def topoLayersFrom(" -> 1,
+      ugq -> "def temporalReachOf(" -> 1, ugq -> "def mstBoruvkaOf(" -> 2,
       ugq -> "def misOf(" -> 1, ugq -> "def coloringOf(" -> 1,
-      ugq -> "def matchingOf(" -> 1, streams -> "def ccFold(" -> 1)
+      ugq -> "def matchingOf(" -> 1, ugq -> "def densestOf(" -> 1,
+      dq -> "def keepFirstOf(" -> 1, streams -> "def ccFold(" -> 1)
     for (((f, decl), n) <- sites) {
       val src = code(f)
       val at = src.indexOf(decl)
