@@ -131,41 +131,9 @@ object Bench {
     // sorted order to touch the memoized fact-join / GraphX / CC /
     // shingle-hash artifacts (judge r3 item #5). Skipped under a key
     // filter, where first-touch cost is exactly what's being profiled.
-    val builds = if (keys.isDefined) Seq.empty else Seq(
-      timed("_build:gtrade")(sources.GTrade.warm(spark, sfDir)),
-      timed("_build:graphx")(queries.IterQueries.warmGraphX(spark, sfDir)),
-      timed("_build:guser")(queries.UserGraphQueries.warm(spark, sfDir)),
-      timed("_build:probehist")(
-        queries.UserGraphQueries.warmProbeHist(spark, sfDir)),
-      timed("_build:walks")(queries.UserGraphQueries.warmWalks(spark, sfDir)),
-      timed("_build:zipf")(queries.UserGraphQueries.warmZipf(spark, sfDir)),
-      timed("_build:match")(
-        queries.UserGraphQueries.warmMatch(spark, sfDir)),
-      timed("_build:mst")(queries.UserGraphQueries.warmMst(spark, sfDir)),
-      timed("_build:louvain")(
-        queries.UserGraphQueries.warmLouvain(spark, sfDir)),
-      timed("_build:leiden")(
-        queries.UserGraphQueries.warmLeiden(spark, sfDir)),
-      timed("_build:scclab")(
-        queries.UserGraphQueries.warmSccLabels(spark, sfDir)),
-      timed("_build:cc")(queries.IterQueries.warmCc(spark, sfDir)),
-      timed("_build:lp")(queries.IterQueries.warmLp(spark, sfDir)),
-      timed("_build:shingles")(
-        queries.DedupQueries.warmShingles(spark, sfDir)),
-      timed("_build:norms")(queries.SimQueries.warmNorms(spark, sfDir)),
-      timed("_build:ivf")(queries.SimQueries.warmIvf(spark, sfDir)),
-      timed("_build:pqcodes")(queries.SimQueries.warmPqCodes(spark, sfDir)),
-      timed("_build:adcscored")(
-        queries.SimQueries.warmAdcScored(spark, sfDir)),
-      timed("_build:embpairs")(queries.SimQueries.warmEmbPairs(spark, sfDir)),
-      timed("_build:bpe")(queries.TextQueries.warmBpe(spark, sfDir)),
-      timed("_build:pairs")(queries.DedupQueries.warmPairs(spark, sfDir)),
-      timed("_build:dclusters")(
-        queries.DedupQueries.warmClusters(spark, sfDir)),
-      timed("_build:copurchase")(
-        queries.NetworkQueries.warmCopurchase(spark, sfDir)),
-      timed("_build:itemcos")(
-        queries.NetworkQueries.warmItemCos(spark, sfDir)))
+    val builds = if (keys.isDefined) Seq.empty else Caches.builds.map {
+      case (name, warm) => timed(s"_build:$name")(warm(spark, sfDir))
+    }
     // Sorted key order: Map hash order shifts whenever a key is added,
     // moving shared first-touch materialization costs onto different
     // queries and breaking round-over-round comparability.

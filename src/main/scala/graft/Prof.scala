@@ -69,48 +69,13 @@ object Prof {
     spark.range(1000000L).selectExpr("id % 97 AS k", "id AS v")
       .groupBy("k").count().count()
 
-    def bodyOf(entry: String): () => Unit = entry match {
-      case "_build:gtrade" => () => sources.GTrade.warm(spark, sfDir)
-      case "_build:graphx" => () => queries.IterQueries.warmGraphX(spark, sfDir)
-      case "_build:guser" => () => queries.UserGraphQueries.warm(spark, sfDir)
-      case "_build:probehist" =>
-        () => queries.UserGraphQueries.warmProbeHist(spark, sfDir)
-      case "_build:louvain" =>
-        () => queries.UserGraphQueries.warmLouvain(spark, sfDir)
-      case "_build:leiden" =>
-        () => queries.UserGraphQueries.warmLeiden(spark, sfDir)
-      case "_build:scclab" =>
-        () => queries.UserGraphQueries.warmSccLabels(spark, sfDir)
-      case "_build:mst" => () => queries.UserGraphQueries.warmMst(spark, sfDir)
-      case "_build:match" =>
-        () => queries.UserGraphQueries.warmMatch(spark, sfDir)
-      case "_build:lp" => () => queries.IterQueries.warmLp(spark, sfDir)
-      case "_build:cc" => () => queries.IterQueries.warmCc(spark, sfDir)
-      case "_build:shingles" =>
-        () => queries.DedupQueries.warmShingles(spark, sfDir)
-      case "_build:pairs" => () => queries.DedupQueries.warmPairs(spark, sfDir)
-      case "_build:dclusters" =>
-        () => queries.DedupQueries.warmClusters(spark, sfDir)
-      case "_build:copurchase" =>
-        () => queries.NetworkQueries.warmCopurchase(spark, sfDir)
-      case "_build:itemcos" =>
-        () => queries.NetworkQueries.warmItemCos(spark, sfDir)
-      case "_build:norms" => () => queries.SimQueries.warmNorms(spark, sfDir)
-      case "_build:ivf" => () => queries.SimQueries.warmIvf(spark, sfDir)
-      case "_build:pqcodes" =>
-        () => queries.SimQueries.warmPqCodes(spark, sfDir)
-      case "_build:adcscored" =>
-        () => queries.SimQueries.warmAdcScored(spark, sfDir)
-      case "_build:embpairs" =>
-        () => queries.SimQueries.warmEmbPairs(spark, sfDir)
-      case "_build:bpe" => () => queries.TextQueries.warmBpe(spark, sfDir)
-      case "_build:walks" =>
-        () => queries.UserGraphQueries.warmWalks(spark, sfDir)
-      case "_build:zipf" => () => queries.UserGraphQueries.warmZipf(spark, sfDir)
-      case k =>
-        // For a plain key, pre-warm its shared builds are NOT run — pass
-        // a `_build:` entry first in a separate invocation if needed.
-        () => { queries.Registry.byKey(k).fn(spark, sfDir).count(); () }
+    def bodyOf(entry: String): () => Unit = Caches.builds.collectFirst {
+      case (name, warm) if entry == s"_build:$name" =>
+        () => warm(spark, sfDir)
+    }.getOrElse {
+      // For a plain key, pre-warm its shared builds are NOT run — pass
+      // a `_build:` entry first in a separate invocation if needed.
+      () => { queries.Registry.byKey(entry).fn(spark, sfDir).count(); () }
     }
 
     entries.init.foreach(e => bodyOf(e)())

@@ -6,6 +6,7 @@ import org.apache.spark.graphx.{Edge => GXEdge, EdgeDirection => GXDir,
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
   SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
 import scala.reflect.ClassTag
 
 /** Vertex-centric iteration (SURVEY §2.6) — the Spark-native equivalent of
@@ -270,13 +271,12 @@ object GraphAlgorithms {
     * a GraphX Pregel whose per-message `Map[label,count]` merge was
     * O(degree²) allocation on high-degree hubs — the relational
     * count/argmax is a hash aggregation with map-side partial combine, the
-    * plan a 1000-executor cluster wants. `localCheckpoint` every round
-    * truncates the iterative lineage (SURVEY §7.3.4).
+    * plan a 1000-executor cluster wants. A pin every round truncates the
+    * iterative lineage (SURVEY §7.3.4).
     */
   def labelPropagation(s: SparkSession, g: graft.Graph,
                        maxIterations: Int): DataFrame = {
-    var labels = g.vertices.select(col("id"), col("id").as("label"))
-      .localCheckpoint()
+    val labels0 = pinned(g.vertices.select(col("id"), col("id").as("label")))
     // Hash-partition the persisted edge list by `src` — the per-round join
     // key — and by data size: the AQE-coalesced source can collapse to a
     // couple of partitions (serializing every round's map side), and a
@@ -287,9 +287,9 @@ object GraphAlgorithms {
     val parts = sizedParts(s, ends0.count())
     val ends = ends0.repartition(parts, col("src")).persist()
     ends.count()
-    for (_ <- 1 to maxIterations) {
+    val labels = (1 to maxIterations).foldLeft(labels0) { (cur, _) =>
       val counts = ends
-        .join(labels.withColumnRenamed("id", "src"), Seq("src"))
+        .join(cur.withColumnRenamed("id", "src"), Seq("src"))
         .groupBy(col("dst").as("vid"), col("label"))
         .agg(count(lit(1)).as("c"))
       // argmax by (count DESC, label ASC) as a single hash aggregation:
@@ -300,14 +300,12 @@ object GraphAlgorithms {
         .groupBy(col("vid"))
         .agg(max_by(col("label"), struct(col("c"), -col("label"))).as("next"))
         .select(col("vid").as("id"), col("next"))
-      labels = labels.join(winners, Seq("id"), "left_outer")
-        .select(col("id"),
-          coalesce(col("next"), col("label")).as("label"))
-        // Materialize EVERY round: labels_{k-1} appears twice in round k's
-        // plan (the join side and inside winners), so a lazy loop doubles
-        // the plan per round — measured 2× slower by round 5. The eager
-        // cut also truncates lineage (SURVEY §7.3.4).
-        .localCheckpoint()
+      // Materialize EVERY round: labels_{k-1} appears twice in round k's
+      // plan (the join side and inside winners), so a lazy loop doubles
+      // the plan per round — measured 2× slower by round 5. The pin also
+      // truncates lineage (SURVEY §7.3.4).
+      pinned(cur.join(winners, Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("next"), col("label")).as("label")))
     }
     ends.unpersist(blocking = false)
     labels
@@ -342,7 +340,7 @@ object GraphAlgorithms {
     * the same barrier count but compounded plan DEPTH — each round's
     * InMemoryTableScan embedded the previous round's cached plan via
     * innerChildren, and AQE's per-stage plan-description events spent
-    * ~10 s/run stringifying the growing tree; the localCheckpoint pin
+    * ~10 s/run stringifying the growing tree; the pin
     * keeps every round's plan constant-size: 16-18 s → 9.3 s same-box.)
     * Long sums bound: norm ≤ |E|·10⁹, exact in a double up to |E| ≈
     * 2⁵³/10⁹ ≈ 9 × 10⁶ edges per run at this scale constant — GUARDED by
@@ -399,7 +397,7 @@ object GraphAlgorithms {
     // lineage cuts). The non-empty guards above make the 1-row result
     // total and non-null (edges exist and hub scores start positive).
     def renorm(sums: DataFrame, out: String): DataFrame = {
-      // pinnedSum = localCheckpoint + one fused count/sum job — same
+      // pinnedSum = lineage cut + one fused count/sum job — same
       // one-job-per-half-round barrier budget as the r8 persist+first()
       // form, but the score frame's plan is a SHALLOW LogicalRDD. The
       // persist() form compounded: round k's InMemoryTableScan embeds
@@ -417,8 +415,7 @@ object GraphAlgorithms {
       // exchange was also measured SLOWER (19.0 s vs 22.8–23.1 s
       // same-box A/B, r8): doubling the map-side agg groups costs more
       // than the avoided 1-row exchange on the persisted frame.
-      val (sm, _, total) =
-        org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum(sums, col("s"))
+      val (sm, _, total) = pinnedSum(sums, col("s"))
       val nrm = total.toDouble
       sm.select(col("id"),
         floor(col("s").cast("double") / lit(nrm) *
@@ -437,9 +434,9 @@ object GraphAlgorithms {
         "hv")
     }
     // single zero-fill against the vertex set (scores were kept sparse);
-    // the eager cut lets every persisted intermediate be released before
+    // the pin lets every persisted intermediate be released before
     // returning — the caller gets a self-contained |V|-row frame.
-    val out = ids.join(hubs, Seq("id"), "left_outer")
+    val out = pinned(ids.join(hubs, Seq("id"), "left_outer")
       .join(auths, Seq("id"), "left_outer")
       .select(col("id"),
         coalesce(col("hv"), lit(0L)).as("hub_scaled"),
@@ -447,8 +444,7 @@ object GraphAlgorithms {
         (coalesce(col("hv"), lit(0L)).cast("double") /
           lit(1000000000.0)).as("hub"),
         (coalesce(col("av"), lit(0L)).cast("double") /
-          lit(1000000000.0)).as("auth"))
-      .localCheckpoint()
+          lit(1000000000.0)).as("auth")))
     Seq(bySrc, byDst).foreach(_.unpersist(blocking = false))
     out
   }
@@ -459,7 +455,7 @@ object GraphAlgorithms {
     * harmonic centrality. Frontier state is the FULL visited set keyed
     * (lm, id) with min-dist semantics (the bounded-CC relaxation pattern,
     * per-landmark), so each round is one |E|-join + one map-side-
-    * combinable min-agg; `localCheckpoint` every round cuts the doubled
+    * combinable min-agg; a pin every round cuts the doubled
     * lineage exactly like the CC/PageRank loops above.
     *
     * Scale: state is O(|L|·|V|) rows of three longs — the standard
@@ -472,15 +468,13 @@ object GraphAlgorithms {
   def landmarkDistances(edges: DataFrame, landmarks: DataFrame,
                         iters: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-    var d = landmarks.select(col("id").as("lm"), col("id"),
-      lit(0L).as("dist")).localCheckpoint()
-    for (_ <- 1 to iters) {
+    val d0 = pinned(landmarks.select(col("id").as("lm"), col("id"),
+      lit(0L).as("dist")))
+    (1 to iters).foldLeft(d0) { (d, _) =>
       val hop = d.join(e, d("id") === e("src"))
         .select(col("lm"), e("dst").as("id"), (col("dist") + 1L).as("dist"))
-      d = d.unionByName(hop)
-        .groupBy(col("lm"), col("id")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
+      pinned(d.unionByName(hop)
+        .groupBy(col("lm"), col("id")).agg(min(col("dist")).as("dist")))
     }
-    d
   }
 }

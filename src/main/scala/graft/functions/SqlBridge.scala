@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.lit
 
 object SqlBridge {
   /** Wrap a Catalyst expression as a user-facing Column. */
@@ -19,97 +20,65 @@ object SqlBridge {
   /** Extract the Catalyst expression from a Column. */
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Eager localCheckpoint with MEASURED statistics instead of the
-    * symbolic stats rewrite `Dataset.checkpoint` performs.
-    *
-    * The default rewrite (`LogicalRDD.fromDataset`) carries the source
-    * plan's sizeInBytes ESTIMATE through the checkpoint — a product of
-    * the join children's estimates. In an iterative algorithm whose
-    * loop state feeds back into the next round's joins (pointer
-    * doubling, label propagation), those products COMPOUND: k
-    * checkpointed self-joins yield a BigInteger with ~2^k digits, and
-    * past a few dozen squarings the driver stalls for minutes inside
-    * BigInteger.multiply while planning — a pure bookkeeping artifact,
-    * the data itself is tiny. This helper severs that lineage: it
-    * materializes the frame, then rebuilds it as a bare [[LogicalRDD]]
-    * whose statistics are the REAL measured row count times the
-    * schema's default row width, so downstream broadcast decisions
-    * still see honest sizes and the estimate chain restarts from
-    * ground truth at every checkpoint.
-    */
-  def pinned(df: DataFrame): DataFrame = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-    // LAZY checkpoint + count = ONE job (the count materializes the
-    // checkpoint); the eager form runs an internal count to
-    // materialize and we'd count again — two jobs for the same state.
-    val ck = cut(ds)
-    val rows = ck.count()
-    rebuilt(ck, rows)
-  }
+  /** The engine's one lineage cut: [[pinnedSum]] without a probe. */
+  def pinned(df: DataFrame): DataFrame = pinnedSum(df, lit(0L))._1
 
-  /** The engine-wide executor-loss trade-off, made explicit (VERDICT r17
-    * item 7): `localCheckpoint` truncates lineage onto executor-local
-    * storage, which is the right call for a one-shot local/healthy-
-    * cluster run (no HDFS round-trip per loop round) but means a LOST
-    * EXECUTOR kills the truncated RDD and the query at cluster scale.
-    * Deployments that need pins to survive executor loss set
+  /** Materializes `df` behind a lineage cut and measures it in the same
+    * job: returns the pinned frame, its row count and the sum of the
+    * integer `probe` over its rows (nulls skipped, 0 when empty), e.g.
+    * `lit(1L)` for the row count alone or a loop's convergence probe.
     *
-    *   graft.reliableCheckpoint = true   (session conf; or the
-    *   GRAFT_RELIABLE_CHECKPOINT=true env as the default)
+    * The cut is a lazy checkpoint: `localCheckpoint` (executor-local
+    * blocks; a lost executor kills the truncated lineage at cluster
+    * scale), or the reliable `checkpoint` into the context's checkpoint
+    * dir when the session sets `graft.reliableCheckpoint=true` (or the
+    * GRAFT_RELIABLE_CHECKPOINT=true env as the default); the file write
+    * is reliability's extra job. Under adaptive execution the lazy cut
+    * runs the frame's shuffle-map jobs, and one RDD action over the
+    * checkpointed rows then fills the checkpoint and folds
+    * `(count, sum(probe))`: the same jobs as an eager `localCheckpoint()`,
+    * whose internal count fills it.
     *
-    * plus `SparkContext.setCheckpointDir`, and every pin routes through
-    * the reliable `Dataset.checkpoint` instead (same lazy+count one-job
-    * discipline; the checkpoint write itself is the documented extra
-    * cost of reliability). Default (unset): byte-identical
-    * localCheckpoint behavior.
+    * The frame is rebuilt over the same checkpointed RDD, keeping its
+    * output partitioning and ordering, with MEASURED statistics: the
+    * row count times the schema's default row width. Spark's own rewrite
+    * carries the source plan's size ESTIMATE through the checkpoint, and
+    * in a loop whose state feeds back into its joins those products
+    * COMPOUND (k pinned self-joins yield a BigInteger with ~2^k digits,
+    * and the driver stalls in BigInteger.multiply while planning).
+    * Measured stats restart the estimate chain from ground truth at
+    * every pin, so broadcast decisions downstream still see honest sizes.
     */
-  private def cut(ds: org.apache.spark.sql.classic.Dataset[Row]):
-      org.apache.spark.sql.classic.Dataset[Row] = {
+  def pinnedSum(df: DataFrame, probe: Column): (DataFrame, Long, Long) = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
     val flag = ds.sparkSession.conf.get("graft.reliableCheckpoint",
       sys.env.getOrElse("GRAFT_RELIABLE_CHECKPOINT", "false"))
-    if (flag == "true" || flag == "1") ds.checkpoint(eager = false)
-    else ds.localCheckpoint(eager = false)
-  }
-
-  /** [[pinned]] fused with an iterative loop's integer convergence
-    * probe: ONE Spark job materializes the lazy local checkpoint and
-    * computes `count(*)` + `sum(probeCol)` together, instead of the
-    * two the pin-then-probe pattern costs per round. Driver actions
-    * are the wall clock of high-round loops (the r12 coloring lesson),
-    * so fixpoint loops probing a monotone column sum each round should
-    * use this. Returns (pinned frame, rows, sum — 0 when empty).
-    */
-  def pinnedSum(df: DataFrame, probeCol: String):
-      (DataFrame, Long, Long) = {
-    import org.apache.spark.sql.functions.col
-    pinnedSum(df, col(probeCol))
-  }
-
-  /** [[pinnedSum]] with an arbitrary integer probe EXPRESSION (e.g.
-    * `when(col("color").isNull, 1L).otherwise(0L)` for a drain test) —
-    * still one Spark job for checkpoint + stats + probe.
-    */
-  def pinnedSum(df: DataFrame, probe: Column):
-      (DataFrame, Long, Long) = {
-    import org.apache.spark.sql.functions.{count, lit, sum}
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-    val ck = cut(ds)
-    val r = ck.agg(count(lit(1)).as("n"), sum(probe).as("s"))
-      .first()
-    val rows = r.getLong(0)
-    val s = if (r.isNullAt(1)) 0L else r.getLong(1)
-    (rebuilt(ck, rows), rows, s)
-  }
-
-  private def rebuilt(ck: org.apache.spark.sql.classic.Dataset[Row],
-      rows: Long): DataFrame = {
-    val out = ck.queryExecution.analyzed.output
-    val width = 8L + out.map(_.dataType.defaultSize.toLong).sum
+    val ck =
+      if (flag == "true" || flag == "1") ds.checkpoint(eager = false)
+      else ds.localCheckpoint(eager = false)
+    val (rows, s) = ck.select(probe.cast("long")).queryExecution.toRdd
+      .aggregate((0L, 0L))(
+        (a, r) => (a._1 + 1L, if (r.isNullAt(0)) a._2 else a._2 + r.getLong(0)),
+        (a, b) => (a._1 + b._1, a._2 + b._2))
+    val cut = ck.queryExecution.analyzed match { case l: LogicalRDD => l }
+    val width = 8L + cut.output.map(_.dataType.defaultSize.toLong).sum
     val stats = Statistics(
       sizeInBytes = BigInt(math.max(rows, 1L)) * width,
       rowCount = Some(BigInt(rows)))
-    val plan = LogicalRDD(out, ck.queryExecution.toRdd)(
-      ck.sparkSession, Some(stats), None)
-    org.apache.spark.sql.classic.Dataset.ofRows(ck.sparkSession, plan)
+    val plan = cut.copy()(ck.sparkSession, Some(stats), None)
+    (org.apache.spark.sql.classic.Dataset.ofRows(ck.sparkSession, plan),
+      rows, s)
   }
+
+  /** Releases the blocks of every pin `df` reads: the checkpointed RDD
+    * under each of its [[LogicalRDD]] leaves. `Dataset.unpersist` does
+    * not reach them (a pin is not in the cache manager), so a memo that
+    * holds pins releases them here on evict. Runs no job; a released pin
+    * must not be read again.
+    */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 }

@@ -5,6 +5,7 @@ import graft.sources.Tables
 import graft.util.{Det, Fixpoint}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
 
 /** Deduplication suite (SURVEY §2.9 X1/X2 + north-star dedup family):
   * exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -551,7 +552,6 @@ object DedupQueries {
     */
   private[graft] def keepFirstOf(ids: DataFrame, edges: DataFrame,
       preDropped: DataFrame): Fixpoint.Result = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
     val nOpen = (col("st") === "open").cast("long")
     val (seed, n, s0) = pinnedSum(ids
       .join(preDropped.select(col("v"), lit("dropped").as("pre")), Seq("v"),
@@ -578,20 +578,17 @@ object DedupQueries {
     // distinct shingle SETS (jaccard is set-based; band minima are
     // duplicate-neutral so one distinct serves both stages)
     val hset = hs.select(col("doc_id"), array_distinct(col("hs")).as("hs"))
-    val withRep = docs
+    val withRep = pinned(docs
       .join(hset.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("text"))
       .withColumn("rep",
         min(col("doc_id")).over(Window.partitionBy(col("text"))))
-      .select(col("doc_id"), col("rep"))
-      .localCheckpoint()
+      .select(col("doc_id"), col("rep")))
     val reps = withRep.filter(col("doc_id") === col("rep"))
       .select(col("doc_id").as("v"))
-    val repsHs = hset
-      .join(reps.select(col("v").as("doc_id")), Seq("doc_id"), "left_semi")
-      .persist()
-    val ve = verifiedDupEdges(s, repsHs, repsHs, cross = false)
-      .localCheckpoint()
+    val repsHs = pinned(hset
+      .join(reps.select(col("v").as("doc_id")), Seq("doc_id"), "left_semi"))
+    val ve = pinned(verifiedDupEdges(s, repsHs, repsHs, cross = false))
     val fix = keepFirstOf(reps, ve, reps.where(lit(false)))
     val dupOf = ve
       .join(fix.frame.filter(col("st") === "kept")
@@ -728,7 +725,7 @@ object DedupQueries {
     * shortcut ([[DcRounds]] hop+jump rounds — the Shiloach–Vishkin
     * shortcut step; see [[DcRounds]] for the reach analysis) over the
     * candidate graph: per round one edge join + min aggregation, then one
-    * label-on-label self-join; `localCheckpoint` per step (each frame
+    * label-on-label self-join; a pin per step (each frame
     * feeds two downstream plans — the LP lazy-plan-doubling lesson). A
     * final one-hop pass asserts the labels are a fixpoint and THROWS
     * otherwise (hop-fixpoint ⇒ labels constant per component ⇒ exact CC
@@ -808,13 +805,10 @@ object DedupQueries {
       .repartition(col("a"))
       .persist()
     und.count()
-    // Per-round localCheckpoint (the LP loop shape): superseded rounds'
-    // checkpoint blocks are released by the ContextCleaner once the
-    // `labels` var drops its reference — local-checkpoint blocks must NOT
-    // be unpersisted manually (the checkpointed frame's only data copy).
-    var labels = ids
-      .select(col("id"), col("id").as("cluster"))
-      .localCheckpoint()
+    // A pin per round (the LP loop shape): superseded rounds' blocks are
+    // released by the ContextCleaner once the fold drops its reference —
+    // a pin is its frame's only data copy.
+    val labels0 = pinned(ids.select(col("id"), col("id").as("cluster")))
     // one edge-hop: min neighbor label layered onto the current labels
     def hop(lbl: DataFrame): DataFrame = {
       val m = und
@@ -825,21 +819,20 @@ object DedupQueries {
           least(col("cluster"), coalesce(col("nmin"), col("cluster")))
             .as("cluster"))
     }
-    for (_ <- 1 to DcRounds) {
+    val labels = (1 to DcRounds).foldLeft(labels0) { (cur, _) =>
       // hop, then pointer-jump (cluster := cluster's own cluster — every
       // cluster value IS an id, so the self-join always matches). The hop
       // frame appears on both sides of the jump's self-join, so it gets
-      // its own eager cut — a lazy persist was measured SLOWER here (the
+      // its own pin — a lazy persist was measured SLOWER here (the
       // self-join's two scans race on the same uncomputed cache partitions
       // and serialize on block locks).
-      val h = hop(labels).localCheckpoint()
-      labels = h
+      val h = pinned(hop(cur))
+      pinned(h
         .join(h.select(col("id").as("cluster"), col("cluster").as("pc")),
           Seq("cluster"), "left_outer")
         .select(col("id"),
           least(col("cluster"), coalesce(col("pc"), col("cluster")))
-            .as("cluster"))
-        .localCheckpoint()
+            .as("cluster")))
     }
     // fixpoint guard: one more hop must change nothing, else the bound
     // was too small for this corpus — fail loudly, never emit a keep-list

@@ -5,6 +5,7 @@ import graft.util.Det
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge.pinned
 
 /** X73/X74 — tabular feature engineering over the TPC-H tables: the
   * feature-store shapes (entity aggregates → scores/bins, time series →
@@ -434,12 +435,11 @@ object FeatureQueries {
         }
       }, schema)
     // 10 rows; pinned so the rank lineage feeds the self-join once.
-    val dec = ranked
+    val dec = pinned(ranked
       .withColumn("decile", expr(s"((i - 1) * 10) div ${n}L + 1"))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_customers"),
-        sum(col("cents")).cast(dec38).as("sp"))
-      .localCheckpoint()
+        sum(col("cents")).cast(dec38).as("sp")))
     // cum and tot from ONE broadcast 10×10 self-join + grouped agg —
     // an ungrouped agg or an ORDER BY window here would reintroduce a
     // (harmless at 10 rows, but assertion-visible) SinglePartition
@@ -2359,17 +2359,17 @@ object FeatureQueries {
     * balanceFromCounts discipline).
     */
   private[graft] def privacyVerdictFromClasses(cls0: DataFrame): DataFrame = {
-    // localCheckpoint (NOT persist): the QI-domain-bounded class frame
+    // pinned (NOT persist): the QI-domain-bounded class frame
     // (≤ |nations|·|buckets| rows) feeds BOTH the per-class output and
     // the k/exposure totals — without pinning the upstream scan + agg
-    // run twice (the emb_ivf_balance one-corpus-scan rule). RDD-level
-    // checkpoint blocks are ContextCleaner-freed once the frame is
+    // run twice (the emb_ivf_balance one-corpus-scan rule). A pin's
+    // blocks are ContextCleaner-freed once the frame is
     // unreferenced, so the continuous-audit path (KAnonymityMaintainer
     // calling verdict per micro-batch, each on a fresh state plan)
     // cannot accumulate CacheManager entries — a Dataset.persist here
     // leaked one never-deduped cache entry per micro-batch (r14 ADVICE).
-    val cls = cls0.select(col("nation"), col("bal_bucket"), col("n_rows"),
-      size(col("segments")).cast("long").as("n_segments")).localCheckpoint()
+    val cls = pinned(cls0.select(col("nation"), col("bal_bucket"),
+      col("n_rows"), size(col("segments")).cast("long").as("n_segments")))
     val tot = cls.agg(min(col("n_rows")).as("k_anon"),
       sum(when(col("n_rows") < 5, col("n_rows")).otherwise(0L))
         .as("rows_below_k5"),
@@ -2472,11 +2472,11 @@ object FeatureQueries {
     */
   private[graft] def tClosenessFromCells(cs0: DataFrame): DataFrame = {
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    // domain-bounded (≤ |QI|·|segments| rows); localCheckpoint, NOT
+    // domain-bounded (≤ |QI|·|segments| rows); pinned, NOT
     // persist — the continuous-audit path calls this per micro-batch
     // (the r14 CacheManager-leak lesson)
-    val cs = cs0.select(col("nation"), col("bal_bucket"), col("segment"),
-      col("cnt")).localCheckpoint()
+    val cs = pinned(cs0.select(col("nation"), col("bal_bucket"),
+      col("segment"), col("cnt")))
     val glob = cs.groupBy(col("segment")).agg(sum(col("cnt")).as("g"))
     val nc = cs.groupBy(col("nation"), col("bal_bucket"))
       .agg(sum(col("cnt")).as("n_rows"))

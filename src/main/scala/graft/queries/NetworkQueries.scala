@@ -5,6 +5,7 @@ import graft.util.Det
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge.pinned
 
 /** One-mode network analytics over the bipartite G_trade graph: the
   * supplier CO-PURCHASE projection (suppliers linked by how many customers
@@ -713,9 +714,9 @@ object NetworkQueries {
     // sides + both degree lookups); exchange reuse does NOT fire across
     // them (verified with Explain — the un-checkpointed plan scanned the
     // fact table four times), so materialize it once.
-    val baskets = lineitem
+    val baskets = pinned(lineitem
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct().localCheckpoint()
+      .distinct())
     val deg = baskets.groupBy(col("pk")).agg(count(lit(1)).as("n"))
     val a = baskets.select(col("ok"), col("pk").as("pa"))
     val b = baskets.select(col("ok").as("okb"), col("pk").as("pb"))
@@ -888,10 +889,10 @@ object NetworkQueries {
       .select(col("u"), col("p"), col("rn"))
     // train/test each feed 2–3 consumers — materialize the small distinct
     // frames once (the baskets discipline).
-    val test = ui.where(col("rn") === 1).select(col("u"), col("p"))
-      .distinct().localCheckpoint()
-    val train = ui.where(col("rn") > 1).select(col("u"), col("p"))
-      .distinct().localCheckpoint()
+    val test = pinned(ui.where(col("rn") === 1).select(col("u"), col("p"))
+      .distinct())
+    val train = pinned(ui.where(col("rn") > 1).select(col("u"), col("p"))
+      .distinct())
     val cand = train
       .join(topk.select(col("part"), col("other"),
           floor(col("cosine") * 1e6 + 0.5).cast("long").as("micro")),

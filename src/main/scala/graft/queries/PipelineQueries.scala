@@ -5,6 +5,7 @@ import graft.sources.Tables
 import graft.util.Det
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge.pinned
 
 /** Training-data pipeline plumbing (north-star extensions, no reference
   * citation — the reference is a graph library): deterministic dataset
@@ -1111,7 +1112,7 @@ object PipelineQueries {
     * grid) — the milli-grid is load-bearing, not cosmetic.
     *
     * Scale: the ratings matrix builds once (one join + one agg,
-    * localCheckpointed); each half-step is ONE keyed join (factors onto
+    * pinned); each half-step is ONE keyed join (factors onto
     * ratings, alternating key c/p) + ONE map-side-combinable agg — the
     * canonical model-parallel ALS schedule; at 100 TB the ratings frame
     * shuffles once per half-step on the solve key, factors broadcast
@@ -1123,13 +1124,13 @@ object PipelineQueries {
   /** Testable seam for [[recsysAlsIterated]]. */
   private[graft] def recsysAlsIteratedOf(lineitem: DataFrame,
       orders: DataFrame): DataFrame = {
-    val ratings = lineitem
+    // reused by all three half-steps
+    val ratings = pinned(lineitem
       .select(col("l_orderkey"), col("l_partkey"))
       .join(orders.select(col("o_orderkey"), col("o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .agg(count(lit(1)).as("r"))
-      .localCheckpoint() // reused by all three half-steps
+      .agg(count(lit(1)).as("r")))
     // exact integer round-half-up solve: (2*num*1e6 + den) div (2*den)
     def solved(num: String, svv: String) = expr(
       s"(2 * $num * 1000000 + (100000 + $svv)) " +

@@ -6,6 +6,7 @@ import graft.util.Det
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge.pinned
 
 /** Similarity search + multimodal operators (north-star extensions):
   * brute-force cosine top-k (the correctness baseline), an IVF-style
@@ -318,7 +319,7 @@ object SimQueries {
     */
   private[graft] def evalHybridOf(docs: DataFrame, e: DataFrame,
       cent: DataFrame): DataFrame = {
-    // Every arm frame is PINNED once (SqlBridge.pinned — localCheckpoint
+    // Every arm frame is PINNED once (SqlBridge.pinned — lineage cut
     // + measured stats): each arm is referenced 2-3× below (its own page
     // rows + inside one or both fusions, and lex additionally feeds
     // qmap), so the un-pinned composition inlined the X184/X3/X3b
@@ -328,7 +329,6 @@ object SimQueries {
     // eval ladder: each arm executes exactly once, the eval plan reads
     // k-row LogicalRDDs. Values are untouched — the arms' own plans are
     // unchanged inside their pin jobs.
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinned
     // The four arm pins are INDEPENDENT, so they materialize from driver
     // futures (guide §2.6 — overlap independent jobs): the un-pinned plan
     // recovered much of its duplicated work's wall by running the inlined
@@ -580,7 +580,6 @@ object SimQueries {
     * (vec_id, embedding, nrm) frame.
     */
   private[graft] def mmrOf(e: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinned
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"))
@@ -1275,14 +1274,14 @@ object SimQueries {
           (col("sv").cast("double") / (lit(1000000.0) * col("n"))).as("v"),
           col("n"))
       if (r < KmFullRounds)
-        cent = comp
+        // cut the K-deep crossJoin lineage per round
+        cent = pinned(comp
           .groupBy(col("cluster"))
           .agg(array_sort(collect_list(struct(col("pos"), col("v"))))
             .as("pv"))
           .select(col("cluster").as("c_label"),
             transform(col("pv"), p => p.getField("v")).as("centroid"))
-          .withColumn("c_nrm", VectorFns.norm(col("centroid")))
-          .localCheckpoint() // cut the K-deep crossJoin lineage per round
+          .withColumn("c_nrm", VectorFns.norm(col("centroid"))))
     }
     comp.orderBy(col("cluster"), col("pos"))
   }

@@ -6,6 +6,7 @@ import graft.util.Det
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge.pinned
 
 /** Text-analysis operators (SURVEY §2.9 X4/X5 + the training-data-pipeline
   * surface from the north star): TF-IDF, per-language stats, token counting,
@@ -187,7 +188,6 @@ object TextQueries {
 
   /** Testable seam for [[retrievalPrf]]: explicit documents frame. */
   private[graft] def prfOf(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinned
     // tf is the frame every stage below re-reads (both microScore
     // calls, the expansion-candidate agg, dl, dfr): un-pinned, each
     // reference re-ran the tokenize+count over the whole corpus — in a
@@ -788,7 +788,7 @@ object TextQueries {
     *
     * Scale: per round one map-side-combinable bigram count, a
     * TakeOrdered(1) argmax (never a global sort), and one broadcast
-    * 1-row join feeding the rewrite; `localCheckpoint` per round keeps
+    * 1-row join feeding the rewrite; a pin per round keeps
     * the plan from doubling. Rounds are sequential barriers by nature
     * (BPE is inherently iterative).
     */
@@ -826,7 +826,7 @@ object TextQueries {
   /** The full BPE round chain: runs the [[BpeRounds]] count→merge→rewrite
     * rounds ONCE and returns (merge table, final rewritten corpus) — the
     * merge table feeds `bpe_merges`, the rewritten corpus feeds
-    * `bpe_encode`. Every intermediate frame is checkpointed inside, so
+    * `bpe_encode`. Every intermediate frame is pinned inside, so
     * both results are cheap projections.
     */
   private[graft] def bpeChainOf(docs: DataFrame): (DataFrame, DataFrame) = {
@@ -834,10 +834,9 @@ object TextQueries {
     (m, t)
   }
 
-  /** [[bpeChainOf]] plus every frame it checkpointed, so [[evict]] can
-    * unpersist those blocks explicitly (same discipline as the sig /
-    * near-pair caches) instead of waiting for a GC to trigger the
-    * ContextCleaner.
+  /** [[bpeChainOf]] plus every frame it pinned, so [[evict]] can
+    * release those blocks explicitly instead of waiting for a GC to
+    * trigger the ContextCleaner.
     */
   private def bpeChainTracked(docs: DataFrame)
       : (DataFrame, DataFrame, Seq[DataFrame]) = {
@@ -853,21 +852,18 @@ object TextQueries {
                     slice(split(trim(t), '  '), 2,
                           size(split(trim(t), '  ')) - 1),
                     (a, b) -> concat(a, ' ', b))""")).as("b"))
-      // eager 1-row checkpoint: `top` feeds BOTH the rewrite and the
-      // output row — lazy, the corpus-wide bigram agg would run twice
-      // per round (once inside the next round's checkpoint, once when
-      // the result is collected)
-      val top = bg.groupBy(col("b")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("b")).limit(1)
-        .localCheckpoint()
+      // 1-row pin: `top` feeds BOTH the rewrite and the output row —
+      // lazy, the corpus-wide bigram agg would run twice per round (once
+      // inside the next round's pin, once when the result is collected)
+      val top = pinned(bg.groupBy(col("b")).agg(count(lit(1)).as("cnt"))
+        .orderBy(col("cnt").desc, col("b")).limit(1))
       cps += top
-      txt = txt.crossJoin(broadcast(top))
+      txt = pinned(txt.crossJoin(broadcast(top))
         .select(col("doc_id"),
           expr("""replace(t,
                           concat(' ', replace(b, ' ', '  '), ' '),
                           concat(' ', replace(b, ' ', '_'), ' '))""")
-            .as("t"))
-        .localCheckpoint()
+            .as("t")))
       cps += txt
       top.select(lit(r).as("round"), col("b").as("pair"), col("cnt"))
     }
@@ -875,20 +871,10 @@ object TextQueries {
   }
 
   // Memoized per (session, sfDir): `bpe_merges` and `bpe_encode` share
-  // one run of the 4-pass chain; the checkpointed frames ride along so
-  // evict can release their blocks deterministically.
-  private val bpeCache = new graft.util.SessionMemo[
-    String, (DataFrame, DataFrame, Seq[DataFrame])]({ case (_, _, cps) =>
-      cps.foreach { df =>
-        def walk(r: org.apache.spark.rdd.RDD[_]): Unit = {
-          if (r.getStorageLevel !=
-              org.apache.spark.storage.StorageLevel.NONE)
-            r.unpersist(blocking = false)
-          r.dependencies.foreach(d => walk(d.rdd))
-        }
-        walk(df.rdd)
-      }
-  })
+  // one run of the 4-pass chain; the pinned frames ride along so evict
+  // can release their blocks deterministically.
+  private val bpeCache = graft.util.SessionMemo
+    .pinned[String, (DataFrame, DataFrame, Seq[DataFrame])](_._3)
 
   private def bpeChain(s: SparkSession,
                        dir: String): (DataFrame, DataFrame) = {
@@ -905,11 +891,10 @@ object TextQueries {
     bpeChain(s, dir)._1.count(); ()
   }
 
-  /** Cache-lifecycle hook (see [[graft.Caches]]): unpersists the chain's
-    * localCheckpoint blocks EXPLICITLY (walking each tracked frame's RDD
-    * lineage for persisted nodes) before dropping the references — a
-    * long-lived session cycling sfDirs must not accumulate checkpoint
-    * blocks until a GC happens to run the ContextCleaner.
+  /** Cache-lifecycle hook (see [[graft.Caches]]): releases the chain's
+    * pins EXPLICITLY before dropping the references — a long-lived
+    * session cycling sfDirs must not accumulate pin blocks until a GC
+    * happens to run the ContextCleaner.
     */
   def evict(s: SparkSession): Unit = bpeCache.evict(s)
 
@@ -1551,7 +1536,6 @@ object TextQueries {
   private[graft] def bigramNllOf(docs: DataFrame): DataFrame = {
     // bg is read three ways (ctx, cnt, the scoring join-back) — pin the
     // bigram explode once over a fanned-out scan (r17; see [[bm25Of]]).
-    import org.apache.spark.sql.graftbridge.SqlBridge.pinned
     val tk = TextFns.tokens(col("text"))
     val bg = pinned(graft.util.FanOut(docs)
       .select(col("doc_id"),
@@ -1764,7 +1748,7 @@ object TextQueries {
     * token marginal (re-agg, TakeOrdered top-V by count DESC, token ASC —
     * bounded V rows, broadcast back) and the per-source coverage roll-up
     * (broadcast hash join + agg). The agg frame is MATERIALIZED
-    * (`localCheckpoint`) before fan-out: without it Spark plans a second
+    * (pinned) before fan-out: without it Spark plans a second
     * corpus scan for the vocab branch (observed in `.explain` — exchange
     * reuse does not fire across the differing downstream aggs), and the
     * materialized frame is only |sources|·|vocab|-bounded, so pinning it
@@ -1776,10 +1760,9 @@ object TextQueries {
 
   /** Testable seam for [[vocabCoverage]]: explicit documents frame. */
   private[graft] def vocabCoverageOf(docs: DataFrame): DataFrame = {
-    val st = docs
+    val st = pinned(docs
       .select(col("source"), explode(TextFns.tokens(col("text"))).as("token"))
-      .groupBy(col("source"), col("token")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .groupBy(col("source"), col("token")).agg(count(lit(1)).as("n")))
     val vocab = st.groupBy(col("token")).agg(sum(col("n")).as("tot"))
       .orderBy(col("tot").desc, col("token")).limit(VocabV)
       .select(col("token"), lit(1).as("in_vocab"))

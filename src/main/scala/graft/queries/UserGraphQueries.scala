@@ -520,9 +520,8 @@ object UserGraphQueries {
     val exact = (0 to HyperballIters).map(t =>
       (0 to t).map(h => hist.getOrElse(h.toLong, 0L)).sum)
     // Sketch state: one HLL register set per vertex, FULL graph.
-    var sk = ids.groupBy(col("id"))
-      .agg(hll_sketch_agg(col("id"), HyperballLgK).as("sk"))
-      .localCheckpoint()
+    var sk = pinned(ids.groupBy(col("id"))
+      .agg(hll_sketch_agg(col("id"), HyperballLgK).as("sk")))
     def probeEst(): Long = {
       // null-safe: an empty probe set (degenerate empty graph) sums to
       // NULL, which must read as 0 — the exact side is 0 there too, so
@@ -533,11 +532,10 @@ object UserGraphQueries {
     }
     val ests = scala.collection.mutable.ArrayBuffer(probeEst())
     for (_ <- 1 to HyperballIters) {
-      sk = e.join(sk.withColumnRenamed("id", "dst"), Seq("dst"))
+      sk = pinned(e.join(sk.withColumnRenamed("id", "dst"), Seq("dst"))
         .select(col("src").as("id"), col("sk"))
         .unionByName(sk.select(col("id"), col("sk")))
-        .groupBy(col("id")).agg(hll_union_agg(col("sk")).as("sk"))
-        .localCheckpoint()
+        .groupBy(col("id")).agg(hll_union_agg(col("sk")).as("sk")))
       ests += probeEst()
     }
     (0 to HyperballIters).map(t => (t, exact(t),
@@ -668,9 +666,8 @@ object UserGraphQueries {
   // The un-ordered walk frame is shared by graph_walks and
   // graph_walk_pairs — memoized per (session, sfDir) so the hop joins run
   // once (the probehist discipline; bench `_build:walks` hook below).
-  // The hops are localCheckpointed, so no extra persist is needed.
-  private val walksCache =
-    graft.util.SessionMemo.dropOnly[String, DataFrame]()
+  // The hops are pinned, so no extra persist is needed.
+  private val walksCache = graft.util.SessionMemo.pinned[String]()
 
   private def walksFrame(s: SparkSession, dir: String): DataFrame =
     walksCache(s, dir) {
@@ -685,8 +682,8 @@ object UserGraphQueries {
 
   /** Unit-test seam: walks over explicit directed edge + vertex frames.
     * `checkpoint = false` keeps the full hop lineage in one plan so
-    * PlanSpec can inspect the per-hop join strategy (localCheckpoint
-    * truncates the plan the blanket cartesian sweep sees).
+    * PlanSpec can inspect the per-hop join strategy (a pin truncates
+    * the plan the blanket cartesian sweep sees).
     */
   private[graft] def graphWalksOf(edges: DataFrame, vertices: DataFrame,
                                   checkpoint: Boolean = true): DataFrame =
@@ -695,7 +692,7 @@ object UserGraphQueries {
 
   private def walksUnionOf(edges: DataFrame, vertices: DataFrame,
                            checkpoint: Boolean = true): DataFrame = {
-    def cp(df: DataFrame) = if (checkpoint) df.localCheckpoint() else df
+    def cp(df: DataFrame) = if (checkpoint) pinned(df) else df
     val e = edges.select(col("src"), col("dst"))
     var frontier = cp(vertices.select(col("id"))
       .withColumn("w", explode(sequence(lit(0L), lit(WalksPerVertex - 1L))))
@@ -894,11 +891,10 @@ object UserGraphQueries {
                                         vertices: DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
     val e2 = edges.select(col("src").as("p2"), col("dst").as("d2"))
-    var frontier = vertices.select(col("id"))
+    var frontier = pinned(vertices.select(col("id"))
       .withColumn("w", explode(sequence(lit(0L), lit(WalksPerVertex - 1L))))
       .select((col("id") * WalksPerVertex + col("w")).as("walk_id"),
-        lit(-1L).as("prev"), col("id").as("cur"))
-      .localCheckpoint()
+        lit(-1L).as("prev"), col("id").as("cur")))
     val acc = scala.collection.mutable.Buffer(
       frontier.select(col("walk_id"), lit(0).as("step"),
         col("cur").as("vertex")))
@@ -908,7 +904,7 @@ object UserGraphQueries {
       val m = when(col("dst") === col("prev"), BiasReturn)
         .when(col("p2").isNotNull, BiasNear)
         .otherwise(BiasFar)
-      frontier = frontier.join(e, frontier("cur") === e("src"))
+      frontier = pinned(frontier.join(e, frontier("cur") === e("src"))
         .select(col("walk_id"), col("prev"), frontier("cur").as("cur"),
           col("dst"), rank.as("rnk"))
         .join(e2, col("prev") === col("p2") && col("dst") === col("d2"),
@@ -918,8 +914,7 @@ object UserGraphQueries {
         .groupBy(col("walk_id"), col("cur"))
         .agg(min(struct(col("brnk"), col("dst"))).as("m"))
         .select(col("walk_id"), col("cur").as("prev"),
-          col("m.dst").as("cur"))
-        .localCheckpoint()
+          col("m.dst").as("cur")))
       acc += frontier.select(col("walk_id"), lit(t).as("step"),
         col("cur").as("vertex"))
     }
@@ -1280,7 +1275,7 @@ object UserGraphQueries {
     * Scale: per round ONE |E| keyed join + group (k(v,D)), one |V|
     * degree-sum group (tot), one broadcastable scalar (2m), one
     * combinable argmin for the choice — no windows over neighborhoods,
-    * no cartesian; rounds localCheckpoint (bounded lineage, zero
+    * no cartesian; rounds are pinned (bounded lineage, zero
     * per-round driver actions beyond the checkpoint).
     */
   private val LvRounds = 8
@@ -1333,8 +1328,7 @@ object UserGraphQueries {
     */
   private[graft] def louvainMoveRounds(e: DataFrame,
       twoM: Long): DataFrame = {
-    val deg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
-      .localCheckpoint()
+    val deg = pinned(e.groupBy(col("src").as("v")).agg(count(lit(1)).as("d")))
     var lab = deg.select(col("v").as("id"), col("v").as("lab"), col("d"))
     for (r <- 1 to LvRounds) {
       // tot(C) rides the label frame as a lab-partitioned window sum —
@@ -1362,14 +1356,13 @@ object UserGraphQueries {
           min(when(col("dlab") =!= col("clab"),
             struct((-(col("k") * twoM - col("d") * col("totd")))
               .as("ns"), col("dlab")))).as("m"))
-      lab = best
+      lab = pinned(best
         .select(col("id"),
           when((col("id") + r) % 2 === 0 &&
             ((-col("m.ns")) - coalesce(col("kc"), lit(0L)) * twoM +
               col("d") * col("totc") - col("d") * col("d")) > 0,
             col("m.dlab")).otherwise(col("clab")).as("lab"),
-          col("d"))
-        .localCheckpoint()
+          col("d")))
     }
     lab.select(col("id"), col("lab"))
   }
@@ -1533,15 +1526,15 @@ object UserGraphQueries {
   // Pass-1 labels + final super-node labels, shared by the three Louvain
   // keys (X124 / X147 / X148) — `_build:louvain` bench entry; the move
   // phase's ~20 s no longer lands on whichever key runs first.
-  private val louvCache =
-    graft.util.SessionMemo.dropOnly[String, (DataFrame, DataFrame)]()
+  private val louvCache = graft.util.SessionMemo
+    .pinned[String, (DataFrame, DataFrame)](v => Seq(v._1, v._2))
 
   // The pinned self-loop-free undirected multiset + its row count 2m,
   // shared by the Louvain move/merge loops and every Leiden level (r18:
   // previously pinned once per loop family — three |E| pin jobs for one
   // frame).
-  private val ueCache =
-    graft.util.SessionMemo.dropOnly[String, (DataFrame, Long)]()
+  private val ueCache = graft.util.SessionMemo
+    .pinned[String, (DataFrame, Long)](v => Seq(v._1))
 
   private[graft] def pinnedUndirected(s: SparkSession,
       dir: String): (DataFrame, Long) =
@@ -2037,8 +2030,9 @@ object UserGraphQueries {
   // Per-level (refined parts, final part labels) frames, shared by the
   // X182 and X188 keys (`_build:leiden` bench entry — the intra-CC +
   // contraction + move rounds run once, not once per consumer).
-  private val leidCache =
-    graft.util.SessionMemo.dropOnly[String, Seq[(DataFrame, DataFrame)]]()
+  private val leidCache = graft.util.SessionMemo
+    .pinned[String, Seq[(DataFrame, DataFrame)]](
+      _.flatMap { case (comp, lab) => Seq(comp, lab) })
 
   private[graft] def leidFrames(s: SparkSession,
       dir: String): Seq[(DataFrame, DataFrame)] =
@@ -2420,7 +2414,7 @@ object UserGraphQueries {
     * Scale: the forward pass rides [[GraphAlgorithms.landmarkDistances]]
     * (one |E| join per hop); σ and δ are one keyed |E| join + one
     * map-side-combinable agg per LEVEL (2·[[BcIters]] bounded rounds,
-    * localCheckpointed like the walks) — never a per-path enumeration.
+    * pinned like the walks) — never a per-path enumeration.
     * Output: per vertex the exact integer δ-sum over sources and the
     * normalized double.
     */
@@ -2438,35 +2432,32 @@ object UserGraphQueries {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    val e = simple.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(simple.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+    val e = pinned(simple.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(simple.select(col("b").as("src"), col("a").as("dst"))))
     val lms = vertices.select(col("id")).orderBy(col("id")).limit(BcSources)
-    val d = GraphAlgorithms.landmarkDistances(e, lms, BcIters)
-      .localCheckpoint()
+    val d = GraphAlgorithms.landmarkDistances(e, lms, BcIters) // pinned
 
     // forward: exact path counts per level
     val sigs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var sig = d.filter(col("dist") === 0)
-      .select(col("lm"), col("id"), lit(1L).as("sig")).localCheckpoint()
+    var sig = pinned(d.filter(col("dist") === 0)
+      .select(col("lm"), col("id"), lit(1L).as("sig")))
     sigs += sig
     for (k <- 1 to BcIters) {
       val dk = d.filter(col("dist") === k)
         .select(col("lm").as("dlm"), col("id").as("did"))
-      sig = sig.join(e, col("id") === col("src"))
+      sig = pinned(sig.join(e, col("id") === col("src"))
         .join(dk, col("lm") === col("dlm") && col("dst") === col("did"))
         .groupBy(col("lm"), col("dst"))
         .agg(sum(col("sig")).as("sig"))
-        .select(col("lm"), col("dst").as("id"), col("sig"))
-        .localCheckpoint()
+        .select(col("lm"), col("dst").as("id"), col("sig")))
       sigs += sig
     }
-    val sigma = sigs.reduce(_ unionByName _).localCheckpoint()
+    val sigma = pinned(sigs.reduce(_ unionByName _))
 
     // backward: quantized dependencies, deepest level first (levels ≥ 1
     // only — the source's own δ never enters bc)
-    var deltaNext = d.filter(col("dist") === BcIters)
-      .select(col("lm"), col("id"), lit(0L).as("dq")).localCheckpoint()
+    var deltaNext = pinned(d.filter(col("dist") === BcIters)
+      .select(col("lm"), col("id"), lit(0L).as("dq")))
     val deltas = scala.collection.mutable.ArrayBuffer(deltaNext)
     for (k <- (BcIters - 1) to 1 by -1) {
       val vk = d.filter(col("dist") === k).select(col("lm"), col("id"))
@@ -2488,10 +2479,9 @@ object UserGraphQueries {
             .as("cq"))
       val deltaK = contrib.groupBy(col("lm"), col("id"))
         .agg(sum(col("cq")).as("dq"))
-      deltaNext = vk.join(deltaK, Seq("lm", "id"), "left")
+      deltaNext = pinned(vk.join(deltaK, Seq("lm", "id"), "left")
         .select(col("lm"), col("id"),
-          coalesce(col("dq"), lit(0L)).as("dq"))
-        .localCheckpoint()
+          coalesce(col("dq"), lit(0L)).as("dq")))
       deltas += deltaNext
     }
     val bc = deltas.reduce(_ unionByName _)
@@ -2593,9 +2583,8 @@ object UserGraphQueries {
     // Three consumers (deg + both sides of the per-edge join) would each
     // re-derive the distinct projection — the itemCosineOf finding;
     // materialize the symmetric view once.
-    val sym = e.select(col("a").as("v"), col("b").as("u"))
-      .unionByName(e.select(col("b").as("v"), col("a").as("u")))
-      .localCheckpoint()
+    val sym = pinned(e.select(col("a").as("v"), col("b").as("u"))
+      .unionByName(e.select(col("b").as("v"), col("a").as("u"))))
     val deg = sym.groupBy(col("v")).agg(count(lit(1)).as("d"))
     val perEdge = sym
       .join(deg.select(col("v"), col("d").as("dv")), Seq("v"))
@@ -2659,7 +2648,7 @@ object UserGraphQueries {
     *
     * Scale: the derivation is map-only; each round is one keyed \|E\|
     * double-semi-join + combinable count (the CC/Brandes cost class),
-    * localCheckpointed per round; rounds are empirically O(log-ish) in
+    * pinned per round; rounds are empirically O(log-ish) in
     * the tail depth, bounded by [[KcRounds]]. Driver state: one count
     * per round (the I2–I5 iterate discipline). The oracle unrolls the
     * same rounds as CTEs (the CC chain discipline).
@@ -2697,24 +2686,23 @@ object UserGraphQueries {
   // derivation over |events| runs once, not once per key
   // (Bench `_build:zipf`). Evicted via [[evict]].
   // SessionMemo (exactly-once computeIfAbsent builds, ADVICE r10 /
-  // judge r11 item #4): localCheckpointed frames whose blocks are
-  // released deterministically on evict (persisted-style dispose).
-  private val zipfDirCache = graft.util.SessionMemo.persisted[String]()
-  private val zipfCanCache = graft.util.SessionMemo.persisted[String]()
+  // judge r11 item #4): pinned frames whose blocks are released
+  // deterministically on evict.
+  private val zipfDirCache = graft.util.SessionMemo.pinned[String]()
+  private val zipfCanCache = graft.util.SessionMemo.pinned[String]()
 
   private[graft] def zipfDirectedFrame(s: SparkSession,
       dir: String): DataFrame =
     zipfDirCache(s, dir)(
-      zipfDirectedEdgesOf(graft.sources.Tables(s, dir, "events"))
-        .localCheckpoint())
+      pinned(zipfDirectedEdgesOf(graft.sources.Tables(s, dir, "events"))))
 
   private[graft] def zipfCanonicalFrame(s: SparkSession,
       dir: String): DataFrame =
     zipfCanCache(s, dir)(
-      zipfDirectedFrame(s, dir)
+      pinned(zipfDirectedFrame(s, dir)
         .select(least(col("u"), col("v")).as("a"),
           greatest(col("u"), col("v")).as("b"))
-        .distinct().localCheckpoint())
+        .distinct()))
 
   /** Bench `_build:zipf` hook: both shared derived-graph frames. */
   def warmZipf(s: SparkSession, dir: String): Unit = {
@@ -2732,9 +2720,8 @@ object UserGraphQueries {
     * list — the seam the hand-built-graph goldens drive.
     */
   private[graft] def kcorePeelOf(simple: DataFrame): DataFrame = {
-    val und = simple.select(col("a"), col("b"))
-      .unionByName(simple.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint()
+    val und = pinned(simple.select(col("a"), col("b"))
+      .unionByName(simple.select(col("b").as("a"), col("a").as("b"))))
     val (alive0, n0, _) = pinnedSum(
       und.select(col("a").as("v")).distinct(), lit(0L))
     def induced(alive: DataFrame) = und
@@ -2854,7 +2841,7 @@ object UserGraphQueries {
         .agg(max(least(col("rn"), col("nh"))).as("h"))
     }
     val (h0, n0, s0) = pinnedSum(und.groupBy(col("u").as("v"))
-      .agg(count(lit(1)).as("h")), "h")
+      .agg(count(lit(1)).as("h")), col("h"))
     val fix = Fixpoint(h0, n0, s0, col("h"), CorenessRounds,
       perStep = 2)((h, _) => hRound(hRound(h)))
     fix.frame.select(col("v"), col("h").as("coreness"),
@@ -3237,7 +3224,7 @@ object UserGraphQueries {
     * power-law triangle bound; an unoriented wedge join would square
     * the hub degree). Each round: one degree agg + one oriented wedge
     * self-join + one closing-edge semi + an exploded 3-edge count — all
-    * keyed joins and combinable aggs, localCheckpointed. The oracle
+    * keyed joins and combinable aggs, pinned. The oracle
     * unrolls the same leveled rounds with the test-scale unoriented
     * common-neighbor join (the same oriented enumeration, independently
     * expressed); `converged` is the pinned-TRUE loud guard on the round
@@ -3255,8 +3242,7 @@ object UserGraphQueries {
   private[graft] def trussDecomposeOf(simple: DataFrame): DataFrame = {
     val spark = simple.sparkSession
     import spark.implicits._
-    val e0 = simple.select(col("a"), col("b")).localCheckpoint()
-    val nAll = e0.count()
+    val (e0, nAll, _) = pinnedSum(simple.select(col("a"), col("b")), lit(1L))
 
     // Support of every alive canonical edge via degree-ordered oriented
     // triangle enumeration (each triangle counted once, exploded back to
@@ -3269,15 +3255,14 @@ object UserGraphQueries {
       val withD = alive
         .join(deg.select(col("v").as("a"), col("d").as("da")), Seq("a"))
         .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
-      val o = withD.select(
+      val o = pinned(withD.select(
         when(col("da") < col("db") ||
           (col("da") === col("db") && col("a") < col("b")),
           struct(col("a").as("s"), col("b").as("t"),
             col("db").as("dt")))
           .otherwise(struct(col("b").as("s"), col("a").as("t"),
             col("da").as("dt"))).as("e"))
-        .select(col("e.s").as("s"), col("e.t").as("t"), col("e.dt").as("dt"))
-        .localCheckpoint()
+        .select(col("e.s").as("s"), col("e.t").as("t"), col("e.dt").as("dt")))
       val wedges = o.as("x").join(o.as("y"),
           col("x.s") === col("y.s") &&
             (col("x.dt") < col("y.dt") ||
@@ -3462,7 +3447,7 @@ object UserGraphQueries {
           pk(col("p"), col("w")).as("g")))).as("t"))
       .select(col("t.e").as("e"), col("t.f").as("f"), col("t.g").as("g")))
     val (h0, n0, s0) = pinnedSum(
-      inc.groupBy(col("e")).agg(count(lit(1)).as("h")), "h")
+      inc.groupBy(col("e")).agg(count(lit(1)).as("h")), col("h"))
     val w = Window.partitionBy(col("e")).orderBy(col("nh").desc)
     val fix = Fixpoint(h0, n0, s0, col("h"), TrussnessRounds) { (h, _) =>
       inc
@@ -3638,7 +3623,7 @@ object UserGraphQueries {
     *
     * Scale: two frontier BFS fixpoints (forward on edges, backward on
     * reversed edges) — per round one keyed \|E\| join + distinct union,
-    * localCheckpointed, early-stop (measured depths 4–11, bound
+    * pinned, early-stop (measured depths 4–11, bound
     * [[SccRounds]] with the pinned-TRUE `converged` guard) — then two
     * membership joins and a 4-row class roll-up. The oracle unrolls the
     * same rounds as CTEs.
@@ -3696,7 +3681,7 @@ object UserGraphQueries {
     * edge frame.
     */
   private[graft] def sccPivotOf(dedges: DataFrame): DataFrame = {
-    val e = dedges.select(col("u"), col("v")).localCheckpoint()
+    val e = pinned(dedges.select(col("u"), col("v")))
     val (verts, nV, _) = pinnedSum(e.select(col("u").as("id"))
       .unionByName(e.select(col("v").as("id"))).distinct(), lit(1L))
     // Empty-graph guard (ADVICE r10): no vertices → typed empty output
@@ -3709,11 +3694,10 @@ object UserGraphQueries {
 
     // frontier BFS to fixpoint over `adj` (src, dst)
     def reach(adj: DataFrame): Fixpoint.Result = {
-      val seen0 = verts.sparkSession.createDataFrame(
+      val seen0 = pinned(verts.sparkSession.createDataFrame(
         java.util.Arrays.asList(org.apache.spark.sql.Row(pivot)),
         new org.apache.spark.sql.types.StructType()
-          .add("id", org.apache.spark.sql.types.LongType, false))
-        .localCheckpoint()
+          .add("id", org.apache.spark.sql.types.LongType, false)))
       Fixpoint(seen0, 1L, 1L, lit(1L), SccRounds) { (seen, _) =>
         seen.unionByName(
           adj.join(seen.withColumnRenamed("id", "src"), Seq("src"))
@@ -3830,8 +3814,8 @@ object UserGraphQueries {
     * Scale: trim is two semijoins per round, color one keyed |E| join +
     * map-side-combinable min plus a |V| self-join (the doubling — what
     * keeps rounds logarithmic on long chains), flag a frontier semijoin
-    * on the PRE-FILTERED same-color edge set; every round
-    * localCheckpoints (the I2–I5 iterate discipline, one count per
+    * on the PRE-FILTERED same-color edge set; every round is
+    * pinned (the I2–I5 iterate discipline, one count per
     * round of driver state). All arithmetic is integer min/EXISTS —
     * no FP anywhere.
     */
@@ -3918,7 +3902,7 @@ object UserGraphQueries {
           // doubling; the integer color sum is strictly monotone until
           // the fixpoint
           val (color0, _, cSum) = pinnedSum(
-            coreVerts.select(col("id"), col("id").as("color")), "color")
+            coreVerts.select(col("id"), col("id").as("color")), col("color"))
           // Fused round: the edge hop, the pointer jump, and the previous
           // colors union into ONE min aggregation — same least() values,
           // two left joins fewer per round. The jump join is inner: every
@@ -3939,13 +3923,13 @@ object UserGraphQueries {
               .groupBy(col("id")).agg(min(col("color")).as("color"))
           }.frame
           // (3) flag: backward reach-to-root on same-color edges
-          val sce = active
+          val sce = pinned(active
             .join(color.select(col("id").as("u"), col("color").as("ucol")),
               Seq("u"))
             .join(color.select(col("id").as("v"), col("color").as("vcol")),
               Seq("v"))
             .filter(col("ucol") === col("vcol"))
-            .select(col("u"), col("v")).localCheckpoint()
+            .select(col("u"), col("v")))
           def flagStep(fl: DataFrame): DataFrame = fl.unionByName(
               sce.join(fl.select(col("id").as("v")), Seq("v"))
                 .select(col("u").as("id")))
@@ -3979,8 +3963,8 @@ object UserGraphQueries {
   // The (labels, complete) pair is shared by graph_scc_labels and
   // graph_scc_condensation — memoized per (session, sfDir) so the
   // whole Trim+FW-BW run executes once (Bench `_build:scclab`).
-  private val sccLabCache = new graft.util.SessionMemo[
-    String, (DataFrame, Boolean)](_._1.unpersist(blocking = false))
+  private val sccLabCache = graft.util.SessionMemo
+    .pinned[String, (DataFrame, Boolean)](v => Seq(v._1))
 
   private def sccLabFrame(s: SparkSession,
       dir: String): (DataFrame, Boolean) =
@@ -4306,8 +4290,8 @@ object UserGraphQueries {
       labels: DataFrame): DataFrame = {
     val (sizes, nScc, _) = pinnedSum(labels.groupBy(col("scc_id"))
       .agg(count(lit(1)).as("n_members")), lit(1L))
-    val dag = condense(dedges, labels)
-      .select(col("src_scc"), col("dst_scc")).localCheckpoint()
+    val dag = pinned(condense(dedges, labels)
+      .select(col("src_scc"), col("dst_scc")))
     // monotone non-decreasing integer layers, all 0 at the start (one
     // row per pinned `sizes` row); no SCC → no round
     val fix = Fixpoint(sizes.select(col("scc_id"), lit(0L).as("layer")),
@@ -4529,8 +4513,8 @@ object UserGraphQueries {
   // MSF memo: shared by graph_mst_boruvka and graph_percolation_curve
   // (Bench `_build:mst`); the fold is ~10 jobs, so the second consumer
   // justifies the memo (attribution-migration discipline). Evicted via
-  // [[evict]]; pinned frames need no unpersist (bare LogicalRDDs).
-  private val mstCache = graft.util.SessionMemo.dropOnly[String, DataFrame]()
+  // [[evict]], which releases its pins.
+  private val mstCache = graft.util.SessionMemo.pinned[String]()
 
   private[graft] def mstFrame(s: SparkSession, dir: String): DataFrame =
     mstCache(s, dir)(
@@ -5150,12 +5134,11 @@ object UserGraphQueries {
   // SAME hash-weighted edges) — memoized per (session, sfDir) so the
   // synchronous matching rounds run once per session (Bench
   // `_build:match`); evicted via [[evict]].
-  private val matchCache = graft.util.SessionMemo.persisted[String]()
+  private val matchCache = graft.util.SessionMemo.pinned[String]()
 
   private[graft] def matchedFrame(s: SparkSession, dir: String): DataFrame =
     matchCache(s, dir)(
-      matchingOf(matchWeightedOf(zipfCanonicalFrame(s, dir)))
-        .localCheckpoint())
+      pinned(matchingOf(matchWeightedOf(zipfCanonicalFrame(s, dir)))))
 
   /** Bench `_build:match` hook: the shared level-1 matched frame. */
   def warmMatch(s: SparkSession, dir: String): Unit = {
@@ -5360,8 +5343,8 @@ object UserGraphQueries {
     * the memoized [[matchedFrame]]).
     */
   private[graft] def partitionOf(simple: DataFrame): DataFrame = {
-    val can = simple.select(col("a"), col("b")).localCheckpoint()
-    partitionFrom(can, matchingOf(matchWeightedOf(can)).localCheckpoint())
+    val can = pinned(simple.select(col("a"), col("b")))
+    partitionFrom(can, pinned(matchingOf(matchWeightedOf(can))))
   }
 
   /** Round-robin striping of a weighted vertex frame (v, w) into `k`
@@ -5454,10 +5437,8 @@ object UserGraphQueries {
 
   private def partitionFrom(canIn: DataFrame, m1: DataFrame): DataFrame = {
     val can = canIn
-    val verts = can.select(col("a").as("v"))
-      .unionByName(can.select(col("b").as("v"))).distinct()
-      .localCheckpoint()
-    val nV = verts.count()
+    val (verts, nV, _) = pinnedSum(can.select(col("a").as("v"))
+      .unionByName(can.select(col("b").as("v"))).distinct(), lit(1L))
     def drainedOk(m: DataFrame): Boolean =
       m.filter(!col("converged")).head(1).isEmpty
     val conv1 = drainedOk(m1)
@@ -5466,19 +5447,17 @@ object UserGraphQueries {
         .unionByName(m1.select(col("b").as("v"), col("a").as("c"))),
       Seq("v"), "left")
       .select(col("v"), coalesce(col("c"), col("v")).as("c1")))
-    val e1 = can
+    val e1 = pinned(can
       .join(map1.select(col("v").as("a"), col("c1").as("ca")), Seq("a"))
       .join(map1.select(col("v").as("b"), col("c1").as("cb")), Seq("b"))
       .filter(col("ca") =!= col("cb"))
       .groupBy(least(col("ca"), col("cb")).as("a"),
         greatest(col("ca"), col("cb")).as("b"))
-      .agg(count(lit(1)).as("w")).localCheckpoint()
-    val w1 = map1.groupBy(col("c1").as("v")).agg(count(lit(1)).as("w"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("w")))
+    val w1 = pinned(map1.groupBy(col("c1").as("v")).agg(count(lit(1)).as("w")))
     // level 2: heavy-edge matching on contracted multiplicities
-    val m2 = matchingOf(e1.select(col("a"), col("b"),
-      (col("w") * MstPackW + col("a") * MstPackE + col("b")).as("p")))
-      .localCheckpoint()
+    val m2 = pinned(matchingOf(e1.select(col("a"), col("b"),
+      (col("w") * MstPackW + col("a") * MstPackE + col("b")).as("p"))))
     val conv2 = drainedOk(m2)
     val map2 = pinned(w1.select(col("v")).join(
       m2.select(col("a").as("v"), col("a").as("c"))
@@ -5743,9 +5722,8 @@ object UserGraphQueries {
     import graft.functions.TextFns
     def h(c: Column) =
       TextFns.stringHash(concat(lit("p2:"), c.cast("string")))
-    val asg = simple.select(col("a"), col("b"),
-      ((h(col("a")) % P2Grid) * P2Grid + h(col("b")) % P2Grid).as("cell"))
-      .localCheckpoint()
+    val asg = pinned(simple.select(col("a"), col("b"),
+      ((h(col("a")) % P2Grid) * P2Grid + h(col("b")) % P2Grid).as("cell")))
     val pc = asg.groupBy(col("cell")).agg(count(lit(1)).as("n_edges"))
     val spans = asg.select(col("a").as("v"), col("cell"))
       .unionByName(asg.select(col("b").as("v"), col("cell")))

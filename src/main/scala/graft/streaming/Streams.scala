@@ -3,6 +3,7 @@ package graft.streaming
 import graft.util.{Det, Fixpoint}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming transforms (SURVEY §2.10 — extension; the reference is
@@ -618,7 +619,7 @@ object Streams {
   final class MergeMaintainer(s: SparkSession)
       extends Maintainer[DataFrame](mergeEmptyState(s)) {
     protected def step(st: DataFrame, batch: DataFrame): DataFrame =
-      mergeApply(st, mergeSummary(batch)).localCheckpoint()
+      pinned(mergeApply(st, mergeSummary(batch)))
     def current: DataFrame = state.filter(col("present"))
       .select(col("user_id"), col("cur_cents"), col("last_reset_op"),
         col("n_adds_applied"))
@@ -708,7 +709,7 @@ object Streams {
             col("bfrom")).otherwise(col("valid_to_us"))
             .as("valid_to_us"),
           (col("is_current") && col("bfrom").isNull).as("is_current"))
-      closed.unionByName(adjusted).localCheckpoint()
+      pinned(closed.unionByName(adjusted))
     }
     /** The live history table (total order for comparison). */
     def current: DataFrame =
@@ -752,7 +753,6 @@ object Streams {
     */
   def ccFold(state: DataFrame, edges: DataFrame):
       (DataFrame, Boolean) = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
     val lm = state.select(col("id"), col("label"))
     // contract: endpoint -> its component label (self when unseen)
     val mapped = edges.select(col("u"), col("v"))
@@ -772,7 +772,7 @@ object Streams {
     if (nUnd == 0L) return (state, true)
     val (lab0, n0, s0) = pinnedSum(
       und.select(col("u").as("id")).distinct()
-        .select(col("id"), col("id").as("label")), "label")
+        .select(col("id"), col("id").as("label")), col("label"))
     // Fused round (the SCC color-loop shape): the neighbor min, the pointer
     // jump, and the previous labels union into ONE min aggregation — same
     // least() values, two left joins fewer per round. The jump join is
@@ -894,18 +894,16 @@ object Streams {
               "keep-first semantics)")
           bounds.getLong(1)
         }
-      val bhs = DedupQueries.shingleSetsOf(batch).localCheckpoint()
+      val bhs = pinned(DedupQueries.shingleSetsOf(batch))
       val ids = batch.select(col("doc_id"))
       // (2) state probe: kept state partners drop batch docs outright
-      val stateHits = DedupQueries
+      val stateHits = pinned(DedupQueries
         .verifiedDupEdges(s, st.keptHs, bhs, cross = true)
         .groupBy(col("big").as("doc_id"))
-        .agg(min(col("small")).as("state_dup"))
-        .localCheckpoint()
+        .agg(min(col("small")).as("state_dup")))
       // (3) within-batch greedy-by-id frontier over verified edges,
       // seeded with the state-dropped docs
-      val be = DedupQueries.verifiedDupEdges(s, bhs, bhs, cross = false)
-        .localCheckpoint()
+      val be = pinned(DedupQueries.verifiedDupEdges(s, bhs, bhs, cross = false))
       val fix = DedupQueries.keepFirstOf(bhs.select(col("doc_id").as("v")),
         be, stateHits.select(col("doc_id").as("v")))
       val kept = fix.frame.filter(col("st") === "kept")
@@ -925,8 +923,8 @@ object Streams {
           least(col("state_dup"), col("batch_dup")).as("dup_of"),
           lit(fix.converged).as("converged"))
       val keptNew = bhs.join(kept, Seq("doc_id"), "left_semi")
-      LshState(st.keptHs.unionByName(keptNew).localCheckpoint(),
-        st.verdicts.unionByName(newVerdicts).localCheckpoint(), batchMax)
+      LshState(pinned(st.keptHs.unionByName(keptNew)),
+        pinned(st.verdicts.unionByName(newVerdicts)), batchMax)
     }
 
     /** Verdicts for every doc seen so far (total order for comparison
@@ -971,10 +969,9 @@ object Streams {
       appendList(batch.repartition(col("label")))
       val b = batch.groupBy(col("label"))
         .agg(count(lit(1)).as("n_vecs"))
-      counts.unionByName(b)
+      pinned(counts.unionByName(b)
         .groupBy(col("label"))
-        .agg(sum(col("n_vecs")).as("n_vecs"))
-        .localCheckpoint()
+        .agg(sum(col("n_vecs")).as("n_vecs")))
     }
 
     /** The maintained exact per-list counts (≤ K rows, total order). */
@@ -1014,10 +1011,9 @@ object Streams {
         s.range(0).select(col("id").cast("string").as("event_type"),
           col("id").as("bucket"), col("id").as("register"))) {
     protected def step(regs: DataFrame, batch: DataFrame): DataFrame =
-      regs.unionByName(graft.queries.StreamQueries.hllRegistersOf(batch))
+      pinned(regs.unionByName(graft.queries.StreamQueries.hllRegistersOf(batch))
         .groupBy(col("event_type"), col("bucket"))
-        .agg(max(col("register")).as("register"))
-        .localCheckpoint()
+        .agg(max(col("register")).as("register")))
 
     /** The maintained sparse registers (≤ 64·|types| rows, total order). */
     def current: DataFrame =
@@ -1054,10 +1050,9 @@ object Streams {
         s.range(0).select(col("id").cast("string").as("event_type"),
           col("id").as("cents"), col("id").as("cnt"))) {
     protected def step(hist: DataFrame, batch: DataFrame): DataFrame =
-      hist.unionByName(graft.queries.StreamQueries.valueHistOf(batch))
+      pinned(hist.unionByName(graft.queries.StreamQueries.valueHistOf(batch))
         .groupBy(col("event_type"), col("cents"))
-        .agg(sum(col("cnt")).as("cnt"))
-        .localCheckpoint()
+        .agg(sum(col("cnt")).as("cnt")))
 
     /** The maintained histogram (value-domain-bounded, total order). */
     def current: DataFrame =
@@ -1122,9 +1117,8 @@ object Streams {
       if (n == 0) st.copy(sketch = sketch)
       else {
         val bc = ev.groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
-        CmsState(st.counts.unionByName(bc)
-            .groupBy(col("user_id")).agg(sum(col("cnt")).as("cnt"))
-            .localCheckpoint(),
+        CmsState(pinned(st.counts.unionByName(bc)
+            .groupBy(col("user_id")).agg(sum(col("cnt")).as("cnt"))),
           sketch, st.total + n)
       }
     }
@@ -1283,10 +1277,10 @@ object Streams {
         s.range(0).select(col("id").cast("string").as("event_type"),
           col("id").as("bk"), col("id").as("m"))) {
     protected def step(buckets: DataFrame, batch: DataFrame): DataFrame =
-      buckets.unionByName(graft.queries.StreamQueries.bitmapBucketsOf(batch))
+      pinned(buckets
+        .unionByName(graft.queries.StreamQueries.bitmapBucketsOf(batch))
         .groupBy(col("event_type"), col("bk"))
-        .agg(expr("bit_or(m)").as("m"))
-        .localCheckpoint()
+        .agg(expr("bit_or(m)").as("m")))
 
     /** The maintained bucket map (domain-bounded, total order). */
     def current: DataFrame = state.orderBy(col("event_type"), col("bk"))
@@ -1329,13 +1323,12 @@ object Streams {
     protected def step(st: TypeOverlapState,
         batch: DataFrame): TypeOverlapState = {
       val ev = batch.select(col("event_type"), col("user_id"))
-      val sketches = st.sketches
+      val sketches = pinned(st.sketches
         .unionByName(graft.queries.StreamQueries.typeSketchesOf(ev))
         .groupBy(col("event_type"))
-        .agg(expr("hll_union_agg(sk)").as("sk"))
-        .localCheckpoint()
+        .agg(expr("hll_union_agg(sk)").as("sk")))
       TypeOverlapState(sketches,
-        st.du.unionByName(ev.distinct()).distinct().localCheckpoint())
+        pinned(st.du.unionByName(ev.distinct()).distinct()))
     }
 
     /** The maintained exact anchor pairs (total order). */
@@ -1377,13 +1370,12 @@ object Streams {
           col("id").as("n_rows"),
           array().cast("array<string>").as("segments"))) {
     protected def step(classes: DataFrame, batch: DataFrame): DataFrame =
-      classes.unionByName(
+      pinned(classes.unionByName(
           graft.queries.FeatureQueries.privacyClassesOf(batch))
         .groupBy(col("nation"), col("bal_bucket"))
         .agg(sum(col("n_rows")).as("n_rows"),
           array_sort(array_distinct(
-            flatten(collect_list(col("segments"))))).as("segments"))
-        .localCheckpoint()
+            flatten(collect_list(col("segments"))))).as("segments")))
 
     /** The maintained class state (QI-domain-bounded, total order). */
     def current: DataFrame =
@@ -1414,10 +1406,10 @@ object Streams {
         s.range(0).select(col("id").as("nation"), col("id").as("bal_bucket"),
           col("id").cast("string").as("segment"), col("id").as("cnt"))) {
     protected def step(cells: DataFrame, batch: DataFrame): DataFrame =
-      cells.unionByName(graft.queries.FeatureQueries.privacyCellsOf(batch))
+      pinned(cells
+        .unionByName(graft.queries.FeatureQueries.privacyCellsOf(batch))
         .groupBy(col("nation"), col("bal_bucket"), col("segment"))
-        .agg(sum(col("cnt")).as("cnt"))
-        .localCheckpoint()
+        .agg(sum(col("cnt")).as("cnt")))
 
     /** The maintained cell grid (domain-bounded, total order). */
     def current: DataFrame =
@@ -1452,11 +1444,10 @@ object Streams {
         s.range(0).select(col("id").as("user_id"), col("id").as("x"),
           col("id").as("y"))) {
     protected def step(users: DataFrame, batch: DataFrame): DataFrame =
-      users.unionByName(
+      pinned(users.unionByName(
           graft.queries.StreamQueries.cupedUsersOf(batch, Some(anchorUs)))
         .groupBy(col("user_id"))
-        .agg(sum(col("x")).as("x"), sum(col("y")).as("y"))
-        .localCheckpoint()
+        .agg(sum(col("x")).as("x"), sum(col("y")).as("y")))
 
     /** The maintained per-user sufficient state (total order). */
     def current: DataFrame = state.orderBy(col("user_id"))
@@ -1584,7 +1575,7 @@ object Streams {
       // pieces (the r18 SCC label-accumulator lesson) instead of
       // re-checkpointing all prior rows every batch.
       val nulL = lit(null).cast("long")
-      val fused = org.apache.spark.sql.graftbridge.SqlBridge.pinned(
+      val fused = pinned(
         enrichedB.select(lit(0).as("tag"), col("purchase_id"),
             col("user_id"), col("click_id"), col("gap_us"),
             col("batch_idx"), nulL.as("click_tus"))
@@ -1658,15 +1649,14 @@ object Streams {
     protected def step(st: ButterflyState,
         batch: DataFrame): ButterflyState = {
       val ButterflyState(edges, fans, pairs) = st
-      val newE = batch.select(col("u"), col("v")).distinct()
-        .join(edges, Seq("u", "v"), "left_anti").localCheckpoint()
+      val newE = pinned(batch.select(col("u"), col("v")).distinct()
+        .join(edges, Seq("u", "v"), "left_anti"))
       val adds = newE.groupBy(col("v")).agg(count(lit(1)).as("nadd"))
-      val fanNow = fans.join(adds, Seq("v"), "full_outer")
+      val fanNow = pinned(fans.join(adds, Seq("v"), "full_outer")
         .select(col("v"),
           coalesce(col("fan"), lit(0L)).as("fan_old"),
           (coalesce(col("fan"), lit(0L)) +
-            coalesce(col("nadd"), lit(0L))).as("fan_new"))
-        .localCheckpoint()
+            coalesce(col("nadd"), lit(0L))).as("fan_new")))
       // class A rights: wedges from old-adjacency × new + new × new
       val aRights = fanNow
         .filter(col("fan_new") <= fanCap && col("fan_old") < col("fan_new"))
@@ -1705,7 +1695,7 @@ object Streams {
       // this batch — materialize as ONE tagged union, split back into
       // scan-only views. State stays bounded-lineage per batch.
       val nulL = lit(null).cast("long")
-      val fused = org.apache.spark.sql.graftbridge.SqlBridge.pinned(
+      val fused = pinned(
         pairsNext.select(lit(0).as("tag"), col("x").as("a"),
             col("y").as("b"), col("w"))
           .unionByName(edges.unionByName(newE).select(lit(1).as("tag"),

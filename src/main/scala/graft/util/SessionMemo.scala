@@ -1,6 +1,7 @@
 package graft.util
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.SqlBridge
 
 /** Session-scoped exactly-once memo for expensive derived artifacts
   * (persisted/checkpointed frames, GraphX graphs, build tuples).
@@ -21,9 +22,8 @@ import org.apache.spark.sql.SparkSession
   * one shared registry map.
   *
   * `evict(s)` drops every entry built on session `s` and runs `dispose`
-  * on it (unpersist for persisted frames; a no-op for pinned/
-  * localCheckpointed frames, where dropping the reference lets the
-  * ContextCleaner reclaim the blocks).
+  * on it: unpersist for persisted frames, [[SqlBridge.release]] for
+  * pinned ones (`unpersist` does not reach a pin's blocks).
   */
 final class SessionMemo[K, V](dispose: V => Unit) {
   private val m =
@@ -41,12 +41,16 @@ final class SessionMemo[K, V](dispose: V => Unit) {
 
 object SessionMemo {
   /** Memo of persisted DataFrames: evict unpersists (non-blocking). */
-  def persisted[K](): SessionMemo[K, org.apache.spark.sql.DataFrame] =
+  def persisted[K](): SessionMemo[K, DataFrame] =
     new SessionMemo(_.unpersist(blocking = false))
 
-  /** Memo whose entries need no explicit disposal (plan objects,
-    * localCheckpointed/pinned frames — the ContextCleaner reclaims
-    * their blocks once the reference drops).
-    */
+  /** Memo of pinned frames: evict releases their blocks. */
+  def pinned[K](): SessionMemo[K, DataFrame] = pinned[K, DataFrame](Seq(_))
+
+  /** Memo of values holding pinned `frames`: evict releases their blocks. */
+  def pinned[K, V](frames: V => Seq[DataFrame]): SessionMemo[K, V] =
+    new SessionMemo(frames(_).foreach(SqlBridge.release))
+
+  /** Memo whose entries need no explicit disposal (plan objects, maps). */
   def dropOnly[K, V](): SessionMemo[K, V] = new SessionMemo(_ => ())
 }

@@ -68,14 +68,6 @@ class FixpointSpec extends GraftSuite {
   private def xs(df: DataFrame): Seq[Long] =
     df.collect().map(_.getLong(0)).toSeq.sorted
 
-  /** `body`'s result and the Spark jobs it ran, under job group `g`. */
-  private def jobsOf[T](g: String)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(g, g)
-    val out = try body finally sc.clearJobGroup()
-    (out, sc.statusTracker.getJobIdsForGroup(g).length)
-  }
-
   test("Fixpoint contract table: outcome, rounds and one pin per step") {
     for (c <- cases) {
       val from = start(c)

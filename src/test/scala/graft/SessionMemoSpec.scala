@@ -44,6 +44,27 @@ class SessionMemoSpec extends GraftSuite {
     assert(disposed.sorted === Seq(1, 2, 10))
   }
 
+  test("Caches.evict releases the blocks of memoized pins (the zipf " +
+    "frames)") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo").toString
+    (1L to 200L).map(i => (i, new java.sql.Timestamp(i * 1000L)))
+      .toDF("event_id", "ts").write.parquet(s"$dir/events.parquet")
+    def cached() = spark.sparkContext.getRDDStorageInfo
+      .filter(_.numCachedPartitions > 0).map(_.id).toSet
+    val before = cached()
+    graft.queries.UserGraphQueries.warmZipf(spark, dir)
+    val pins = cached() -- before
+    assert(pins.nonEmpty, "warmZipf cached nothing")
+    Caches.evict(spark)
+    val deadline = System.nanoTime() + 10000000000L
+    while ((cached() & pins).nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert((cached() & pins).isEmpty, "pins still cached after evict: " +
+      spark.sparkContext.getRDDStorageInfo.filter(i => pins(i.id))
+        .map(i => s"${i.id}:${i.name}").mkString(", "))
+  }
+
   test("distinct keys memoize independently") {
     val builds = new AtomicInteger(0)
     val memo = SessionMemo.dropOnly[String, Int]()

@@ -46,6 +46,14 @@ abstract class GraftSuite extends AnyFunSuite {
   def pairs(df: DataFrame): Seq[(Long, Long)] =
     df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))).sorted
 
+  /** `body`'s result and the Spark jobs it ran, under job group `g`. */
+  def jobsOf[T](g: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(g, g)
+    val out = try body finally sc.clearJobGroup()
+    (out, sc.statusTracker.getJobIdsForGroup(g).length)
+  }
+
   def triples(df: DataFrame): Seq[(Long, Long, Long)] =
     df.collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
