@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Lifecycle hook for the engine's per-(session, sfDir) memo caches
-  * ([[graft.sources.GTrade]], [[graft.queries.IterQueries]],
-  * [[graft.queries.DedupQueries]], [[graft.sources.Tables]]).
+/** Lifecycle hook for the engine's per-(session, sfDir) memo caches.
   *
   * The caches exist because dozens of operators share a handful of
   * expensive artifacts (the G_trade fact join, the GraphX conversion, the
@@ -14,19 +12,12 @@ import org.apache.spark.sql.SparkSession
   * this hook (judge r2 item #9). Verify/Bench call it before stopping.
   */
 object Caches {
-  /** Unpersist and drop everything memoized for `spark`, all sfDirs. */
-  def evict(spark: SparkSession): Unit = {
-    graft.sources.GTrade.evict(spark)
-    graft.queries.IterQueries.evict(spark)
-    graft.queries.UserGraphQueries.evict(spark)
-    graft.queries.DedupQueries.evict(spark)
-    graft.queries.NetworkQueries.evict(spark)
-    graft.queries.SimQueries.evict(spark)
-    graft.queries.StreamQueries.evict(spark)
-    graft.queries.TextQueries.evict(spark)
-    graft.queries.Substrate.evict(spark)
-    graft.sources.Tables.evict(spark)
-  }
+  /** Drop and dispose everything memoized for `spark`, all sfDirs: every
+    * [[graft.util.SessionMemo]] registers itself when it is constructed,
+    * so this reaches each one.
+    */
+  def evict(spark: SparkSession): Unit =
+    graft.util.SessionMemo.all.forEach(_.evict(spark))
 
   /** The shared first-touch builds, by name, in the order `graft.Bench`
     * times them as `_build:<name>` entries (`graft.Prof` runs one by the

@@ -1,73 +1,32 @@
 package graft
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Optimization-round profiling harness (guide §1): runs one bench entry —
-  * a `_build:<name>` warm hook or a registry key — under the exact Bench
-  * session config and prints a per-JOB wall/task table, so loop-heavy
-  * entries show where their seconds go (scheduling barriers vs compute).
+  * a `_build:<name>` warm hook or a registry key — under the Bench
+  * session ([[Harness.session]]) and prints a per-JOB wall/task table, so
+  * loop-heavy entries show where their seconds go (scheduling barriers vs
+  * compute). An `explain:<key>` entry prints the key's
+  * `explain("formatted")` (scan pushdown, join strategy) and then its
+  * simple `explain()`, which marks whole-stage-codegen spans with `*(n)`.
   *
-  * Usage: runMain graft.Prof <entry> [sfDir]
-  *   entry = `_build:louvain` | any registry key
+  * Usage: runMain graft.Prof <entry> [sfDir] [k=v;k=v]
+  *   entry = `_build:louvain` | `explain:<key>` | any registry key
+  *   k=v;k=v = session settings for an experiment (profiling only; the
+  *   bench/verify session contract is never touched by this)
   */
 object Prof {
-  private final class JobLog extends SparkListener {
-    case class J(id: Int, var t0: Long = 0L, var t1: Long = 0L,
-      var tasks: Int = 0, var taskMs: Long = 0L, var cpuMs: Long = 0L,
-      var site: String = "")
-    val jobs = mutable.LinkedHashMap[Int, J]()
-    private val stageToJob = mutable.Map[Int, Int]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val j = J(e.jobId, t0 = e.time,
-        site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .getOrElse(""))
-      jobs(e.jobId) = j
-      e.stageIds.foreach(s => stageToJob(s) = e.jobId)
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      jobs.get(e.jobId).foreach(_.t1 = e.time)
-    }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-      stageToJob.get(e.stageId).flatMap(jobs.get).foreach { j =>
-        j.tasks += 1
-        val m = e.taskMetrics
-        if (m != null) {
-          j.taskMs += m.executorRunTime
-          j.cpuMs += m.executorCpuTime / 1000000L
-        }
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     // Comma-separated entries: all but the last run UNprofiled (warm-up /
     // shared-build isolation); the last is the profiled target.
     val entries = args.headOption.getOrElse("_build:louvain").split(",").toSeq
     val entry = entries.last
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // Experiment overrides: GRAFT_CONF env or args(2) "k=v;k=v"
-    // (profiling only — the bench/verify session contract is never
-    // touched by this). args(2) exists because `sbt --client` runs in
-    // the server JVM whose env is frozen at server start.
-    (sys.env.get("GRAFT_CONF").toSeq ++ args.drop(2).headOption.toSeq)
-      .foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("id % 97 AS k", "id AS v")
-      .groupBy("k").count().count()
+    val extra = args.drop(2).headOption.toSeq
+      .flatMap(_.split(";").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = Harness.session(Harness.cpus, extra)
+    Harness.warmUp(spark)
 
     def bodyOf(entry: String): () => Unit = Caches.builds.collectFirst {
       case (name, warm) if entry == s"_build:$name" =>
@@ -75,13 +34,20 @@ object Prof {
     }.getOrElse {
       // For a plain key, pre-warm its shared builds are NOT run — pass
       // a `_build:` entry first in a separate invocation if needed.
-      () => { queries.Registry.byKey(entry).fn(spark, sfDir).count(); () }
+      val key = entry.stripPrefix("explain:")
+      def frame = queries.Registry.byKey(key).fn(spark, sfDir)
+      if (key == entry) () => { frame.count(); () }
+      else () => {
+        val df = frame
+        df.explain("formatted")
+        println("-------- codegen spans --------")
+        df.explain()
+      }
     }
 
     entries.init.foreach(e => bodyOf(e)())
     val body = bodyOf(entry)
-    val log = new JobLog
-    spark.sparkContext.addSparkListener(log)
+    val log = JobLog.on(spark)
     // Driver-thread stack sampler (5 ms): attributes the wall the job
     // table can't see (gaps = planning, codegen, broadcast waits) to
     // actual frames. Top frame chosen as the first spark/janino frame.
@@ -119,11 +85,11 @@ object Prof {
         println(f"$n%6d  $f")
       }
     }
-    Thread.sleep(500) // drain listener bus
-    println(f"%nPROF $entry wall=$wall%.2f s jobs=${log.jobs.size}")
+    val jobs = log.jobTable()
+    println(f"%nPROF $entry wall=$wall%.2f s jobs=${jobs.size}")
     println(f"${"job"}%4s ${"wall_ms"}%8s ${"tasks"}%6s ${"taskMs"}%8s ${"cpuMs"}%8s  site")
     var acc = 0L
-    log.jobs.values.foreach { j =>
+    jobs.foreach { j =>
       val w = j.t1 - j.t0
       acc += math.max(0L, w)
       println(f"${j.id}%4d ${w}%8d ${j.tasks}%6d ${j.taskMs}%8d ${j.cpuMs}%8d  ${j.site}")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,29 +8,14 @@ object Verify {
     // for targeted scale checks (a full sf1 dump is ~10 min; one key is
     // seconds). The driver invokes with two args (full dump).
     val sfDir = args(0); val outDir = args(1)
-    val keyFilter = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Older fixture generations shipped events.ts as parquet
-      // TIMESTAMP(NANOS): declare the nanos-as-long read policy at session
-      // construction (harmless for µs fixtures; see Tables.apply).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    keyFilter.foreach { kf =>
-      val unknown = kf -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) {
-        // A typo'd key must not look like a passing (empty) targeted run.
-        System.err.println(
-          s"[verify] unknown key(s) in filter: ${unknown.mkString(", ")}")
-        sys.exit(1)
-      }
+    val (keyFilter, unknown) = Harness.keyFilter(args.lift(2))
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"[verify] unknown key(s) in filter: ${unknown.mkString(", ")}")
+      sys.exit(1)
     }
+    val spark = Harness.session(Harness.cpus)
+    new java.io.File(outDir).mkdirs()
     // Collect per-key failures so a broken key can never masquerade as
     // silent absence in the driver's correctness artifact (the round-6
     // lesson: 25 keys threw at plan time and simply vanished from the

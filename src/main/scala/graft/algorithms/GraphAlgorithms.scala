@@ -6,7 +6,7 @@ import org.apache.spark.graphx.{Edge => GXEdge, EdgeDirection => GXDir,
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
   SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
+import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum, release}
 import scala.reflect.ClassTag
 
 /** Vertex-centric iteration (SURVEY §2.6) — the Spark-native equivalent of
@@ -303,9 +303,12 @@ object GraphAlgorithms {
       // Materialize EVERY round: labels_{k-1} appears twice in round k's
       // plan (the join side and inside winners), so a lazy loop doubles
       // the plan per round — measured 2× slower by round 5. The pin also
-      // truncates lineage (SURVEY §7.3.4).
-      pinned(cur.join(winners, Seq("id"), "left_outer")
+      // truncates lineage (SURVEY §7.3.4). The superseded pin is released
+      // at once: the new pin is filled, and the caller gets only the last.
+      val next = pinned(cur.join(winners, Seq("id"), "left_outer")
         .select(col("id"), coalesce(col("next"), col("label")).as("label")))
+      release(cur)
+      next
     }
     ends.unpersist(blocking = false)
     labels

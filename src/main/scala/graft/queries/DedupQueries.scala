@@ -690,14 +690,6 @@ object DedupQueries {
   private[graft] def shingleFrame(s: SparkSession, dir: String): DataFrame =
     shingleHashes(s, dir)
 
-  /** Cache-lifecycle hook: unpersist and drop the memoized shingle-hash
-    * frames for `s` (all sfDirs). See [[graft.Caches]].
-    */
-  def evict(s: SparkSession): Unit = {
-    hsCache.evict(s); pairsCache.evict(s)
-    rareCache.evict(s); clustersCache.evict(s)
-  }
-
   /** Bounded hop+pointer-jump rounds for [[dedupClusters]] — the same
     * unrolled count on both engines, so the key is deterministic. Each
     * round is one edge-hop (neighbor min) followed by one pointer jump
@@ -738,12 +730,12 @@ object DedupQueries {
   // The converged cluster-closure frame is shared by `dedup_clusters`
   // and `corpus_curation_decisions` — memoized per (session, sfDir) so
   // the hop+jump rounds run once (bench `_build:dclusters` hook).
-  private val clustersCache = graft.util.SessionMemo.persisted[String]()
+  private val clustersCache = graft.util.SessionMemo.pinned[String]()
 
   private def clustersFrame(s: SparkSession, dir: String): DataFrame =
-    clustersCache(s, dir)(
+    clustersCache(s, dir)(pinned(
       dedupClustersFrom(s, Tables(s, dir, "documents"),
-        candidatePairs(s, dir)).persist())
+        candidatePairs(s, dir))))
 
   /** Force the shared closure (bench `_build:dclusters` timing hook). */
   def warmClusters(s: SparkSession, dir: String): Unit = {

@@ -53,13 +53,6 @@ object IterQueries {
     ccResult(s, dir).count(); ()
   }
 
-  /** Cache-lifecycle hook: unpersist and drop everything memoized for
-    * `s` (all sfDirs). See [[graft.Caches]].
-    */
-  def evict(s: SparkSession): Unit = {
-    gxCache.evict(s); ccCache.evict(s); lpCache.evict(s)
-  }
-
   // ---- I2 SSSP (bounded, undirected, source = customer 0) ----
 
   private def sssp(s: SparkSession, dir: String): DataFrame =
@@ -231,12 +224,11 @@ object IterQueries {
   // The converged LP label frame is shared by `label_propagation` and
   // `graph_modularity` (X97) — memoized per (session, sfDir) so the five
   // synchronous rounds run once (bench `_build:lp` hook below).
-  private val lpCache = graft.util.SessionMemo.persisted[String]()
+  private val lpCache = graft.util.SessionMemo.pinned[String]()
 
   private[graft] def lpFrame(s: SparkSession, dir: String): DataFrame =
     lpCache(s, dir)(
-      GraphAlgorithms.labelPropagation(s, GTrade(s, dir).undirected, LpIters)
-        .persist())
+      GraphAlgorithms.labelPropagation(s, GTrade(s, dir).undirected, LpIters))
 
   /** Force the shared LP fixpoint (bench `_build:lp` timing hook). */
   def warmLp(s: SparkSession, dir: String): Unit = {

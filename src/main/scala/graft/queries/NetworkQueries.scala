@@ -599,13 +599,6 @@ object NetworkQueries {
     coPairs(s, dir); ()
   }
 
-  /** Cache-lifecycle hook: unpersist and drop the memoized projection for
-    * `s` (all sfDirs). See [[graft.Caches]].
-    */
-  def evict(s: SparkSession): Unit = {
-    pairCache.evict(s); itemCosCache.evict(s)
-  }
-
   /** X78 — basket_rules: association-rule mining over the co-purchase
     * projection — per supplier pair, support count, directional
     * confidences (conf(s1→s2) = n_shared/deg(s1)) and lift

@@ -1618,38 +1618,14 @@ object SimQueries {
     * the probe scan in [[simTopkIvf]] demonstrates REAL partition pruning
     * rather than a post-scan filter.
     */
-  private val ivfIndex = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
-  /** Index directories this JVM created and has not yet deleted — swept
-    * by a shutdown hook so crashed or non-evicting sessions don't leak a
-    * full on-disk embeddings copy per (session, sfDir).
-    */
-  private val liveIndexDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      liveIndexDirs.forEach(p => rmTree(new java.io.File(p)))))
-  }
+  private val ivfIndex = graft.util.SessionMemo.onDisk[String, String](identity)
 
   private def ivfIndexPath(s: SparkSession, dir: String): String =
-    ivfIndex.get((s, dir)).getOrElse {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivf_index")
-        .toString
-      liveIndexDirs.add(p)
+    ivfIndex(s, dir) {
+      val p = graft.util.SessionMemo.tempDir("graft_ivf_index")
       Tables(s, dir, "embeddings").write.partitionBy("label")
         .mode("overwrite").parquet(p)
-      // two racers may both build; the loser deletes its own copy and
-      // adopts the winner's (getOrElseUpdate would orphan one on disk)
-      ivfIndex.putIfAbsent((s, dir), p) match {
-        case None => p
-        case Some(winner) =>
-          liveIndexDirs.remove(p); rmTree(new java.io.File(p)); winner
-      }
+      p
     }
 
   /** Bench warm hook: build the on-disk IVF index so `sim_topk_ivf`'s
@@ -1657,21 +1633,6 @@ object SimQueries {
     * Bench's `_build:ivf` entry).
     */
   def warmIvf(s: SparkSession, dir: String): Unit = { ivfIndexPath(s, dir); () }
-
-  /** Cache-lifecycle hook: unpersist and drop the memoized signature
-    * frames and IVF index paths for `s` (all sfDirs), DELETING the
-    * on-disk index copies — without the delete every session would leak a
-    * full embeddings copy under the temp dir. See [[graft.Caches]].
-    */
-  def evict(s: SparkSession): Unit = {
-    centroidCache.evict(s); normCache.evict(s); sigCache.evict(s)
-    adcScoredCache.evict(s); nearPairCache.evict(s); pqCodesCache.evict(s)
-    ivfIndex.keys.filter(_._1 eq s).foreach { k =>
-      ivfIndex.remove(k).foreach { p =>
-        liveIndexDirs.remove(p); rmTree(new java.io.File(p))
-      }
-    }
-  }
 
   /** The shared CTE chain of the sign-LSH near-dup oracle: defines
     * `scored(v1, v2, cos)` — every bucket-collapsed candidate pair with
@@ -2858,12 +2819,11 @@ object SimQueries {
 
   /** Testable seam: explicit (vec_id, embedding, label) frame. */
   private[graft] def embIvfBalanceOf(emb: DataFrame): DataFrame = {
-    // persisted: ls feeds BOTH the per-list output and the totals agg —
+    // pinned: ls feeds BOTH the per-list output and the totals agg —
     // without reuse the single-column corpus scan + partial count runs
     // twice (plan-audited; at 100 TB that is two corpus scans)
-    val ls = emb.groupBy(col("label")).agg(count(lit(1)).as("n_vecs"))
-      .persist()
-    balanceFromCounts(ls)
+    balanceFromCounts(pinned(
+      emb.groupBy(col("label")).agg(count(lit(1)).as("n_vecs"))))
   }
 
   /** The exact balance formula over a per-list count frame

@@ -775,11 +775,6 @@ object StreamQueries {
 
   private val fcCache = graft.util.SessionMemo.persisted[String]()
 
-  /** Cache-lifecycle hook: unpersist and drop the memoized funnel
-    * first-click frames for `s` (all sfDirs). See [[graft.Caches]].
-    */
-  def evict(s: SparkSession): Unit = fcCache.evict(s)
-
   /** X46 — events_zscore: per-type standardization + outlier flag — the
     * telemetry data-quality gate (drop or down-weight anomalous rows
     * before they reach a training aggregate). Population moments per
@@ -1677,7 +1672,6 @@ object StreamQueries {
        |  FROM hd)
        |ORDER BY seg""".stripMargin
   }
-
 
   /** X199 — events_did: DIFFERENCE-IN-DIFFERENCES — the
     * experimentation family's quasi-experimental rung (X88 A/B →
@@ -2976,6 +2970,5 @@ object StreamQueries {
     Q("stream_asof", streamAsof, Some(streamAsofSql)),
     Q("stream_butterflies", streamButterflies, Some(streamButterfliesSql)),
   )
-
 
 }

@@ -474,63 +474,35 @@ object Substrate {
 
   // One bucketed-table pair per (session, sfDir): orders + lineitem
   // written with bucketBy/sortBy on the order key into a temp warehouse
-  // path. ADVICE r9 hardening: `computeIfAbsent` makes the expensive
-  // build exactly-once per key (no duplicate racing writes), table names
-  // carry the per-build temp-dir name as a uniquifier (so two dirs —
-  // even hashCode-colliding ones — can never point catalog entries at
-  // each other's data), and [[evict]] drops tables + reaps dirs instead
-  // of waiting for JVM shutdown (the shutdown hook remains as a backstop
-  // for sessions that never evict).
-  private val bucketed = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String, String)]()
-  private val liveBucketDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def rmTree(p: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(p))
-  }
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      liveBucketDirs.forEach(rmTree(_))))
-  }
+  // path. ADVICE r9 hardening: the memo makes the expensive build
+  // exactly-once per key (no duplicate racing writes), table names carry
+  // the per-build temp-dir name as a uniquifier (so two dirs — even
+  // hashCode-colliding ones — can never point catalog entries at each
+  // other's data), and `Caches.evict` drops the tables and deletes the
+  // dir instead of waiting for JVM shutdown.
+  private val bucketed =
+    graft.util.SessionMemo.onDisk[String, (String, String, String)](_._3,
+      { case (s, (to, tl, _)) =>
+        scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $to"))
+        scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $tl")); ()
+      })
 
   private def bucketedTables(s: SparkSession,
                              dir: String): (String, String) = {
-    val (to, tl, _) = bucketed.computeIfAbsent((s, dir), { _ =>
-      val p = java.nio.file.Files.createTempDirectory("graft_bucketed")
-      val suffix = p.getFileName.toString
+    val (to, tl, _) = bucketed(s, dir) {
+      val p = graft.util.SessionMemo.tempDir("graft_bucketed")
+      val suffix = new java.io.File(p).getName
         .replaceAll("[^A-Za-z0-9]", "_").toLowerCase
       val (to, tl) = (s"graft_bkt_orders_$suffix", s"graft_bkt_li_$suffix")
-      liveBucketDirs.add(p.toString)
       Tables(s, dir, "orders")
         .write.bucketBy(BucketN, "o_orderkey").sortBy("o_orderkey")
         .option("path", s"$p/orders").mode("overwrite").saveAsTable(to)
       Tables(s, dir, "lineitem")
         .write.bucketBy(BucketN, "l_orderkey").sortBy("l_orderkey")
         .option("path", s"$p/lineitem").mode("overwrite").saveAsTable(tl)
-      (to, tl, p.toString)
-    })
-    (to, tl)
-  }
-
-  /** Drop the session's bucketed catalog tables and reap their temp
-    * warehouse dirs (wired into [[graft.Caches.evict]]).
-    */
-  def evict(s: SparkSession): Unit = {
-    val it = bucketed.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        val (to, tl, p) = e.getValue
-        scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $to"))
-        scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $tl"))
-        rmTree(p)
-        liveBucketDirs.remove(p)
-        it.remove()
-      }
+      (to, tl, p)
     }
+    (to, tl)
   }
 
   /** R17 — BUCKETED co-located join: the other prompt-level shuffle

@@ -891,13 +891,6 @@ object TextQueries {
     bpeChain(s, dir)._1.count(); ()
   }
 
-  /** Cache-lifecycle hook (see [[graft.Caches]]): releases the chain's
-    * pins EXPLICITLY before dropping the references — a long-lived
-    * session cycling sfDirs must not accumulate pin blocks until a GC
-    * happens to run the ContextCleaner.
-    */
-  def evict(s: SparkSession): Unit = bpeCache.evict(s)
-
   /** bpe_encode — APPLY the learned merge table: the tokenize step a
     * pipeline runs after `bpe_merges` trains the vocabulary. Output per
     * document: the encoded token count and how many tokens are merged

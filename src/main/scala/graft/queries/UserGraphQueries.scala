@@ -81,15 +81,6 @@ object UserGraphQueries {
     dirProbeHist(s, dir, GUser(s, dir)); ()
   }
 
-  /** Cache-lifecycle hook (see [[graft.Caches]]). */
-  def evict(s: SparkSession): Unit = {
-    gxCache.evict(s); probeHistCache.evict(s); walksCache.evict(s)
-    zipfDirCache.evict(s); zipfCanCache.evict(s); sccLabCache.evict(s)
-    mstCache.evict(s); matchCache.evict(s)
-    louvCache.evict(s); leidCache.evict(s); ueCache.evict(s)
-    GUser.evict(s)
-  }
-
   /** scan_graph_user — construct G_user, emit its edge set (self-loops
     * and all).
     */

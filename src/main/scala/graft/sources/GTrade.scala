@@ -130,11 +130,6 @@ object GTrade {
   def edgesWithCounts(spark: SparkSession, dir: String): DataFrame =
     build(spark, dir)._2
 
-  /** Drop and unpersist everything memoized for `spark` (all sfDirs) — the
-    * cache-lifecycle hook for long-lived sessions (judge r2 item #9).
-    */
-  def evict(spark: SparkSession): Unit = cache.evict(spark)
-
   /** SQL twin of [[dynOffset]]: smallest power of ten > max(c_custkey),
     * floored at [[MinOffset]] — integer comparisons only, so bit-identical
     * to the Spark side at any scale. The candidate list spans the full

@@ -124,7 +124,4 @@ object GUser {
     val g = apply(s, dir)
     g.vertices.count(); g.edges.count(); ()
   }
-
-  /** Unpersist and drop everything memoized for `s` (all sfDirs). */
-  def evict(s: SparkSession): Unit = cache.evict(s)
 }

@@ -95,7 +95,4 @@ object Tables {
         df.withColumn("ts", col("ts").cast(TimestampType))
     }
   }
-
-  /** Drop memoized plan objects for `spark` (no persisted data here). */
-  def evict(spark: SparkSession): Unit = cache.evict(spark)
 }

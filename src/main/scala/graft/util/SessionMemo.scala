@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.SqlBridge
 
 /** Session-scoped exactly-once memo for expensive derived artifacts
-  * (persisted/checkpointed frames, GraphX graphs, build tuples).
+  * (persisted/checkpointed frames, GraphX graphs, build tuples, on-disk
+  * copies).
   *
   * The one pattern every query family uses, factored once (ADVICE r10 /
   * judge r11 item #4): `ConcurrentHashMap.computeIfAbsent`, NOT
@@ -19,15 +20,20 @@ import org.apache.spark.sql.graftbridge.SqlBridge
   * touch the SAME memo recursively — not even under a different key.
   * Builders here only read source tables / other memos, which is why
   * every derived frame gets its own `SessionMemo` instance rather than
-  * one shared registry map.
+  * sharing one map of entries.
   *
-  * `evict(s)` drops every entry built on session `s` and runs `dispose`
-  * on it: unpersist for persisted frames, [[SqlBridge.release]] for
-  * pinned ones (`unpersist` does not reach a pin's blocks).
+  * Every memo registers itself on construction, so [[graft.Caches.evict]]
+  * reaches it with no hand-kept list. `evict(s)` drops every entry built
+  * on session `s` and runs `dispose(s, entry)` on it: unpersist for
+  * persisted frames, [[SqlBridge.release]] for pinned ones (`unpersist`
+  * does not reach a pin's blocks), dir deletion for [[onDisk]] ones.
   */
-final class SessionMemo[K, V](dispose: V => Unit) {
+final class SessionMemo[K, V](dispose: (SparkSession, V) => Unit) {
+  def this(dispose: V => Unit) = this((_: SparkSession, v: V) => dispose(v))
+
   private val m =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, K), V]()
+  SessionMemo.all.add(this)
 
   /** The memoized value for (session, key), building it exactly once. */
   def apply(s: SparkSession, k: K)(build: => V): V =
@@ -36,10 +42,14 @@ final class SessionMemo[K, V](dispose: V => Unit) {
   /** Drop + dispose every entry of session `s`. */
   def evict(s: SparkSession): Unit =
     m.forEach((key, _) =>
-      if (key._1 eq s) Option(m.remove(key)).foreach(dispose))
+      if (key._1 eq s) Option(m.remove(key)).foreach(dispose(s, _)))
 }
 
 object SessionMemo {
+  /** Every memo constructed in this JVM. */
+  private[graft] val all =
+    new java.util.concurrent.ConcurrentLinkedQueue[SessionMemo[_, _]]()
+
   /** Memo of persisted DataFrames: evict unpersists (non-blocking). */
   def persisted[K](): SessionMemo[K, DataFrame] =
     new SessionMemo(_.unpersist(blocking = false))
@@ -53,4 +63,41 @@ object SessionMemo {
 
   /** Memo whose entries need no explicit disposal (plan objects, maps). */
   def dropOnly[K, V](): SessionMemo[K, V] = new SessionMemo(_ => ())
+
+  /** Memo of values written under a [[tempDir]] (`dir` of the value):
+    * evict runs `drop` (e.g. DROP TABLE over the files) and then deletes
+    * the dir — without the delete every session would leak a full
+    * on-disk copy under the temp dir.
+    */
+  def onDisk[K, V](dir: V => String,
+      drop: (SparkSession, V) => Unit = (_: SparkSession, _: V) => ())
+      : SessionMemo[K, V] =
+    new SessionMemo[K, V]((s: SparkSession, v: V) => {
+      drop(s, v); deleteDir(dir(v))
+    })
+
+  /** Temp dirs made by [[tempDir]] and not yet deleted: a shutdown hook
+    * deletes them, the backstop for sessions that never evict.
+    */
+  private val liveDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  locally {
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      liveDirs.forEach(p => rmTree(new java.io.File(p)))))
+  }
+
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete(); ()
+  }
+
+  /** A fresh temp dir for an [[onDisk]] memo's builder. */
+  def tempDir(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix).toString
+    liveDirs.add(p)
+    p
+  }
+
+  private def deleteDir(p: String): Unit = {
+    rmTree(new java.io.File(p)); liveDirs.remove(p); ()
+  }
 }

@@ -3,16 +3,13 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for every spec (one JVM, `Test / fork`). */
+/** Shared local SparkSession for every spec (one JVM, `Test / fork`):
+  * the mains' session contract ([[Harness.session]]) on 4 threads, whatever
+  * `SPARK_GRAFT_CPUS` says, so specs that count tasks or partitions hold.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Harness.session(4, Seq("spark.app.name" -> "graft-test"))
 }
 
 /** The reference's canonical 5-vertex JUnit fixture graph

@@ -1345,6 +1345,20 @@ class TrainingAuditSpec extends GraftSuite {
     assert(again.toSeq === got.toSeq)
   }
 
+  test("emb_ivf_balance leaves no entry in the cache manager") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val emb = Seq((1L, Array(0.1f), 5), (2L, Array(0.2f), 5),
+      (3L, Array(0.3f), 5), (4L, Array(0.4f), 7))
+      .toDF("vec_id", "embedding", "label")
+    SimQueries.embIvfBalanceOf(emb).collect()
+    // the per-list count frame the audit reads twice, as it builds it
+    val ls = emb.groupBy(col("label")).agg(count(lit(1)).as("n_vecs"))
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    assert(ls.sparkSession.sharedState.cacheManager.lookupCachedData(ls)
+      .isEmpty, "the per-list counts stayed cached")
+  }
+
   test("feature_psi: Laplace-smoothed terms and per-feature totals " +
     "match a hand model, including a zero-count reference bin") {
     import spark.implicits._
