@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.storage.StorageLevel
 
 object SqlBridge {
   /** Wrap a Catalyst expression as a user-facing Column. */
@@ -33,7 +34,9 @@ object SqlBridge {
     * scale), or the reliable `checkpoint` into the context's checkpoint
     * dir when the session sets `graft.reliableCheckpoint=true` (or the
     * GRAFT_RELIABLE_CHECKPOINT=true env as the default); the file write
-    * is reliability's extra job. Under adaptive execution the lazy cut
+    * is reliability's extra job; it reads the rows the fill persisted
+    * (freed by [[release]]) instead of computing the frame's last stage
+    * again. Under adaptive execution the lazy cut
     * runs the frame's shuffle-map jobs, and one RDD action over the
     * checkpointed rows then fills the checkpoint and folds
     * `(count, sum(probe))`: the same jobs as an eager `localCheckpoint()`,
@@ -53,14 +56,16 @@ object SqlBridge {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
     val flag = ds.sparkSession.conf.get("graft.reliableCheckpoint",
       sys.env.getOrElse("GRAFT_RELIABLE_CHECKPOINT", "false"))
+    val reliable = flag == "true" || flag == "1"
     val ck =
-      if (flag == "true" || flag == "1") ds.checkpoint(eager = false)
+      if (reliable) ds.checkpoint(eager = false)
       else ds.localCheckpoint(eager = false)
+    val cut = ck.queryExecution.analyzed match { case l: LogicalRDD => l }
+    if (reliable) cut.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     val (rows, s) = ck.select(probe.cast("long")).queryExecution.toRdd
       .aggregate((0L, 0L))(
         (a, r) => (a._1 + 1L, if (r.isNullAt(0)) a._2 else a._2 + r.getLong(0)),
         (a, b) => (a._1 + b._1, a._2 + b._2))
-    val cut = ck.queryExecution.analyzed match { case l: LogicalRDD => l }
     val width = 8L + cut.output.map(_.dataType.defaultSize.toLong).sum
     val stats = Statistics(
       sizeInBytes = BigInt(math.max(rows, 1L)) * width,

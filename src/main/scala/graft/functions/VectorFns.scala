@@ -30,4 +30,8 @@ object VectorFns {
        |  (acc, x) -> acc + x)""".stripMargin.replace("\n", " ")
 
   def normSql(a: String): String = s"sqrt(${dotSql(a, a)})"
+
+  /** DuckDB twin of [[cosine]]. */
+  def cosineSql(a: String, b: String, normA: String, normB: String): String =
+    s"${dotSql(a, b)} / ($normA * $normB)"
 }

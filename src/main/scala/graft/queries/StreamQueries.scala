@@ -205,15 +205,10 @@ object StreamQueries {
   private val CcOrcRounds = 12
 
   private val t11Sql = {
-    import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
-    val kb = UserGraphQueries.KcBits
     val rounds = (1 to CcOrcRounds).map { r =>
       s"""ccn$r AS (
          |  SELECT e.v AS id, MIN(x.label) AS ln
-         |  FROM ccu e JOIN cl${r - 1} x ON e.u = x.id GROUP BY e.v),
+         |  FROM zund e JOIN cl${r - 1} x ON e.u = x.id GROUP BY e.v),
          |ccd$r AS (
          |  SELECT x.id, y.label AS ld
          |  FROM cl${r - 1} x JOIN cl${r - 1} y ON x.label = y.id),
@@ -223,17 +218,9 @@ object StreamQueries {
          |  FROM cl${r - 1} x LEFT JOIN ccn$r n ON x.id = n.id
          |  LEFT JOIN ccd$r d ON x.id = d.id)""".stripMargin
     }.mkString(",\n")
-    s"""WITH cce AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $kb)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $kb)) AS v
-       |  FROM events),
-       |ccs AS MATERIALIZED (
-       |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |  FROM cce WHERE u <> v),
-       |ccu AS MATERIALIZED (
-       |  SELECT a AS u, b AS v FROM ccs UNION ALL SELECT b, a FROM ccs),
+    s"""${UserGraphQueries.ZipfSql("zund")},
        |cl0 AS MATERIALIZED (
-       |  SELECT u AS id, u AS label FROM (SELECT DISTINCT u FROM ccu)),
+       |  SELECT u AS id, u AS label FROM (SELECT DISTINCT u FROM zund)),
        |$rounds
        |SELECT id, label, TRUE AS converged
        |FROM cl$CcOrcRounds ORDER BY id""".stripMargin
@@ -2281,31 +2268,18 @@ object StreamQueries {
   }
 
   private val streamButterfliesSql = {
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
-    val kb = UserGraphQueries.KcBits
     val cap = UserGraphQueries.TipFanCap
-    s"""WITH sbe AS MATERIALIZED (
-       |  SELECT DISTINCT u, v FROM (
-       |    SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $kb)) AS u,
-       |           ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $kb)) AS v
-       |    FROM events) raw
-       |  WHERE u <> v),
-       |sbf AS MATERIALIZED (SELECT v, COUNT(*) AS fan FROM sbe GROUP BY v),
-       |sbcap AS (
-       |  SELECT e.u, e.v FROM sbe e JOIN sbf f ON f.v = e.v
-       |  WHERE f.fan <= $cap),
+    s"""${UserGraphQueries.ZipfSql("zdir", "zfan", "zcap")},
        |sbp AS MATERIALIZED (
        |  SELECT l.u AS x, r.u AS y, COUNT(*) AS w
-       |  FROM sbcap l JOIN sbcap r ON l.v = r.v AND l.u < r.u
+       |  FROM zcap l JOIN zcap r ON l.v = r.v AND l.u < r.u
        |  GROUP BY 1, 2)
        |SELECT
-       |  (SELECT COUNT(*) FROM sbe) AS n_edges,
-       |  (SELECT COUNT(*) FROM sbf) AS n_rights,
-       |  (SELECT COUNT(*) FROM sbf WHERE fan > $cap) AS n_rights_capped,
+       |  (SELECT COUNT(*) FROM zdir) AS n_edges,
+       |  (SELECT COUNT(*) FROM zfan) AS n_rights,
+       |  (SELECT COUNT(*) FROM zfan WHERE fan > $cap) AS n_rights_capped,
        |  (SELECT COALESCE(CAST(SUM(fan * (fan - 1) // 2) AS BIGINT), 0)
-       |   FROM sbf WHERE fan <= $cap) AS wedges,
+       |   FROM zfan WHERE fan <= $cap) AS wedges,
        |  (SELECT COUNT(*) FROM sbp WHERE w >= 2) AS n_pairs,
        |  (SELECT COALESCE(CAST(SUM(w * (w - 1) // 2) AS BIGINT), 0)
        |   FROM sbp) AS butterflies""".stripMargin

@@ -2646,30 +2646,108 @@ object UserGraphQueries {
     */
   private val KcK = 3
   private val KcRounds = 12
-  private[graft] val KcBits = 17
+  private[graft] final val KcBits = 17
+
+  /** The derived Zipf graph, the one Spark definition every tier key
+    * reads: per event, four salted string hashes of `event_id` give
+    * `u = h(kcu) mod 2^(h(kcb) mod KcBits)` and the same for `v` with
+    * `kcv`/`kcc`, then the `carry` columns (name → expression, computed
+    * beside the hashes), then `u ≠ v`. No distinct: each seam below adds
+    * its own. [[ZipfSql]] is the DuckDB twin.
+    */
+  private[graft] def zipfUv(events: DataFrame,
+      carry: (String, Column)*): DataFrame = {
+    import graft.functions.TextFns
+    val eid = col("event_id").cast("string")
+    def hash(tag: String) =
+      TextFns.stringHash(concat(lit(tag + ":"), eid))
+    def mod2(x: String, k: String) =
+      expr(s"$x % shiftleft(cast(1 as bigint), cast($k % $KcBits as int))")
+    events
+      .select(Seq(hash("kcu").as("h1"), hash("kcb").as("h2"),
+        hash("kcv").as("h3"), hash("kcc").as("h4")) ++
+        carry.map { case (n, c) => c.as(n) }: _*)
+      .select(Seq(mod2("h1", "h2").as("u"), mod2("h3", "h4").as("v")) ++
+        carry.map { case (n, _) => col(n) }: _*)
+      .filter(col("u") =!= col("v"))
+  }
+
+  /** The DuckDB twin of [[zipfUv]] and its seams: a `WITH` prefix (the
+    * [[graft.sources.GTrade.SqlPrefix]] idiom) that defines the derived
+    * Zipf graph under fixed CTE names, emitting only the CTEs the oracle
+    * `reads` plus what they read. DuckDB 1.0 runs a `MATERIALIZED` CTE
+    * even when nothing references it, so an unread CTE would be pure
+    * oracle cost.
+    *
+    *  - `zraw(u, v, carried…)`: per event, before `u ≠ v`;
+    *  - `zdir(u, v, carried…)`: distinct, `u ≠ v` ([[zipfDirectedEdgesOf]]);
+    *  - `zcan(a, b)`: distinct canonical pairs ([[zipfEdgesOf]]);
+    *  - `zund(u, v)`: both orientations of `zcan`;
+    *  - `zfan(v, fan)`: each `zdir` target's in-degree (the right fan);
+    *  - `zcap(u, v)`: the `zdir` edges whose right fan ≤ [[TipFanCap]].
+    */
+  private[graft] object ZipfSql {
+    private def hash(tag: String) = graft.functions.TextFns
+      .stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
+      .replace("\n", " ")
+
+    /** (name, the CTEs it reads, definition), in emission order. */
+    private def ctes(carry: Seq[(String, String)]) = {
+      val cols = carry.map { case (n, _) => s", $n" }.mkString
+      val exprs = carry.map { case (n, e) => s",\n         $e AS $n" }.mkString
+      Seq(
+        ("zraw", Nil,
+          s"""zraw AS (
+             |  SELECT ${hash("kcu")} % (CAST(1 AS BIGINT) << (${hash("kcb")} % $KcBits)) AS u,
+             |         ${hash("kcv")} % (CAST(1 AS BIGINT) << (${hash("kcc")} % $KcBits)) AS v$exprs
+             |  FROM events)""".stripMargin),
+        ("zdir", Seq("zraw"),
+          s"""zdir AS MATERIALIZED (
+             |  SELECT DISTINCT u, v$cols FROM zraw WHERE u <> v)""".stripMargin),
+        ("zcan", Seq("zraw"),
+          """zcan AS MATERIALIZED (
+            |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
+            |  FROM zraw WHERE u <> v)""".stripMargin),
+        ("zund", Seq("zcan"),
+          """zund AS MATERIALIZED (
+            |  SELECT a AS u, b AS v FROM zcan
+            |  UNION ALL SELECT b AS u, a AS v FROM zcan)""".stripMargin),
+        ("zfan", Seq("zdir"),
+          """zfan AS MATERIALIZED (
+            |  SELECT v, COUNT(*) AS fan FROM zdir GROUP BY v)""".stripMargin),
+        ("zcap", Seq("zdir", "zfan"),
+          s"""zcap AS MATERIALIZED (
+             |  SELECT e.u, e.v FROM zdir e JOIN zfan f ON f.v = e.v
+             |  WHERE f.fan <= $TipFanCap)""".stripMargin))
+    }
+
+    /** The prefix for an oracle that reads the CTEs `reads`. */
+    def apply(reads: String*): String = carrying(Nil, reads: _*)
+
+    /** [[apply]] with `carry` columns (name → SQL over `events`) on
+      * `zraw` and `zdir`, as [[zipfUv]]'s `carry`.
+      */
+    def carrying(carry: Seq[(String, String)], reads: String*): String = {
+      val all = ctes(carry)
+      val deps = all.map { case (n, d, _) => n -> d }.toMap
+      def closure(n: String): Set[String] = deps(n).toSet.flatMap(closure) + n
+      val want = reads.toSet.flatMap(closure)
+      all.collect { case (n, _, sql) if want(n) => sql }
+        .mkString("WITH ", ",\n", "")
+    }
+  }
+
+  /** Distinct canonical (a < b) pairs of a (u, v) frame. */
+  private def canonical(uv: DataFrame): DataFrame =
+    uv.select(least(col("u"), col("v")).as("a"),
+      greatest(col("u"), col("v")).as("b")).distinct()
 
   /** The derived deterministic Zipf edge list (simple, undirected as a
     * (a<b) canonical pair set) — testable seam over an explicit events
     * frame.
     */
-  private[graft] def zipfEdgesOf(events: DataFrame): DataFrame = {
-    import graft.functions.TextFns
-    val eid = col("event_id").cast("string")
-    def h(tag: String) =
-      TextFns.stringHash(concat(lit(tag + ":"), eid))
-    val uv = events
-      .select(h("kcu").as("h1"), h("kcb").as("h2"),
-        h("kcv").as("h3"), h("kcc").as("h4"))
-      .select(
-        expr(s"h1 % shiftleft(cast(1 as bigint), cast(h2 % $KcBits as int))")
-          .as("u"),
-        expr(s"h3 % shiftleft(cast(1 as bigint), cast(h4 % $KcBits as int))")
-          .as("v"))
-    uv.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .distinct()
-  }
+  private[graft] def zipfEdgesOf(events: DataFrame): DataFrame =
+    canonical(zipfUv(events))
 
   // The derived Zipf frames are shared by four keys (kcore / truss /
   // rich_club_fixed on the canonical frame, scc_pivot on the directed
@@ -2689,11 +2767,7 @@ object UserGraphQueries {
 
   private[graft] def zipfCanonicalFrame(s: SparkSession,
       dir: String): DataFrame =
-    zipfCanCache(s, dir)(
-      pinned(zipfDirectedFrame(s, dir)
-        .select(least(col("u"), col("v")).as("a"),
-          greatest(col("u"), col("v")).as("b"))
-        .distinct()))
+    zipfCanCache(s, dir)(pinned(canonical(zipfDirectedFrame(s, dir))))
 
   /** Bench `_build:zipf` hook: both shared derived-graph frames. */
   def warmZipf(s: SparkSession, dir: String): Unit = {
@@ -2730,33 +2804,21 @@ object UserGraphQueries {
   }
 
   private val graphKcoreSql = {
-    import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     val rounds = (1 to KcRounds).map { r =>
       s"""kca$r AS MATERIALIZED (
-         |  SELECT e.a AS v FROM kcund e
-         |  JOIN kca${r - 1} x ON e.a = x.v
-         |  JOIN kca${r - 1} y ON e.b = y.v
-         |  GROUP BY e.a HAVING COUNT(*) >= $KcK)""".stripMargin
+         |  SELECT e.u AS v FROM zund e
+         |  JOIN kca${r - 1} x ON e.u = x.v
+         |  JOIN kca${r - 1} y ON e.v = y.v
+         |  GROUP BY e.u HAVING COUNT(*) >= $KcK)""".stripMargin
     }.mkString(",\n")
-    s"""WITH kce AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |kcs AS MATERIALIZED (
-       |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |  FROM kce WHERE u <> v),
-       |kcund AS MATERIALIZED (
-       |  SELECT a, b FROM kcs UNION ALL SELECT b AS a, a AS b FROM kcs),
-       |kca0 AS (SELECT DISTINCT a AS v FROM kcund),
+    s"""${ZipfSql("zund")},
+       |kca0 AS (SELECT DISTINCT u AS v FROM zund),
        |$rounds
-       |SELECT e.a AS v, COUNT(*) AS core_degree, TRUE AS converged
-       |FROM kcund e
-       |JOIN kca$KcRounds x ON e.a = x.v
-       |JOIN kca$KcRounds y ON e.b = y.v
-       |GROUP BY e.a ORDER BY v""".stripMargin
+       |SELECT e.u AS v, COUNT(*) AS core_degree, TRUE AS converged
+       |FROM zund e
+       |JOIN kca$KcRounds x ON e.u = x.v
+       |JOIN kca$KcRounds y ON e.v = y.v
+       |GROUP BY e.u ORDER BY v""".stripMargin
   }
 
   /** Synchronous-round cap for [[corenessOf]]'s h-index iteration —
@@ -2841,29 +2903,17 @@ object UserGraphQueries {
   }
 
   private val graphCorenessSql = {
-    import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     val rounds = (1 to CorenessRounds).map { r =>
       s"""ch$r AS MATERIALIZED (
          |  SELECT v, MAX(LEAST(rn, h)) AS h FROM (
-         |    SELECT e.a AS v, x.h,
-         |      row_number() OVER (PARTITION BY e.a ORDER BY x.h DESC) AS rn
-         |    FROM crund e JOIN ch${r - 1} x ON e.b = x.v)
+         |    SELECT e.u AS v, x.h,
+         |      row_number() OVER (PARTITION BY e.u ORDER BY x.h DESC) AS rn
+         |    FROM zund e JOIN ch${r - 1} x ON e.v = x.v)
          |  GROUP BY v)""".stripMargin
     }.mkString(",\n")
-    s"""WITH cre AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |crs AS MATERIALIZED (
-       |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |  FROM cre WHERE u <> v),
-       |crund AS MATERIALIZED (
-       |  SELECT a, b FROM crs UNION ALL SELECT b AS a, a AS b FROM crs),
+    s"""${ZipfSql("zund")},
        |ch0 AS MATERIALIZED (
-       |  SELECT a AS v, COUNT(*) AS h FROM crund GROUP BY a),
+       |  SELECT u AS v, COUNT(*) AS h FROM zund GROUP BY u),
        |$rounds
        |SELECT v, h AS coreness, TRUE AS converged
        |FROM ch$CorenessRounds ORDER BY v""".stripMargin
@@ -2879,7 +2929,7 @@ object UserGraphQueries {
     * 759M at sf1 vs 75K / 133K capped — measured in tools/sim_tip.py;
     * the cap engages on exactly 1 / 16 right hubs there).
     */
-  private[graft] val TipFanCap = 1000L
+  private[graft] final val TipFanCap = 1000L
 
   /** The fixed k ladder for the leveled tip peel (the X114 truss
     * stance: a fixed ladder with a declared cap, classes populated
@@ -2984,10 +3034,6 @@ object UserGraphQueries {
   }
 
   private val graphTipDecomposeSql = {
-    import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     val sb = new StringBuilder
     var prev = "tba0"
     val fixpoints = TipLadder.zipWithIndex.map { case (k, li) =>
@@ -3014,23 +3060,14 @@ object UserGraphQueries {
     val tipCase = fixpoints.reverse.map { case (k, cte) =>
       s"WHEN vv.vid IN (SELECT vid FROM $cte) THEN $k"
     }.mkString("\n       ")
-    s"""WITH tbe AS MATERIALIZED (
-       |  SELECT DISTINCT u, v FROM (
-       |    SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |           ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |    FROM events) raw
-       |  WHERE u <> v),
-       |tbfan AS (
-       |  SELECT v FROM tbe GROUP BY v HAVING COUNT(*) <= $TipFanCap),
-       |tbcap AS MATERIALIZED (
-       |  SELECT u, v FROM tbe JOIN tbfan USING (v)),
+    s"""${ZipfSql("zdir", "zcap")},
        |tbp AS MATERIALIZED (
        |  SELECT x, y, w * (w - 1) // 2 AS bf FROM (
        |    SELECT l.u AS x, r.u AS y, COUNT(*) AS w
-       |    FROM tbcap l JOIN tbcap r ON l.v = r.v AND l.u < r.u
+       |    FROM zcap l JOIN zcap r ON l.v = r.v AND l.u < r.u
        |    GROUP BY 1, 2) pw
        |  WHERE w >= 2),
-       |tbv AS MATERIALIZED (SELECT DISTINCT u AS vid FROM tbe),
+       |tbv AS MATERIALIZED (SELECT DISTINCT u AS vid FROM zdir),
        |tba0 AS (SELECT vid FROM tbv)${sb.toString}
        |SELECT vv.vid AS v,
        |  CAST(CASE $tipCase
@@ -3145,10 +3182,6 @@ object UserGraphQueries {
   }
 
   private val graphWingDecomposeSql = {
-    import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     def round(prev: String, cur: String, k: Long) =
       s""",
          |${cur}p AS (
@@ -3165,7 +3198,7 @@ object UserGraphQueries {
          |    GROUP BY 1, 2) s
          |  WHERE s.b >= $k)""".stripMargin
     val sb = new StringBuilder
-    var prev = "wg0"
+    var prev = "zcap"
     val fixpoints = WingLadder.zip(WingRounds).map { case (k, cap) =>
       for (r <- 1 to cap) {
         val cur = s"wg${k}_$r"
@@ -3177,21 +3210,12 @@ object UserGraphQueries {
     val wingCase = fixpoints.reverse.map { case (k, cte) =>
       s"WHEN EXISTS (SELECT 1 FROM $cte f WHERE f.u = e.u AND f.v = e.v) THEN $k"
     }.mkString("\n       ")
-    s"""WITH wge AS MATERIALIZED (
-       |  SELECT DISTINCT u, v FROM (
-       |    SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |           ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |    FROM events) raw
-       |  WHERE u <> v),
-       |wgfan AS (
-       |  SELECT v FROM wge GROUP BY v HAVING COUNT(*) <= $TipFanCap),
-       |wg0 AS MATERIALIZED (
-       |  SELECT u, v FROM wge JOIN wgfan USING (v))${sb.toString}
+    s"""${ZipfSql("zcap")}${sb.toString}
        |SELECT e.u, e.v,
        |  CAST(CASE $wingCase
        |       ELSE 0 END AS BIGINT) AS wingness,
        |  TRUE AS converged
-       |FROM wg0 e ORDER BY u, v""".stripMargin
+       |FROM zcap e ORDER BY u, v""".stripMargin
   }
 
   /** X114 — graph_truss_decompose: K-TRUSS DECOMPOSITION over the same
@@ -3289,10 +3313,6 @@ object UserGraphQueries {
   }
 
   private val graphTrussDecomposeSql = {
-    import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     // Leveled unrolled peel: tr_{k}_{r} = alive canonical edges after
     // round r of level k. Support uses the SAME degree-ordered oriented
     // enumeration as the Spark plan (an unoriented common-neighbor join
@@ -3329,22 +3349,16 @@ object UserGraphQueries {
     val names = for (k <- 3 to TrussCap; r <- 1 to TrussRounds)
       yield (k, r, s"tr_${k}_$r")
     val chain = names.zipWithIndex.map { case ((k, _, cur), i) =>
-      val prev = if (i == 0) "kcs" else names(i - 1)._3
+      val prev = if (i == 0) "zcan" else names(i - 1)._3
       round(prev, cur, k)
     }.mkString(",\n")
     val t3 = s"tr_3_$TrussRounds"
     val t4 = s"tr_4_$TrussRounds"
-    s"""WITH kce AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |kcs AS MATERIALIZED (
-       |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |  FROM kce WHERE u <> v),
+    s"""${ZipfSql("zcan")},
        |$chain
        |SELECT * FROM (
        |  SELECT CAST(2 AS BIGINT) AS trussness,
-       |    (SELECT COUNT(*) FROM kcs) - (SELECT COUNT(*) FROM $t3)
+       |    (SELECT COUNT(*) FROM zcan) - (SELECT COUNT(*) FROM $t3)
        |      AS n_edges, TRUE AS converged
        |  UNION ALL
        |  SELECT CAST(3 AS BIGINT),
@@ -3458,10 +3472,6 @@ object UserGraphQueries {
   }
 
   private val graphTrussnessSql = {
-    import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     val rounds = (1 to TrussnessRounds).map { r =>
       s"""tnh$r AS MATERIALIZED (
          |  SELECT e, MAX(LEAST(rn, nh)) AS h FROM (
@@ -3472,15 +3482,8 @@ object UserGraphQueries {
          |    JOIN tnh${r - 1} y ON i.g = y.e)
          |  GROUP BY e)""".stripMargin
     }.mkString(",\n")
-    s"""WITH tne AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |tns AS MATERIALIZED (
-       |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |  FROM tne WHERE u <> v),
-       |tnu AS (SELECT a, b FROM tns UNION ALL SELECT b, a FROM tns),
-       |tnd AS (SELECT a AS v, COUNT(*) AS d FROM tnu GROUP BY 1),
+    s"""${ZipfSql("zcan", "zund")},
+       |tnd AS (SELECT u AS v, COUNT(*) AS d FROM zund GROUP BY 1),
        |tno AS MATERIALIZED (
        |  SELECT CASE WHEN x.d < y.d OR (x.d = y.d AND e.a < e.b)
        |              THEN e.a ELSE e.b END AS s,
@@ -3488,7 +3491,7 @@ object UserGraphQueries {
        |              THEN e.b ELSE e.a END AS t,
        |         CASE WHEN x.d < y.d OR (x.d = y.d AND e.a < e.b)
        |              THEN y.d ELSE x.d END AS dt
-       |  FROM tns e JOIN tnd x ON x.v = e.a JOIN tnd y ON y.v = e.b),
+       |  FROM zcan e JOIN tnd x ON x.v = e.a JOIN tnd y ON y.v = e.b),
        |tnt AS MATERIALIZED (
        |  SELECT w.p, w.u, w.w FROM (
        |    SELECT x.s AS p, x.t AS u, y.t AS w
@@ -3509,7 +3512,7 @@ object UserGraphQueries {
        |$rounds
        |SELECT s.a, s.b, COALESCE(t.h, 0) + 2 AS trussness,
        |  TRUE AS converged
-       |FROM tns s LEFT JOIN tnh$TrussnessRounds t
+       |FROM zcan s LEFT JOIN tnh$TrussnessRounds t
        |  ON t.e = s.a * $TrussPack + s.b
        |ORDER BY s.a, s.b""".stripMargin
   }
@@ -3563,28 +3566,17 @@ object UserGraphQueries {
   }
 
   private val graphRichClubFixedSql = {
-    import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     val ksList = RichClubKs.mkString("[", ", ", "]")
-    s"""WITH kce AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |kcs AS MATERIALIZED (
-       |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |  FROM kce WHERE u <> v),
-       |kcund AS (SELECT a, b FROM kcs UNION ALL SELECT b, a FROM kcs),
+    s"""${ZipfSql("zcan", "zund")},
        |rcdeg AS MATERIALIZED (
-       |  SELECT a AS v, COUNT(*) AS d FROM kcund GROUP BY 1),
+       |  SELECT u AS v, COUNT(*) AS d FROM zund GROUP BY 1),
        |rck AS (SELECT CAST(UNNEST($ksList) AS BIGINT) AS k),
        |rcn AS (
        |  SELECT k, COUNT(*) AS n_club FROM rcdeg, rck WHERE d > k
        |  GROUP BY k),
        |rce AS (
        |  SELECT k, COUNT(*) AS e_club
-       |  FROM kcs e
+       |  FROM zcan e
        |  JOIN rcdeg x ON x.v = e.a JOIN rcdeg y ON y.v = e.b, rck
        |  WHERE x.d > k AND y.d > k GROUP BY k)
        |SELECT rck.k,
@@ -3627,22 +3619,8 @@ object UserGraphQueries {
   /** The DIRECTED derived Zipf edge list (u ≠ v, distinct; direction
     * preserved — the [[zipfEdgesOf]] sibling for directed algorithms).
     */
-  private[graft] def zipfDirectedEdgesOf(events: DataFrame): DataFrame = {
-    import graft.functions.TextFns
-    val eid = col("event_id").cast("string")
-    def h(tag: String) =
-      TextFns.stringHash(concat(lit(tag + ":"), eid))
-    events
-      .select(h("kcu").as("h1"), h("kcb").as("h2"),
-        h("kcv").as("h3"), h("kcc").as("h4"))
-      .select(
-        expr(s"h1 % shiftleft(cast(1 as bigint), cast(h2 % $KcBits as int))")
-          .as("u"),
-        expr(s"h3 % shiftleft(cast(1 as bigint), cast(h4 % $KcBits as int))")
-          .as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-  }
+  private[graft] def zipfDirectedEdgesOf(events: DataFrame): DataFrame =
+    zipfUv(events).distinct()
 
   /** [[zipfDirectedEdgesOf]] minus the distinct, carrying a caller
     * batch tag — lets a batched fold hash the event scan ONCE and split
@@ -3651,22 +3629,8 @@ object UserGraphQueries {
     * since the hash is per-row and distinct commutes with the filter).
     */
   private[graft] def zipfDirectedEdgesTagged(events: DataFrame,
-      tag: org.apache.spark.sql.Column): DataFrame = {
-    import graft.functions.TextFns
-    val eid = col("event_id").cast("string")
-    def h(t: String) =
-      TextFns.stringHash(concat(lit(t + ":"), eid))
-    events
-      .select(h("kcu").as("h1"), h("kcb").as("h2"),
-        h("kcv").as("h3"), h("kcc").as("h4"), tag.as("bk"))
-      .select(
-        expr(s"h1 % shiftleft(cast(1 as bigint), cast(h2 % $KcBits as int))")
-          .as("u"),
-        expr(s"h3 % shiftleft(cast(1 as bigint), cast(h4 % $KcBits as int))")
-          .as("v"),
-        col("bk"))
-      .filter(col("u") =!= col("v"))
-  }
+      tag: Column): DataFrame =
+    zipfUv(events, "bk" -> tag)
 
   /** Testable seam for [[graphSccPivot]]: explicit directed (u, v)
     * edge frame.
@@ -3726,10 +3690,6 @@ object UserGraphQueries {
   }
 
   private val graphSccPivotSql = {
-    import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     def bfs(name: String, adj: String) =
       (1 to SccRounds).map { r =>
         val prev = s"$name${r - 1}"
@@ -3740,17 +3700,12 @@ object UserGraphQueries {
            |    SELECT e.dst AS id FROM $adj e JOIN $prev p
            |      ON e.src = p.id))""".stripMargin
       }.mkString(",\n")
-    s"""WITH kce AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |kcd AS MATERIALIZED (
-       |  SELECT DISTINCT u, v FROM kce WHERE u <> v),
+    s"""${ZipfSql("zdir")},
        |sccv AS MATERIALIZED (
-       |  SELECT u AS id FROM kcd UNION SELECT v FROM kcd),
+       |  SELECT u AS id FROM zdir UNION SELECT v FROM zdir),
        |sccp AS (SELECT MIN(id) AS pid FROM sccv),
-       |fadj AS (SELECT u AS src, v AS dst FROM kcd),
-       |badj AS (SELECT v AS src, u AS dst FROM kcd),
+       |fadj AS (SELECT u AS src, v AS dst FROM zdir),
+       |badj AS (SELECT v AS src, u AS dst FROM zdir),
        |f0 AS (SELECT pid AS id FROM sccp),
        |${bfs("f", "fadj")},
        |b0 AS (SELECT pid AS id FROM sccp),
@@ -3969,16 +3924,12 @@ object UserGraphQueries {
   /** Shared Trim+FW-BW CTE chain ending in `slab` (id → scc_id) — ONE
     * unrolling used by BOTH the graph_scc_labels and
     * graph_scc_condensation oracles (the CTE-chain discipline).
-    * `str0` (the distinct directed edge set) stays visible for the
+    * `zdir` (the distinct directed edge set) stays visible for the
     * condensation's edge join.
     */
   private val sccLabelCtes = {
-    import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     val trims = (1 to SccTrimRounds).map { r =>
-      val prev = s"str${r - 1}"
+      val prev = if (r == 1) "zdir" else s"str${r - 1}"
       s"""str$r AS MATERIALIZED (
          |  SELECT e.u, e.v FROM $prev e
          |  WHERE EXISTS (SELECT 1 FROM $prev x WHERE x.v = e.u)
@@ -4005,14 +3956,9 @@ object UserGraphQueries {
          |    SELECT e.u AS id FROM ssce e JOIN $prev p ON p.id = e.v))"""
         .stripMargin
     }.mkString(",\n")
-    s"""WITH slke AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |str0 AS MATERIALIZED (
-       |  SELECT DISTINCT u, v FROM slke WHERE u <> v),
+    s"""${ZipfSql("zdir")},
        |slv AS MATERIALIZED (
-       |  SELECT u AS id FROM str0 UNION SELECT v FROM str0),
+       |  SELECT u AS id FROM zdir UNION SELECT v FROM zdir),
        |$trims,
        |score AS MATERIALIZED (SELECT u, v FROM str$SccTrimRounds),
        |scv AS MATERIALIZED (
@@ -4157,22 +4103,14 @@ object UserGraphQueries {
 
   private val graphSccLayeredSql = {
     import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     val brExpr = TextFns.stringHashSql("'lbr:' || CAST(x AS VARCHAR)")
       .replace("\n", " ")
-    s"""WITH l2ke AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |l2base AS MATERIALIZED (
-       |  SELECT DISTINCT u, v FROM l2ke WHERE u <> v),
-       |l2v1 AS (SELECT u AS x FROM l2base UNION SELECT v FROM l2base),
+    s"""${ZipfSql("zdir")},
+       |l2v1 AS (SELECT u AS x FROM zdir UNION SELECT v FROM zdir),
        |l2e0 AS MATERIALIZED (
-       |  SELECT u, v FROM l2base
+       |  SELECT u, v FROM zdir
        |  UNION ALL
-       |  SELECT u + $SccLayerOff, v + $SccLayerOff FROM l2base
+       |  SELECT u + $SccLayerOff, v + $SccLayerOff FROM zdir
        |  UNION ALL
        |  SELECT x AS u, x + $SccLayerOff AS v FROM l2v1
        |  WHERE $brExpr % $SccLayerBrMod = 0),
@@ -4238,7 +4176,7 @@ object UserGraphQueries {
     s"""$sccLabelCtes
        |SELECT la.scc_id AS src_scc, lb.scc_id AS dst_scc,
        |  COUNT(*) AS n_edges
-       |FROM str0 e
+       |FROM zdir e
        |JOIN slab la ON la.id = e.u
        |JOIN slab lb ON lb.id = e.v
        |WHERE la.scc_id <> lb.scc_id
@@ -4317,7 +4255,7 @@ object UserGraphQueries {
     s"""$sccLabelCtes,
        |tpe AS MATERIALIZED (
        |  SELECT DISTINCT la.scc_id AS u, lb.scc_id AS v
-       |  FROM str0 e
+       |  FROM zdir e
        |  JOIN slab la ON la.id = e.u
        |  JOIN slab lb ON lb.id = e.v
        |  WHERE la.scc_id <> lb.scc_id),
@@ -4352,44 +4290,17 @@ object UserGraphQueries {
     * distinct (u, v, t) triples, u ≠ v, t in epoch µs (`unix_micros` /
     * `epoch_us` — the integer-exact cross-engine timestamp discipline).
     */
-  private[graft] def zipfTemporalEdgesOf(events: DataFrame): DataFrame = {
-    import graft.functions.TextFns
-    val eid = col("event_id").cast("string")
-    def h(tag: String) =
-      TextFns.stringHash(concat(lit(tag + ":"), eid))
-    events
-      .select(h("kcu").as("h1"), h("kcb").as("h2"),
-        h("kcv").as("h3"), h("kcc").as("h4"),
-        unix_micros(col("ts")).as("t"))
-      .select(
-        expr(s"h1 % shiftleft(cast(1 as bigint), cast(h2 % $KcBits as int))")
-          .as("u"),
-        expr(s"h3 % shiftleft(cast(1 as bigint), cast(h4 % $KcBits as int))")
-          .as("v"),
-        col("t"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-  }
+  private[graft] def zipfTemporalEdgesOf(events: DataFrame): DataFrame =
+    zipfUv(events, "t" -> unix_micros(col("ts"))).distinct()
 
   /** DuckDB CTE prefix deriving the same temporal contact list as
-    * `tgd(u, v, t)` — shared by both temporal oracles (CTE-chain
+    * `zdir(u, v, t)` — shared by both temporal oracles (CTE-chain
     * discipline), plus the pivot `tgp(pid)`.
     */
-  private val tgCtes = {
-    import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
-    s"""WITH tge AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v,
-       |         CAST(epoch_us(ts) AS BIGINT) AS t
-       |  FROM events),
-       |tgd AS MATERIALIZED (
-       |  SELECT DISTINCT u, v, t FROM tge WHERE u <> v),
-       |tgv AS (SELECT u AS id FROM tgd UNION SELECT v FROM tgd),
+  private val tgCtes =
+    s"""${ZipfSql.carrying(Seq("t" -> "CAST(epoch_us(ts) AS BIGINT)"), "zdir")},
+       |tgv AS (SELECT u AS id FROM zdir UNION SELECT v FROM zdir),
        |tgp AS (SELECT MIN(id) AS pid FROM tgv)""".stripMargin
-  }
 
   /** X129 — graph_temporal_reach: EARLIEST-ARRIVAL time-respecting
     * reachability from the min-id pivot (the Zipf hub — the same
@@ -4465,7 +4376,7 @@ object UserGraphQueries {
          |    SELECT id, a FROM $prev
          |    UNION ALL
          |    SELECT e.v AS id, MIN(e.t) AS a
-         |    FROM tgd e JOIN $prev x ON e.u = x.id
+         |    FROM zdir e JOIN $prev x ON e.u = x.id
          |    WHERE e.t >= x.a GROUP BY e.v) GROUP BY id)""".stripMargin
     }.mkString(",\n")
     s"""$tgCtes,
@@ -4615,14 +4526,11 @@ object UserGraphQueries {
   }
 
   /** Shared Borůvka oracle CTE chain (ends at `msel`, the packed MSF
-    * edge set, with `mstw`/`mws` upstream) — ONE val for the X130 and
+    * edge set, with `mstw`/`zcan` upstream) — ONE val for the X130 and
     * X143 oracles (CTE-chain discipline).
     */
   private val mstOracleCtes = {
     import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     val wExpr = TextFns.stringHashSql(
       "'mstw:' || CAST(a AS VARCHAR) || ':' || CAST(b AS VARCHAR)")
       .replace("\n", " ")
@@ -4658,25 +4566,19 @@ object UserGraphQueries {
     }.mkString(",\n")
     val sel = (1 to MstRounds)
       .map(r => s"SELECT p FROM mk$r").mkString(" UNION ALL ")
-    s"""mwe AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |mws AS MATERIALIZED (
-       |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |  FROM mwe WHERE u <> v),
-       |mstw AS MATERIALIZED (SELECT a, b, $wExpr AS w FROM mws),
+    s"""${ZipfSql("zcan")},
+       |mstw AS MATERIALIZED (SELECT a, b, $wExpr AS w FROM zcan),
        |mste AS MATERIALIZED (
        |  SELECT a, b, w, w * $MstPackW + a * $MstPackE + b AS p FROM mstw),
        |mc0 AS MATERIALIZED (
        |  SELECT v, v AS c FROM (
-       |    SELECT a AS v FROM mws UNION SELECT b FROM mws)),
+       |    SELECT a AS v FROM zcan UNION SELECT b FROM zcan)),
        |$rounds,
        |msel AS MATERIALIZED (SELECT DISTINCT p FROM ($sel))""".stripMargin
   }
 
   private val graphMstBoruvkaSql =
-    s"""WITH $mstOracleCtes
+    s"""$mstOracleCtes
        |SELECT (p // $MstPackE) % $MstPackE AS a, p % $MstPackE AS b,
        |       p // $MstPackW AS w, TRUE AS converged
        |FROM msel ORDER BY a, b""".stripMargin
@@ -4731,7 +4633,9 @@ object UserGraphQueries {
     // (v, p) actives; priorities carried so rounds never rehash.
     val (active0, n0, _) = pinnedSum(und.select(col("u").as("v"))
       .distinct().select(col("v"), prio(col("v")).as("p")), lit(0L))
-    var mis = active0.limit(0).select(col("v"), lit(0L).as("round"))
+    // Each round's selection is a projection of its pinned `sel`,
+    // unioned once at the end (as in [[matchingOf]]).
+    val misParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // drained when no active vertex is left
     val fix = Fixpoint(active0, n0, n0, lit(1L), MisRounds,
         Fixpoint.Zero) { (active, round) =>
@@ -4743,27 +4647,25 @@ object UserGraphQueries {
       val sel = pinned(active.join(nbmin, Seq("v"), "left")
         .filter(col("mn").isNull || col("p") < col("mn"))
         .select(col("v")))
-      mis = pinned(mis.unionByName(
-        sel.select(col("v"), lit(round.toLong).as("round"))))
+      misParts += sel.select(col("v"), lit(round.toLong).as("round"))
       val drop = sel.unionByName(
         und.join(sel, Seq("v"), "left_semi").select(col("u").as("v")))
       active.join(drop, Seq("v"), "left_anti")
     }
+    val mis = misParts.reduceOption(_ unionByName _)
+      .getOrElse(active0.limit(0).select(col("v"), lit(0L).as("round")))
     mis.select(col("v").as("id"), col("round"),
       lit(fix.converged).as("converged")).orderBy(col("id"))
   }
 
   private val graphMisSql = {
     import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     val pExpr = TextFns.stringHashSql("'mis:' || CAST(v AS VARCHAR)")
       .replace("\n", " ")
     val rounds = (1 to MisRounds).map { r =>
       s"""mn$r AS (
          |  SELECT e.u AS v, MIN(pv.p) AS mn
-         |  FROM miund e
+         |  FROM zund e
          |  JOIN ma${r - 1} au ON e.u = au.v
          |  JOIN ma${r - 1} pv ON e.v = pv.v
          |  GROUP BY e.u),
@@ -4773,7 +4675,7 @@ object UserGraphQueries {
          |md$r AS (
          |  SELECT v FROM ms$r
          |  UNION
-         |  SELECT e.u FROM miund e JOIN ms$r m ON e.v = m.v),
+         |  SELECT e.u FROM zund e JOIN ms$r m ON e.v = m.v),
          |ma$r AS MATERIALIZED (
          |  SELECT a.v, a.p FROM ma${r - 1} a
          |  LEFT JOIN md$r d ON a.v = d.v WHERE d.v IS NULL)""".stripMargin
@@ -4781,17 +4683,8 @@ object UserGraphQueries {
     val sel = (1 to MisRounds)
       .map(r => s"SELECT v, CAST($r AS BIGINT) AS round FROM ms$r")
       .mkString(" UNION ALL ")
-    s"""WITH mie AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |mis_s AS MATERIALIZED (
-       |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |  FROM mie WHERE u <> v),
-       |miund AS MATERIALIZED (
-       |  SELECT a AS u, b AS v FROM mis_s
-       |  UNION ALL SELECT b AS u, a AS v FROM mis_s),
-       |miv AS (SELECT DISTINCT u AS v FROM miund),
+    s"""${ZipfSql("zund")},
+       |miv AS (SELECT DISTINCT u AS v FROM zund),
        |ma0 AS MATERIALIZED (
        |  SELECT v, $pExpr * $MisPackV + v AS p FROM miv),
        |$rounds
@@ -5000,15 +4893,12 @@ object UserGraphQueries {
 
   private val graphColoringSql = {
     import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     val pExpr = TextFns.stringHashSql("'col:' || CAST(v AS VARCHAR)")
       .replace("\n", " ")
     val rounds = (1 to ColorMisRounds).map { r =>
       s"""cmn$r AS (
          |  SELECT e.u AS v, MIN(pv.p) AS mn
-         |  FROM cound e
+         |  FROM zund e
          |  JOIN cma${r - 1} au ON e.u = au.v
          |  JOIN cma${r - 1} pv ON e.v = pv.v
          |  GROUP BY e.u),
@@ -5018,27 +4908,18 @@ object UserGraphQueries {
          |cmd$r AS (
          |  SELECT v FROM cms$r
          |  UNION
-         |  SELECT e.u FROM cound e JOIN cms$r m ON e.v = m.v),
+         |  SELECT e.u FROM zund e JOIN cms$r m ON e.v = m.v),
          |cma$r AS MATERIALIZED (
          |  SELECT a.v, a.p FROM cma${r - 1} a
          |  LEFT JOIN cmd$r d ON a.v = d.v WHERE d.v IS NULL)""".stripMargin
     }.mkString(",\n")
     val misCount = (1 to ColorMisRounds)
       .map(r => s"SELECT v FROM cms$r").mkString(" UNION ALL ")
-    s"""WITH coe AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |cocan AS MATERIALIZED (
-       |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |  FROM coe WHERE u <> v),
-       |cound AS MATERIALIZED (
-       |  SELECT a AS u, b AS v FROM cocan
-       |  UNION ALL SELECT b AS u, a AS v FROM cocan),
-       |cov AS (SELECT DISTINCT u AS v FROM cound),
+    s"""${ZipfSql("zcan", "zund")},
+       |cov AS (SELECT DISTINCT u AS v FROM zund),
        |codeg AS (
        |  SELECT u AS v, CAST(COUNT(*) AS BIGINT) AS d
-       |  FROM cound GROUP BY 1),
+       |  FROM zund GROUP BY 1),
        |cma0 AS MATERIALIZED (
        |  SELECT v, (65535 - d) * $ColorDegScale + ($pExpr * $MisPackV + v)
        |    AS p
@@ -5046,7 +4927,7 @@ object UserGraphQueries {
        |$rounds
        |SELECT
        |  (SELECT COUNT(*) FROM cov) AS n_vertices,
-       |  (SELECT COUNT(*) FROM cocan) AS n_edges,
+       |  (SELECT COUNT(*) FROM zcan) AS n_edges,
        |  (SELECT COUNT(*) FROM cov) AS n_colored,
        |  CAST(0 AS BIGINT) AS n_conflicts,
        |  (SELECT COUNT(*) FROM ($misCount)) AS n_color0,
@@ -5088,20 +4969,10 @@ object UserGraphQueries {
   }
 
   private val graphDegreeGiniSql = {
-    import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
-    s"""WITH dge AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |dgc AS MATERIALIZED (
-       |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |  FROM dge WHERE u <> v),
+    s"""${ZipfSql("zcan")},
        |dgd AS (
        |  SELECT id, COUNT(*) AS d FROM (
-       |    SELECT a AS id FROM dgc UNION ALL SELECT b FROM dgc)
+       |    SELECT a AS id FROM zcan UNION ALL SELECT b FROM zcan)
        |  GROUP BY 1),
        |dgr AS (
        |  SELECT d, row_number() OVER (ORDER BY d, id) AS i FROM dgd),
@@ -5215,9 +5086,6 @@ object UserGraphQueries {
 
   private val graphMatchingSql = {
     import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     val wExpr = TextFns.stringHashSql(
       "'mw:' || CAST(a AS VARCHAR) || ':' || CAST(b AS VARCHAR)")
       .replace("\n", " ")
@@ -5241,16 +5109,10 @@ object UserGraphQueries {
     val sel = (1 to MatchRounds)
       .map(r => s"SELECT p, CAST($r AS BIGINT) AS round FROM msel$r")
       .mkString(" UNION ALL ")
-    s"""WITH mwe AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |mws0 AS MATERIALIZED (
-       |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |  FROM mwe WHERE u <> v),
+    s"""${ZipfSql("zcan")},
        |ml0 AS MATERIALIZED (
        |  SELECT a, b, $wExpr * $MstPackW + a * $MstPackE + b AS p
-       |  FROM mws0),
+       |  FROM zcan),
        |$rounds,
        |mall AS ($sel)
        |SELECT (p // $MstPackE) % $MstPackE AS a, p % $MstPackE AS b,
@@ -5545,9 +5407,6 @@ object UserGraphQueries {
 
   private val graphPartitionSql = {
     import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     val wExpr = TextFns.stringHashSql(
       "'mw:' || CAST(a AS VARCHAR) || ':' || CAST(b AS VARCHAR)")
       .replace("\n", " ")
@@ -5604,18 +5463,12 @@ object UserGraphQueries {
     }.mkString(",\n")
     val refine = refineChainSql("", "pund2", "pwv2", PartRefineRounds)
     val refine1 = refineChainSql("u", "pund1", "pwv1", PartRefine1Rounds)
-    s"""WITH pze AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |pzs AS MATERIALIZED (
-       |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |  FROM pze WHERE u <> v),
+    s"""${ZipfSql("zcan")},
        |pverts AS (SELECT DISTINCT a AS v FROM
-       |  (SELECT a FROM pzs UNION ALL SELECT b FROM pzs)),
+       |  (SELECT a FROM zcan UNION ALL SELECT b FROM zcan)),
        |mla0 AS MATERIALIZED (
        |  SELECT a, b, $wExpr * $MstPackW + a * $MstPackE + b AS p
-       |  FROM pzs),
+       |  FROM zcan),
        |${matchChainSql("a", PartM1Rounds)},
        |pmapf1 AS MATERIALIZED (
        |  SELECT c.v, COALESCE(m.lead, c.v) AS c1
@@ -5623,7 +5476,7 @@ object UserGraphQueries {
        |pe1 AS MATERIALIZED (
        |  SELECT LEAST(x.c1, y.c1) AS a, GREATEST(x.c1, y.c1) AS b,
        |         CAST(COUNT(*) AS BIGINT) AS w
-       |  FROM pzs e JOIN pmapf1 x ON e.a = x.v JOIN pmapf1 y ON e.b = y.v
+       |  FROM zcan e JOIN pmapf1 x ON e.a = x.v JOIN pmapf1 y ON e.b = y.v
        |  WHERE x.c1 <> y.c1 GROUP BY 1, 2),
        |pwv1 AS MATERIALIZED (
        |  SELECT c1 AS v, CAST(COUNT(*) AS BIGINT) AS w
@@ -5664,7 +5517,7 @@ object UserGraphQueries {
        |pcut AS (
        |  SELECT CAST(COUNT(*) FILTER (x.part <> y.part) AS BIGINT)
        |         AS cut_edges
-       |  FROM pzs e JOIN pproj x ON e.a = x.v JOIN pproj y ON e.b = y.v),
+       |  FROM zcan e JOIN pproj x ON e.a = x.v JOIN pproj y ON e.b = y.v),
        |psz AS (
        |  SELECT part, CAST(COUNT(*) AS BIGINT) AS n_vertices
        |  FROM pproj GROUP BY part)
@@ -5736,22 +5589,13 @@ object UserGraphQueries {
 
   private val graphPartition2dSql = {
     import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     def hp(e: String) =
       TextFns.stringHashSql(s"'p2:' || CAST($e AS VARCHAR)")
         .replace("\n", " ")
-    s"""WITH p2e AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |p2s AS MATERIALIZED (
-       |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |  FROM p2e WHERE u <> v),
+    s"""${ZipfSql("zcan")},
        |p2a AS MATERIALIZED (
        |  SELECT a, b, (${hp("a")} % $P2Grid) * $P2Grid
-       |             + ${hp("b")} % $P2Grid AS cell FROM p2s),
+       |             + ${hp("b")} % $P2Grid AS cell FROM zcan),
        |p2c AS (
        |  SELECT cell, CAST(COUNT(*) AS BIGINT) AS n_edges
        |  FROM p2a GROUP BY cell),
@@ -5844,10 +5688,6 @@ object UserGraphQueries {
   }
 
   private val graphDensestSql = {
-    import graft.functions.TextFns
-    def h(tag: String) =
-      TextFns.stringHashSql(s"'$tag:' || CAST(event_id AS VARCHAR)")
-        .replace("\n", " ")
     val rounds = (1 to DsRounds).map { r =>
       s"""dsd$r AS MATERIALIZED (
          |  SELECT v, COUNT(*) AS d FROM (
@@ -5877,13 +5717,8 @@ object UserGraphQueries {
     val memberRows = (0 to DsRounds).map { s =>
       s"SELECT $s AS s, v, d FROM dsd${s + 1}"
     }.mkString(" UNION ALL ")
-    s"""WITH dwe AS (
-       |  SELECT ${h("kcu")} % (CAST(1 AS BIGINT) << (${h("kcb")} % $KcBits)) AS u,
-       |         ${h("kcv")} % (CAST(1 AS BIGINT) << (${h("kcc")} % $KcBits)) AS v
-       |  FROM events),
-       |dse0 AS MATERIALIZED (
-       |  SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |  FROM dwe WHERE u <> v),
+    s"""${ZipfSql("zcan")},
+       |dse0 AS (SELECT a, b FROM zcan),
        |$rounds,
        |$lastDeg,
        |dstates AS (
@@ -5968,9 +5803,9 @@ object UserGraphQueries {
   }
 
   private val graphPercolationSql =
-    s"""WITH $mstOracleCtes,
+    s"""$mstOracleCtes,
        |pcv AS (SELECT COUNT(*) AS nv FROM (
-       |  SELECT a AS v FROM mws UNION SELECT b FROM mws)),
+       |  SELECT a AS v FROM zcan UNION SELECT b FROM zcan)),
        |pcrk AS (
        |  SELECT w, ROW_NUMBER() OVER (ORDER BY w, a, b) AS rn
        |  FROM mstw),

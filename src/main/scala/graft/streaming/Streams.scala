@@ -92,9 +92,6 @@ object Streams {
   def tumblingStream(events: DataFrame): DataFrame =
     tumbling(events.withWatermark("ts", "1 hour"))
 
-  def slidingStream(events: DataFrame): DataFrame =
-    sliding(events.withWatermark("ts", "1 hour"))
-
   def sessionsStream(events: DataFrame): DataFrame =
     sessions(events.withWatermark("ts", "1 hour"))
 

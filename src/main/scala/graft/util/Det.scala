@@ -38,23 +38,14 @@ object Det {
   def discPrice(price: Column, discount: Column): Column =
     dec(price) * (lit(1) - dec(discount))
 
-  def decSql(expr: String): String = s"CAST($expr AS DECIMAL(18,2))"
-
   def discPriceSql: String =
     "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))"
 
   def sumDecSql(expr: String): String = s"CAST(SUM($expr) AS DOUBLE)"
 
-  /** Order-independent mean: exact decimal sum divided by count. */
-  def decAvg(c: Column): Column =
-    decSum(c) / count(lit(1))
-
   /** The DuckDB twin of [[decSum]] as a SQL fragment. */
   def decSumSql(expr: String): String =
     s"CAST(SUM(CAST($expr AS DECIMAL(18,2))) AS DOUBLE)"
-
-  def decAvgSql(expr: String): String =
-    s"${decSumSql(expr)} / COUNT(*)"
 
   /** Bit-exact cross-engine quantization to `n` decimal places:
     * `floor(x*10^n + 0.5)/10^n`. Unlike `round()` (whose rounding path

@@ -22,20 +22,21 @@ import org.apache.spark.sql.DataFrame
   * bit-identical — partition placement is never data-dependent here.
   */
 object FanOut {
-  /** Fan width: min(cores, GRAFT_FANOUT; default 8). 8 was picked by a
+  /** Fan width cap: the width is min(cores, 8). 8 was picked by a
     * measured sweep (1 / 8 / 32 on text_unigram_nll and
     * doc_quality_calibration at sf0.1, local[32]): 32-way turned the
     * one-task stages into 32 concurrent allocation-heavy tasks whose
     * per-task CPU inflated ~20× (memory-bandwidth stalls count as
     * on-CPU time — the judged r15 contention mechanism, self-inflicted),
     * while 8-way kept the wall win (calibration 10.9 → 5.1 s cold) with
-    * none of the thrash. Env-parameterised for other boxes; at real
-    * scale the split-count guard makes the whole helper the identity.
+    * none of the thrash. At real scale the split-count guard makes the
+    * whole helper the identity.
     */
+  private val Width = 8
+
   def apply(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    val target = math.min(sc.defaultParallelism,
-      sys.env.getOrElse("GRAFT_FANOUT", "8").toInt)
+    val target = math.min(sc.defaultParallelism, Width)
     if (target <= 1) return df
     // Physical split count of the frame as planned (no job is run).
     val splits = df.rdd.getNumPartitions

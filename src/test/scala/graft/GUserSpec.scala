@@ -1502,4 +1502,30 @@ class GUserSpec extends GraftSuite {
     assert(Seq(50, 75, 90).zip(sk) === exact,
       s"sketch thresholds $sk != exact $exact")
   }
+
+  test("the four zipf seams agree: directed = distinct tagged (u, v), " +
+    "edges = canonical directed, distinct temporal (u, v) = directed") {
+    import spark.implicits._
+    import graft.queries.UserGraphQueries._
+    val ev = (0L until 1500L).map { i =>
+      (i * 7919L + 13L, 1700000000000000L + (i * 2654435761L) % 86400000000L)
+    }.toDF("event_id", "tus")
+      .select(col("event_id"), timestamp_micros(col("tus")).as("ts"))
+    val uv = Seq(col("u"), col("v"))
+    val dir = zipfDirectedEdgesOf(ev)
+    val tagged = zipfDirectedEdgesTagged(ev, col("event_id") % 4)
+    val table = Seq(
+      ("directed = distinct (u, v) of tagged",
+        dir, tagged.select(uv: _*).distinct()),
+      ("zipfEdgesOf = canonical form of directed", zipfEdgesOf(ev),
+        dir.select(least(uv: _*), greatest(uv: _*)).distinct()),
+      ("distinct (u, v) of temporal = directed",
+        zipfTemporalEdgesOf(ev).select(uv: _*).distinct(), dir))
+    for ((name, got, want) <- table)
+      assert(pairs(got) === pairs(want), name)
+    val d = pairs(dir)
+    assert(d.nonEmpty && d.forall { case (u, v) => u != v })
+    // the tag is the caller's column, carried per event
+    assert(tagged.select(col("bk")).distinct().count() === 4L)
+  }
 }

@@ -82,6 +82,18 @@ class SqlBridgeSpec extends GraftSuite {
     assert(wrote > 0, "no checkpoint files under the checkpoint dir")
   }
 
+  test("a reliable pin computes each row once: the checkpoint write " +
+    "reads the rows the fill persisted") {
+    val calls = spark.sparkContext.longAccumulator("reliable-pin-rows")
+    val counted = udf { (s: Long) => calls.add(1L); s }
+    val ((p, rows, _), _) = reliably(SqlBridge.pinnedSum(
+      frame.select(col("k"), counted(col("s")).as("s")), lit(1L)))
+    try {
+      assert(rows === 7L)
+      assert(calls.value === 7L, "the frame's last stage ran twice")
+    } finally SqlBridge.release(p)
+  }
+
   test("graft.reliableCheckpoint=true reaches the engine's loop cuts " +
     "(label propagation writes checkpoint files, same labels)") {
     import graft.algorithms.GraphAlgorithms.labelPropagation
