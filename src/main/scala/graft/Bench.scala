@@ -41,7 +41,11 @@ object Bench {
       val c0 = jobLog.cpuSeconds()
       val g0 = gcMillis()
       val t0 = System.nanoTime()
-      val ok = try { body; true } catch {
+      val ok = try {
+        graft.util.JobTags.within(spark.sparkContext, graft.util.JobTags.Key,
+          name)(body)
+        true
+      } catch {
         case e: Throwable =>
           // A failed query must be loud: stderr trace + -1 sentinel in the
           // JSON (never a near-zero time that "improves" the total).

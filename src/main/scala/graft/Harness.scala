@@ -1,5 +1,6 @@
 package graft
 
+import graft.util.JobTags
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
@@ -53,10 +54,11 @@ object Harness {
 }
 
 /** The one listener over a session's job and task events: per job its
-  * wall, tasks, task time, executor CPU and call site (`graft.Prof`'s
-  * table), and the executor CPU of every task (`graft.Bench`'s per-entry
-  * CPU column: on-CPU thread time, which other tenants' load does not
-  * inflate, unlike wall time).
+  * wall, tasks, task time, executor CPU and the entry and loop round that
+  * submitted it (its [[graft.util.JobTags]]; `graft.Prof`'s table), and
+  * the executor CPU of every task (`graft.Bench`'s per-entry CPU column:
+  * on-CPU thread time, which other tenants' load does not inflate,
+  * unlike wall time).
   *
   * Events arrive on an async bus. Every timed body blocks on its jobs, so
   * a reader only waits for the bus to drain (tasks started == ended, at
@@ -71,9 +73,10 @@ final class JobLog extends SparkListener {
   private val stageToJob = mutable.Map[Int, Int]()
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-    // the result stage (the job's last) is named by the action's call site
-    jobs(e.jobId) = Job(e.jobId, t0 = e.time,
-      site = e.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.name))
+    def tag(t: String) = Option(e.properties)
+      .flatMap(p => Option(p.getProperty(t))).getOrElse("")
+    jobs(e.jobId) = Job(e.jobId, t0 = e.time, key = tag(JobTags.Key),
+      round = tag(JobTags.Round))
     e.stageIds.foreach(s => stageToJob(s) = e.jobId)
   }
 
@@ -120,10 +123,15 @@ final class JobLog extends SparkListener {
 }
 
 object JobLog {
-  /** One job: start/end times (ms), tasks ended, their run and CPU time. */
+  /** One job: start/end times (ms), tasks ended, their run and CPU time,
+    * and its entry and loop round tags ("" when unset).
+    */
   final case class Job(id: Int, t0: Long, var t1: Long = 0L,
-    var tasks: Int = 0, var taskMs: Long = 0L, var cpuMs: Long = 0L,
-    site: String = "")
+      var tasks: Int = 0, var taskMs: Long = 0L, var cpuMs: Long = 0L,
+      key: String = "", round: String = "") {
+    /** `key/round`, or the key alone outside a loop. */
+    def tag: String = if (round.isEmpty) key else s"$key/$round"
+  }
 
   /** A new log listening on `spark`. */
   def on(spark: SparkSession): JobLog = {

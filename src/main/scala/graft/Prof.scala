@@ -28,7 +28,13 @@ object Prof {
     val spark = Harness.session(Harness.cpus, extra)
     Harness.warmUp(spark)
 
-    def bodyOf(entry: String): () => Unit = Caches.builds.collectFirst {
+    // each entry's jobs carry it as their key tag
+    def bodyOf(entry: String): () => Unit = {
+      val run = untagged(entry)
+      () => graft.util.JobTags.within(spark.sparkContext,
+        graft.util.JobTags.Key, entry)(run())
+    }
+    def untagged(entry: String): () => Unit = Caches.builds.collectFirst {
       case (name, warm) if entry == s"_build:$name" =>
         () => warm(spark, sfDir)
     }.getOrElse {
@@ -87,12 +93,12 @@ object Prof {
     }
     val jobs = log.jobTable()
     println(f"%nPROF $entry wall=$wall%.2f s jobs=${jobs.size}")
-    println(f"${"job"}%4s ${"wall_ms"}%8s ${"tasks"}%6s ${"taskMs"}%8s ${"cpuMs"}%8s  site")
+    println(f"${"job"}%4s ${"wall_ms"}%8s ${"tasks"}%6s ${"taskMs"}%8s ${"cpuMs"}%8s  key/round")
     var acc = 0L
     jobs.foreach { j =>
       val w = j.t1 - j.t0
       acc += math.max(0L, w)
-      println(f"${j.id}%4d ${w}%8d ${j.tasks}%6d ${j.taskMs}%8d ${j.cpuMs}%8d  ${j.site}")
+      println(f"${j.id}%4d ${w}%8d ${j.tasks}%6d ${j.taskMs}%8d ${j.cpuMs}%8d  ${j.tag}")
     }
     println(f"sum job wall = ${acc / 1000.0}%.2f s (gaps = driver-side time between jobs)")
     spark.stop()

@@ -24,8 +24,11 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => keyFilter.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try graft.util.JobTags.within(spark.sparkContext,
+          graft.util.JobTags.Key, name) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)

@@ -6,13 +6,18 @@
 // the graft namespace.
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, classic}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.Platform
 
 object SqlBridge {
   /** Wrap a Catalyst expression as a user-facing Column. */
@@ -29,40 +34,57 @@ object SqlBridge {
     * integer `probe` over its rows (nulls skipped, 0 when empty), e.g.
     * `lit(1L)` for the row count alone or a loop's convergence probe.
     *
-    * The cut is a lazy checkpoint: `localCheckpoint` (executor-local
+    * The cut stores each partition as pages: byte arrays holding
+    * `[int length][UnsafeRow bytes]` records back to back (a row longer
+    * than a page gets a page of its own; an empty partition has none).
+    * The pages RDD is a lazy checkpoint: `localCheckpoint` (executor-local
     * blocks; a lost executor kills the truncated lineage at cluster
-    * scale), or the reliable `checkpoint` into the context's checkpoint
-    * dir when the session sets `graft.reliableCheckpoint=true` (or the
-    * GRAFT_RELIABLE_CHECKPOINT=true env as the default); the file write
-    * is reliability's extra job; it reads the rows the fill persisted
-    * (freed by [[release]]) instead of computing the frame's last stage
-    * again. Under adaptive execution the lazy cut
-    * runs the frame's shuffle-map jobs, and one RDD action over the
-    * checkpointed rows then fills the checkpoint and folds
-    * `(count, sum(probe))`: the same jobs as an eager `localCheckpoint()`,
-    * whose internal count fills it.
+    * scale), or, when the session sets `graft.reliableCheckpoint=true`
+    * (or the GRAFT_RELIABLE_CHECKPOINT=true env as the default),
+    * persisted and then written by the reliable `checkpoint` into the
+    * context's checkpoint dir, which reads the persisted pages (freed by
+    * [[release]]) instead of computing the frame's last stage again. The
+    * frame's rows come from its executed plan under a SQL execution, as
+    * in `Dataset.localCheckpoint`, so under adaptive execution this runs
+    * the frame's shuffle-map jobs; one RDD action over a view of the
+    * pages, projected to the probe, then fills the checkpoint and folds
+    * `(count, sum(probe))`: the jobs of an eager `localCheckpoint()`.
     *
-    * The frame is rebuilt over the same checkpointed RDD, keeping its
-    * output partitioning and ordering, with MEASURED statistics: the
-    * row count times the schema's default row width. Spark's own rewrite
-    * carries the source plan's size ESTIMATE through the checkpoint, and
-    * in a loop whose state feeds back into its joins those products
-    * COMPOUND (k pinned self-joins yield a BigInteger with ~2^k digits,
-    * and the driver stalls in BigInteger.multiply while planning).
-    * Measured stats restart the estimate chain from ground truth at
-    * every pin, so broadcast decisions downstream still see honest sizes.
+    * The returned frame reads the pages through a fresh view made after
+    * the fill, one `UnsafeRow` per record pointing into its page (no
+    * byte is copied): the view the fill ran on cached the partitions of
+    * the lineage before the cut, and through them would keep every pin
+    * that lineage read alive. The frame keeps the output partitioning
+    * and ordering of `df`, with MEASURED statistics: the row count times the schema's default
+    * row width. Spark's own rewrite carries the source plan's size
+    * ESTIMATE through the checkpoint, and in a loop whose state feeds
+    * back into its joins those products COMPOUND (k pinned self-joins
+    * yield a BigInteger with ~2^k digits, and the driver stalls in
+    * BigInteger.multiply while planning). Measured stats restart the
+    * estimate chain from ground truth at every pin, so broadcast
+    * decisions downstream still see honest sizes.
     */
   def pinnedSum(df: DataFrame, probe: Column): (DataFrame, Long, Long) = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-    val flag = ds.sparkSession.conf.get("graft.reliableCheckpoint",
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val session = ds.sparkSession
+    val flag = session.conf.get("graft.reliableCheckpoint",
       sys.env.getOrElse("GRAFT_RELIABLE_CHECKPOINT", "false"))
     val reliable = flag == "true" || flag == "1"
-    val ck =
-      if (reliable) ds.checkpoint(eager = false)
-      else ds.localCheckpoint(eager = false)
-    val cut = ck.queryExecution.analyzed match { case l: LogicalRDD => l }
-    if (reliable) cut.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val (rows, s) = ck.select(probe.cast("long")).queryExecution.toRdd
+    val schema = ds.schema
+    val qe = ds.queryExecution
+    val pages = SQLExecution.withNewExecutionId(qe,
+        Some(if (reliable) "checkpoint" else "localCheckpoint")) {
+      qe.executedPlan.execute()
+        .mapPartitionsInternal(rows => pack(schema, rows)).setName(Pages)
+    }
+    if (reliable) {
+      pages.persist(StorageLevel.MEMORY_AND_DISK)
+      pages.checkpoint()
+    } else pages.localCheckpoint()
+    val cut = LogicalRDD.fromDataset(view(pages, schema.length), ds,
+      ds.isStreaming)
+    val (rows, s) = classic.Dataset.ofRows(session, cut)
+      .select(probe.cast("long")).queryExecution.toRdd
       .aggregate((0L, 0L))(
         (a, r) => (a._1 + 1L, if (r.isNullAt(0)) a._2 else a._2 + r.getLong(0)),
         (a, b) => (a._1 + b._1, a._2 + b._2))
@@ -70,20 +92,78 @@ object SqlBridge {
     val stats = Statistics(
       sizeInBytes = BigInt(math.max(rows, 1L)) * width,
       rowCount = Some(BigInt(rows)))
-    val plan = cut.copy()(ck.sparkSession, Some(stats), None)
-    (org.apache.spark.sql.classic.Dataset.ofRows(ck.sparkSession, plan),
-      rows, s)
+    val plan = cut.copy(rdd = view(pages, schema.length))(session,
+      Some(stats), None)
+    (classic.Dataset.ofRows(session, plan), rows, s)
   }
 
-  /** Releases the blocks of every pin `df` reads: the checkpointed RDD
-    * under each of its [[LogicalRDD]] leaves. `Dataset.unpersist` does
-    * not reach them (a pin is not in the cache manager), so a memo that
-    * holds pins releases them here on evict. Runs no job; a released pin
-    * must not be read again.
+  /** The name that marks an RDD of pin pages. */
+  private val Pages = "graft pin pages"
+
+  /** Bytes a page holds before the next record starts a new one. */
+  private val PageBytes = 1 << 20
+
+  /** Packs a partition's rows into pages of [[PageBytes]], each
+    * `[int length][UnsafeRow bytes]` records back to back; a row that is
+    * not an `UnsafeRow` goes through one projection made on first use.
+    */
+  private def pack(schema: StructType,
+      rows: Iterator[InternalRow]): Iterator[Array[Byte]] =
+    new Iterator[Array[Byte]] {
+      private lazy val toUnsafe = UnsafeProjection.create(schema)
+      private var buf = new Array[Byte](4096)
+      // the row read but not yet written: it did not fit the last page
+      private var held: UnsafeRow = null
+      private def take(): UnsafeRow = rows.next() match {
+        case u: UnsafeRow => u
+        case r => toUnsafe(r)
+      }
+      def hasNext: Boolean = held != null || rows.hasNext
+      def next(): Array[Byte] = {
+        if (held == null) held = take()
+        var used = 0
+        while (held != null &&
+            (used == 0 || used + 4 + held.getSizeInBytes <= PageBytes)) {
+          val end = used + 4 + held.getSizeInBytes
+          if (end > buf.length) buf = java.util.Arrays.copyOf(buf,
+            math.max(end, math.min(2 * buf.length, PageBytes)))
+          Platform.putInt(buf, Platform.BYTE_ARRAY_OFFSET + used,
+            held.getSizeInBytes)
+          held.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + used + 4L)
+          used = end
+          held = if (rows.hasNext) take() else null
+        }
+        java.util.Arrays.copyOf(buf, used)
+      }
+    }
+
+  /** The rows of `pages`, one `UnsafeRow` per record pointing into its
+    * page.
+    */
+  private def view(pages: RDD[Array[Byte]],
+      fields: Int): RDD[InternalRow] =
+    pages.mapPartitionsInternal(_.flatMap(page => new Iterator[InternalRow] {
+      private var at = 0
+      def hasNext: Boolean = at < page.length
+      def next(): InternalRow = {
+        val len = Platform.getInt(page, Platform.BYTE_ARRAY_OFFSET + at)
+        val row = new UnsafeRow(fields)
+        row.pointTo(page, Platform.BYTE_ARRAY_OFFSET + at + 4L, len)
+        at += 4 + len
+        row
+      }
+    }), preservesPartitioning = true)
+
+  /** Releases the blocks of every pin `df` reads: the pages under each
+    * of its [[LogicalRDD]] leaves. `Dataset.unpersist` does not reach
+    * them (a pin is not in the cache manager), so a memo that holds pins
+    * releases them here on evict. Runs no job; a released pin must not
+    * be read again.
     */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
-      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+      case l: LogicalRDD => l.rdd.dependencies.map(_.rdd)
+        .filter(_.name == Pages).foreach(_.unpersist(blocking = false))
       case _ =>
     }
 }

@@ -5,7 +5,7 @@ import graft.sources.Tables
 import graft.util.{Det, Fixpoint}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
+import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum, release}
 
 /** Deduplication suite (SURVEY §2.9 X1/X2 + north-star dedup family):
   * exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -733,9 +733,13 @@ object DedupQueries {
   private val clustersCache = graft.util.SessionMemo.pinned[String]()
 
   private def clustersFrame(s: SparkSession, dir: String): DataFrame =
-    clustersCache(s, dir)(pinned(
-      dedupClustersFrom(s, Tables(s, dir, "documents"),
-        candidatePairs(s, dir))))
+    clustersCache(s, dir) {
+      val clusters = dedupClustersFrom(s, Tables(s, dir, "documents"),
+        candidatePairs(s, dir))
+      val p = pinned(clusters)
+      release(clusters) // the closure's last round pin
+      p
+    }
 
   /** Force the shared closure (bench `_build:dclusters` timing hook). */
   def warmClusters(s: SparkSession, dir: String): Unit = {
@@ -797,9 +801,8 @@ object DedupQueries {
       .repartition(col("a"))
       .persist()
     und.count()
-    // A pin per round (the LP loop shape): superseded rounds' blocks are
-    // released by the ContextCleaner once the fold drops its reference —
-    // a pin is its frame's only data copy.
+    // A pin per round (the LP loop shape); each round releases the pins
+    // it supersedes once its own pin is filled.
     val labels0 = pinned(ids.select(col("id"), col("id").as("cluster")))
     // one edge-hop: min neighbor label layered onto the current labels
     def hop(lbl: DataFrame): DataFrame = {
@@ -819,12 +822,14 @@ object DedupQueries {
       // self-join's two scans race on the same uncomputed cache partitions
       // and serialize on block locks).
       val h = pinned(hop(cur))
-      pinned(h
+      val next = pinned(h
         .join(h.select(col("id").as("cluster"), col("cluster").as("pc")),
           Seq("cluster"), "left_outer")
         .select(col("id"),
           least(col("cluster"), coalesce(col("pc"), col("cluster")))
             .as("cluster")))
+      release(cur); release(h)
+      next
     }
     // fixpoint guard: one more hop must change nothing, else the bound
     // was too small for this corpus — fail loudly, never emit a keep-list

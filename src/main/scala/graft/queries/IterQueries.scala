@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.algorithms.GraphAlgorithms
-import graft.sources.GTrade
+import graft.sources.{GTrade, GraphSource}
 import graft.util.Det
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,28 +23,34 @@ object IterQueries {
   // once per (session, sfDir) and shared by every iterative query — the
   // conversion shuffle and the Pregel run are the expensive parts, not the
   // final per-query projections.
-  private val gxCache = new graft.util.SessionMemo[String,
+  private val gxCache = new graft.util.SessionMemo[(GraphSource, String),
     org.apache.spark.graphx.Graph[Double, Double]](
     _.unpersist(blocking = false))
   private val ccCache = graft.util.SessionMemo.persisted[String]()
 
-  private def gxUndirected(s: SparkSession, dir: String) =
-    gxCache(s, dir) {
-      val base = GTrade(s, dir)
+  /** The cached GraphX conversion of `source`'s undirected view, once per
+    * (session, source, sfDir): `GTrade` here, `GUser` for the user-graph
+    * keys.
+    */
+  private[queries] def gxUndirected(s: SparkSession, dir: String,
+      source: GraphSource) =
+    gxCache(s, (source, dir)) {
+      val base = source(s, dir)
       val parts = GraphAlgorithms.sizedParts(s, 2L * base.edges.count())
       GraphAlgorithms.toGraphX(base.undirected, parts).cache()
     }
 
   private def ccResult(s: SparkSession, dir: String): DataFrame =
     ccCache(s, dir)(
-      GraphAlgorithms.connectedComponents(s, gxUndirected(s, dir), CcIters)
+      GraphAlgorithms.connectedComponents(s, gxUndirected(s, dir, GTrade),
+        CcIters)
         .persist())
 
   /** Force the shared GraphX conversion (bench `_build:graphx` timing
     * hook; see [[graft.sources.GTrade.warm]]).
     */
   def warmGraphX(s: SparkSession, dir: String): Unit = {
-    val gx = gxUndirected(s, dir)
+    val gx = gxUndirected(s, dir, GTrade)
     gx.edges.count(); gx.vertices.count(); ()
   }
 
@@ -56,7 +62,7 @@ object IterQueries {
   // ---- I2 SSSP (bounded, undirected, source = customer 0) ----
 
   private def sssp(s: SparkSession, dir: String): DataFrame =
-    GraphAlgorithms.ssspBounded(s, gxUndirected(s, dir), source = 0L,
+    GraphAlgorithms.ssspBounded(s, gxUndirected(s, dir, GTrade), source = 0L,
       maxIterations = SsspIters).orderBy(col("id"))
 
   private val ssspSql: String = {

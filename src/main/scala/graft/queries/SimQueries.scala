@@ -337,14 +337,16 @@ object SimQueries {
     // give that overlap back (15.6 → 22.3 s cold Prof). Parallel pins
     // keep both properties: each arm executes exactly once AND the four
     // executions share the idle cores.
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val fLex = Future(pinned(TextQueries.bm25Of(docs)
+    def future[T](body: => T) =
+      graft.util.JobTags.future(docs.sparkSession.sparkContext)(body)
+    val fLex = future(pinned(TextQueries.bm25Of(docs)
       .select(col("term"), col("doc_id"), col("rk"))))
-    val fDense = Future(pinned(denseArmOf(e)))
-    val fIvf = Future(pinned(ivfArmOf(e, cent)))
-    val fPrf = Future(pinned(TextQueries.prfOf(docs)
+    val fDense = future(pinned(denseArmOf(e)))
+    val fIvf = future(pinned(ivfArmOf(e, cent)))
+    val fPrf = future(pinned(TextQueries.prfOf(docs)
       .select(col("term"), col("doc_id"), col("rk"))))
     val lex = Await.result(fLex, Duration.Inf)
     val wt = Window.orderBy(col("term"))

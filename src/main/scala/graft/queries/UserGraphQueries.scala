@@ -52,18 +52,8 @@ object UserGraphQueries {
       |  SELECT dst AS src, src AS dst, value FROM edges
       |)""".stripMargin
 
-  // Shared GraphX conversion of the undirected graph, once per
-  // (session, sfDir) — same memo discipline as [[IterQueries]].
-  private val gxCache = new graft.util.SessionMemo[String,
-    org.apache.spark.graphx.Graph[Double, Double]](
-    _.unpersist(blocking = false))
-
   private def gxUndirected(s: SparkSession, dir: String) =
-    gxCache(s, dir) {
-      val base = GUser(s, dir)
-      val parts = GraphAlgorithms.sizedParts(s, 2L * base.edges.count())
-      GraphAlgorithms.toGraphX(base.undirected, parts).cache()
-    }
+    IterQueries.gxUndirected(s, dir, GUser)
 
   /** Bench `_build:guser` hook: the two-phase graph build plus the shared
     * GraphX conversion.
@@ -2769,13 +2759,36 @@ object UserGraphQueries {
       dir: String): DataFrame =
     zipfCanCache(s, dir)(pinned(canonical(zipfDirectedFrame(s, dir))))
 
+  /** Both orientations `(u, v)` of a canonical (a < b) simple edge
+    * frame, lazy: each edge is two rows.
+    */
+  private def bothWays(simple: DataFrame): DataFrame = {
+    val can = simple.select(col("a").as("u"), col("b").as("v"))
+    can.unionByName(can.select(col("v").as("u"), col("u").as("v")))
+  }
+
+  /** [[bothWays]] pinned, with its row count. */
+  private[graft] def undirectedOf(simple: DataFrame): (DataFrame, Long) = {
+    val (und, n, _) = pinnedSum(bothWays(simple), lit(1L))
+    (und, n)
+  }
+
+  // The undirected Zipf tier, pinned once per (session, sfDir) for the
+  // keys that read both orientations (kcore, coreness, MIS, coloring and
+  // the fixed rich club).
+  private val zipfUndCache =
+    graft.util.SessionMemo.pinned[String, (DataFrame, Long)](v => Seq(v._1))
+
+  private def zipfUndirected(s: SparkSession, dir: String): (DataFrame, Long) =
+    zipfUndCache(s, dir)(undirectedOf(zipfCanonicalFrame(s, dir)))
+
   /** Bench `_build:zipf` hook: both shared derived-graph frames. */
   def warmZipf(s: SparkSession, dir: String): Unit = {
     zipfCanonicalFrame(s, dir).count(); ()
   }
 
   private def graphKcore(s: SparkSession, dir: String): DataFrame =
-    kcorePeelOf(zipfCanonicalFrame(s, dir))
+    kcorePeelOn(zipfUndirected(s, dir)._1)
 
   /** Testable seam for [[graphKcore]]: explicit events frame. */
   private[graft] def kcoreOf(events: DataFrame): DataFrame =
@@ -2784,9 +2797,12 @@ object UserGraphQueries {
   /** The peel itself over an explicit canonical (a < b) simple edge
     * list — the seam the hand-built-graph goldens drive.
     */
-  private[graft] def kcorePeelOf(simple: DataFrame): DataFrame = {
-    val und = pinned(simple.select(col("a"), col("b"))
-      .unionByName(simple.select(col("b").as("a"), col("a").as("b"))))
+  private[graft] def kcorePeelOf(simple: DataFrame): DataFrame =
+    kcorePeelOn(undirectedOf(simple)._1)
+
+  /** The peel over the pinned [[undirectedOf]] its canonical frame. */
+  private def kcorePeelOn(uv: DataFrame): DataFrame = {
+    val und = uv.select(col("u").as("a"), col("v").as("b"))
     val (alive0, n0, _) = pinnedSum(
       und.select(col("a").as("v")).distinct(), lit(0L))
     def induced(alive: DataFrame) = und
@@ -2866,7 +2882,7 @@ object UserGraphQueries {
     * [[kcorePeelOf]]'s K-core members (asserted in GUserSpec).
     */
   private def graphCoreness(s: SparkSession, dir: String): DataFrame =
-    corenessOf(zipfCanonicalFrame(s, dir), hintBroadcast = true)
+    corenessOn(zipfUndirected(s, dir)._1, hintBroadcast = true)
 
   /** The h-index fixpoint over an explicit canonical (a < b) simple
     * edge frame — the hand-built-graph seam.
@@ -2879,10 +2895,14 @@ object UserGraphQueries {
     * to AQE (shuffle join at open scale, auto-broadcast when small).
     */
   private[graft] def corenessOf(simple: DataFrame,
-      hintBroadcast: Boolean = false): DataFrame = {
-    val can = simple.select(col("a"), col("b"))
-    val und = pinned(can.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(can.select(col("b").as("u"), col("a").as("v"))))
+      hintBroadcast: Boolean = false): DataFrame =
+    corenessOn(undirectedOf(simple)._1, hintBroadcast)
+
+  /** The h-index fixpoint over the pinned [[undirectedOf]] its canonical
+    * frame.
+    */
+  private def corenessOn(und: DataFrame,
+      hintBroadcast: Boolean): DataFrame = {
     def hRound(hIn: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("u")).orderBy(col("nh").desc)
       val hSide = hIn.select(col("v"), col("h").as("nh"))
@@ -3536,15 +3556,17 @@ object UserGraphQueries {
   private val RichClubKs = Seq(4L, 8L, 16L, 32L)
 
   private def graphRichClubFixed(s: SparkSession, dir: String): DataFrame =
-    richClubFixedOf(zipfCanonicalFrame(s, dir))
+    richClubOn(zipfCanonicalFrame(s, dir), zipfUndirected(s, dir)._1)
 
   /** Testable seam over an explicit canonical (a < b) edge frame. */
-  private[graft] def richClubFixedOf(simple: DataFrame): DataFrame = {
+  private[graft] def richClubFixedOf(simple: DataFrame): DataFrame =
+    richClubOn(simple, bothWays(simple))
+
+  /** The rich club of a canonical frame given its both-ways `und`. */
+  private def richClubOn(simple: DataFrame, und: DataFrame): DataFrame = {
     val spark = simple.sparkSession
     import spark.implicits._
-    val und = simple.select(col("a"), col("b"))
-      .unionByName(simple.select(col("b").as("a"), col("a").as("b")))
-    val deg = und.groupBy(col("a").as("v")).agg(count(lit(1)).as("d"))
+    val deg = und.groupBy(col("u").as("v")).agg(count(lit(1)).as("d"))
     val ks = RichClubKs.toDF("k")
     val clubs = deg.crossJoin(broadcast(ks))
       .filter(col("d") > col("k"))
@@ -3666,12 +3688,13 @@ object UserGraphQueries {
     // retrieval_eval_hybrid overlap: concurrent job submission is
     // cluster-valid, not a local-mode trick). Each loop's rounds stay
     // ordered inside its own thread; results are bit-identical.
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val fFwd = Future(
+    val sc = verts.sparkSession.sparkContext
+    val fFwd = graft.util.JobTags.future(sc)(
       reach(e.select(col("u").as("src"), col("v").as("dst"))))
-    val fBwd = Future(
+    val fBwd = graft.util.JobTags.future(sc)(
       reach(e.select(col("v").as("src"), col("u").as("dst"))))
     val f = Await.result(fFwd, Duration.Inf)
     val b = Await.result(fBwd, Duration.Inf)
@@ -4599,7 +4622,7 @@ object UserGraphQueries {
   }
 
   private def graphMis(s: SparkSession, dir: String): DataFrame =
-    misOf(zipfCanonicalFrame(s, dir))
+    misOn(zipfUndirected(s, dir)._1)
 
   /** X131 — graph_mis: MAXIMAL INDEPENDENT SET by synchronous
     * deterministic-priority rounds (Luby's algorithm with FIXED hash
@@ -4626,10 +4649,12 @@ object UserGraphQueries {
     * (the X130 stats-compounding lesson). No FP anywhere.
     */
   private[graft] def misOf(canEdges: DataFrame,
+      prio: Column => Column = misPriority): DataFrame =
+    misOn(undirectedOf(canEdges)._1, prio)
+
+  /** The MIS rounds over the pinned [[undirectedOf]] the canonical edges. */
+  private def misOn(und: DataFrame,
       prio: Column => Column = misPriority): DataFrame = {
-    val can = canEdges.select(col("a"), col("b"))
-    val und = pinned(can.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(can.select(col("b").as("u"), col("a").as("v"))))
     // (v, p) actives; priorities carried so rounds never rehash.
     val (active0, n0, _) = pinnedSum(und.select(col("u").as("v"))
       .distinct().select(col("v"), prio(col("v")).as("p")), lit(0L))
@@ -4727,7 +4752,7 @@ object UserGraphQueries {
   private val ColorDegScale = 1L << 46
 
   private def graphColoring(s: SparkSession, dir: String): DataFrame =
-    coloringOf(zipfCanonicalFrame(s, dir))
+    coloringOn(zipfCanonicalFrame(s, dir), zipfUndirected(s, dir))
 
   /** X149 — graph_coloring: distributed greedy graph coloring
     * (Jones–Plassmann with FIXED strict DEGREE-FIRST priorities — the
@@ -4774,13 +4799,17 @@ object UserGraphQueries {
     * in PlanSpec's allowlist.
     */
   private[graft] def coloringOf(canEdges: DataFrame,
+      prio: Option[Column => Column] = None): DataFrame =
+    coloringOn(canEdges, undirectedOf(canEdges), prio)
+
+  /** The JP rounds over canonical edges given their pinned
+    * [[undirectedOf]] and its row count.
+    */
+  private def coloringOn(canEdges: DataFrame, undN: (DataFrame, Long),
       prio: Option[Column => Column] = None): DataFrame = {
     val can = canEdges.select(col("a"), col("b"))
     // each edge is two rows of `und`
-    val (und, nUnd, _) = pinnedSum(
-      can.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(can.select(col("b").as("u"), col("a").as("v"))),
-      lit(1L))
+    val (und, nUnd) = undN
     val nEdges = nUnd / 2L
     // ONE state frame (v, p, color: null = uncolored) — two driver
     // actions per round (pin + drained probe) instead of the naive

@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * graph. The offset derivation adds one `max()` over the (small) customer
   * dimension, paid once per (session, sfDir).
   */
-object GTrade {
+object GTrade extends GraphSource {
   /** Floor for the derived offset: keeps test-scale graphs identical to the
     * historical fixed-offset graphs (max c_custkey ≤ 150 000 at sf ≤ 1).
     */

@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   * ([[graft.queries.UserGraphQueries.SqlPrefix]]) — identical semantics,
   * engine-appropriate physical plans on each side.
   */
-object GUser {
+object GUser extends GraphSource {
   private val cache = new graft.util.SessionMemo[String, Graph](g => {
     g.vertices.unpersist(false); g.edges.unpersist(false)
   })

@@ -40,17 +40,20 @@ object Fixpoint {
     * start with 0 rows is converged before any step. Each step covers
     * `perStep` rounds and receives the frame and the round it ends on;
     * the driver pins its result fused with `probe` in one Spark job
-    * ([[SqlBridge.pinnedSum]]).
+    * ([[SqlBridge.pinnedSum]]). Every job a step runs carries the round
+    * as the [[JobTags.Round]] tag, set in the thread that runs the step.
     */
   def apply(start: DataFrame, rows: Long, sum: Long, probe: Column,
       cap: Int, stop: Stop = Unchanged, perStep: Int = 1)(
       step: (DataFrame, Int) => DataFrame): Result = {
+    val sc = start.sparkSession.sparkContext
     @annotation.tailrec
     def loop(cur: Result): Result =
       if (cur.converged || cur.rounds >= cap) cur
       else {
         val round = cur.rounds + perStep
-        val (next, n, s) = SqlBridge.pinnedSum(step(cur.frame, round), probe)
+        val (next, n, s) = JobTags.within(sc, JobTags.Round, round.toString)(
+          SqlBridge.pinnedSum(step(cur.frame, round), probe))
         loop(Result(next, n, s, round, stop match {
           case Unchanged => s == cur.sum
           case Zero => s == 0L

@@ -100,4 +100,31 @@ class FixpointSpec extends GraftSuite {
       Future.sequence(cases.map(c => Future(outcome(c)))), Duration.Inf)
     assert(concurrent === sequential)
   }
+
+  test("every job of a step carries its round as a tag, the jobs " +
+    "adaptive execution submits included") {
+    import spark.implicits._
+    val (s0, n0, sum0) = pinnedSum((1L to 50L).toDF("x"), col("x"))
+    val log = JobLog.on(spark)
+    try {
+      // a shuffle per step, and a sum that moves until the cap
+      val (r, _) = jobsOf("fixpoint-tags")(
+        Fixpoint(s0, n0, sum0, col("x"), 3) { (df, _) =>
+          df.groupBy(col("x").as("k")).agg((max(col("x")) + 1L).as("x"))
+            .select(col("x"))
+        })
+      assert(r.rounds === 3 && !r.converged)
+      val ids = spark.sparkContext.statusTracker
+        .getJobIdsForGroup("fixpoint-tags").toSet
+      val deadline = System.nanoTime() + 10000000000L
+      def seen = log.jobTable().filter(j => ids(j.id))
+      while (seen.size < ids.size && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val jobs = seen
+      assert(jobs.size === ids.size && ids.size > 3,
+        s"${ids.size} jobs, ${jobs.size} seen: no shuffle-map jobs?")
+      assert(jobs.map(_.round).toSet === Set("1", "2", "3"),
+        jobs.map(j => s"${j.id}:${j.round}").mkString(" "))
+    } finally spark.sparkContext.removeSparkListener(log)
+  }
 }

@@ -16,11 +16,14 @@ class HarnessSpec extends GraftSuite {
   test("JobLog counts the tasks of a 3-task job and their executor CPU") {
     val log = JobLog.on(spark)
     try {
-      spark.sparkContext.parallelize(1 to 3, 3)
-        .map(i => (1 to 200000).foldLeft(0L)(_ + _ * i)).count()
+      graft.util.JobTags.within(spark.sparkContext, graft.util.JobTags.Key,
+          "harness") {
+        spark.sparkContext.parallelize(1 to 3, 3)
+          .map(i => (1 to 200000).foldLeft(0L)(_ + _ * i)).count()
+      }
       val jobs = log.jobTable()
       assert(jobs.map(_.tasks) === Seq(3))
-      assert(jobs.forall(_.site.startsWith("count at HarnessSpec.scala")))
+      assert(jobs.map(_.tag) === Seq("harness"))
       assert(jobs.forall(j => j.t1 >= j.t0 && j.t0 > 0L))
       assert(log.cpuSeconds() > 0.0)
     } finally spark.sparkContext.removeSparkListener(log)

@@ -96,6 +96,19 @@ class SessionMemoSpec extends GraftSuite {
       graft.queries.IterQueries.warmLp(spark, dir))
   }
 
+  test("Caches.evict releases every RDD the dedup_clusters build " +
+    "cached, each closure round's pin included") {
+    import spark.implicits._
+    val dir = tempDir()
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    (0L until 12L).map { i =>
+      (i, if (i % 4 == 0) base else s"$base tail${i % 3}", "en", "web")
+    }.toDF("doc_id", "text", "lang", "source")
+      .write.parquet(s"$dir/documents.parquet")
+    assertEvictReleases("warmClusters")(
+      graft.queries.DedupQueries.warmClusters(spark, dir))
+  }
+
   test("Caches.evict empties a memo it was never told about") {
     val memo = SessionMemo.dropOnly[String, Int]()
     memo(spark, "k")(1)

@@ -40,20 +40,108 @@ class SqlBridgeSpec extends GraftSuite {
       s"eager $eager, pinned $pin, pinnedSum $fused jobs")
   }
 
+  /** The RDD ids of the pages each pin `df` reads stores its rows in:
+    * the parents of the RDDs under its `LogicalRDD` leaves.
+    */
+  private def pagesOf(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collectLeaves().flatMap {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        l.rdd.dependencies.map(_.rdd.id)
+      case _ => Nil
+    }.toSet
+
+  private def cachedRdds(): Set[Int] = spark.sparkContext.getRDDStorageInfo
+    .filter(_.numCachedPartitions > 0).map(_.id).toSet
+
   test("release frees a pin's blocks and runs no job") {
     val p = SqlBridge.pinned(frame)
-    def cached() = spark.sparkContext.getRDDStorageInfo
-      .filter(_.numCachedPartitions > 0).map(_.id).toSet
-    val ids = p.queryExecution.analyzed.collectLeaves()
-      .map(_.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id)
-      .toSet
-    assert((cached() & ids).nonEmpty, "the pin holds no blocks")
+    val ids = pagesOf(p)
+    assert((cachedRdds() & ids).nonEmpty, "the pin's pages hold no blocks")
     val (_, jobs) = jobsOf("release")(SqlBridge.release(p))
     assert(jobs === 0)
     val deadline = System.nanoTime() + 10000000000L
-    while ((cached() & ids).nonEmpty && System.nanoTime() < deadline)
+    while ((cachedRdds() & ids).nonEmpty && System.nanoTime() < deadline)
       Thread.sleep(20)
-    assert((cached() & ids).isEmpty, "the pin's blocks stayed cached")
+    assert((cachedRdds() & ids).isEmpty, "the pin's pages stayed cached")
+  }
+
+  /** `df` and its pin hold the same rows, and the pin measured them. */
+  private def roundTrips(df: org.apache.spark.sql.DataFrame): Unit =
+    roundTrips(df, rows(df))
+
+  private def roundTrips(df: org.apache.spark.sql.DataFrame,
+      expected: Seq[Seq[Any]]): Unit = {
+    val (p, n, _) = SqlBridge.pinnedSum(df, lit(0L))
+    try {
+      assert(p.schema === df.schema)
+      assert(n === expected.size.toLong)
+      assert(rows(p) === expected)
+    } finally SqlBridge.release(p)
+  }
+
+  test("a pin round-trips nulls, strings, arrays, maps, structs, " +
+    "decimal(38,18) and timestamps") {
+    roundTrips(spark.range(0L, 40L, 1L, 3).selectExpr(
+      "id",
+      "IF(id % 3 = 0, NULL, CONCAT('s', id)) AS s",
+      "IF(id % 5 = 0, NULL, ARRAY(id, NULL, id * 2)) AS a",
+      "MAP('k', id, 'n', IF(id % 2 = 0, NULL, id)) AS m",
+      "NAMED_STRUCT('x', id, 'y', IF(id % 2 = 0, NULL, 'y')) AS st",
+      "ARRAY(NAMED_STRUCT('z', CONCAT('z', id))) AS az",
+      "IF(id % 4 = 0, NULL, CAST(id * 1.5 - 7 AS DECIMAL(38,18))) AS d",
+      "IF(id % 6 = 0, NULL, TIMESTAMP_SECONDS(id * 86399)) AS ts"))
+  }
+
+  test("a pin round-trips a plan whose rows are not UnsafeRows") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    import spark.implicits._
+    val experimental =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    def df = (1L to 20L).map(i => (i, Option.when(i % 3 != 0)(s"r$i")))
+      .toDF("generic_rows", "s")
+    val expected = rows(df)
+    experimental.extraStrategies = Seq(GenericRowsStrategy)
+    try {
+      val generic = df.queryExecution.executedPlan.execute()
+        .mapPartitions(it => Iterator(it.exists(!_.isInstanceOf[UnsafeRow])))
+        .collect()
+      assert(generic.contains(true), "the plan produced only UnsafeRows")
+      roundTrips(df, expected)
+    } finally experimental.extraStrategies = Nil
+  }
+
+  test("a pin round-trips a row larger than a page") {
+    roundTrips(spark.range(0L, 6L, 1L, 1).selectExpr("id",
+      "IF(id = 3, REPEAT('x', 3 * 1048576), CAST(id AS STRING)) AS s"))
+  }
+
+  test("a pin round-trips empty partitions and a 0-row frame") {
+    roundTrips(spark.range(0L, 40L, 1L, 8).toDF().filter(col("id") < 3L))
+    roundTrips(frame.filter(lit(false)))
+    val (p, n, s) = SqlBridge.pinnedSum(frame.filter(lit(false)), col("s"))
+    assert((n, s) === ((0L, 0L)))
+    assert(pagesOf(p).nonEmpty && p.collect().isEmpty)
+  }
+
+  test("a chain of pins keeps only the last one cached once GC ran") {
+    import spark.implicits._
+    var state = SqlBridge.pinned((1L to 10L).toDF("k"))
+    val first = pagesOf(state).min
+    def cachedPins() = cachedRdds().filter(_ >= first)
+    // each step reads the last pin through a narrow union, so the
+    // partitions of the lineage it cuts point at that pin
+    (1 to 5).foreach { i =>
+      state = SqlBridge.pinned(state.unionByName(
+        (1L to 10L).map(_ + 10L * i).toDF("k")))
+    }
+    assert(state.count() === 60L)
+    val last = pagesOf(state)
+    val deadline = System.nanoTime() + 10000000000L
+    while (cachedPins() != last && System.nanoTime() < deadline) {
+      System.gc(); Thread.sleep(100)
+    }
+    assert(cachedPins() === last, "superseded pins stayed cached")
+    SqlBridge.release(state)
   }
 
   test("pinned: default path is a localCheckpoint with measured stats") {
@@ -103,4 +191,31 @@ class SqlBridgeSpec extends GraftSuite {
     assert(reliable === local)
     assert(wrote > 0, "label propagation wrote no checkpoint files")
   }
+}
+
+/** Plans a local relation whose first column is named `generic_rows` as
+  * a scan over three partitions that yields `GenericInternalRow`s: a
+  * plan whose rows are not `UnsafeRow`s.
+  */
+object GenericRowsStrategy extends org.apache.spark.sql.execution.SparkStrategy {
+  import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+  def apply(plan: LogicalPlan): Seq[org.apache.spark.sql.execution.SparkPlan] =
+    plan match {
+      case l: LocalRelation
+          if l.output.headOption.exists(_.name == "generic_rows") =>
+        Seq(GenericRowsExec(l.output)(l.data.map(_.toSeq(l.schema).toArray)))
+      case _ => Nil
+    }
+}
+
+final case class GenericRowsExec(
+    output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute])(
+    values: Seq[Array[Any]])
+    extends org.apache.spark.sql.execution.LeafExecNode {
+  override protected def otherCopyArgs: Seq[AnyRef] = Seq(values)
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+  protected def doExecute(): org.apache.spark.rdd.RDD[InternalRow] =
+    sparkContext.parallelize(values, 3)
+      .map(v => new GenericInternalRow(v): InternalRow)
 }
