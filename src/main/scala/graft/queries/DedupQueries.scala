@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.functions.TextFns
 import graft.sources.Tables
-import graft.util.{Det, Fixpoint}
+import graft.util.{Det, Fixpoint, MinLabel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum, release}
@@ -690,19 +690,17 @@ object DedupQueries {
   private[graft] def shingleFrame(s: SparkSession, dir: String): DataFrame =
     shingleHashes(s, dir)
 
-  /** Bounded hop+pointer-jump rounds for [[dedupClusters]] — the same
-    * unrolled count on both engines, so the key is deterministic. Each
-    * round is one edge-hop (neighbor min) followed by one pointer jump
-    * (label := label's own label). On id-monotone chains — the shape real
-    * dedup components have, because exact-dup representatives are min-ids
-    * by construction — reach doubles per round (r_k = 2·(r_{k-1}+1), so 5
-    * rounds cover diameter ≤ 62 vs 5 for plain hops); an adversarial id
-    * layout can degrade toward one hop per round, which is why the bound
-    * is backed by a fixpoint assertion: components past it fail LOUDLY on
-    * the Spark side (see [[dedupClustersFrom]]) instead of silently
-    * leaving split clusters in the keep-list.
+  /** Round cap of [[closeMinLabel]] and the oracles' unroll: fused
+    * min-label rounds (edge hop and pointer jump over the same previous
+    * labels). On id-monotone chains, the shape real dedup components
+    * have because exact-dup representatives are min ids by construction,
+    * the reach after a round is d' = max(d + 1, 2d): 7 rounds reach 64
+    * hops and the 8th confirms no label moved. An adversarial id layout
+    * can degrade toward one hop per round, which is why a closure that
+    * does not converge within the cap fails loudly on the Spark side
+    * instead of leaving split clusters in the keep-list.
     */
-  private[graft] val DcRounds = 5
+  private[graft] val DcRounds = 8
 
   /** dedup_clusters — the dedup pipeline's CLOSURE step: each document →
     * the smallest doc_id of its duplicate CLUSTER, where clusters are the
@@ -713,23 +711,19 @@ object DedupQueries {
     * doc per cluster — this key is that step, and what a keep/drop list
     * is generated from (`keep = (doc_id == cluster)`).
     *
-    * Bounded synchronous min-label propagation with a POINTER-JUMP
-    * shortcut ([[DcRounds]] hop+jump rounds — the Shiloach–Vishkin
-    * shortcut step; see [[DcRounds]] for the reach analysis) over the
-    * candidate graph: per round one edge join + min aggregation, then one
-    * label-on-label self-join; a pin per step (each frame
-    * feeds two downstream plans — the LP lazy-plan-doubling lesson). A
-    * final one-hop pass asserts the labels are a fixpoint and THROWS
-    * otherwise (hop-fixpoint ⇒ labels constant per component ⇒ exact CC
-    * min-labels) — a component wider than the bound is a loud error,
-    * never a silent duplicate kept. Scale: the candidate graph is
+    * Bounded min-label propagation with the pointer-jump shortcut (the
+    * Shiloach–Vishkin shortcut step) over the candidate graph: at most
+    * [[DcRounds]] rounds of the min-label kernel, one pin per round. A
+    * closure that does not converge within them THROWS — a component
+    * wider than the bound is a loud error, never a silent duplicate
+    * kept. Scale: the candidate graph is
     * df-capped ([[MaxBandDf]]) and rep-collapsed, so components are small
     * by construction; the jump headroom plus the loud guard covers the
     * pathological rest.
     */
   // The converged cluster-closure frame is shared by `dedup_clusters`
   // and `corpus_curation_decisions` — memoized per (session, sfDir) so
-  // the hop+jump rounds run once (bench `_build:dclusters` hook).
+  // the closure rounds run once (bench `_build:dclusters` hook).
   private val clustersCache = graft.util.SessionMemo.pinned[String]()
 
   private def clustersFrame(s: SparkSession, dir: String): DataFrame =
@@ -749,7 +743,7 @@ object DedupQueries {
   private def dedupClusters(s: SparkSession, dir: String): DataFrame =
     // shares [[candidatePairs]]'s memoized frame with `dedup_minhash` and
     // the closure result with `corpus_curation_decisions` (the candidate
-    // chain AND the hop+jump rounds each run once per session)
+    // chain AND the closure rounds each run once per session)
     clustersFrame(s, dir)
 
   /** Testable seam for [[dedupClusters]]: explicit documents + (doc_id,
@@ -777,101 +771,44 @@ object DedupQueries {
       .orderBy(col("doc_id"))
   }
 
-  /** Bounded min-label closure with the pointer-jump shortcut — the
-    * shared CC kernel under `dedup_clusters` and
-    * `dedup_embedding_clusters`: [[DcRounds]] hop+jump rounds over the
-    * symmetrized `edges` frame (directed (a, b) rows; ids and labels are
-    * one id space), then a fixpoint assertion that THROWS on
-    * non-convergence. Returns (id, cluster) with cluster = the component
-    * min id. The DuckDB twin of the round chain is [[closureRoundsSql]].
+  /** Bounded min-label closure: the shared CC step under
+    * `dedup_clusters` and `dedup_embedding_clusters`. Runs the min-label
+    * kernel ([[graft.util.MinLabel]]) for at most [[DcRounds]] rounds
+    * over both orientations of the (a, b) `edges` (ids and labels are
+    * one id space) and THROWS if it did not converge. Returns (id,
+    * cluster) with cluster = the component min id. The DuckDB twin is
+    * [[closureRoundsSql]].
     */
   private[graft] def closeMinLabel(ids: DataFrame, edges: DataFrame,
                                    keyName: String): DataFrame = {
-    // r18 (guide §2.2 fewer/larger partitions): the raw union holds the
-    // CONCATENATED partitions of its four inputs (4 × shuffle.partitions
-    // tiny slices here — Prof measured 8 jobs × 128 tasks of ~4 ms pure
-    // scheduling overhead per closure), so hash it once by the hop join
-    // key before caching: AQE coalesces the exchange to the data's real
-    // size, every per-round hop join reads a sanely-sized cached frame,
-    // and at scale the a-clustering is what the five hop joins want
-    // anyway. Row values untouched; all consumers are joins/order-free
-    // aggregations.
-    val und = edges
-      .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("a"))
-      .persist()
-    und.count()
-    // A pin per round (the LP loop shape); each round releases the pins
-    // it supersedes once its own pin is filled.
-    val labels0 = pinned(ids.select(col("id"), col("id").as("cluster")))
-    // one edge-hop: min neighbor label layered onto the current labels
-    def hop(lbl: DataFrame): DataFrame = {
-      val m = und
-        .join(lbl.select(col("id").as("a"), col("cluster")), Seq("a"))
-        .groupBy(col("b").as("id")).agg(min(col("cluster")).as("nmin"))
-      lbl.join(m, Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("cluster"), coalesce(col("nmin"), col("cluster")))
-            .as("cluster"))
-    }
-    val labels = (1 to DcRounds).foldLeft(labels0) { (cur, _) =>
-      // hop, then pointer-jump (cluster := cluster's own cluster — every
-      // cluster value IS an id, so the self-join always matches). The hop
-      // frame appears on both sides of the jump's self-join, so it gets
-      // its own pin — a lazy persist was measured SLOWER here (the
-      // self-join's two scans race on the same uncomputed cache partitions
-      // and serialize on block locks).
-      val h = pinned(hop(cur))
-      val next = pinned(h
-        .join(h.select(col("id").as("cluster"), col("cluster").as("pc")),
-          Seq("cluster"), "left_outer")
-        .select(col("id"),
-          least(col("cluster"), coalesce(col("pc"), col("cluster")))
-            .as("cluster")))
-      release(cur); release(h)
-      next
-    }
-    // fixpoint guard: one more hop must change nothing, else the bound
-    // was too small for this corpus — fail loudly, never emit a keep-list
-    // that silently retains duplicates.
-    val drifted = hop(labels)
-      .join(labels.withColumnRenamed("cluster", "prev"), Seq("id"))
-      .filter(col("cluster") =!= col("prev"))
-      .limit(1).count()
-    und.unpersist(blocking = false)
-    if (drifted > 0)
+    // hashed once by the hop join key before the pin: AQE coalesces the
+    // exchange to the data's real size, where the raw union would hold
+    // the concatenated slices of its inputs' partitions
+    val und = pinned(edges.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(edges.select(col("b").as("src"), col("a").as("dst")))
+      .repartition(col("src")))
+    val fix = MinLabel(ids, und, DcRounds)
+    release(und)
+    if (!fix.converged)
       throw new IllegalStateException(
         s"$keyName: min-label propagation did not converge within " +
-          s"$DcRounds hop+jump rounds (reach up to " +
-          s"${(1 to DcRounds).foldLeft(0)((r, _) => 2 * (r + 1))} hops on " +
-          "id-monotone chains); raise DcRounds")
-    labels
+          s"$DcRounds rounds (id-monotone chains close up to 64 hops); " +
+          "raise DcRounds")
+    fix.frame.select(col("id"), col("label").as("cluster"))
   }
 
-  /** The h$k/l$k closure round CTE chain shared by the cluster-key
-    * oracles — assumes CTEs `und(a, b)` (symmetrized edges) and
-    * `l0(id, cluster)` are in scope; mirrors [[closeMinLabel]] exactly.
+  /** The closure's oracle rounds `l1` … `l$DcRounds` (id, label) —
+    * assumes CTEs `und(src, dst)` (symmetrized edges) and `l0(id,
+    * label)` are in scope; the twin of [[closeMinLabel]].
     */
-  private[graft] def closureRoundsSql(rounds: Int = DcRounds): String =
-    (1 to rounds).map { k =>
-      // hop (h$k) then pointer-jump (l$k) — mirrors the Spark loop exactly
-      s"""h$k AS MATERIALIZED (
-         |  SELECT l.id, LEAST(l.cluster, COALESCE(m.nmin, l.cluster)) AS cluster
-         |  FROM l${k - 1} l LEFT JOIN (
-         |    SELECT e.b AS id, MIN(p.cluster) AS nmin
-         |    FROM und e JOIN l${k - 1} p ON p.id = e.a
-         |    GROUP BY e.b) m ON l.id = m.id),
-         |l$k AS MATERIALIZED (
-         |  SELECT h.id, LEAST(h.cluster, COALESCE(p.cluster, h.cluster)) AS cluster
-         |  FROM h$k h LEFT JOIN h$k p ON h.cluster = p.id)""".stripMargin
-    }.mkString(",\n")
+  private[graft] def closureRoundsSql: String =
+    MinLabel.sql("l", "und", DcRounds)
 
   /** The full cluster-closure CTE chain (defines `l$DcRounds` with
-    * (id, cluster)) — shared by the `dedup_clusters` and
+    * (id, label)) — shared by the `dedup_clusters` and
     * `corpus_curation_decisions` oracles (one unrolling, no drift).
     */
-  private val clusterCtes = {
-    val rounds = closureRoundsSql()
+  private val clusterCtes =
     s"""$minhashSigsCte,
        |cpairs AS MATERIALIZED (
        |  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
@@ -885,18 +822,18 @@ object DedupQueries {
        |  FROM documents d JOIN repm r USING (text)
        |  WHERE d.doc_id <> r.rep),
        |und AS MATERIALIZED (
-       |  SELECT a, b FROM cpairs UNION ALL SELECT a, b FROM exacte
-       |  UNION ALL SELECT b AS a, a AS b FROM cpairs
-       |  UNION ALL SELECT b AS a, a AS b FROM exacte),
+       |  SELECT a AS src, b AS dst FROM cpairs
+       |  UNION ALL SELECT a, b FROM exacte
+       |  UNION ALL SELECT b, a FROM cpairs
+       |  UNION ALL SELECT b, a FROM exacte),
        |l0 AS MATERIALIZED (
-       |  SELECT doc_id AS id, doc_id AS cluster FROM documents),
-       |$rounds""".stripMargin
-  }
+       |  SELECT doc_id AS id, doc_id AS label FROM documents),
+       |$closureRoundsSql""".stripMargin
 
   private val dedupClustersSql =
     s"""WITH $clusterCtes
-       |SELECT id AS doc_id, cluster FROM l$DcRounds ORDER BY doc_id"""
-      .stripMargin
+       |SELECT id AS doc_id, label AS cluster FROM l$DcRounds
+       |ORDER BY doc_id""".stripMargin
 
   /** X104 — corpus_curation_decisions: the END-TO-END per-document
     * curation decision table — the composition a 100 TB pretraining run
@@ -972,7 +909,8 @@ object DedupQueries {
        |       AND q.score_sum_milli > ${TextQueries.QmThreshMilli}
        |           * q.n_features AS INT) AS train_emit_scored
        |FROM dec d
-       |JOIN (SELECT id, cluster FROM l$DcRounds) c ON c.id = d.doc_id
+       |JOIN (SELECT id, label AS cluster FROM l$DcRounds) c
+       |  ON c.id = d.doc_id
        |JOIN spl ON spl.doc_id = d.doc_id
        |JOIN qsc q ON q.doc_id = d.doc_id
        |ORDER BY d.doc_id""".stripMargin

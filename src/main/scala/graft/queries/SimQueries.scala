@@ -1705,8 +1705,8 @@ object SimQueries {
     * the way `dedup_clusters` completes the minhash one.
     *
     * Shares the memoized signature frame with `dedup_embedding` and the
-    * bounded hop+jump closure kernel ([[DedupQueries.closeMinLabel]])
-    * with `dedup_clusters` — same loud non-convergence guard, same
+    * bounded min-label closure ([[DedupQueries.closeMinLabel]]) with
+    * `dedup_clusters` — same loud non-convergence guard, same
     * unrolled-round oracle ([[DedupQueries.closureRoundsSql]]).
     */
   private def dedupEmbeddingClusters(s: SparkSession,
@@ -1736,13 +1736,14 @@ object SimQueries {
        |  FROM embeddings e JOIN erepm r USING (embedding)
        |  WHERE e.vec_id <> r.rep),
        |und AS MATERIALIZED (
-       |  SELECT a, b FROM npairs UNION ALL SELECT a, b FROM exacte
-       |  UNION ALL SELECT b AS a, a AS b FROM npairs
-       |  UNION ALL SELECT b AS a, a AS b FROM exacte),
+       |  SELECT a AS src, b AS dst FROM npairs
+       |  UNION ALL SELECT a, b FROM exacte
+       |  UNION ALL SELECT b, a FROM npairs
+       |  UNION ALL SELECT b, a FROM exacte),
        |l0 AS MATERIALIZED (
-       |  SELECT vec_id AS id, vec_id AS cluster FROM embeddings),
-       |${DedupQueries.closureRoundsSql()}
-       |SELECT id AS vec_id, cluster FROM l${DedupQueries.DcRounds}
+       |  SELECT vec_id AS id, vec_id AS label FROM embeddings),
+       |${DedupQueries.closureRoundsSql}
+       |SELECT id AS vec_id, label AS cluster FROM l${DedupQueries.DcRounds}
        |ORDER BY vec_id""".stripMargin
 
   // ---- embedding near-dup: exact all-pairs baseline (test scale) ----

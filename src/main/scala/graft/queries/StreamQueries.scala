@@ -3,7 +3,7 @@ package graft.queries
 import graft.functions.TextFns
 import graft.sources.Tables
 import graft.streaming.Streams
-import graft.util.Det
+import graft.util.{Det, MinLabel}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -182,11 +182,9 @@ object StreamQueries {
     * invariance proof at the gate; StreamingSpec proves
     * maintainer == one-shot fold after EVERY micro-batch and under a
     * PERMUTED batch order (edge delivery commutes — no ordering
-    * contract, unlike the T10/X127 CDC folds). Sim evidence
-    * (tools/sim_cc_stream.py): incremental == union-find at all four
-    * SFs; per-batch fixpoint ≤ 7 rounds, one-shot depth ≤ 6; the
-    * oracle unrolls [[CcOrcRounds]] = 2× the observed one-shot depth
-    * (extra rounds are fixpoint no-ops).
+    * contract, unlike the T10/X127 CDC folds). The oracle unrolls
+    * [[CcOrcRounds]] one-shot min-label rounds and reports `converged`
+    * when its last two rounds agree.
     */
   private def t11(s: SparkSession, dir: String): DataFrame = {
     val edges = UserGraphQueries.zipfCanonicalFrame(s, dir)
@@ -204,27 +202,15 @@ object StreamQueries {
 
   private val CcOrcRounds = 12
 
-  private val t11Sql = {
-    val rounds = (1 to CcOrcRounds).map { r =>
-      s"""ccn$r AS (
-         |  SELECT e.v AS id, MIN(x.label) AS ln
-         |  FROM zund e JOIN cl${r - 1} x ON e.u = x.id GROUP BY e.v),
-         |ccd$r AS (
-         |  SELECT x.id, y.label AS ld
-         |  FROM cl${r - 1} x JOIN cl${r - 1} y ON x.label = y.id),
-         |cl$r AS MATERIALIZED (
-         |  SELECT x.id, LEAST(x.label, COALESCE(n.ln, x.label),
-         |    COALESCE(d.ld, x.label)) AS label
-         |  FROM cl${r - 1} x LEFT JOIN ccn$r n ON x.id = n.id
-         |  LEFT JOIN ccd$r d ON x.id = d.id)""".stripMargin
-    }.mkString(",\n")
+  private val t11Sql =
     s"""${UserGraphQueries.ZipfSql("zund")},
        |cl0 AS MATERIALIZED (
        |  SELECT u AS id, u AS label FROM (SELECT DISTINCT u FROM zund)),
-       |$rounds
-       |SELECT id, label, TRUE AS converged
+       |${MinLabel.sql("cl", "(SELECT u AS src, v AS dst FROM zund)",
+             CcOrcRounds)}
+       |SELECT id, label, ${MinLabel.convergedSql("cl", CcOrcRounds)}
+       |  AS converged
        |FROM cl$CcOrcRounds ORDER BY id""".stripMargin
-  }
 
   /** X127 — events_scd2_history: the SCD TYPE-2 dimension history built
     * from the SAME CDC changelog T10 folds — one row per key-VERSION

@@ -3,7 +3,7 @@ package graft.queries
 import graft.EdgeDirection
 import graft.algorithms.GraphAlgorithms
 import graft.sources.{GUser, IdEncoder}
-import graft.util.{Det, Fixpoint}
+import graft.util.{Det, Fixpoint, MinLabel}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1764,16 +1764,13 @@ object UserGraphQueries {
        |ORDER BY pass""".stripMargin
   }
 
-  /** Oracle unroll depth for the X177 intra-community CC: the min-label
-    * fixpoint needs exactly ecc(min-id vertex) rounds per refined part —
-    * measured 1/2/3/2 at sf0.001/0.01/0.1/sf1 (BFS sim over the composed
-    * oracle labels, round 14); 8 covers the maximum with margin and the
-    * extra unrolled rounds are no-ops by construction (min over an
-    * already-converged frame). The engine loop detects its own fixpoint
-    * (monotone comp-sum probe) and fails LOUDLY at [[LeidenCcCap]].
+  /** Round cap of the X177 intra-community CC, and the oracle's unroll:
+    * the engine fails loudly unless the min-label kernel converges
+    * within it, so the oracle's unroll of the same rounds reached the
+    * same fixpoint. Plain min-label hops measured depths 1/2/3/2 at
+    * sf0.001/0.01/0.1/sf1; the pointer jump only shortens them.
     */
-  private val LeidenCcIters = 8
-  private val LeidenCcCap = 40
+  private val LeidenCcRounds = 8
 
   /** X177 — graph_leiden_refine: the Leiden REFINEMENT guarantee (Traag,
     * Waltman & van Eck 2019 — "From Louvain to Leiden") applied to the
@@ -1798,10 +1795,10 @@ object UserGraphQueries {
     * disconnected.
     *
     * Scale: intra-edge filter is two broadcast-label joins over |E|;
-    * each CC round is one keyed join + a map-side-combinable min
-    * (comp-sum is monotone nonincreasing, so an unchanged sum IS the
-    * fixpoint test). At 100 TB the per-round frame is |V|-sized
-    * and the loop depth is community-diameter-bounded, not
+    * each CC round is one min-label kernel round (an edge join, the
+    * pointer-jump self-join and one map-side-combinable min; an
+    * unchanged label sum IS the fixpoint test). At 100 TB the per-round
+    * frame is |V|-sized and the loop depth is community-diameter-bounded, not
     * graph-diameter-bounded — the reason refinement stays cheap at
     * scale while a full-graph CC would not.
     */
@@ -1832,46 +1829,10 @@ object UserGraphQueries {
         Seq("dst"))
       .filter(col("ls") === col("ld"))
       .select(col("src"), col("dst")))
-    val (c0, n0, s0) = pinnedSum(
-      labs.select(col("id"), col("id").as("comp")), col("comp"))
-    // Delta propagation (round-16 trim): only vertices whose comp
-    // DROPPED last round need to push their label this round — a
-    // neighbor u outside that frontier already pushed its (unchanged)
-    // comp in an earlier round, so restricting the join to the frontier
-    // leaves every round's value sequence bit-identical (min over the
-    // ≤ k-hop neighborhood either way) while the |E| join shrinks to
-    // the still-moving fringe after round 1. `prev` rides the pinned
-    // frames, so the frontier filter runs inside each round's one fused
-    // job — no extra driver action.
-    var prev: DataFrame = null
-    val cc = Fixpoint(c0, n0, s0, col("comp"), LeidenCcCap) { (c, _) =>
-      val pushers =
-        if (prev == null) c
-        else c.join(prev.select(col("id"), col("comp").as("pc")),
-            Seq("id"))
-          .filter(col("comp") < col("pc"))
-          .select(col("id"), col("comp"))
-      prev = c
-      c.unionByName(intra
-          .join(pushers.select(col("id").as("src"), col("comp")),
-            Seq("src"))
-          .select(col("dst").as("id"), col("comp")))
-        .groupBy(col("id")).agg(min(col("comp")).as("comp"))
-    }
+    val cc = MinLabel(labs, intra, LeidenCcRounds)
     require(cc.converged,
-      s"leiden refinement CC did not converge in $LeidenCcCap rounds")
-    // ADVICE r14: attribute a depth-assumption violation at the SOURCE.
-    // The oracle unrolls exactly LeidenCcIters min-label rounds; the
-    // engine converges at round r = (fixpoint depth) + 1 (the no-op
-    // probe round). If the fixpoint ever needs more than LeidenCcIters
-    // productive rounds, the engine would silently pass while the
-    // oracle twin under-iterates — surfacing only as an unattributed
-    // gate hash mismatch. Fail loudly here instead.
-    require(cc.rounds - 1 <= LeidenCcIters,
-      s"leiden refinement CC fixpoint depth ${cc.rounds - 1} exceeds the " +
-        s"oracle unroll depth $LeidenCcIters — raise LeidenCcIters to " +
-        "keep the oracle twin exact")
-    cc.frame
+      s"leiden refinement CC did not converge in $LeidenCcRounds rounds")
+    cc.frame.select(col("id"), col("label").as("comp"))
   }
 
   /** Testable seam: explicit (id, lab) assignment + UNDIRECTED edge
@@ -1892,13 +1853,6 @@ object UserGraphQueries {
   }
 
   private val graphLeidenRefineSql = {
-    val rounds = (1 to LeidenCcIters).map { k =>
-      s"""lr$k AS MATERIALIZED (SELECT id, MIN(comp) AS comp FROM (
-         |  SELECT id, comp FROM lr${k - 1}
-         |  UNION ALL
-         |  SELECT e.dst AS id, c.comp FROM lr${k - 1} c
-         |  JOIN lrie e ON e.src = c.id) GROUP BY id)""".stripMargin
-    }.mkString(",\n")
     s"""$louvainP1Ctes,
        |$louvainMergeCtes,
        |lrlab AS MATERIALIZED (
@@ -1909,11 +1863,11 @@ object UserGraphQueries {
        |  JOIN lrlab a ON a.id = e.src
        |  JOIN lrlab b ON b.id = e.dst
        |  WHERE a.lab = b.lab),
-       |lr0 AS (SELECT id, id AS comp FROM lrlab),
-       |$rounds,
+       |lr0 AS (SELECT id, id AS label FROM lrlab),
+       |${MinLabel.sql("lr", "lrie", LeidenCcRounds)},
        |lrparts AS (
-       |  SELECT l.lab, c.comp, COUNT(*) AS n_vertices
-       |  FROM lr$LeidenCcIters c JOIN lrlab l ON l.id = c.id
+       |  SELECT l.lab, c.label AS comp, COUNT(*) AS n_vertices
+       |  FROM lr$LeidenCcRounds c JOIN lrlab l ON l.id = c.id
        |  GROUP BY 1, 2),
        |lrnp AS (SELECT lab, COUNT(*) AS n_parts FROM lrparts GROUP BY 1)
        |SELECT p.lab AS community, p.comp AS refined, p.n_vertices,
@@ -2222,9 +2176,9 @@ object UserGraphQueries {
     require(mv.converged,
       s"leiden $what aggregate-move loop did not drain in " +
         s"$LeidenMvCap rounds")
-    // same source-attributed depth guard as the refine CC (ADVICE r14):
     // the oracle unrolls exactly `unroll` rounds for this level; the
-    // engine drains at r = (productive rounds) + 1.
+    // engine drains at r = (productive rounds) + 1, so a deeper drain
+    // fails here, at its source, not as an oracle hash mismatch.
     val r = mv.rounds
     require(r - 1 <= unroll,
       s"leiden $what aggregate-move drain depth ${r - 1} exceeds the " +
@@ -2242,13 +2196,6 @@ object UserGraphQueries {
   // the same fixed depth the engine's require-guards certify.
   private def leidenLevelCtes(p: String, vlab: String,
       nRounds: Int): String = {
-    val cc = (1 to LeidenCcIters).map { k =>
-      s"""${p}c$k AS MATERIALIZED (SELECT id, MIN(comp) AS comp FROM (
-         |  SELECT id, comp FROM ${p}c${k - 1}
-         |  UNION ALL
-         |  SELECT e.dst AS id, c.comp FROM ${p}c${k - 1} c
-         |  JOIN ${p}ie e ON e.src = c.id) GROUP BY id)""".stripMargin
-    }.mkString(",\n")
     val rounds = (1 to nRounds).map { r =>
       val prev = s"${p}l${r - 1}"
       s"""${p}t$r AS (
@@ -2297,22 +2244,22 @@ object UserGraphQueries {
        |  JOIN $vlab a ON a.id = e.src
        |  JOIN $vlab b ON b.id = e.dst
        |  WHERE a.lab = b.lab),
-       |${p}c0 AS (SELECT id, id AS comp FROM $vlab),
-       |$cc,
+       |${p}c0 AS (SELECT id, id AS label FROM $vlab),
+       |${MinLabel.sql(s"${p}c", s"${p}ie", LeidenCcRounds)},
        |${p}cw AS MATERIALIZED (
-       |  SELECT pa.comp AS a, pb.comp AS b, COUNT(*) AS w
-       |  FROM lvse e JOIN ${p}c$LeidenCcIters pa ON pa.id = e.src
-       |  JOIN ${p}c$LeidenCcIters pb ON pb.id = e.dst
+       |  SELECT pa.label AS a, pb.label AS b, COUNT(*) AS w
+       |  FROM lvse e JOIN ${p}c$LeidenCcRounds pa ON pa.id = e.src
+       |  JOIN ${p}c$LeidenCcRounds pb ON pb.id = e.dst
        |  GROUP BY 1, 2),
        |${p}pd AS MATERIALIZED (
        |  SELECT a AS p, SUM(w) AS d FROM ${p}cw GROUP BY 1),
        |${p}l0 AS (
-       |  SELECT c.comp AS id, l.lab FROM ${p}c$LeidenCcIters c
-       |  JOIN $vlab l ON l.id = c.comp WHERE c.id = c.comp),
+       |  SELECT c.label AS id, l.lab FROM ${p}c$LeidenCcRounds c
+       |  JOIN $vlab l ON l.id = c.label WHERE c.id = c.label),
        |$rounds,
        |${p}vl AS MATERIALIZED (
-       |  SELECT c.id, l.lab FROM ${p}c$LeidenCcIters c
-       |  JOIN ${p}l$nRounds l ON l.id = c.comp)""".stripMargin
+       |  SELECT c.id, l.lab FROM ${p}c$LeidenCcRounds c
+       |  JOIN ${p}l$nRounds l ON l.id = c.label)""".stripMargin
   }
 
   // Shared oracle CTE chain of the X182 pipeline (louvainP1Ctes + TWO
@@ -2351,8 +2298,8 @@ object UserGraphQueries {
          |  AS q_num""".stripMargin
     s"""$graphLeidenCtes,
        |lda0 AS (SELECT v AS id, v AS lab FROM lvdeg),
-       |ldaref AS (SELECT id, comp AS lab FROM ldc$LeidenCcIters),
-       |ldaref2 AS (SELECT id, comp AS lab FROM lec$LeidenCcIters)
+       |ldaref AS (SELECT id, label AS lab FROM ldc$LeidenCcRounds),
+       |ldaref2 AS (SELECT id, label AS lab FROM lec$LeidenCcRounds)
        |${passSel(0, "lda0")}
        |UNION ALL
        |${passSel(1, s"lv$LvRounds")}
@@ -3826,11 +3773,9 @@ object UserGraphQueries {
     val (allVerts, nV, _) = pinnedSum(e0.select(col("u").as("id"))
       .unionByName(e0.select(col("v").as("id"))).distinct(), lit(1L))
 
-    // r18 trim (the mst/match lazy-accumulator lesson): nothing reads
-    // the (id, scc_id) label parts mid-loop and every part is lazy over
-    // PINNED frames (coreVerts/color/flagged/remVerts), so they pin
-    // ONCE at the end — the per-part eager checkpoint cost one driver
-    // action per peel phase.
+    // nothing reads the (id, scc_id) label parts mid-loop and every
+    // part is lazy over pinned frames (coreVerts/color/flagged/remVerts),
+    // so they pin once at the end, not once per peel phase
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // (1) trim: keep edge (u,v) iff u has an in-edge and v has an
     // out-edge in the active set. TWO trim steps per checkpoint+count
@@ -3867,30 +3812,12 @@ object UserGraphQueries {
           .select(col("id"), col("id").as("scc_id"))
         if (nCore == 0L) coreVerts
         else {
-          // (2) color: synchronous min-propagation with pointer
-          // doubling; the integer color sum is strictly monotone until
-          // the fixpoint
-          val (color0, _, cSum) = pinnedSum(
-            coreVerts.select(col("id"), col("id").as("color")), col("color"))
-          // Fused round: the edge hop, the pointer jump, and the previous
-          // colors union into ONE min aggregation — same least() values,
-          // two left joins fewer per round. The jump join is inner: every
-          // color value is an active vertex id (min over core ids), so the
-          // old left join never produced a null dc; hop targets v are core
-          // vertices, so the union's id set is exactly the color frame's.
-          val color = Fixpoint(color0, nCore, cSum, col("color"),
-              SccColorRounds) { (color, _) =>
-            color
-              .unionByName(active
-                .join(color.select(col("id").as("u"),
-                  col("color").as("cu")), Seq("u"))
-                .select(col("v").as("id"), col("cu").as("color")))
-              .unionByName(color.select(col("id"), col("color").as("did"))
-                .join(color.select(col("id").as("did"),
-                  col("color").as("dc")), Seq("did"))
-                .select(col("id"), col("dc").as("color")))
-              .groupBy(col("id")).agg(min(col("color")).as("color"))
-          }.frame
+          // (2) color: each core vertex takes the min id among its
+          // ancestors in the active core (directed min-label kernel)
+          val color = MinLabel(coreVerts,
+              active.select(col("u").as("src"), col("v").as("dst")),
+              SccColorRounds).frame
+            .select(col("id"), col("label").as("color"))
           // (3) flag: backward reach-to-root on same-color edges
           val sce = pinned(active
             .join(color.select(col("id").as("u"), col("color").as("ucol")),
@@ -3959,17 +3886,6 @@ object UserGraphQueries {
          |    AND EXISTS (SELECT 1 FROM $prev y WHERE y.u = e.v))"""
         .stripMargin
     }.mkString(",\n")
-    val colors = (1 to SccColorRounds).map { r =>
-      val prev = s"scl${r - 1}"
-      s"""scl$r AS MATERIALIZED (
-         |  SELECT x.id, LEAST(x.color, COALESCE(m.mc, x.color),
-         |    COALESCE(d.color, x.color)) AS color
-         |  FROM $prev x
-         |  LEFT JOIN (SELECT e.v AS id, MIN(cu.color) AS mc
-         |             FROM score e JOIN $prev cu ON cu.id = e.u
-         |             GROUP BY e.v) m ON m.id = x.id
-         |  LEFT JOIN $prev d ON d.id = x.color)""".stripMargin
-    }.mkString(",\n")
     val flags = (1 to SccFlagRounds).map { r =>
       val prev = s"sfl${r - 1}"
       s"""sfl$r AS MATERIALIZED (
@@ -3986,19 +3902,20 @@ object UserGraphQueries {
        |score AS MATERIALIZED (SELECT u, v FROM str$SccTrimRounds),
        |scv AS MATERIALIZED (
        |  SELECT u AS id FROM score UNION SELECT v FROM score),
-       |scl0 AS (SELECT id, id AS color FROM scv),
-       |$colors,
+       |scl0 AS (SELECT id, id AS label FROM scv),
+       |${MinLabel.sql("scl", "(SELECT u AS src, v AS dst FROM score)",
+             SccColorRounds)},
        |ssce AS MATERIALIZED (
        |  SELECT e.u, e.v FROM score e
        |  JOIN scl$SccColorRounds a ON a.id = e.u
-       |  JOIN scl$SccColorRounds b ON b.id = e.v AND b.color = a.color),
-       |sfl0 AS (SELECT id FROM scl$SccColorRounds WHERE id = color),
+       |  JOIN scl$SccColorRounds b ON b.id = e.v AND b.label = a.label),
+       |sfl0 AS (SELECT id FROM scl$SccColorRounds WHERE id = label),
        |$flags,
        |slab AS MATERIALIZED (
        |  SELECT s.id, s.id AS scc_id FROM slv s
        |  WHERE NOT EXISTS (SELECT 1 FROM scv c WHERE c.id = s.id)
        |  UNION ALL
-       |  SELECT c.id, c.color AS scc_id FROM scl$SccColorRounds c
+       |  SELECT c.id, c.label AS scc_id FROM scl$SccColorRounds c
        |  JOIN sfl$SccFlagRounds f ON f.id = c.id)""".stripMargin
   }
 
@@ -4050,7 +3967,7 @@ object UserGraphQueries {
     * 5101/5101 at sf0.1, 41488/41488 at sf1 — the layer-2 core labeled
     * OFF+min), phase depths ≤ trim 10 / color 6 / flag 9 single steps
     * per peel (inside the engine's existing caps; the oracle unrolls
-    * 12/8/12 per peel). The oracle's `complete` column is the REAL
+    * 12/10/12 per peel). The oracle's `complete` column is the REAL
     * leftover check ((count of peel-2 unresolved) = 0), not a literal.
     * No new algorithm code: the key IS [[sccLabelsOf]] over
     * [[layeredDirectedOf]] — what it adds is gate-scale coverage of the
@@ -4059,15 +3976,15 @@ object UserGraphQueries {
   private def graphSccLayered(s: SparkSession, dir: String): DataFrame =
     sccLabelsOf(layeredDirectedOf(zipfDirectedFrame(s, dir)))
 
-  /** Oracle unroll caps per peel (measured single-step depths ≤ 10/6/9
-    * across the four SFs; margin on top).
+  /** Oracle unroll caps per peel for trim and flag (measured single-step
+    * depths ≤ 10/9 across the four SFs; margin on top); the color rounds
+    * are [[SccColorRounds]], as in the engine.
     */
   private val L2Trim = 12
-  private val L2Color = 8
   private val L2Flag = 12
 
-  /** One peel's oracle chain with prefix `p`: trim fixpoint, min-color
-    * with pointer doubling, backward flag — mirrors [[sccLabelCtes]]'s
+  /** One peel's oracle chain with prefix `p`: trim fixpoint, the
+    * min-label color rounds, backward flag — mirrors [[sccLabelCtes]]'s
     * structure but parameterized so two peels can stack.
     */
   private def sccPeelCtes(p: String, edgesCte: String,
@@ -4078,17 +3995,6 @@ object UserGraphQueries {
          |  WHERE EXISTS (SELECT 1 FROM ${p}t${r - 1} x WHERE x.v = e.u)
          |    AND EXISTS (SELECT 1 FROM ${p}t${r - 1} y WHERE y.u = e.v))"""
         .stripMargin
-    }.mkString(",\n")
-    val colors = (1 to L2Color).map { r =>
-      val prev = s"${p}c${r - 1}"
-      s"""${p}c$r AS MATERIALIZED (
-         |  SELECT x.id, LEAST(x.color, COALESCE(m.mc, x.color),
-         |    COALESCE(d.color, x.color)) AS color
-         |  FROM $prev x
-         |  LEFT JOIN (SELECT e.v AS id, MIN(cu.color) AS mc
-         |             FROM ${p}e e JOIN $prev cu ON cu.id = e.u
-         |             GROUP BY e.v) m ON m.id = x.id
-         |  LEFT JOIN $prev d ON d.id = x.color)""".stripMargin
     }.mkString(",\n")
     val flags = (1 to L2Flag).map { r =>
       val prev = s"${p}f${r - 1}"
@@ -4107,16 +4013,17 @@ object UserGraphQueries {
        |${p}sng AS (
        |  SELECT r.id, r.id AS scc_id FROM $remCte r
        |  WHERE NOT EXISTS (SELECT 1 FROM ${p}cv c WHERE c.id = r.id)),
-       |${p}c0 AS (SELECT id, id AS color FROM ${p}cv),
-       |$colors,
+       |${p}c0 AS (SELECT id, id AS label FROM ${p}cv),
+       |${MinLabel.sql(s"${p}c", s"(SELECT u AS src, v AS dst FROM ${p}e)",
+             SccColorRounds)},
        |${p}sce AS MATERIALIZED (
        |  SELECT e.u, e.v FROM ${p}e e
-       |  JOIN ${p}c$L2Color a ON a.id = e.u
-       |  JOIN ${p}c$L2Color b ON b.id = e.v AND b.color = a.color),
-       |${p}f0 AS (SELECT id FROM ${p}c$L2Color WHERE id = color),
+       |  JOIN ${p}c$SccColorRounds a ON a.id = e.u
+       |  JOIN ${p}c$SccColorRounds b ON b.id = e.v AND b.label = a.label),
+       |${p}f0 AS (SELECT id FROM ${p}c$SccColorRounds WHERE id = label),
        |$flags,
        |${p}res AS MATERIALIZED (
-       |  SELECT c.id, c.color AS scc_id FROM ${p}c$L2Color c
+       |  SELECT c.id, c.label AS scc_id FROM ${p}c$SccColorRounds c
        |  JOIN ${p}f$L2Flag f ON f.id = c.id),
        |${p}rem AS MATERIALIZED (
        |  SELECT c.id FROM ${p}cv c

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.util.{Det, Fixpoint}
+import graft.util.{Det, MinLabel}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
@@ -714,39 +714,30 @@ object Streams {
   }
 
   // ── T11: streaming incremental connected components ────────────────
-  /** Per-batch fixpoint bound for [[ccFold]] — the sim measured ≤ 7
-    * rounds per batch across sf0.001→sf1 (tools/sim_cc_stream.py).
-    */
+  /** Per-batch round cap of [[ccFold]]'s min-label fixpoint. */
   private val CcFoldRounds = 16
 
   /** Typed empty CC state: (id, label). */
   def ccEmptyState(s: org.apache.spark.sql.SparkSession): DataFrame =
     s.range(0).select(col("id"), col("id").as("label"))
 
-  /** T11 fold core — advance the maintained (id, label = min id of its
+  /** T11 fold core: advances the maintained (id, label = min id of its
     * component) state by one batch of undirected edges.
     *
-    * CONTRACT-FIRST (round 14 — judge r13 item #2; Kiveris et al.'s
-    * star-contraction family, public): batch endpoints are mapped
-    * through their CURRENT state labels in one join, intra-component
-    * edges drop out, and the min-label fixpoint (neighbor min +
-    * pointer doubling, the I2–I5 integer discipline) runs only on the
-    * CONTRACTED label graph — distinct inter-component label pairs
-    * plus new ids, each component collapsed to its representative. The
-    * fixpoint's result composes back over the full state with ONE
-    * relabel join. Since state labels are component MIN ids, the min
-    * over contracted label-vertices is exactly the min id of the
-    * merged component, so the final labels equal the connected
-    * components of the full edge union regardless of batching
-    * (tools/sim_cc_stream.py asserts contracted == union-find at every
-    * SF, and measured the win: per-batch depths [7,7,5,3] → [7,4,5,1]
-    * at sf0.1 with the per-round frame shrinking from \|V\| to the
-    * touched-label set — \|ce\| = 2.6k/1.4k for the post-contraction
-    * batches vs 34k und rows before, and a replayed batch is a 0-round
-    * no-op). The label sum is the monotone [[Fixpoint]] probe;
-    * checkpoints go through the measured-stats pin (the X130
-    * stats-compounding lesson — this loop feeds state back through
-    * self-joins every batch). Returns (state, converged).
+    * Contract first (Kiveris et al.'s star-contraction family): batch
+    * endpoints are mapped through their current state labels in one
+    * join, intra-component edges drop out, and the min-label kernel
+    * ([[graft.util.MinLabel]]) runs only on the contracted label graph:
+    * the distinct inter-component label pairs, both orientations, plus
+    * new ids, each component collapsed to its representative. The
+    * result composes back over the full state with one relabel join.
+    * State labels are component min ids, so the min over contracted
+    * label-vertices is the min id of the merged component, and the
+    * final labels are the connected components of the full edge union
+    * however the stream is batched (`MinLabelSpec` checks this against
+    * union-find over random batch splits). Each round's frame is the
+    * touched-label set, not the whole state, and a replayed batch is a
+    * 0-round no-op. Returns (state, converged).
     */
   def ccFold(state: DataFrame, edges: DataFrame):
       (DataFrame, Boolean) = {
@@ -763,33 +754,12 @@ object Streams {
     val ce = mapped.select(least(col("x"), col("y")).as("a"),
       greatest(col("x"), col("y")).as("b")).distinct()
     val (und, nUnd, _) = pinnedSum(
-      ce.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(ce.select(col("b").as("u"), col("a").as("v"))),
+      ce.select(col("a").as("src"), col("b").as("dst"))
+        .unionByName(ce.select(col("b").as("src"), col("a").as("dst"))),
       lit(0L))
     if (nUnd == 0L) return (state, true)
-    val (lab0, n0, s0) = pinnedSum(
-      und.select(col("u").as("id")).distinct()
-        .select(col("id"), col("id").as("label")), col("label"))
-    // Fused round (the SCC color-loop shape): the neighbor min, the pointer
-    // jump, and the previous labels union into ONE min aggregation — same
-    // least() values, two left joins fewer per round. The jump join is
-    // inner: every label value is a contracted-graph vertex id (min over
-    // existing ids), so the old left join never produced a null ld; hop
-    // targets are und endpoints, so the union's id set is exactly the label
-    // frame's.
-    val fix = Fixpoint(lab0, n0, s0, col("label"), CcFoldRounds) {
-        (lab, _) =>
-      lab
-        .unionByName(und
-          .join(lab.select(col("id").as("u"), col("label").as("lu")),
-            Seq("u"))
-          .select(col("v").as("id"), col("lu").as("label")))
-        .unionByName(lab.select(col("id"), col("label").as("did"))
-          .join(lab.select(col("id").as("did"), col("label").as("ld")),
-            Seq("did"))
-          .select(col("id"), col("ld").as("label")))
-        .groupBy(col("id")).agg(min(col("label")).as("label"))
-    }
+    val fix = MinLabel(
+      und.select(col("src").as("id")).distinct(), und, CcFoldRounds)
     // compose: relabel carried state through the touched-label map,
     // append the contracted-graph vertices that are NEW ids
     val touched = fix.frame.select(col("id").as("t"), col("label").as("nl"))

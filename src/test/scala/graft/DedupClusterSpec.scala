@@ -106,16 +106,16 @@ class DedupClusterSpec extends GraftSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
   }
 
-  test("dedup_clusters: pointer jumps close a 40-hop chain in 5 rounds") {
-    // Diameter 39 — far past the 5-hop reach of plain single-hop rounds;
-    // the hop+jump shortcut must still converge to one cluster.
+  test("dedup_clusters: pointer jumps close a 40-hop chain in 8 rounds") {
+    // Diameter 39 — far past the 8-hop reach of plain single-hop rounds;
+    // fused hop+jump rounds reach 64 hops in 7 and confirm in the 8th.
     val got = pathClusters(40)
     assert(got.size === 40)
     assert(got.values.forall(_ === 0L), s"split clusters: $got")
   }
 
   test("dedup_clusters: a chain past the round bound fails loudly") {
-    // Diameter 199 > the 62-hop monotone-chain reach: the fixpoint guard
+    // Diameter 199 > the 128-hop reach of 8 fused rounds: the guard
     // must throw, never silently emit a keep-list with split clusters.
     val ex = intercept[IllegalStateException](pathClusters(200))
     assert(ex.getMessage.contains("did not converge"))

@@ -47,29 +47,54 @@ class FixpointLintSpec extends AnyFunSuite {
       stray.map(l => s"${l.file}:${l.line}"))
   }
 
-  test("every migrated fixpoint calls Fixpoint") {
-    val ugq = new File(root, "graft/queries/UserGraphQueries.scala")
-    val streams = new File(root, "graft/streaming/Streams.scala")
-    val dq = new File(root, "graft/queries/DedupQueries.scala")
-    val sites = Seq(
-      ugq -> "def louvainMergeRounds(" -> 1, ugq -> "def intraCcOf(" -> 1,
-      ugq -> "def leidenDrain(" -> 1, ugq -> "def kcorePeelOf(" -> 1,
-      ugq -> "def corenessOf(" -> 1, ugq -> "def tipDecomposeOf(" -> 1,
-      ugq -> "def wingDecomposeOf(" -> 1, ugq -> "def trussDecomposeOf(" -> 1,
-      ugq -> "def trussnessOf(" -> 1, ugq -> "def sccPivotOf(" -> 1,
-      ugq -> "def sccLabelRawOf(" -> 4, ugq -> "def topoLayersFrom(" -> 1,
-      ugq -> "def temporalReachOf(" -> 1, ugq -> "def mstBoruvkaOf(" -> 2,
-      ugq -> "def misOf(" -> 1, ugq -> "def coloringOf(" -> 1,
-      ugq -> "def matchingOf(" -> 1, ugq -> "def densestOf(" -> 1,
-      dq -> "def keepFirstOf(" -> 1, streams -> "def ccFold(" -> 1)
+  /** How often `call` occurs in the body of each `decl`. */
+  private def assertCalls(call: String,
+      sites: Seq[((File, String), Int)]): Unit =
     for (((f, decl), n) <- sites) {
       val src = code(f)
       val at = src.indexOf(decl)
       assert(at >= 0, s"`$decl` not found in ${f.getName}")
       val lines = src.split("\n", -1)
       val calls = span(src, at).map(lines)
-        .map("""\bFixpoint\(""".r.findAllMatchIn(_).size).sum
-      assert(calls === n, s"$decl: Fixpoint calls")
+        .map(s"\\b$call\\(".r.findAllMatchIn(_).size).sum
+      assert(calls === n, s"$decl: $call calls")
     }
+
+  private val ugq = new File(root, "graft/queries/UserGraphQueries.scala")
+  private val streams = new File(root, "graft/streaming/Streams.scala")
+  private val dq = new File(root, "graft/queries/DedupQueries.scala")
+
+  test("every migrated fixpoint calls Fixpoint") {
+    assertCalls("Fixpoint", Seq(
+      ugq -> "def louvainMergeRounds(" -> 1,
+      ugq -> "def leidenDrain(" -> 1, ugq -> "def kcorePeelOf(" -> 1,
+      ugq -> "def corenessOf(" -> 1, ugq -> "def tipDecomposeOf(" -> 1,
+      ugq -> "def wingDecomposeOf(" -> 1, ugq -> "def trussDecomposeOf(" -> 1,
+      ugq -> "def trussnessOf(" -> 1, ugq -> "def sccPivotOf(" -> 1,
+      ugq -> "def sccLabelRawOf(" -> 3, ugq -> "def topoLayersFrom(" -> 1,
+      ugq -> "def temporalReachOf(" -> 1, ugq -> "def mstBoruvkaOf(" -> 2,
+      ugq -> "def misOf(" -> 1, ugq -> "def coloringOf(" -> 1,
+      ugq -> "def matchingOf(" -> 1, ugq -> "def densestOf(" -> 1,
+      dq -> "def keepFirstOf(" -> 1))
+  }
+
+  test("every min-label loop calls the MinLabel kernel") {
+    assertCalls("MinLabel", Seq(
+      streams -> "def ccFold(" -> 1, ugq -> "def sccLabelRawOf(" -> 1,
+      ugq -> "def intraCcOf(" -> 1, dq -> "def closeMinLabel(" -> 1))
+  }
+
+  test("no foldLeft over a round constant pins") {
+    // `(1 to XRounds).foldLeft(z) { body }` is a convergence loop the
+    // while rules above cannot see; its body may not pin
+    val stray = for {
+      f <- scalaFiles(root)
+      src = code(f)
+      lines = src.split("\n", -1)
+      m <- """\b\w*Rounds\b[^\n]*\.foldLeft\(""".r.findAllMatchIn(src).toSeq
+      body = span(src, m.start)
+      if body.map(lines).exists(_.contains("pinned"))
+    } yield s"${f.getName}:${body.head + 1}"
+    assert(stray.isEmpty, s"pinning folds over a round constant: $stray")
   }
 }
