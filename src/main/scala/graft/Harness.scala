@@ -15,10 +15,22 @@ object Harness {
   /** Executor threads for a main's session: `SPARK_GRAFT_CPUS`, else 4. */
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
+  /** Entries of the JVM-wide generated-class cache: the distinct
+    * generated sources of one `graft.Verify` run of the sf0.01 board
+    * (2874, counted from the cache's keys with eviction off). Spark's
+    * default is 100, and the cache is keyed by (class loader, source): in
+    * local mode a class compiled on the driver and in a task takes two
+    * entries (that run made 5130), so 100 entries thrash across keys and
+    * across a stream's maintainers, and evicted classes compile again.
+    */
+  private val CodegenCacheEntries = 2874
+
   /** A `local[cpus]` session with one shuffle partition per thread, the
     * UTC pin (the NTZ events read asserts it), the legacy nanos read
     * policy (older fixtures shipped `events.ts` as TIMESTAMP(NANOS); see
-    * `Tables.apply`) and no UI. `extra` settings are applied last, so
+    * `Tables.apply`), a generated-class cache sized to the board
+    * ([[CodegenCacheEntries]]; a static setting, so the first session of
+    * the JVM fixes it) and no UI. `extra` settings are applied last, so
     * they override these.
     */
   def session(cpus: Int, extra: Seq[(String, String)] = Nil): SparkSession = {
@@ -27,6 +39,8 @@ object Harness {
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
     extra.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()

@@ -2,20 +2,29 @@
 // Spark's own `package object sql` uses): `ExpressionUtils.column` — the
 // only public-API-free way to wrap a custom Catalyst Expression into a
 // Column in Spark 4 — is `private[sql]`, so this one-object bridge lives in
-// a subpackage of org.apache.spark.sql. Nothing else in the engine leaves
-// the graft namespace.
+// a subpackage of org.apache.spark.sql. It also holds what else needs the
+// internals: the pin (plans, RDDs and bound expressions) and the footer
+// schema read (the session's SQL and Hadoop confs). Nothing else in the
+// engine leaves the graft namespace.
 package org.apache.spark.sql.graftbridge
 
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, classic}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, classic}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression,
-  UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences,
+  BoundReference, Cast, Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Statistics}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.Platform
 
@@ -25,6 +34,25 @@ object SqlBridge {
 
   /** Extract the Catalyst expression from a Column. */
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The Spark schema of the parquet `file`, read from its footer on
+    * the driver, with no job: the schema Spark stored in the footer's
+    * row metadata when present, else the parquet schema converted under
+    * the session's read settings, both as Spark's own inference does
+    * (`ParquetFileFormat.readSchemaFromFooter`), so a type the session
+    * refuses fails with Spark's message. The session's SQL conf and
+    * Hadoop conf are the reason this lives in the bridge.
+    */
+  def parquetSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val state = spark.asInstanceOf[classic.SparkSession].sessionState
+    val conf = state.newHadoopConf()
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+      HadoopReadOptions.builder(conf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(state.conf))
+  }
 
   /** The engine's one lineage cut: [[pinnedSum]] without a probe. */
   def pinned(df: DataFrame): DataFrame = pinnedSum(df, lit(0L))._1
@@ -47,8 +75,12 @@ object SqlBridge {
     * frame's rows come from its executed plan under a SQL execution, as
     * in `Dataset.localCheckpoint`, so under adaptive execution this runs
     * the frame's shuffle-map jobs; one RDD action over a view of the
-    * pages, projected to the probe, then fills the checkpoint and folds
-    * `(count, sum(probe))`: the jobs of an eager `localCheckpoint()`.
+    * pages then fills the checkpoint and folds `(count, sum(probe))`:
+    * the jobs of an eager `localCheckpoint()`. The probe is resolved
+    * against `df` and bound to its output, so the fold reads it from the
+    * page rows with no second planned (and compiled) query: a foldable
+    * probe is evaluated once, a column probe is read as a field, and any
+    * other is interpreted per row.
     *
     * The returned frame reads the pages through a fresh view made after
     * the fill, one `UnsafeRow` per record pointing into its page (no
@@ -71,6 +103,7 @@ object SqlBridge {
       sys.env.getOrElse("GRAFT_RELIABLE_CHECKPOINT", "false"))
     val reliable = flag == "true" || flag == "1"
     val schema = ds.schema
+    val read = reader(ds, probe)
     val qe = ds.queryExecution
     val pages = SQLExecution.withNewExecutionId(qe,
         Some(if (reliable) "checkpoint" else "localCheckpoint")) {
@@ -81,20 +114,38 @@ object SqlBridge {
       pages.persist(StorageLevel.MEMORY_AND_DISK)
       pages.checkpoint()
     } else pages.localCheckpoint()
-    val cut = LogicalRDD.fromDataset(view(pages, schema.length), ds,
-      ds.isStreaming)
-    val (rows, s) = classic.Dataset.ofRows(session, cut)
-      .select(probe.cast("long")).queryExecution.toRdd
-      .aggregate((0L, 0L))(
-        (a, r) => (a._1 + 1L, if (r.isNullAt(0)) a._2 else a._2 + r.getLong(0)),
-        (a, b) => (a._1 + b._1, a._2 + b._2))
-    val width = 8L + cut.output.map(_.dataType.defaultSize.toLong).sum
+    val (rows, s) = view(pages, schema.length).aggregate((0L, 0L))(
+      (a, r) => (a._1 + 1L, a._2 + read(r)),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+    val width = 8L + schema.map(_.dataType.defaultSize.toLong).sum
     val stats = Statistics(
       sizeInBytes = BigInt(math.max(rows, 1L)) * width,
       rowCount = Some(BigInt(rows)))
-    val plan = cut.copy(rdd = view(pages, schema.length))(session,
-      Some(stats), None)
-    (classic.Dataset.ofRows(session, plan), rows, s)
+    val cut = LogicalRDD.fromDataset(view(pages, schema.length), ds,
+      ds.isStreaming)
+    (classic.Dataset.ofRows(session, cut.copy()(session, Some(stats), None)),
+      rows, s)
+  }
+
+  /** `probe` cast to long, resolved against `ds` and bound to its
+    * output, as a reader of one row's value (0 for null): a foldable
+    * probe is evaluated here, once; a long column is read as a field;
+    * any other expression is interpreted.
+    */
+  private def reader(ds: classic.Dataset[Row],
+      probe: Column): InternalRow => Long = {
+    val Project(Seq(Alias(p, _)), child) =
+      ds.select(probe.cast("long")).queryExecution.analyzed: @unchecked
+    val e = BindReferences.bindReference(p, child.output)
+    require(e.deterministic, s"a pin's probe must be deterministic: $probe")
+    e match {
+      case _ if e.foldable =>
+        val v = Option(e.eval()).fold(0L)(_.asInstanceOf[Long])
+        _ => v
+      case Cast(BoundReference(i, LongType, _), LongType, _, _) =>
+        r => if (r.isNullAt(i)) 0L else r.getLong(i)
+      case _ => r => Option(e.eval(r)).fold(0L)(_.asInstanceOf[Long])
+    }
   }
 
   /** The name that marks an RDD of pin pages. */

@@ -976,7 +976,7 @@ object SimQueries {
     // between scanning ~2/K of the corpus and scanning all of it.
     val probedLabels = probes.select(col("c_label").cast("long"))
       .distinct().collect().map(_.getLong(0)).toSeq.sorted
-    val lists = s.read.parquet(ivfIndexPath(s, dir))
+    val lists = Tables.open(s, ivfIndexPath(s, dir))
       .filter(col("label").isin(probedLabels: _*))
       .select(col("vec_id"), col("label").cast("int").as("label"),
         col("embedding"))

@@ -3752,9 +3752,12 @@ object UserGraphQueries {
 
   /** Testable seam for [[graphSccLabels]]: explicit directed (u, v)
     * edge frame -> (id, scc_id, scc_size, complete) per vertex.
+    * `colorRounds` caps each color phase (a spec lowers it to drive the
+    * phase past its cap).
     */
-  private[graft] def sccLabelsOf(dedges: DataFrame): DataFrame = {
-    val (labels, complete) = sccLabelRawOf(dedges)
+  private[graft] def sccLabelsOf(dedges: DataFrame,
+      colorRounds: Int = SccColorRounds): DataFrame = {
+    val (labels, complete) = sccLabelRawOf(dedges, colorRounds)
     val sizes = labels.groupBy(col("scc_id"))
       .agg(count(lit(1)).as("scc_size"))
     labels.join(sizes, Seq("scc_id"), "left")
@@ -3765,10 +3768,13 @@ object UserGraphQueries {
 
   /** The raw (id, scc_id) label frame + completeness flag behind
     * [[sccLabelsOf]] — shared with [[graphSccCondensation]] via the
-    * [[sccLabFrame]] memo.
+    * [[sccLabFrame]] memo. A color phase that stops at `colorRounds`
+    * has not found every min ancestor, so its flags could split an SCC:
+    * that peel's core vertices get a null scc_id, peeling ends there and
+    * `complete` is false.
     */
-  private[graft] def sccLabelRawOf(dedges: DataFrame):
-      (DataFrame, Boolean) = {
+  private[graft] def sccLabelRawOf(dedges: DataFrame,
+      colorRounds: Int = SccColorRounds): (DataFrame, Boolean) = {
     val (e0, nE, _) = pinnedSum(dedges.select(col("u"), col("v")), lit(1L))
     val (allVerts, nV, _) = pinnedSum(e0.select(col("u").as("id"))
       .unionByName(e0.select(col("v").as("id"))).distinct(), lit(1L))
@@ -3793,6 +3799,7 @@ object UserGraphQueries {
     // the active edges, lazy between peels: a peel pins them first
     var active = e0
     var nActive = nE
+    var colored = true
     // one peel per round over the unresolved vertices; done when none
     // is left
     val fix = Fixpoint(allVerts, nV, nV, lit(1L), SccPeels, Fixpoint.Zero) {
@@ -3810,13 +3817,18 @@ object UserGraphQueries {
           lit(0L))
         parts += remVerts.join(coreVerts, Seq("id"), "left_anti")
           .select(col("id"), col("id").as("scc_id"))
+        // (2) color: each core vertex takes the min id among its
+        // ancestors in the active core (directed min-label kernel)
+        lazy val colors = MinLabel(coreVerts,
+          active.select(col("u").as("src"), col("v").as("dst")), colorRounds)
         if (nCore == 0L) coreVerts
-        else {
-          // (2) color: each core vertex takes the min id among its
-          // ancestors in the active core (directed min-label kernel)
-          val color = MinLabel(coreVerts,
-              active.select(col("u").as("src"), col("v").as("dst")),
-              SccColorRounds).frame
+        else if (!colors.converged) {
+          colored = false
+          parts += coreVerts.select(col("id"),
+            lit(null).cast("long").as("scc_id"))
+          coreVerts.limit(0) // nothing left to peel
+        } else {
+          val color = colors.frame
             .select(col("id"), col("label").as("color"))
           // (3) flag: backward reach-to-root on same-color edges
           val sce = pinned(active
@@ -3853,7 +3865,7 @@ object UserGraphQueries {
     val labels =
       if (parts.isEmpty) allVerts.select(col("id"), lit(0L).as("scc_id"))
       else pinned(parts.reduce(_ unionByName _))
-    (labels, fix.converged)
+    (labels, fix.converged && colored)
   }
 
   // The (labels, complete) pair is shared by graph_scc_labels and

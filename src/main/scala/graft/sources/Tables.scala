@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.SqlBridge
 
 /** Parquet table access for the driver-generated star schema
   * (`/root/testdata/sf*`; see TESTDATA.md / FIXTURES.md).
@@ -19,8 +20,8 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Plan-object memoization only (avoids re-running schema inference per
-  // query); no data is persisted here.
+  // Plan-object memoization only (avoids listing the path and reading a
+  // footer again per query); no data is persisted here.
   private val cache =
     graft.util.SessionMemo.dropOnly[(String, String), DataFrame]()
 
@@ -40,7 +41,7 @@ object Tables {
         // session that touches events declares it at builder time
         // (Verify, Bench, TestBase); a session that forgot gets the loud
         // rethrow below instead of a bare plan-time type error.
-        try normalizeEventsTs(spark.read.parquet(s"$dir/$name.parquet"))
+        try normalizeEventsTs(open(spark, s"$dir/$name.parquet"))
         catch {
           // match the NANOS-policy signature specifically — a corrupt
           // file or schema-merge failure must surface as itself, not as
@@ -57,8 +58,43 @@ object Tables {
                 "CONSTRUCTION (see Verify/Bench/TestBase builders); " +
                 "original error: " + e.getMessage, e)
         }
-      } else spark.read.parquet(s"$dir/$name.parquet")
+      } else open(spark, s"$dir/$name.parquet")
     }
+
+  /** The engine's one parquet open: a file, or a directory of part files
+    * (partition directories `k=v` included), read with the schema in the
+    * footer of its first data file and so with no Spark job. Spark's own
+    * inference reads that same footer, but in a job it submits even for
+    * one file. Partition columns still come from the paths. Every table
+    * the engine reads is opened here (a lint keeps it so); DESIGN.md
+    * "Opening a table" states the contract.
+    */
+  def open(spark: SparkSession, path: String): DataFrame = {
+    val schema = SqlBridge.parquetSchema(spark, firstDataFile(spark, path))
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The first data file under `path` in path order, as Spark's file
+    * index lists it: names starting with `_` or `.` (but for `_k=v`
+    * partition directories) and files still being copied are skipped at
+    * every level.
+    */
+  private def firstDataFile(spark: SparkSession,
+      path: String): org.apache.hadoop.fs.FileStatus = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hidden(name: String) = (name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_")
+    def files(s: FileStatus): Seq[FileStatus] =
+      if (!s.isDirectory) Seq(s)
+      else fs.listStatus(s.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(files)
+    // a missing path throws FileNotFoundException naming it
+    files(fs.getFileStatus(root)).sortBy(_.getPath.toString).headOption
+      .getOrElse(throw new IllegalArgumentException(
+        s"no parquet data file under $path"))
+  }
 
   /** Align an events frame's `ts` to the session-UTC `TimestampType` every
     * downstream operator and oracle expects, whatever physical encoding the

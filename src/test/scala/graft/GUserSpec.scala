@@ -948,6 +948,24 @@ class GUserSpec extends GraftSuite {
       (8L, 8L, 1L, true), (9L, 9L, 1L, true)))
   }
 
+  test("graph_scc_labels: a color phase stopped at its cap leaves the " +
+    "core unlabeled and complete = false") {
+    import spark.implicits._
+    import graft.queries.UserGraphQueries
+    // the 8-cycle 1 -> 2 -> ... -> 8 -> 1 is one SCC whose min-ancestor
+    // labels need more than 2 fused rounds; the tail 9 -> 1 trims away
+    val e = ((1L to 8L).map(i => (i, i % 8 + 1)) :+ ((9L, 1L)))
+      .toDF("u", "v").repartition(3)
+    def run(colorRounds: Int) = UserGraphQueries.sccLabelsOf(e, colorRounds)
+      .collect().map(r => (r.getLong(0),
+        Option(r.get(1)).map(_.asInstanceOf[Long]), r.getBoolean(3)))
+      .toSeq
+    assert(run(2) === (1L to 8L).map(i => (i, None, false)) :+
+      ((9L, Some(9L), false)))
+    assert(run(10) === (1L to 8L).map(i => (i, Some(1L), true)) :+
+      ((9L, Some(9L), true)))
+  }
+
   test("graph_scc_layered: the shifted-copy derivation plus one-way " +
     "bridges forces the layer-2 SCC into peel 2 (hand graph)") {
     import spark.implicits._

@@ -123,6 +123,30 @@ class SqlBridgeSpec extends GraftSuite {
     assert(pagesOf(p).nonEmpty && p.collect().isEmpty)
   }
 
+  /** `pinnedSum`'s row count and probe sum equal `count()` and a `sum`
+    * aggregate of the probe (0 for no non-null value) over `df`.
+    */
+  private def measures(df: org.apache.spark.sql.DataFrame,
+      probe: org.apache.spark.sql.Column): Unit = {
+    val expected = (df.count(),
+      df.agg(coalesce(sum(probe.cast("long")), lit(0L))).head().getLong(0))
+    val (p, n, s) = SqlBridge.pinnedSum(df, probe)
+    try assert((n, s) === expected, s"probe $probe")
+    finally SqlBridge.release(p)
+  }
+
+  test("pinnedSum's rows and sum equal count() and a sum aggregate: " +
+    "literal, nullable long, int and boolean probes, and a 0-row frame") {
+    val df = spark.range(0L, 50L, 1L, 3).selectExpr("id",
+      "IF(id % 4 = 0, NULL, id * 3) AS nl",
+      "CAST(id % 5 AS INT) AS i")
+    assert(df.schema("nl").nullable)
+    for (frame <- Seq(df, df.filter(lit(false))); probe <- Seq(lit(7L),
+        lit(null).cast("long"), col("nl"), col("i"), col("i") * 2 - 3,
+        col("nl") > 40, col("id") % 2 === 0))
+      measures(frame, probe)
+  }
+
   test("a chain of pins keeps only the last one cached once GC ran") {
     import spark.implicits._
     var state = SqlBridge.pinned((1L to 10L).toDF("k"))
