@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.algorithms.GraphAlgorithms
 import graft.sources.{GTrade, GraphSource}
-import graft.util.Det
+import graft.util.{Det, Propagate}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,20 +65,11 @@ object IterQueries {
     GraphAlgorithms.ssspBounded(s, gxUndirected(s, dir, GTrade), source = 0L,
       maxIterations = SsspIters).orderBy(col("id"))
 
-  private val ssspSql: String = {
-    val levels = (1 to SsspIters).map { k =>
-      s"""d$k AS MATERIALIZED (SELECT id, MIN(dist) AS dist FROM (
-         |  SELECT id, dist FROM d${k - 1}
-         |  UNION ALL
-         |  SELECT e.dst AS id, d.dist + e.value AS dist
-         |  FROM d${k - 1} d JOIN uedges e ON e.src = d.id) GROUP BY id)"""
-        .stripMargin
-    }.mkString(",\n")
+  private val ssspSql: String =
     s"""${GTrade.SqlPrefixUndirected},
-       |d0 AS MATERIALIZED (SELECT CAST(0 AS BIGINT) AS id, CAST(0.0 AS DOUBLE) AS dist),
-       |$levels
-       |SELECT id, dist FROM d$SsspIters ORDER BY id""".stripMargin
-  }
+       |d0 AS MATERIALIZED (SELECT CAST(0 AS BIGINT) AS id, CAST(0.0 AS DOUBLE) AS v),
+       |${Propagate.sql("d", "uedges", "s.v + e.value", "MIN", SsspIters)}
+       |SELECT id, v AS dist FROM d$SsspIters ORDER BY id""".stripMargin
 
   // ---- I3 connected components (bounded, undirected) ----
 
@@ -86,32 +77,23 @@ object IterQueries {
     ccResult(s, dir).orderBy(col("id"))
 
   /** Unrolled bounded-CC CTE chain over any (vertices, undirected-edges)
-    * CTE pair — one min-propagation level per superstep, shared by the
-    * G_trade, G_user, and string-keyed CC oracles (the chain is purely
-    * structural in the id type: MIN works the same over BIGINT and
-    * VARCHAR ids).
+    * CTE pair — one min-propagation level per superstep, `c1` … `c<iters>`
+    * of (id, v = the component label), shared by the G_trade, G_user, and
+    * string-keyed CC oracles (the chain is purely structural in the id
+    * type: MIN works the same over BIGINT and VARCHAR ids).
     */
   private[queries] def ccUnrolled(prefixUndirected: String, iters: Int,
                                   edges: String = "uedges",
-                                  verts: String = "vertices"): String = {
-    val levels = (1 to iters).map { k =>
-      s"""c$k AS MATERIALIZED (SELECT id, MIN(comp) AS comp FROM (
-         |  SELECT id, comp FROM c${k - 1}
-         |  UNION ALL
-         |  SELECT e.dst AS id, c.comp AS comp
-         |  FROM c${k - 1} c JOIN $edges e ON e.src = c.id) GROUP BY id)"""
-        .stripMargin
-    }.mkString(",\n")
+                                  verts: String = "vertices"): String =
     s"""$prefixUndirected,
-       |c0 AS MATERIALIZED (SELECT id, id AS comp FROM $verts),
-       |$levels""".stripMargin
-  }
+       |c0 AS MATERIALIZED (SELECT id, id AS v FROM $verts),
+       |${Propagate.sql("c", edges, "s.v", "MIN", iters)}""".stripMargin
 
   private def ccLevelsSql: String =
     ccUnrolled(GTrade.SqlPrefixUndirected, CcIters)
 
   private val ccSql =
-    s"$ccLevelsSql\nSELECT id, comp FROM c$CcIters ORDER BY id"
+    s"$ccLevelsSql\nSELECT id, v AS comp FROM c$CcIters ORDER BY id"
 
   /** X108 — graph_cc_sizes: the component-size distribution over the
     * converged CC labels — the standard first question asked OF a
@@ -140,7 +122,7 @@ object IterQueries {
 
   private val graphCcSizesSql =
     s"""$ccLevelsSql,
-       |per AS (SELECT comp, COUNT(*) AS sz FROM c$CcIters GROUP BY comp),
+       |per AS (SELECT v, COUNT(*) AS sz FROM c$CcIters GROUP BY v),
        |hist AS (SELECT sz, COUNT(*) AS n_components FROM per GROUP BY sz),
        |tot AS (SELECT COUNT(*) AS n_vertices FROM c$CcIters)
        |SELECT sz AS component_size, n_components,
@@ -412,8 +394,8 @@ object IterQueries {
 
   private val weaklyConnectedSql =
     s"""$ccLevelsSql
-       |SELECT COUNT(DISTINCT comp) AS n_components,
-       |       CAST(COUNT(DISTINCT comp) = 1 AS INT) AS is_connected
+       |SELECT COUNT(DISTINCT v) AS n_components,
+       |       CAST(COUNT(DISTINCT v) = 1 AS INT) AS is_connected
        |FROM c$CcIters""".stripMargin
 
   val qs: Seq[Q] = Seq(

@@ -3,7 +3,7 @@ package graft.queries
 import graft.functions.TextFns
 import graft.sources.Tables
 import graft.streaming.Streams
-import graft.util.{Det, MinLabel}
+import graft.util.{Det, Fixpoint, MinLabel}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -208,7 +208,7 @@ object StreamQueries {
        |  SELECT u AS id, u AS label FROM (SELECT DISTINCT u FROM zund)),
        |${MinLabel.sql("cl", "(SELECT u AS src, v AS dst FROM zund)",
              CcOrcRounds)}
-       |SELECT id, label, ${MinLabel.convergedSql("cl", CcOrcRounds)}
+       |SELECT id, label, ${Fixpoint.convergedSql("cl", CcOrcRounds)}
        |  AS converged
        |FROM cl$CcOrcRounds ORDER BY id""".stripMargin
 

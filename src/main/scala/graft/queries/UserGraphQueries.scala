@@ -3,7 +3,7 @@ package graft.queries
 import graft.EdgeDirection
 import graft.algorithms.GraphAlgorithms
 import graft.sources.{GUser, IdEncoder}
-import graft.util.{Det, Fixpoint, MinLabel}
+import graft.util.{Det, Fixpoint, MinLabel, Propagate}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -92,7 +92,7 @@ object UserGraphQueries {
 
   private val ccUserSql =
     s"""${IterQueries.ccUnrolled(SqlPrefixUndirected, CcIters)}
-       |SELECT id, comp FROM c$CcIters ORDER BY id""".stripMargin
+       |SELECT id, v AS comp FROM c$CcIters ORDER BY id""".stripMargin
 
   /** pagerank_user — damped weighted PageRank on DIRECTED G_user: rank
     * mass recirculates through cycles and self-loops (a self-loop feeds a
@@ -178,7 +178,7 @@ object UserGraphQueries {
     val chain = IterQueries.ccUnrolled(stringPrefix, CcIters,
       edges = "su", verts = "sv")
     s"""$chain
-       |SELECT id AS user_key, comp AS comp_key FROM c$CcIters
+       |SELECT id AS user_key, v AS comp_key FROM c$CcIters
        |ORDER BY user_key""".stripMargin
   }
 
@@ -3561,8 +3561,8 @@ object UserGraphQueries {
 
   /** X116 — graph_scc_pivot: the FW-BW DECOMPOSITION STEP for strongly
     * connected components — the last of the structurally-refused
-    * operators (BASELINE r6: every natural fixture graph is one giant
-    * SCC or all singletons at every scale), landed on the DIRECTED Zipf
+    * operators (every natural fixture graph is one giant SCC or all
+    * singletons at every scale), landed on the DIRECTED Zipf
     * tier, where the step is non-trivial everywhere: from the
     * smallest-id pivot, SCC(pivot) = F ∩ B and the vertex set splits
     * into the four FW-BW classes — scc / fwd-only / bwd-only / rest
@@ -3570,15 +3570,15 @@ object UserGraphQueries {
     * populated at all four scales — measured before landing). This is
     * the recursion step of the full FW-BW algorithm (each of the three
     * non-SCC classes recurses independently), pinned as ONE audited
-    * iteration — the kmeans_step/louvain_move discipline; the full
-    * recursion is a driver loop like I2–I5.
+    * iteration; [[graphSccLabels]] runs the full algorithm.
     *
-    * Scale: two frontier BFS fixpoints (forward on edges, backward on
-    * reversed edges) — per round one keyed \|E\| join + distinct union,
-    * pinned, early-stop (measured depths 4–11, bound
-    * [[SccRounds]] with the pinned-TRUE `converged` guard) — then two
-    * membership joins and a 4-row class roll-up. The oracle unrolls the
-    * same rounds as CTEs.
+    * Scale: two reach fixpoints from the pivot (forward on edges,
+    * backward on reversed edges), each a [[Propagate]] loop that passes
+    * the sender's value (0) on — per round one keyed \|E\| join and a min
+    * per id, pinned, early-stop within [[SccRounds]] (measured depths
+    * 4–11) — then two membership joins and a 4-row class roll-up. The oracle
+    * unrolls the same rounds with [[Propagate.sql]], and both sides
+    * compute `converged`.
     */
   private val SccRounds = 16
 
@@ -3608,33 +3608,21 @@ object UserGraphQueries {
     val e = pinned(dedges.select(col("u"), col("v")))
     val (verts, nV, _) = pinnedSum(e.select(col("u").as("id"))
       .unionByName(e.select(col("v").as("id"))).distinct(), lit(1L))
-    // Empty-graph guard (ADVICE r10): no vertices → typed empty output
-    // instead of an NPE extracting the pivot.
+    // no vertices → typed empty output (there is no pivot to extract)
     if (nV == 0L)
       return verts.select(lit("").as("cls"),
         lit(0L).as("n_vertices"), lit(0L).as("pivot"),
         lit(false).as("converged"))
     val pivot = verts.agg(min(col("id"))).first().getLong(0)
-
-    // frontier BFS to fixpoint over `adj` (src, dst)
-    def reach(adj: DataFrame): Fixpoint.Result = {
-      val seen0 = pinned(verts.sparkSession.createDataFrame(
-        java.util.Arrays.asList(org.apache.spark.sql.Row(pivot)),
-        new org.apache.spark.sql.types.StructType()
-          .add("id", org.apache.spark.sql.types.LongType, false)))
-      Fixpoint(seen0, 1L, 1L, lit(1L), SccRounds) { (seen, _) =>
-        seen.unionByName(
-          adj.join(seen.withColumnRenamed("id", "src"), Seq("src"))
-            .select(col("dst").as("id")))
-          .distinct()
-      }
-    }
-    // The forward and backward fixpoints are INDEPENDENT sequential
-    // loops over the same pinned edge frame — submit both from driver
-    // futures so their per-round jobs interleave (the r17
-    // retrieval_eval_hybrid overlap: concurrent job submission is
-    // cluster-valid, not a local-mode trick). Each loop's rounds stay
-    // ordered inside its own thread; results are bit-identical.
+    val seed = verts.sparkSession.range(1)
+      .select(lit(pivot).as("id"), lit(0).as("r"))
+    // the reach set of the pivot over `adj` (src, dst): each reached
+    // vertex passes its value on
+    def reach(adj: DataFrame): Fixpoint.Result =
+      Propagate(seed, 1L, adj, col("r"), min, SccRounds)
+    // The forward and backward reaches are independent loops over the
+    // same pinned edges: submitting both from driver futures interleaves
+    // their jobs; each loop's rounds stay ordered inside its own thread.
     import scala.concurrent.Await
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
@@ -3660,28 +3648,19 @@ object UserGraphQueries {
   }
 
   private val graphSccPivotSql = {
-    def bfs(name: String, adj: String) =
-      (1 to SccRounds).map { r =>
-        val prev = s"$name${r - 1}"
-        s"""$name$r AS MATERIALIZED (
-           |  SELECT DISTINCT id FROM (
-           |    SELECT id FROM $prev
-           |    UNION ALL
-           |    SELECT e.dst AS id FROM $adj e JOIN $prev p
-           |      ON e.src = p.id))""".stripMargin
-      }.mkString(",\n")
+    def reach(p: String, adj: String) =
+      s"""${p}0 AS (SELECT pid AS id, 0 AS v FROM sccp),
+         |${Propagate.sql(p, adj, "s.v", "MIN", SccRounds)}""".stripMargin
     s"""${ZipfSql("zdir")},
        |sccv AS MATERIALIZED (
        |  SELECT u AS id FROM zdir UNION SELECT v FROM zdir),
        |sccp AS (SELECT MIN(id) AS pid FROM sccv),
-       |fadj AS (SELECT u AS src, v AS dst FROM zdir),
-       |badj AS (SELECT v AS src, u AS dst FROM zdir),
-       |f0 AS (SELECT pid AS id FROM sccp),
-       |${bfs("f", "fadj")},
-       |b0 AS (SELECT pid AS id FROM sccp),
-       |${bfs("b", "badj")}
+       |${reach("f", "(SELECT u AS src, v AS dst FROM zdir)")},
+       |${reach("b", "(SELECT v AS src, u AS dst FROM zdir)")}
        |SELECT cls, COUNT(*) AS n_vertices,
-       |  (SELECT pid FROM sccp) AS pivot, TRUE AS converged
+       |  (SELECT pid FROM sccp) AS pivot,
+       |  ${Fixpoint.convergedSql("f", SccRounds)}
+       |    AND ${Fixpoint.convergedSql("b", SccRounds)} AS converged
        |FROM (
        |  SELECT CASE
        |    WHEN f.id IS NOT NULL AND b.id IS NOT NULL THEN 'scc'
@@ -3695,9 +3674,9 @@ object UserGraphQueries {
   }
 
   /** X122 — graph_scc_labels: the COMPOSED full strongly-connected-
-    * components algorithm (VERDICT r10 gap #1: the reference ships
-    * finished algorithms — `[GH] library/.../ConnectedComponents` — not
-    * steps; X116 pinned the FW-BW step, this key finishes it). Runs
+    * components algorithm (the reference ships finished algorithms —
+    * `[GH] library/.../ConnectedComponents` — not steps; X116 pins the
+    * FW-BW step, this key finishes it). Runs
     * Trim + FW-BW (McLendon et al., "Finding strongly connected
     * components in distributed graphs", JPDC 2005 — the standard
     * distributed SCC shape) on the directed Zipf tier and emits the
@@ -3718,22 +3697,19 @@ object UserGraphQueries {
     * Every phase is a MONOTONE fixpoint, so the result is
     * schedule-independent: Spark iterates with convergence checks
     * (bounded by [[SccTrimRounds]]/[[SccColorRounds]]/[[SccFlagRounds]]
-    * /[[SccPeels]]); the oracle unrolls pinned round counts ≥ the
-    * measured depths. Simulated in Python against iterative Tarjan
-    * BEFORE any Spark code (the r10 derived-tier discipline): exact
-    * label match at sf0.001/0.01/0.1/sf1; ONE peel suffices everywhere
-    * (trim leaves a single giant-SCC core: depths trim 4/4/9/4, color
-    * 4/3/6/4, flag 3/4/9/4); the oracle pins one peel and the
-    * `complete` audit column (TRUE ⇔ no vertex left unresolved) fails
-    * the gate loudly if a future fixture ever needs a second peel.
+    * /[[SccPeels]]), and the oracle unrolls one peel of the same caps
+    * ([[sccPeelCtes]]). Labels equal Tarjan's, each SCC named by its
+    * min member (`GUserSpec`'s property case). ONE peel suffices at
+    * every fixture scale (trim leaves a single giant-SCC core: depths
+    * trim 4/4/9/4, color 4/3/6/4, flag 3/4/9/4 at sf0.001/0.01/0.1/sf1),
+    * so the oracle's `complete` (no vertex left after its peel) fails the
+    * gate loudly if a future fixture ever needs a second peel.
     *
     * Scale: trim is two semijoins per round, color one keyed |E| join +
     * map-side-combinable min plus a |V| self-join (the doubling — what
-    * keeps rounds logarithmic on long chains), flag a frontier semijoin
-    * on the PRE-FILTERED same-color edge set; every round is
-    * pinned (the I2–I5 iterate discipline, one count per
-    * round of driver state). All arithmetic is integer min/EXISTS —
-    * no FP anywhere.
+    * keeps rounds logarithmic on long chains), flag a reach on the
+    * PRE-FILTERED same-color edge set; every round is pinned. All
+    * arithmetic is integer min/EXISTS — no FP anywhere.
     */
   private val SccTrimRounds  = 18
   private val SccColorRounds = 10
@@ -3768,10 +3744,11 @@ object UserGraphQueries {
 
   /** The raw (id, scc_id) label frame + completeness flag behind
     * [[sccLabelsOf]] — shared with [[graphSccCondensation]] via the
-    * [[sccLabFrame]] memo. A color phase that stops at `colorRounds`
-    * has not found every min ancestor, so its flags could split an SCC:
-    * that peel's core vertices get a null scc_id, peeling ends there and
-    * `complete` is false.
+    * [[sccLabFrame]] memo. A color phase that stops at `colorRounds` has
+    * not found every min ancestor, and a flag phase that stops at
+    * [[SccFlagRounds]] has not found every member of its root's SCC, so
+    * either would split an SCC: that peel's core vertices get a null
+    * scc_id, peeling ends there and `complete` is false.
     */
   private[graft] def sccLabelRawOf(dedges: DataFrame,
       colorRounds: Int = SccColorRounds): (DataFrame, Boolean) = {
@@ -3799,7 +3776,7 @@ object UserGraphQueries {
     // the active edges, lazy between peels: a peel pins them first
     var active = e0
     var nActive = nE
-    var colored = true
+    var resolved = true
     // one peel per round over the unresolved vertices; done when none
     // is left
     val fix = Fixpoint(allVerts, nV, nV, lit(1L), SccPeels, Fixpoint.Zero) {
@@ -3821,33 +3798,30 @@ object UserGraphQueries {
         // ancestors in the active core (directed min-label kernel)
         lazy val colors = MinLabel(coreVerts,
           active.select(col("u").as("src"), col("v").as("dst")), colorRounds)
-        if (nCore == 0L) coreVerts
-        else if (!colors.converged) {
-          colored = false
-          parts += coreVerts.select(col("id"),
-            lit(null).cast("long").as("scc_id"))
-          coreVerts.limit(0) // nothing left to peel
-        } else {
-          val color = colors.frame
-            .select(col("id"), col("label").as("color"))
-          // (3) flag: backward reach-to-root on same-color edges
-          val sce = pinned(active
+        lazy val color = colors.frame
+          .select(col("id"), col("label").as("color"))
+        // (3) flag: each color root reaches back along same-color edges
+        // to the members of its SCC; the roots are a lazy seed, as every
+        // color class has one
+        lazy val flags = Propagate(
+          color.filter(col("id") === col("color"))
+            .select(col("id"), lit(0).as("r")), Fixpoint.Unprobed,
+          pinned(active
             .join(color.select(col("id").as("u"), col("color").as("ucol")),
               Seq("u"))
             .join(color.select(col("id").as("v"), col("color").as("vcol")),
               Seq("v"))
             .filter(col("ucol") === col("vcol"))
-            .select(col("u"), col("v")))
-          def flagStep(fl: DataFrame): DataFrame = fl.unionByName(
-              sce.join(fl.select(col("id").as("v")), Seq("v"))
-                .select(col("u").as("id")))
-            .distinct()
-          val (roots, nRoots, _) = pinnedSum(
-            color.filter(col("id") === col("color")).select(col("id")),
-            lit(0L))
-          val flagged = Fixpoint(roots, nRoots, nRoots, lit(1L),
-            SccFlagRounds, perStep = 2)((fl, _) => flagStep(flagStep(fl)))
-            .frame
+            .select(col("v").as("src"), col("u").as("dst"))),
+          col("r"), min, SccFlagRounds, perStep = 2)
+        if (nCore == 0L) coreVerts
+        else if (!colors.converged || !flags.converged) {
+          resolved = false
+          parts += coreVerts.select(col("id"),
+            lit(null).cast("long").as("scc_id"))
+          coreVerts.limit(0) // nothing left to peel
+        } else {
+          val flagged = flags.frame.select(col("id"))
           parts += color.join(flagged, Seq("id"), "left_semi")
             .select(col("id"), col("color").as("scc_id"))
           active = active
@@ -3865,7 +3839,7 @@ object UserGraphQueries {
     val labels =
       if (parts.isEmpty) allVerts.select(col("id"), lit(0L).as("scc_id"))
       else pinned(parts.reduce(_ unionByName _))
-    (labels, fix.converged && colored)
+    (labels, fix.converged && resolved)
   }
 
   // The (labels, complete) pair is shared by graph_scc_labels and
@@ -3883,59 +3857,27 @@ object UserGraphQueries {
     sccLabFrame(s, dir)._1.count(); ()
   }
 
-  /** Shared Trim+FW-BW CTE chain ending in `slab` (id → scc_id) — ONE
-    * unrolling used by BOTH the graph_scc_labels and
-    * graph_scc_condensation oracles (the CTE-chain discipline).
-    * `zdir` (the distinct directed edge set) stays visible for the
-    * condensation's edge join.
+  /** Shared Trim+FW-BW CTE chain ending in `slab` (id → scc_id): one
+    * [[sccPeelCtes]] peel over all vertices, used by the
+    * graph_scc_labels, graph_scc_condensation and graph_topo_layers
+    * oracles. `zdir` (the distinct directed edge set) stays visible for
+    * the condensation's edge join, and `slrem` holds the vertices the
+    * peel left unresolved.
     */
-  private val sccLabelCtes = {
-    val trims = (1 to SccTrimRounds).map { r =>
-      val prev = if (r == 1) "zdir" else s"str${r - 1}"
-      s"""str$r AS MATERIALIZED (
-         |  SELECT e.u, e.v FROM $prev e
-         |  WHERE EXISTS (SELECT 1 FROM $prev x WHERE x.v = e.u)
-         |    AND EXISTS (SELECT 1 FROM $prev y WHERE y.u = e.v))"""
-        .stripMargin
-    }.mkString(",\n")
-    val flags = (1 to SccFlagRounds).map { r =>
-      val prev = s"sfl${r - 1}"
-      s"""sfl$r AS MATERIALIZED (
-         |  SELECT DISTINCT id FROM (
-         |    SELECT id FROM $prev
-         |    UNION ALL
-         |    SELECT e.u AS id FROM ssce e JOIN $prev p ON p.id = e.v))"""
-        .stripMargin
-    }.mkString(",\n")
+  private val sccLabelCtes =
     s"""${ZipfSql("zdir")},
        |slv AS MATERIALIZED (
        |  SELECT u AS id FROM zdir UNION SELECT v FROM zdir),
-       |$trims,
-       |score AS MATERIALIZED (SELECT u, v FROM str$SccTrimRounds),
-       |scv AS MATERIALIZED (
-       |  SELECT u AS id FROM score UNION SELECT v FROM score),
-       |scl0 AS (SELECT id, id AS label FROM scv),
-       |${MinLabel.sql("scl", "(SELECT u AS src, v AS dst FROM score)",
-             SccColorRounds)},
-       |ssce AS MATERIALIZED (
-       |  SELECT e.u, e.v FROM score e
-       |  JOIN scl$SccColorRounds a ON a.id = e.u
-       |  JOIN scl$SccColorRounds b ON b.id = e.v AND b.label = a.label),
-       |sfl0 AS (SELECT id FROM scl$SccColorRounds WHERE id = label),
-       |$flags,
+       |${sccPeelCtes("sl", "zdir", "slv")},
        |slab AS MATERIALIZED (
-       |  SELECT s.id, s.id AS scc_id FROM slv s
-       |  WHERE NOT EXISTS (SELECT 1 FROM scv c WHERE c.id = s.id)
-       |  UNION ALL
-       |  SELECT c.id, c.label AS scc_id FROM scl$SccColorRounds c
-       |  JOIN sfl$SccFlagRounds f ON f.id = c.id)""".stripMargin
-  }
+       |  SELECT id, scc_id FROM slsng
+       |  UNION ALL SELECT id, scc_id FROM slres)""".stripMargin
 
   private val graphSccLabelsSql =
     s"""$sccLabelCtes
        |SELECT id, scc_id,
        |  COUNT(*) OVER (PARTITION BY scc_id) AS scc_size,
-       |  TRUE AS complete
+       |  (SELECT COUNT(*) FROM slrem) = 0 AS complete
        |FROM slab ORDER BY id""".stripMargin
 
   // ── X150: graph_scc_layered — the SCC MULTI-PEEL path at gate scale.
@@ -3972,54 +3914,38 @@ object UserGraphQueries {
   }
 
   /** X150 — graph_scc_layered: X122's EXACT Trim+FW-BW engine run on the
-    * layered tier, where the second peel genuinely executes — simulated
-    * engine-exactly in tools/sim_scc_layered.py BEFORE this code (the
-    * evidence-first rule): 2 peels at ALL FOUR SFs, labels == iterative
-    * Tarjan everywhere, twin giant SCCs (835/835 at sf0.01,
-    * 5101/5101 at sf0.1, 41488/41488 at sf1 — the layer-2 core labeled
-    * OFF+min), phase depths ≤ trim 10 / color 6 / flag 9 single steps
-    * per peel (inside the engine's existing caps; the oracle unrolls
-    * 12/10/12 per peel). The oracle's `complete` column is the REAL
-    * leftover check ((count of peel-2 unresolved) = 0), not a literal.
-    * No new algorithm code: the key IS [[sccLabelsOf]] over
-    * [[layeredDirectedOf]] — what it adds is gate-scale coverage of the
-    * multi-peel driver loop.
+    * layered tier, where the second peel genuinely executes: 2 peels at
+    * all four SFs, twin giant SCCs (835/835 at sf0.01, 5101/5101 at
+    * sf0.1, 41488/41488 at sf1 — the layer-2 core labeled OFF+min), phase
+    * depths ≤ trim 10 / color 6 / flag 9 single steps per peel (inside
+    * the engine's caps, which the oracle unrolls per peel). The oracle's
+    * `complete` column is the REAL leftover check ((count of peel-2
+    * unresolved) = 0), not a literal. No new algorithm code: the key IS
+    * [[sccLabelsOf]] over [[layeredDirectedOf]] — what it adds is
+    * gate-scale coverage of the multi-peel driver loop.
     */
   private def graphSccLayered(s: SparkSession, dir: String): DataFrame =
     sccLabelsOf(layeredDirectedOf(zipfDirectedFrame(s, dir)))
 
-  /** Oracle unroll caps per peel for trim and flag (measured single-step
-    * depths ≤ 10/9 across the four SFs; margin on top); the color rounds
-    * are [[SccColorRounds]], as in the engine.
-    */
-  private val L2Trim = 12
-  private val L2Flag = 12
-
-  /** One peel's oracle chain with prefix `p`: trim fixpoint, the
-    * min-label color rounds, backward flag — mirrors [[sccLabelCtes]]'s
-    * structure but parameterized so two peels can stack.
+  /** One peel's oracle chain with prefix `p` over the edges `edgesCte`
+    * (u, v) and the unresolved vertices `remCte` (id): the trim fixpoint,
+    * the min-label color rounds and the backward flag reach, each
+    * unrolled to the engine's cap. It ends in `<p>sng` (trimmed
+    * singletons) and `<p>res` (flagged SCC members), both (id, scc_id),
+    * and `<p>rem` (the core vertices left for the next peel).
     */
   private def sccPeelCtes(p: String, edgesCte: String,
       remCte: String): String = {
-    val trims = (1 to L2Trim).map { r =>
+    val trims = (1 to SccTrimRounds).map { r =>
       s"""${p}t$r AS MATERIALIZED (
          |  SELECT e.u, e.v FROM ${p}t${r - 1} e
          |  WHERE EXISTS (SELECT 1 FROM ${p}t${r - 1} x WHERE x.v = e.u)
          |    AND EXISTS (SELECT 1 FROM ${p}t${r - 1} y WHERE y.u = e.v))"""
         .stripMargin
     }.mkString(",\n")
-    val flags = (1 to L2Flag).map { r =>
-      val prev = s"${p}f${r - 1}"
-      s"""${p}f$r AS MATERIALIZED (
-         |  SELECT DISTINCT id FROM (
-         |    SELECT id FROM $prev
-         |    UNION ALL
-         |    SELECT e.u AS id FROM ${p}sce e JOIN $prev q ON q.id = e.v))"""
-        .stripMargin
-    }.mkString(",\n")
     s"""${p}t0 AS (SELECT u, v FROM $edgesCte),
        |$trims,
-       |${p}e AS MATERIALIZED (SELECT u, v FROM ${p}t$L2Trim),
+       |${p}e AS MATERIALIZED (SELECT u, v FROM ${p}t$SccTrimRounds),
        |${p}cv AS MATERIALIZED (
        |  SELECT u AS id FROM ${p}e UNION SELECT v FROM ${p}e),
        |${p}sng AS (
@@ -4029,14 +3955,14 @@ object UserGraphQueries {
        |${MinLabel.sql(s"${p}c", s"(SELECT u AS src, v AS dst FROM ${p}e)",
              SccColorRounds)},
        |${p}sce AS MATERIALIZED (
-       |  SELECT e.u, e.v FROM ${p}e e
+       |  SELECT e.v AS src, e.u AS dst FROM ${p}e e
        |  JOIN ${p}c$SccColorRounds a ON a.id = e.u
        |  JOIN ${p}c$SccColorRounds b ON b.id = e.v AND b.label = a.label),
-       |${p}f0 AS (SELECT id FROM ${p}c$SccColorRounds WHERE id = label),
-       |$flags,
+       |${p}f0 AS (SELECT id, 0 AS v FROM ${p}c$SccColorRounds WHERE id = label),
+       |${Propagate.sql(s"${p}f", s"${p}sce", "s.v", "MIN", SccFlagRounds)},
        |${p}res AS MATERIALIZED (
        |  SELECT c.id, c.label AS scc_id FROM ${p}c$SccColorRounds c
-       |  JOIN ${p}f$L2Flag f ON f.id = c.id),
+       |  JOIN ${p}f$SccFlagRounds f ON f.id = c.id),
        |${p}rem AS MATERIALIZED (
        |  SELECT c.id FROM ${p}cv c
        |  WHERE NOT EXISTS (SELECT 1 FROM ${p}res r WHERE r.id = c.id))"""
@@ -4132,15 +4058,15 @@ object UserGraphQueries {
     * fully isolated SCCs, which the edge-only condensation output
     * doesn't carry — nodes come from the LABEL frame, not the DAG);
     * otherwise 1 + max over predecessors. A monotone integer max-prop
-    * fixpoint (the X122 argument: Spark iterates with convergence
-    * sums bounded by [[TopoRounds]], the oracle unrolls the same —
-    * measured depths (max layer) 5/7/17 at sf0.001/0.01/0.1 and 7/2 at
-    * sf1/10; the loop stops one round past the depth, when the layers
-    * are unchanged, so sf0.1 converges on round 18 and the cap is 2×
-    * that). `converged` is computed on both sides — the oracle's is
-    * "no layer differs between its last two rounds", the driver's
-    * unchanged rule at the cap — and doubles as an acyclicity audit: a
-    * cycle (= wrong labels) can never reach the fixpoint.
+    * fixpoint, a [[Propagate]] loop (message layer + 1, max) bounded by
+    * [[TopoRounds]] that the oracle unrolls with [[Propagate.sql]].
+    * Measured depths (max layer) are 5/7/17 at sf0.001/0.01/0.1 and 7/2
+    * at sf1/10; the loop stops one round past the depth, when no layer
+    * moved, so sf0.1 converges on round 18 and the cap is 2× that.
+    * `converged` is computed on both sides — the oracle's is
+    * [[Fixpoint.convergedSql]] over its last two rounds — and doubles as
+    * an acyclicity audit: a cycle (= wrong labels) can never reach the
+    * fixpoint.
     *
     * Rides the `_build:scclab` memo + the memoized edge frame; per
     * round one keyed |DAG| join + a combinable max — |SCC|-bounded.
@@ -4162,58 +4088,37 @@ object UserGraphQueries {
     val (sizes, nScc, _) = pinnedSum(labels.groupBy(col("scc_id"))
       .agg(count(lit(1)).as("n_members")), lit(1L))
     val dag = pinned(condense(dedges, labels)
-      .select(col("src_scc"), col("dst_scc")))
+      .select(col("src_scc").as("src"), col("dst_scc").as("dst")))
     // monotone non-decreasing integer layers, all 0 at the start (one
     // row per pinned `sizes` row); no SCC → no round
-    val fix = Fixpoint(sizes.select(col("scc_id"), lit(0L).as("layer")),
-        nScc, 0L, col("layer"), TopoRounds) { (layer, _) =>
-      val cand = dag
-        .join(layer.select(col("scc_id").as("src_scc"),
-          col("layer").as("pl")), Seq("src_scc"))
-        .groupBy(col("dst_scc").as("scc_id"))
-        .agg((max(col("pl")) + 1L).as("cl"))
-      layer.join(cand, Seq("scc_id"), "left")
-        .select(col("scc_id"),
-          greatest(col("layer"), coalesce(col("cl"), col("layer")))
-            .as("layer"))
-    }
-    fix.frame.join(sizes, Seq("scc_id"))
+    val fix = Propagate(
+      sizes.select(col("scc_id").as("id"), lit(0L).as("layer")), nScc,
+      dag, col("layer") + 1L, max, TopoRounds)
+    fix.frame.select(col("id").as("scc_id"), col("layer"))
+      .join(sizes, Seq("scc_id"))
       .select(col("scc_id"), col("layer"), col("n_members"),
         lit(fix.converged).as("converged"))
       .orderBy(col("scc_id"))
   }
 
-  private val graphTopoLayersSql = {
-    val rounds = (1 to TopoRounds).map { r =>
-      val prev = s"tp${r - 1}"
-      s"""tp$r AS MATERIALIZED (
-         |  SELECT t.scc_id,
-         |    GREATEST(t.layer, COALESCE(m.cl, t.layer)) AS layer
-         |  FROM $prev t LEFT JOIN (
-         |    SELECT e.v AS scc_id, MAX(p.layer) + 1 AS cl
-         |    FROM tpe e JOIN $prev p ON p.scc_id = e.u
-         |    GROUP BY e.v) m ON m.scc_id = t.scc_id)""".stripMargin
-    }.mkString(",\n")
+  private val graphTopoLayersSql =
     s"""$sccLabelCtes,
        |tpe AS MATERIALIZED (
-       |  SELECT DISTINCT la.scc_id AS u, lb.scc_id AS v
+       |  SELECT DISTINCT la.scc_id AS src, lb.scc_id AS dst
        |  FROM zdir e
        |  JOIN slab la ON la.id = e.u
        |  JOIN slab lb ON lb.id = e.v
        |  WHERE la.scc_id <> lb.scc_id),
        |tp0 AS (
-       |  SELECT scc_id, CAST(0 AS BIGINT) AS layer
+       |  SELECT scc_id AS id, CAST(0 AS BIGINT) AS v
        |  FROM (SELECT DISTINCT scc_id FROM slab)),
-       |$rounds
-       |SELECT t.scc_id, t.layer, s.n_members,
-       |  NOT EXISTS (SELECT 1 FROM tp${TopoRounds - 1} a
-       |    JOIN tp$TopoRounds b ON a.scc_id = b.scc_id
-       |    WHERE a.layer <> b.layer) AS converged
+       |${Propagate.sql("tp", "tpe", "s.v + 1", "MAX", TopoRounds)}
+       |SELECT t.id AS scc_id, t.v AS layer, s.n_members,
+       |  ${Fixpoint.convergedSql("tp", TopoRounds)} AS converged
        |FROM tp$TopoRounds t
        |JOIN (SELECT scc_id, COUNT(*) AS n_members FROM slab
-       |      GROUP BY scc_id) s ON s.scc_id = t.scc_id
-       |ORDER BY t.scc_id""".stripMargin
-  }
+       |      GROUP BY scc_id) s ON s.scc_id = t.id
+       |ORDER BY t.id""".stripMargin
 
   // ------------------------------------------------------------------
   // Temporal graph traversal (X129/X130) — the TIME-RESPECTING duals of
@@ -4249,10 +4154,10 @@ object UserGraphQueries {
     * deterministic pivot rule as [[graphSccPivot]]). arr(pivot) = 0;
     * per round, arr(v) improves to the smallest contact time t of any
     * (u, v, t) with t ≥ arr(u) — a monotone DECREASING integer
-    * fixpoint (smaller arr(u) only widens the eligible contact set),
-    * run to convergence with a [[TgRounds]] bound and the pinned
-    * `converged` guard. Simulated in DuckDB BEFORE Spark code
-    * (discipline #11): fixpoint depths 5/6/10/10/6 and reach
+    * fixpoint (smaller arr(u) only widens the eligible contact set), a
+    * [[Propagate]] loop (message t when t ≥ arr(u), min) bounded by
+    * [[TgRounds]] that the oracle unrolls with [[Propagate.sql]]; both
+    * sides compute `converged`. Fixpoint depths 5/6/10/10/6 and reach
     * 195/2627/10200/48822/65534 at sf0.001/0.01/0.1/sf1/sf10 — a real
     * progressive cascade at every scale, never 1-round-degenerate,
     * never all-reachable at the gate SFs.
@@ -4260,11 +4165,9 @@ object UserGraphQueries {
     * Scale: the contact list is map-derived from events and bounded by
     * \|events\|; each round is ONE join of contacts against the arrival
     * frame (≤ \|V\| rows — auto-broadcast at the folded id space, a
-    * keyed shuffle at true scale) plus a combinable min per dst; the
-    * convergence probe is a value-level anti-join (arrivals can improve
-    * without the reached COUNT changing, so the kcore count probe would
-    * stop early — probe values, not counts). Driver state: one boolean
-    * per round.
+    * keyed shuffle at true scale) plus a combinable min per id; the
+    * probe counts changed rows (arrivals can improve without the reached
+    * COUNT changing, so a count probe would stop early).
     */
   private def graphTemporalReach(s: SparkSession, dir: String): DataFrame =
     temporalReachOf(zipfTemporalEdgesOf(
@@ -4276,57 +4179,31 @@ object UserGraphQueries {
   private[graft] def temporalReachOf(tedges: DataFrame): DataFrame = {
     val (te, nTe, _) = pinnedSum(
       tedges.select(col("u"), col("v"), col("t")), lit(1L))
-    // Empty-graph guard (the r10 sccPivot NPE class).
+    // no contacts → typed empty output (there is no pivot to extract)
     if (nTe == 0L)
       return te.select(col("u").as("id"),
         col("t").as("arr_us"), lit(true).as("converged"))
     val pivot = te.select(col("u").as("id"))
       .unionByName(te.select(col("v").as("id")))
       .agg(min(col("id"))).first().getLong(0)
-    val arr0 = te.sparkSession.range(1)
-      .select(lit(pivot).as("id"), lit(0L).as("a"))
-    // a row changed iff it has no incumbent (new id) or improved (min <
-    // incumbent — the min can never exceed it)
-    val fix = Fixpoint(arr0, 1L, 0L,
-        when(col("inc").isNull || col("inc") =!= col("a"), 1L)
-          .otherwise(0L), TgRounds, Fixpoint.Zero) { (arr, _) =>
-      val relax = te
-        .join(arr.select(col("id").as("u"), col("a").as("au")), Seq("u"))
-        .filter(col("t") >= col("au"))
-        .groupBy(col("v"))
-        .agg(min(col("t")).as("a"))
-        .select(col("v").as("id"), col("a"),
-          lit(null).cast("long").as("inc"))
-      // The incumbent arrival rides the SAME min aggregation (arr has one
-      // row per id, so min(inc) recovers it exactly; relax rows carry
-      // null, which min skips).
-      arr.select(col("id"), col("a"), col("a").as("inc"))
-        .unionByName(relax)
-        .groupBy(col("id"))
-        .agg(min(col("a")).as("a"), min(col("inc")).as("inc"))
-    }
+    // a contact (u, v, t) carries u's arrival a to v iff t ≥ a
+    val fix = Propagate(
+      te.sparkSession.range(1).select(lit(pivot).as("id"), lit(0L).as("a")),
+      1L, te.select(col("u").as("src"), col("v").as("dst"), col("t")),
+      when(col("t") >= col("a"), col("t")), min, TgRounds)
     fix.frame.select(col("id"), col("a").as("arr_us"),
       lit(fix.converged).as("converged"))
       .orderBy(col("id"))
   }
 
-  private val graphTemporalReachSql = {
-    val rounds = (1 to TgRounds).map { r =>
-      val prev = s"tga${r - 1}"
-      s"""tga$r AS MATERIALIZED (
-         |  SELECT id, MIN(a) AS a FROM (
-         |    SELECT id, a FROM $prev
-         |    UNION ALL
-         |    SELECT e.v AS id, MIN(e.t) AS a
-         |    FROM zdir e JOIN $prev x ON e.u = x.id
-         |    WHERE e.t >= x.a GROUP BY e.v) GROUP BY id)""".stripMargin
-    }.mkString(",\n")
+  private val graphTemporalReachSql =
     s"""$tgCtes,
-       |tga0 AS (SELECT pid AS id, CAST(0 AS BIGINT) AS a FROM tgp),
-       |$rounds
-       |SELECT id, a AS arr_us, TRUE AS converged
+       |tga0 AS (SELECT pid AS id, CAST(0 AS BIGINT) AS v FROM tgp),
+       |${Propagate.sql("tga", "(SELECT u AS src, v AS dst, t FROM zdir)",
+             "CASE WHEN e.t >= s.v THEN e.t END", "MIN", TgRounds)}
+       |SELECT id, v AS arr_us, ${Fixpoint.convergedSql("tga", TgRounds)}
+       |  AS converged
        |FROM tga$TgRounds ORDER BY id""".stripMargin
-  }
 
   // ── X130: graph_mst_boruvka — the COMPOSED minimum-spanning-forest
   // algorithm (Borůvka, the canonical distributed MST shape: each

@@ -61,4 +61,12 @@ object Fixpoint {
       }
     loop(Result(start, rows, sum, 0, converged = rows == 0L))
   }
+
+  /** SQL boolean over an oracle unroll's CTEs `<p>0` … `<p>n`: round `n`
+    * added no row that round `n - 1` lacked, so the unroll reached the
+    * fixpoint. Exact for every unroll whose ids only grow, reach sets
+    * included (a moved value is a new row).
+    */
+  def convergedSql(p: String, n: Int): String =
+    s"NOT EXISTS (SELECT * FROM $p$n EXCEPT SELECT * FROM $p${n - 1})"
 }

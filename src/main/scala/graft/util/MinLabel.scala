@@ -79,12 +79,4 @@ private[graft] object MinLabel {
          |             GROUP BY e.dst) m ON m.id = x.id
          |  LEFT JOIN $prev j ON j.id = x.label)""".stripMargin
     }.mkString(",\n")
-
-  /** SQL boolean over the CTEs of [[sql]]: no label differs between the
-    * last two unrolled rounds, so the unroll reached the fixpoint.
-    */
-  def convergedSql(p: String, rounds: Int): String =
-    s"""NOT EXISTS (SELECT 1 FROM $p${rounds - 1} a
-       |  JOIN $p$rounds b ON a.id = b.id WHERE a.label <> b.label)"""
-      .stripMargin
 }

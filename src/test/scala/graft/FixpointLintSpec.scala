@@ -47,7 +47,10 @@ class FixpointLintSpec extends AnyFunSuite {
       stray.map(l => s"${l.file}:${l.line}"))
   }
 
-  /** How often `call` occurs in the body of each `decl`. */
+  /** How often `call` occurs in the definition that starts at each
+    * `decl`: its line and every line up to the next one indented no
+    * deeper than it, a closing brace aside.
+    */
   private def assertCalls(call: String,
       sites: Seq[((File, String), Int)]): Unit =
     for (((f, decl), n) <- sites) {
@@ -55,7 +58,14 @@ class FixpointLintSpec extends AnyFunSuite {
       val at = src.indexOf(decl)
       assert(at >= 0, s"`$decl` not found in ${f.getName}")
       val lines = src.split("\n", -1)
-      val calls = span(src, at).map(lines)
+      val first = src.substring(0, at).count(_ == '\n')
+      def indent(l: String) = l.takeWhile(_ == ' ').length
+      val end = lines.indices.drop(first + 1).find { i =>
+        val l = lines(i).trim
+        l.nonEmpty && !l.startsWith("}") &&
+          indent(lines(i)) <= indent(lines(first))
+      }.getOrElse(lines.length)
+      val calls = (first until end).map(lines)
         .map(s"\\b$call\\(".r.findAllMatchIn(_).size).sum
       assert(calls === n, s"$decl: $call calls")
     }
@@ -63,17 +73,18 @@ class FixpointLintSpec extends AnyFunSuite {
   private val ugq = new File(root, "graft/queries/UserGraphQueries.scala")
   private val streams = new File(root, "graft/streaming/Streams.scala")
   private val dq = new File(root, "graft/queries/DedupQueries.scala")
+  private val iq = new File(root, "graft/queries/IterQueries.scala")
 
   test("every migrated fixpoint calls Fixpoint") {
     assertCalls("Fixpoint", Seq(
       ugq -> "def louvainMergeRounds(" -> 1,
-      ugq -> "def leidenDrain(" -> 1, ugq -> "def kcorePeelOf(" -> 1,
-      ugq -> "def corenessOf(" -> 1, ugq -> "def tipDecomposeOf(" -> 1,
+      ugq -> "def leidenDrain(" -> 1, ugq -> "def kcorePeelOn(" -> 1,
+      ugq -> "def corenessOn(" -> 1, ugq -> "def tipDecomposeOf(" -> 1,
       ugq -> "def wingDecomposeOf(" -> 1, ugq -> "def trussDecomposeOf(" -> 1,
-      ugq -> "def trussnessOf(" -> 1, ugq -> "def sccPivotOf(" -> 1,
-      ugq -> "def sccLabelRawOf(" -> 3, ugq -> "def topoLayersFrom(" -> 1,
-      ugq -> "def temporalReachOf(" -> 1, ugq -> "def mstBoruvkaOf(" -> 2,
-      ugq -> "def misOf(" -> 1, ugq -> "def coloringOf(" -> 1,
+      ugq -> "def trussnessOf(" -> 1, ugq -> "def sccPivotOf(" -> 0,
+      ugq -> "def sccLabelRawOf(" -> 2, ugq -> "def topoLayersFrom(" -> 0,
+      ugq -> "def temporalReachOf(" -> 0, ugq -> "def mstBoruvkaOf(" -> 2,
+      ugq -> "def misOn(" -> 1, ugq -> "def coloringOn(" -> 1,
       ugq -> "def matchingOf(" -> 1, ugq -> "def densestOf(" -> 1,
       dq -> "def keepFirstOf(" -> 1))
   }
@@ -82,6 +93,20 @@ class FixpointLintSpec extends AnyFunSuite {
     assertCalls("MinLabel", Seq(
       streams -> "def ccFold(" -> 1, ugq -> "def sccLabelRawOf(" -> 1,
       ugq -> "def intraCcOf(" -> 1, dq -> "def closeMinLabel(" -> 1))
+  }
+
+  test("every reach and relax loop calls the Propagate kernel") {
+    assertCalls("Propagate", Seq(
+      ugq -> "def sccPivotOf(" -> 1, ugq -> "def sccLabelRawOf(" -> 1,
+      ugq -> "def topoLayersFrom(" -> 1, ugq -> "def temporalReachOf(" -> 1))
+  }
+
+  test("every reach and relax oracle unroll calls Propagate.sql") {
+    assertCalls("Propagate\\.sql", Seq(
+      ugq -> "val graphSccPivotSql" -> 1, ugq -> "def sccPeelCtes(" -> 1,
+      ugq -> "val graphTopoLayersSql" -> 1,
+      ugq -> "val graphTemporalReachSql" -> 1,
+      iq -> "val ssspSql" -> 1, iq -> "def ccUnrolled(" -> 1))
   }
 
   test("no foldLeft over a round constant pins") {

@@ -966,6 +966,75 @@ class GUserSpec extends GraftSuite {
       ((9L, Some(9L), true)))
   }
 
+  test("graph_scc_labels: a flag phase stopped at its cap leaves the " +
+    "core unlabeled and complete = false") {
+    import spark.implicits._
+    import graft.queries.UserGraphQueries
+    // the 40-cycle 1 -> 2 -> ... -> 40 -> 1 trims to nothing and colors
+    // in at most 8 fused rounds, but root 1 reaches back to 2 only after
+    // 39 flag steps, over the flag cap of 16
+    val e = (1L to 40L).map(i => (i, i % 40 + 1)).toDF("u", "v")
+      .repartition(3)
+    val out = UserGraphQueries.sccLabelsOf(e).collect()
+      .map(r => (r.getLong(0), Option(r.get(1)), r.getBoolean(3))).toSeq
+    assert(out === (1L to 40L).map(i => (i, None, false)))
+  }
+
+  /** Tarjan's SCCs of `edges` over `ids`: each id's SCC, named by its
+    * min member.
+    */
+  private def tarjan(ids: Seq[Long], edges: Seq[(Long, Long)]) = {
+    val out = edges.groupMap(_._1)(_._2)
+    val index = scala.collection.mutable.Map.empty[Long, Int]
+    val low = scala.collection.mutable.Map.empty[Long, Int]
+    val stack = scala.collection.mutable.Stack.empty[Long]
+    val label = scala.collection.mutable.Map.empty[Long, Long]
+    def visit(v: Long): Unit = {
+      index(v) = index.size; low(v) = index(v); stack.push(v)
+      for (w <- out.getOrElse(v, Nil)) {
+        if (!index.contains(w)) { visit(w); low(v) = low(v) min low(w) }
+        else if (stack.contains(w)) low(v) = low(v) min index(w)
+      }
+      if (low(v) == index(v)) {
+        val scc = Iterator.continually(stack.pop())
+          .takeWhile(_ != v).toSeq :+ v
+        scc.foreach(label(_) = scc.min)
+      }
+    }
+    ids.foreach(v => if (!index.contains(v)) visit(v))
+    label.toMap
+  }
+
+  test("graph_scc_labels: labels equal Tarjan's SCCs, named by their " +
+    "min member, on random directed graphs and their layered tier") {
+    import spark.implicits._
+    import graft.queries.UserGraphQueries
+    // a run that stops at a cap leaves some labels null and reports
+    // complete = false; every label it gives must still be Tarjan's
+    val complete = for {
+      seed <- 1 to 4
+      r = new scala.util.Random(seed)
+      base = Seq.fill(90)((r.nextInt(60).toLong, r.nextInt(60).toLong))
+        .filter { case (u, v) => u != v }.distinct.toDF("u", "v")
+      (tier, e) <- Seq("base" -> base,
+        "layered" -> UserGraphQueries.layeredDirectedOf(base))
+    } yield {
+      val edges = e.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val ids = edges.flatMap { case (u, v) => Seq(u, v) }.distinct
+      val out = UserGraphQueries.sccLabelsOf(e).collect()
+      val labels = out.filter(!_.isNullAt(1))
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val truth = tarjan(ids, edges)
+      assert(labels.forall { case (id, l) => truth(id) == l },
+        s"seed $seed $tier")
+      val done = out.forall(_.getBoolean(3))
+      assert(done === (labels.size == ids.size), s"seed $seed $tier")
+      tier -> done
+    }
+    // both tiers resolve every vertex on some seed
+    assert(complete.filter(_._2).map(_._1).toSet === Set("base", "layered"))
+  }
+
   test("graph_scc_layered: the shifted-copy derivation plus one-way " +
     "bridges forces the layer-2 SCC into peel 2 (hand graph)") {
     import spark.implicits._

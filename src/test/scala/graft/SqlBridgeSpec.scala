@@ -40,19 +40,6 @@ class SqlBridgeSpec extends GraftSuite {
       s"eager $eager, pinned $pin, pinnedSum $fused jobs")
   }
 
-  /** The RDD ids of the pages each pin `df` reads stores its rows in:
-    * the parents of the RDDs under its `LogicalRDD` leaves.
-    */
-  private def pagesOf(df: org.apache.spark.sql.DataFrame): Set[Int] =
-    df.queryExecution.analyzed.collectLeaves().flatMap {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.dependencies.map(_.rdd.id)
-      case _ => Nil
-    }.toSet
-
-  private def cachedRdds(): Set[Int] = spark.sparkContext.getRDDStorageInfo
-    .filter(_.numCachedPartitions > 0).map(_.id).toSet
-
   test("release frees a pin's blocks and runs no job") {
     val p = SqlBridge.pinned(frame)
     val ids = pagesOf(p)

@@ -51,6 +51,19 @@ abstract class GraftSuite extends AnyFunSuite {
     (out, sc.statusTracker.getJobIdsForGroup(g).length)
   }
 
+  /** The RDD ids of the pages each pin `df` reads stores its rows in:
+    * the parents of the RDDs under its `LogicalRDD` leaves.
+    */
+  def pagesOf(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collectLeaves().flatMap {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        l.rdd.dependencies.map(_.rdd.id)
+      case _ => Nil
+    }.toSet
+
+  def cachedRdds(): Set[Int] = spark.sparkContext.getRDDStorageInfo
+    .filter(_.numCachedPartitions > 0).map(_.id).toSet
+
   def triples(df: DataFrame): Seq[(Long, Long, Long)] =
     df.collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
