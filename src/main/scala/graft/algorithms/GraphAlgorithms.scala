@@ -1,12 +1,12 @@
 package graft.algorithms
 
-import graft.util.Det
+import graft.util.{Det, Fixpoint}
 import org.apache.spark.graphx.{Edge => GXEdge, EdgeDirection => GXDir,
   Graph => GXGraph, PartitionStrategy, Pregel}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
   SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum, release}
+import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum}
 import scala.reflect.ClassTag
 
 /** Vertex-centric iteration (SURVEY §2.6) — the Spark-native equivalent of
@@ -271,12 +271,12 @@ object GraphAlgorithms {
     * a GraphX Pregel whose per-message `Map[label,count]` merge was
     * O(degree²) allocation on high-degree hubs — the relational
     * count/argmax is a hash aggregation with map-side partial combine, the
-    * plan a 1000-executor cluster wants. A pin every round truncates the
-    * iterative lineage (SURVEY §7.3.4).
+    * plan a 1000-executor cluster wants. The rounds run on [[Fixpoint]]
+    * with the count of changed labels as the probe: a synchronous round
+    * that changes no label repeats forever, so the loop stops there.
     */
   def labelPropagation(s: SparkSession, g: graft.Graph,
                        maxIterations: Int): DataFrame = {
-    val labels0 = pinned(g.vertices.select(col("id"), col("id").as("label")))
     // Hash-partition the persisted edge list by `src` — the per-round join
     // key — and by data size: the AQE-coalesced source can collapse to a
     // couple of partitions (serializing every round's map side), and a
@@ -287,9 +287,12 @@ object GraphAlgorithms {
     val parts = sizedParts(s, ends0.count())
     val ends = ends0.repartition(parts, col("src")).persist()
     ends.count()
-    val labels = (1 to maxIterations).foldLeft(labels0) { (cur, _) =>
+    // a lazy seed over the vertex frame, which only round 1 reads
+    val fix = Fixpoint(g.vertices.select(col("id"), col("id").as("label")),
+        Fixpoint.Unprobed, 0L, col("changed"), maxIterations,
+        Fixpoint.Zero) { (cur, _) =>
       val counts = ends
-        .join(cur.withColumnRenamed("id", "src"), Seq("src"))
+        .join(cur.select(col("id").as("src"), col("label")), Seq("src"))
         .groupBy(col("dst").as("vid"), col("label"))
         .agg(count(lit(1)).as("c"))
       // argmax by (count DESC, label ASC) as a single hash aggregation:
@@ -300,18 +303,15 @@ object GraphAlgorithms {
         .groupBy(col("vid"))
         .agg(max_by(col("label"), struct(col("c"), -col("label"))).as("next"))
         .select(col("vid").as("id"), col("next"))
-      // Materialize EVERY round: labels_{k-1} appears twice in round k's
+      // Every round is pinned: labels_{k-1} appears twice in round k's
       // plan (the join side and inside winners), so a lazy loop doubles
-      // the plan per round — measured 2× slower by round 5. The pin also
-      // truncates lineage (SURVEY §7.3.4). The superseded pin is released
-      // at once: the new pin is filled, and the caller gets only the last.
-      val next = pinned(cur.join(winners, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("next"), col("label")).as("label")))
-      release(cur)
-      next
+      // the plan per round — measured 2× slower by round 5.
+      cur.join(winners, Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("next"), col("label")).as("label"),
+          when(col("next") =!= col("label"), 1L).otherwise(0L).as("changed"))
     }
     ends.unpersist(blocking = false)
-    labels
+    fix.frame.select(col("id"), col("label"))
   }
 
   /** HITS (hubs & authorities, Kleinberg) over the directed graph —
@@ -458,8 +458,9 @@ object GraphAlgorithms {
     * harmonic centrality. Frontier state is the FULL visited set keyed
     * (lm, id) with min-dist semantics (the bounded-CC relaxation pattern,
     * per-landmark), so each round is one |E|-join + one map-side-
-    * combinable min-agg; a pin every round cuts the doubled
-    * lineage exactly like the CC/PageRank loops above.
+    * combinable min-agg, pinned by [[Fixpoint]]. A pair appears at its
+    * final distance and rows only grow, so a round that adds no row is
+    * the fixpoint and the loop stops there.
     *
     * Scale: state is O(|L|·|V|) rows of three longs — the standard
     * landmark trade-off (exact closeness is all-pairs BFS; the sketch
@@ -471,13 +472,13 @@ object GraphAlgorithms {
   def landmarkDistances(edges: DataFrame, landmarks: DataFrame,
                         iters: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-    val d0 = pinned(landmarks.select(col("id").as("lm"), col("id"),
-      lit(0L).as("dist")))
-    (1 to iters).foldLeft(d0) { (d, _) =>
+    val (d0, n, _) = pinnedSum(landmarks.select(col("id").as("lm"),
+      col("id"), lit(0L).as("dist")), lit(0L))
+    Fixpoint(d0, n, n, lit(1L), iters) { (d, _) =>
       val hop = d.join(e, d("id") === e("src"))
         .select(col("lm"), e("dst").as("id"), (col("dist") + 1L).as("dist"))
-      pinned(d.unionByName(hop)
-        .groupBy(col("lm"), col("id")).agg(min(col("dist")).as("dist")))
-    }
+      d.unionByName(hop)
+        .groupBy(col("lm"), col("id")).agg(min(col("dist")).as("dist"))
+    }.frame
   }
 }

@@ -2570,15 +2570,15 @@ object UserGraphQueries {
     *
     * Peel: synchronous rounds — recompute alive-subgraph degrees, drop
     * vertices below K, to fixpoint (early-stop) with a [[KcRounds]]
-    * bound; `converged` is the loud guard (oracle pins TRUE literally —
-    * a fixture needing more rounds fails the gate instead of shipping a
-    * non-core). Output: the K-core members with their in-core degrees.
+    * bound; `converged` reports a cap hit, and the oracle computes it
+    * from its last two unrolled rounds. Output: the K-core members with
+    * their in-core degrees.
     *
     * Scale: the derivation is map-only; each round is one keyed \|E\|
     * double-semi-join + combinable count (the CC/Brandes cost class),
     * pinned per round; rounds are empirically O(log-ish) in
     * the tail depth, bounded by [[KcRounds]]. Driver state: one count
-    * per round (the I2–I5 iterate discipline). The oracle unrolls the
+    * per round. The oracle unrolls the
     * same rounds as CTEs (the CC chain discipline).
     */
   private val KcK = 3
@@ -2777,7 +2777,8 @@ object UserGraphQueries {
     s"""${ZipfSql("zund")},
        |kca0 AS (SELECT DISTINCT u AS v FROM zund),
        |$rounds
-       |SELECT e.u AS v, COUNT(*) AS core_degree, TRUE AS converged
+       |SELECT e.u AS v, COUNT(*) AS core_degree,
+       |  ${Fixpoint.convergedSql("kca", KcRounds)} AS converged
        |FROM zund e
        |JOIN kca$KcRounds x ON e.u = x.v
        |JOIN kca$KcRounds y ON e.v = y.v
@@ -2823,7 +2824,8 @@ object UserGraphQueries {
     * trim-loop batching: monotone non-increasing sum means "sum
     * unchanged across a 2-round batch" is exactly the fixpoint test).
     * Loop frames through SqlBridge.pinned (rule: stats compounding).
-    * `converged` is the loud guard — the oracle pins TRUE.
+    * `converged` reports a cap hit; the oracle compares its last round
+    * with the one two before it, as the batched probe does.
     *
     * Cross-check: vertices with coreness ≥ [[KcK]] are exactly
     * [[kcorePeelOf]]'s K-core members (asserted in GUserSpec).
@@ -2882,7 +2884,8 @@ object UserGraphQueries {
        |ch0 AS MATERIALIZED (
        |  SELECT u AS v, COUNT(*) AS h FROM zund GROUP BY u),
        |$rounds
-       |SELECT v, h AS coreness, TRUE AS converged
+       |SELECT v, h AS coreness,
+       |  ${Fixpoint.convergedSql("ch", CorenessRounds, 2)} AS converged
        |FROM ch$CorenessRounds ORDER BY v""".stripMargin
   }
 
@@ -3361,8 +3364,9 @@ object UserGraphQueries {
     * per-round monotone non-increase the integer-sum convergence probe
     * depends on, and measured synchronous depths 1/1/4/14 (sf0.001→sf1;
     * sf10 converged ≤ 15) — [[TrussnessRounds]] = 28 is the loud cap
-    * (2× the deepest measurement), `converged` pinned TRUE by the
-    * oracle; post-fixpoint oracle rounds are exact no-ops. Class histogram non-degenerate and consistent
+    * (2× the deepest measurement), `converged` computed by the oracle
+    * from its last two rounds; post-fixpoint oracle rounds are exact
+    * no-ops. Class histogram non-degenerate and consistent
     * with X114 exactly: {2: 28 037, 3: 5 007, 4: 545, 5: 140} at sf0.1
     * vs X114's (28 037, 5 007, 685 = 545+140) — the GUserSpec
     * cross-operator invariant, plus trussness(e) ≤
@@ -3478,7 +3482,7 @@ object UserGraphQueries {
        |  SELECT e, COUNT(*) AS h FROM tninc GROUP BY e),
        |$rounds
        |SELECT s.a, s.b, COALESCE(t.h, 0) + 2 AS trussness,
-       |  TRUE AS converged
+       |  ${Fixpoint.convergedSql("tnh", TrussnessRounds)} AS converged
        |FROM zcan s LEFT JOIN tnh$TrussnessRounds t
        |  ON t.e = s.a * $TrussPack + s.b
        |ORDER BY s.a, s.b""".stripMargin
@@ -3756,9 +3760,10 @@ object UserGraphQueries {
     val (allVerts, nV, _) = pinnedSum(e0.select(col("u").as("id"))
       .unionByName(e0.select(col("v").as("id"))).distinct(), lit(1L))
 
-    // nothing reads the (id, scc_id) label parts mid-loop and every
-    // part is lazy over pinned frames (coreVerts/color/flagged/remVerts),
-    // so they pin once at the end, not once per peel phase
+    // nothing reads the (id, scc_id) label parts mid-loop and every part
+    // is lazy over pins the driver never releases (a peel's coreVerts,
+    // color and flagged, and the loop's last frame), so they pin once at
+    // the end, not once per peel phase
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // (1) trim: keep edge (u,v) iff u has an in-edge and v has an
     // out-edge in the active set. TWO trim steps per checkpoint+count
@@ -3792,8 +3797,6 @@ object UserGraphQueries {
           active.select(col("u").as("id"))
             .unionByName(active.select(col("v").as("id"))).distinct(),
           lit(0L))
-        parts += remVerts.join(coreVerts, Seq("id"), "left_anti")
-          .select(col("id"), col("id").as("scc_id"))
         // (2) color: each core vertex takes the min id among its
         // ancestors in the active core (directed min-label kernel)
         lazy val colors = MinLabel(coreVerts,
@@ -3831,14 +3834,17 @@ object UserGraphQueries {
           coreVerts.join(flagged, Seq("id"), "left_anti")
         }
     }
-    if (!fix.converged) // bounded-peels honesty: never silently mislabel
-      parts += fix.frame.select(col("id"),
-        lit(null).cast("long").as("scc_id"))
+    // what a capped peel loop left, unlabelled (bounded-peels honesty:
+    // never silently mislabel); empty when the peels converged
+    parts += fix.frame.select(col("id"), lit(null).cast("long").as("scc_id"))
     // One pin for the whole accumulator: the memoized frame is read by
-    // several keys (labels + sizes in sccLabelsOf, the condensation).
-    val labels =
-      if (parts.isEmpty) allVerts.select(col("id"), lit(0L).as("scc_id"))
-      else pinned(parts.reduce(_ unionByName _))
+    // several keys (labels + sizes in sccLabelsOf, the condensation). A
+    // vertex no part labels was trimmed away: its own SCC.
+    val labels = pinned(allVerts
+      .join(parts.reduce(_ unionByName _).withColumn("core", lit(true)),
+        Seq("id"), "left")
+      .select(col("id"), when(col("core"), col("scc_id"))
+        .otherwise(col("id")).as("scc_id")))
     (labels, fix.converged && resolved)
   }
 
@@ -4274,7 +4280,7 @@ object UserGraphQueries {
     * shuffle at true scale), one combinable MIN per component, and
     * [[MstJumps]] self-joins of a frame that SHRINKS geometrically with
     * the component count — the textbook O(log V) Borůvka budget. Driver
-    * state: one emptiness probe per round (I2–I5 discipline). No FP
+    * state: one emptiness probe per round. No FP
     * anywhere: weights, packs, and labels are exact BIGINTs.
     */
   private[graft] def mstBoruvkaOf(wedges: DataFrame): DataFrame = {
@@ -4288,11 +4294,9 @@ object UserGraphQueries {
       .join(labels.select(col("v").as("b"), col("c").as("cb")), Seq("b"))
       .filter(col("ca") =!= col("cb"))
       .select(col("p"), col("ca"), col("cb"))
-    // Per-round picks accumulate LAZILY (each is a parts-sized agg over
-    // that round's pinned cross frame, referenced once at the end) —
-    // the per-round `msf = pinned(msf union picks)` form cost one extra
-    // driver action per round for a frame nothing reads until the end
-    // (r17 action-count trim; actions are this loop's wall clock).
+    // Each round's picked edges are a projection of its pinned hook
+    // pointers `par0` (one row per picking component, with its pick),
+    // unioned once at the end: nothing reads the forest mid-loop.
     val msfParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val (cross0, nCross0, _) = pinnedSum(crossOf(comp), lit(1L))
     // one contraction per round; done when no cross edge is left (an
@@ -4302,11 +4306,10 @@ object UserGraphQueries {
       val picks = cross.select(col("ca").as("c"), col("p"))
         .unionByName(cross.select(col("cb").as("c"), col("p")))
         .groupBy(col("c")).agg(min(col("p")).as("p"))
-      msfParts += picks.select(col("p")).distinct()
       // Hook pointers: comp → the picked edge's other component.
       val pr = picks.join(cross, Seq("p"))
         .select(col("c"), when(col("ca") === col("c"), col("cb"))
-          .otherwise(col("ca")).as("par"))
+          .otherwise(col("ca")).as("par"), col("p"))
       // Break the pseudo-forest 2-cycles at the min-id root, then
       // pointer-double to the roots (joins always match: par values
       // are themselves picking components). The loop is EARLY-STOPPED
@@ -4318,9 +4321,10 @@ object UserGraphQueries {
       // pinned restarts the estimate chain from the real row count.
       val (par0, nPar, _) = pinnedSum(pr.as("x")
         .join(pr.as("y"), col("x.par") === col("y.c"))
-        .select(col("x.c").as("c"),
+        .select(col("x.c").as("c"), col("x.p"),
           when(col("y.par") === col("x.c") && col("x.c") < col("x.par"),
             col("x.c")).otherwise(col("x.par")).as("par")), lit(0L))
+      msfParts += par0.select(col("p")).distinct()
       // the self-join always matches (par values are picking
       // components) and keys are preserved, so "some pointer moved" is
       // exactly sum(y.par != x.par) over the same join
@@ -5471,30 +5475,30 @@ object UserGraphQueries {
     * (nv, ne) = (36,64)/(132,530)/(88,505)/(384,3602).
     *
     * Scale: per round one combinable degree count over the live \|E\|
-    * frame + two semi-joins, with (nv, ne) as the ONLY driver state
-    * (the I2–I5 discipline) and the live set shrinking by a constant
+    * frame + two semi-joins, with (nv, ne) as the only driver state
+    * and the live set shrinking by a constant
     * factor per round (the paper's O(log n) argument). Zero FP — the
     * density is published on the same integer grid the argmax used.
     */
   private[graft] def densestOf(canEdges: DataFrame): DataFrame = {
     val (live0, ne0, _) = pinnedSum(canEdges.select(col("a"), col("b")),
       lit(1L))
-    def undDeg(e: DataFrame) = e.select(col("a").as("v"))
-      .unionByName(e.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
     if (ne0 == 0L)
       return live0.select(col("a").as("id"), lit(0L).as("deg_in"),
         lit(0L).as("nv"), lit(0L).as("ne"), lit(0L).as("density_e9"),
         lit(true).as("converged"))
-    // every round's (round, nv, ne, live) state; the degree pin gives nv
-    // as its rows and ne as half its degree sum (each edge adds two)
+    // every round's (round, nv, ne, deg) state: the degree pin holds the
+    // state's in-state degrees, with nv as its rows and ne as half its
+    // degree sum (each edge adds two)
     var states = List.empty[(Int, Long, Long, DataFrame)]
     // drained when no live edge is left
     val fix = Fixpoint(live0, ne0, ne0, lit(1L), DsRounds, Fixpoint.Zero) {
       (live, round) =>
-        val (deg, nv, dSum) = pinnedSum(undDeg(live), col("d"))
+        val (deg, nv, dSum) = pinnedSum(live.select(col("a").as("v"))
+          .unionByName(live.select(col("b").as("v")))
+          .groupBy(col("v")).agg(count(lit(1)).as("d")), col("d"))
         val ne = dSum / 2L
-        states ::= ((round - 1, nv, ne, live))
+        states ::= ((round - 1, nv, ne, deg))
         val keep = deg.filter(col("d") * nv > 2L * ne).select(col("v"))
         live
           .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
@@ -5503,8 +5507,8 @@ object UserGraphQueries {
     val best = states.minBy { case (s, nv, ne, _) =>
       (-(ne * DsScale / nv), s) // max quantized density, then min round
     }
-    val (_, bnv, bne, bframe) = best
-    undDeg(bframe)
+    val (_, bnv, bne, bdeg) = best
+    bdeg
       .select(col("v").as("id"), col("d").as("deg_in"),
         lit(bnv).as("nv"), lit(bne).as("ne"),
         lit(bne * DsScale / bnv).as("density_e9"),

@@ -42,6 +42,12 @@ object Fixpoint {
     * the driver pins its result fused with `probe` in one Spark job
     * ([[SqlBridge.pinnedSum]]). Every job a step runs carries the round
     * as the [[JobTags.Round]] tag, set in the thread that runs the step.
+    *
+    * Once a step's result is pinned, the driver releases the pin it
+    * made one step earlier, the frame that step received: that frame is
+    * valid only until then, and anything a step keeps longer must be a
+    * pin it made itself. `start` stays the caller's, and of the
+    * driver's pins only the returned frame stays pinned.
     */
   def apply(start: DataFrame, rows: Long, sum: Long, probe: Column,
       cap: Int, stop: Stop = Unchanged, perStep: Int = 1)(
@@ -54,6 +60,7 @@ object Fixpoint {
         val round = cur.rounds + perStep
         val (next, n, s) = JobTags.within(sc, JobTags.Round, round.toString)(
           SqlBridge.pinnedSum(step(cur.frame, round), probe))
+        if (cur.frame ne start) SqlBridge.release(cur.frame)
         loop(Result(next, n, s, round, stop match {
           case Unchanged => s == cur.sum
           case Zero => s == 0L
@@ -63,10 +70,12 @@ object Fixpoint {
   }
 
   /** SQL boolean over an oracle unroll's CTEs `<p>0` … `<p>n`: round `n`
-    * added no row that round `n - 1` lacked, so the unroll reached the
-    * fixpoint. Exact for every unroll whose ids only grow, reach sets
-    * included (a moved value is a new row).
+    * equals round `n - perStep` (no row in one that the other lacks), so
+    * the unroll reached the fixpoint of a loop that probes every
+    * `perStep` rounds. Both directions: a shrinking set never adds a row.
     */
-  def convergedSql(p: String, n: Int): String =
-    s"NOT EXISTS (SELECT * FROM $p$n EXCEPT SELECT * FROM $p${n - 1})"
+  def convergedSql(p: String, n: Int, perStep: Int = 1): String =
+    Seq(n -> (n - perStep), (n - perStep) -> n).map { case (a, b) =>
+      s"NOT EXISTS (SELECT * FROM $p$a EXCEPT SELECT * FROM $p$b)"
+    }.mkString(" AND ")
 }

@@ -26,9 +26,7 @@ private[graft] object MinLabel {
     * label moves or `cap` rounds have run, one [[SqlBridge.pinnedSum]]
     * per round; the label sum, monotone non-increasing, is the probe.
     * Every edge endpoint must be in `ids`; `edges` should already be
-    * pinned, as every round joins it. Each round releases the pin its
-    * input superseded, and the loop the last one, so only the returned
-    * frame stays pinned.
+    * pinned, as every round joins it.
     *
     * The hop's and the jump's projections of the label frame are the
     * same plan up to names, so one broadcast serves both joins. That is
@@ -42,10 +40,7 @@ private[graft] object MinLabel {
   def apply(ids: DataFrame, edges: DataFrame, cap: Int): Fixpoint.Result = {
     val (start, n, s) = SqlBridge.pinnedSum(
       ids.select(col("id"), col("id").as("label")), col("label"))
-    var superseded: Option[DataFrame] = None
     val fix = Fixpoint(start, n, s, col("label"), cap) { (lab, _) =>
-      superseded.foreach(SqlBridge.release)
-      superseded = Some(lab)
       lab
         .unionByName(edges // `hop` aliased as `jump` is: one broadcast
           .join(lab.select(col("id").as("src"), col("label").as("hop")),
@@ -57,7 +52,7 @@ private[graft] object MinLabel {
           .select(col("id"), col("jump").as("label")))
         .groupBy(col("id")).agg(min(col("label")).as("label"))
     }
-    superseded.foreach(SqlBridge.release)
+    if (fix.frame ne start) SqlBridge.release(start)
     fix
   }
 

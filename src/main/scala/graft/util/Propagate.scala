@@ -2,7 +2,6 @@ package graft.util
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit, when}
-import org.apache.spark.sql.graftbridge.SqlBridge
 
 /** The one propagate step: the message–aggregate–combine round of
   * Gelly's vertex-centric iterations (GraphX's `aggregateMessages`) for
@@ -40,10 +39,7 @@ private[graft] object Propagate {
     * A row changed when its id is new or its value moved: the old value
     * rides the round's one aggregation as `inc` (one old row per id, so
     * `agg(inc)` recovers it; messages carry null, which `agg` skips), and
-    * the count of changed rows is the probe, with [[Fixpoint.Zero]]. Each
-    * round releases the pin it superseded, and the loop the last one, so
-    * of the kernel's pins only the returned frame stays pinned; `start`
-    * stays the caller's.
+    * the count of changed rows is the probe, with [[Fixpoint.Zero]].
     *
     * Returns the [[Fixpoint.Result]] whose frame is (id, value).
     */
@@ -58,15 +54,11 @@ private[graft] object Propagate {
         .select(col("dst").as("id"), msg.as("msg"), noInc.as("inc"))
         .filter(col("msg").isNotNull))
       .groupBy(col("id")).agg(agg(col(v)).as(v), agg(col("inc")).as("inc"))
-    var superseded: Option[DataFrame] = None
     val fix = Fixpoint(start, rows, rows,
         when(col("inc").isNull || col("inc") =!= col(v), 1L).otherwise(0L),
         cap, Fixpoint.Zero, perStep) { (cur, _) =>
-      superseded.foreach(SqlBridge.release)
-      superseded = Some(cur).filter(_ ne start)
       (1 to perStep).foldLeft(cur)((f, _) => round(f))
     }
-    superseded.foreach(SqlBridge.release)
     fix.copy(frame = fix.frame.select(col("id"), col(v)))
   }
 

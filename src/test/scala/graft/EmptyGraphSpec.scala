@@ -49,6 +49,16 @@ class EmptyGraphSpec extends GraftSuite {
     assert(pairs(lp) === Seq((7L, 7L), (9L, 9L)))
   }
 
+  test("landmarkDistances is total on no edges and on no landmarks") {
+    val noEdges = emptyGraph.edges
+    val lms = Seq(3L, 5L).toDF("id")
+    assert(triples(GraphAlgorithms.landmarkDistances(noEdges, lms, 4)) ===
+      Seq((3L, 3L, 0L), (5L, 5L, 0L)))
+    val edges = Seq((3L, 5L), (5L, 7L)).toDF("src", "dst")
+    assert(GraphAlgorithms.landmarkDistances(edges, lms.limit(0), 4)
+      .count() === 0)
+  }
+
   test("filters that eliminate everything still compose") {
     val g = fixture.filterOnVertices(lit(false))
     assert(g.numVertices === 0 && g.numEdges === 0)

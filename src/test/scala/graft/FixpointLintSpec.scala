@@ -74,6 +74,7 @@ class FixpointLintSpec extends AnyFunSuite {
   private val streams = new File(root, "graft/streaming/Streams.scala")
   private val dq = new File(root, "graft/queries/DedupQueries.scala")
   private val iq = new File(root, "graft/queries/IterQueries.scala")
+  private val ga = new File(root, "graft/algorithms/GraphAlgorithms.scala")
 
   test("every migrated fixpoint calls Fixpoint") {
     assertCalls("Fixpoint", Seq(
@@ -86,7 +87,8 @@ class FixpointLintSpec extends AnyFunSuite {
       ugq -> "def temporalReachOf(" -> 0, ugq -> "def mstBoruvkaOf(" -> 2,
       ugq -> "def misOn(" -> 1, ugq -> "def coloringOn(" -> 1,
       ugq -> "def matchingOf(" -> 1, ugq -> "def densestOf(" -> 1,
-      dq -> "def keepFirstOf(" -> 1))
+      dq -> "def keepFirstOf(" -> 1, ga -> "def labelPropagation(" -> 1,
+      ga -> "def landmarkDistances(" -> 1))
   }
 
   test("every min-label loop calls the MinLabel kernel") {
@@ -109,17 +111,95 @@ class FixpointLintSpec extends AnyFunSuite {
       iq -> "val ssspSql" -> 1, iq -> "def ccUnrolled(" -> 1))
   }
 
-  test("no foldLeft over a round constant pins") {
-    // `(1 to XRounds).foldLeft(z) { body }` is a convergence loop the
-    // while rules above cannot see; its body may not pin
-    val stray = for {
+  /** The member definition (a `def` at two spaces' indent) that holds
+    * the character at `at` of `src`.
+    */
+  private def memberAt(src: String, at: Int): String =
+    """(?m)^  (?:(?:private|protected|override|final)(?:\[\w+\])? +)*def (\w+)""".r
+      .findAllMatchIn(src.substring(0, at)).toSeq.lastOption
+      .fold("?")(_.group(1))
+
+  /** The code after `from` up to the bracket that closes the first `{`
+    * or `(` there, or to the line's end when neither comes first.
+    */
+  private def block(src: String, from: Int): String = {
+    val rest = src.substring(from).dropWhile(c => c == ' ' || c == '\n')
+    if (rest.isEmpty || (rest(0) != '{' && rest(0) != '(')) rest.takeWhile(_ != '\n')
+    else {
+      var (i, depth) = (0, 0)
+      do {
+        if ("{(".contains(rest(i))) depth += 1
+        else if ("})".contains(rest(i))) depth -= 1
+        i += 1
+      } while (depth > 0)
+      rest.substring(0, i)
+    }
+  }
+
+  /** The end of the bracket group that opens just before `at`. */
+  private def closing(src: String, at: Int): Int = {
+    var (i, depth) = (at, 1)
+    while (depth > 0) {
+      if (src(i) == '(') depth += 1 else if (src(i) == ')') depth -= 1
+      i += 1
+    }
+    i
+  }
+
+  /** Fixed-depth loops over `1 to n` that pin every round but are not
+    * convergence loops, so they stay off the driver: the round count is
+    * part of the output or of the schedule itself.
+    */
+  private val fixedDepth = Set(
+    // one estimate row per radius 0 … HyperballIters
+    "UserGraphQueries.scala:hyperballOf",
+    // one output row per walk hop
+    "UserGraphQueries.scala:graphWalksBiasedOf",
+    // the move rule alternates on the round's parity
+    "UserGraphQueries.scala:louvainMoveRounds",
+    // one path-count frame per BFS level
+    "UserGraphQueries.scala:betweennessOf",
+    // the oracle unrolls exactly the caller's round count
+    "UserGraphQueries.scala:refineRounds",
+    // a fixed Lloyd budget whose last round's sums are the output
+    "SimQueries.scala:kmeansIterated")
+
+  test("no fold or for over a 1-to range pins") {
+    // `(1 to n).foldLeft(z) { body }` and `for (_ <- 1 to n) { body }`
+    // are convergence loops the while rules above cannot see; their
+    // bodies may not pin
+    val loops = for {
       f <- scalaFiles(root)
       src = code(f)
-      lines = src.split("\n", -1)
-      m <- """\b\w*Rounds\b[^\n]*\.foldLeft\(""".r.findAllMatchIn(src).toSeq
-      body = span(src, m.start)
-      if body.map(lines).exists(_.contains("pinned"))
-    } yield s"${f.getName}:${body.head + 1}"
-    assert(stray.isEmpty, s"pinning folds over a round constant: $stray")
+      m <- ("""\(1 to [^)\n]*\)\s*\.foldLeft\(|""" +
+        """\bfor\s*\([^)\n]*<-\s*\(?1 to\b""").r.findAllMatchIn(src).toSeq
+    } yield {
+      val body = block(src, closing(src, src.indexOf('(', m.start + 1) + 1))
+      (s"${f.getName}:${memberAt(src, m.start)}", body.contains("pinned"))
+    }
+    val pinning = loops.filter(_._2).map(_._1).toSet
+    assert(loops.exists(l => l._1 == "Propagate.scala:apply" && !l._2),
+      "the range-loop matcher found no loop")
+    assert(pinning -- fixedDepth === Set.empty,
+      "pinning loops over a 1-to range (use Fixpoint)")
+    assert(fixedDepth -- pinning === Set.empty,
+      "fixed-depth entries without a pinning loop")
+  }
+
+  test("release runs only in the driver and the named sites") {
+    // the driver releases every superseded round; the rest release a pin
+    // their own definition made (the start MinLabel pins for the driver,
+    // the dedup closure's copied result and edge pin) or a memo's on evict
+    val sites = for {
+      f <- scalaFiles(root)
+      src = code(f)
+      m <- """\brelease\b""".r.findAllMatchIn(src).toSeq
+      line = src.substring(src.lastIndexOf('\n', m.start) + 1,
+        src.indexOf('\n', m.start)).trim
+      if !line.startsWith("import ") && !line.startsWith("def release(")
+    } yield s"${f.getName}:${memberAt(src, m.start)}"
+    assert(sites.sorted === Seq("DedupQueries.scala:closeMinLabel",
+      "DedupQueries.scala:clustersFrame", "Fixpoint.scala:apply",
+      "MinLabel.scala:apply", "SessionMemo.scala:pinned"))
   }
 }

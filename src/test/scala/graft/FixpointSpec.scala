@@ -1,13 +1,14 @@
 package graft
 
-import graft.util.Fixpoint
+import graft.util.{Fixpoint, MinLabel, Propagate}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SqlBridge.pinnedSum
+import org.apache.spark.sql.graftbridge.SqlBridge.{pinned, pinnedSum, release}
 
 /** The contract of [[Fixpoint]]: the stop rules, the cap outcome, the
-  * round count under two rounds per step, one Spark job per step, and
-  * re-entrancy from concurrent driver threads.
+  * round count under two rounds per step, one Spark job per step,
+  * re-entrancy from concurrent driver threads, and the pins a loop
+  * leaves behind.
   */
 class FixpointSpec extends GraftSuite {
   /** One loop: its start values, probe, stop rule, cap, rounds per step
@@ -126,5 +127,37 @@ class FixpointSpec extends GraftSuite {
       assert(jobs.map(_.round).toSet === Set("1", "2", "3"),
         jobs.map(j => s"${j.id}:${j.round}").mkString(" "))
     } finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  test("no GC: only start, result and the step's own pins stay cached") {
+    import spark.implicits._
+    val first = spark.sparkContext.emptyRDD[Int].id
+    def cachedPins() = cachedRdds().filter(_ > first)
+    // the driver: every round's pin but the last is released at once
+    val (s0, n0, sum0) = pinnedSum((1L to 20L).toDF("x"), col("x"))
+    val own = Seq.newBuilder[DataFrame]
+    val r = Fixpoint(s0, n0, sum0, col("x"), 4) { (df, _) =>
+      val mid = pinned(df.select((col("x") + 1L).as("x")))
+      own += mid
+      mid.select((col("x") + 1L).as("x"))
+    }
+    assert(r.rounds === 4 && !r.converged)
+    assert(xs(r.frame) === (9L to 28L))
+    val mine = (Seq(s0, r.frame) ++ own.result()).map(pagesOf)
+    assert(mine.forall(_.nonEmpty) &&
+      cachedPins() === mine.reduce(_ ++ _), "superseded pins stay cached")
+    (Seq(s0, r.frame) ++ own.result()).foreach(release)
+    // the kernels: a lazy start, and a start MinLabel pinned itself
+    val chain = (0L until 8L).map(i => (i, i + 1))
+    val reach = Propagate(Seq((0L, 0L)).toDF("id", "x"), 1L,
+      chain.toDF("src", "dst"), lit(0L), min, 64)
+    assert(reach.converged && reach.rounds === 9)
+    assert(cachedPins() === pagesOf(reach.frame), "Propagate")
+    release(reach.frame)
+    val labels = MinLabel((0L to 8L).toDF("id"),
+      chain.toDF("src", "dst"), 64)
+    assert(labels.converged && labels.rounds > 1)
+    assert(cachedPins() === pagesOf(labels.frame), "MinLabel")
+    release(labels.frame)
   }
 }

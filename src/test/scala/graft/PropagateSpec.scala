@@ -3,7 +3,6 @@ package graft
 import graft.util.Propagate
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{col, lit, max, min, when}
-import org.apache.spark.sql.graftbridge.SqlBridge
 import scala.util.Random
 
 /** The propagate kernel against plain-Scala references: BFS for single-
@@ -170,22 +169,5 @@ class PropagateSpec extends GraftSuite {
     // a capped batch run stops on the cap, not past it
     val (got, want) = reach(Seq(0L), chain, 6, perStep = 2)
     assert(!got._3 && got._2 === 6 && got === want)
-  }
-
-  test("only the returned pin stays cached once GC ran") {
-    import spark.implicits._
-    val first = spark.sparkContext.emptyRDD[Int].id
-    val fix = Propagate(Seq((0L, 0L)).toDF("id", "x"), 1L,
-      chain.take(8).toDF("src", "dst", "w"), lit(0L), min, 64)
-    assert(fix.converged && fix.rounds === 9)
-    val kept = pagesOf(fix.frame)
-    def cachedPins() = cachedRdds().filter(_ > first)
-    val deadline = System.nanoTime() + 10000000000L
-    while (cachedPins() != kept && System.nanoTime() < deadline) {
-      System.gc(); Thread.sleep(100)
-    }
-    assert(kept.nonEmpty && cachedPins() === kept,
-      "superseded pins stayed cached")
-    SqlBridge.release(fix.frame)
   }
 }
